@@ -130,20 +130,15 @@ object RecallProbe {
     if (which == "hier_div") {
       val divisors = sys.env.getOrElse("SPARK_GRAFT_HIER_DIVISORS", "1,2,4")
         .split(",").map(_.trim.toInt)
-      // SPARK_GRAFT_HIER_SHARDS > 1: run the ASSIGNMENT-bounded sharded
-      // form (VERDICT_r19 #1) — >24M on this box needs the per-shard
-      // working set of n/shards (both unsharded probes died in
-      // assignment materialization at ~2.81 GiB/M)
+      // SPARK_GRAFT_HIER_SHARDS > 1 bounds the ASSIGNMENT phase: the
+      // per-shard working set is n/shards (both unsharded probes past
+      // 24M died in assignment materialization at ~2.81 GiB/M)
       val shards = sys.env.getOrElse("SPARK_GRAFT_HIER_SHARDS", "1").toInt
       divisors.foreach { div =>
         val t0 = System.nanoTime()
-        val flagged = (if (shards > 1)
-            operators.Similarity.semanticDedupHierSharded(emb,
-              threshold = 0.4, shards = shards, k2Divisor = div,
-              pairRowBudget = hierBudget)
-          else
-            operators.Similarity.semanticDedupHier(emb, threshold = 0.4,
-              k2Divisor = div, pairRowBudget = hierBudget))
+        val flagged = operators.Similarity.semanticDedupHier(emb,
+            threshold = 0.4, shards = shards, k2Divisor = div,
+            pairRowBudget = hierBudget)
           .filter(col("is_dup") === 1L).select("vec_id")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val dups = flagged.count()

@@ -56,19 +56,15 @@ object SemDedupProbe {
         // at 30M the default 1e9's crest would not fit this box's
         // usable ceiling next to the ~2.5 GiB/M persisted projections.
         // SPARK_GRAFT_HIER_SHARDS > 1 bounds the ASSIGNMENT phase the
-        // same way (coarse-cell hash ranges, VERDICT_r19 #1): both 24M
-        // and 30M unsharded probes died in assignment materialization
-        // at ~2.81 GiB/M of concurrent working set, so >24M on this box
-        // needs the per-shard footprint of n/shards.
+        // same way (coarse-cell hash ranges): both 24M and 30M unsharded
+        // probes died in assignment materialization at ~2.81 GiB/M of
+        // concurrent working set, so >24M on this box needs the
+        // per-shard footprint of n/shards.
         val shards = sys.env.getOrElse("SPARK_GRAFT_HIER_SHARDS", "1").toInt
         val budget = sys.env.getOrElse("SPARK_GRAFT_HIER_BUDGET",
           operators.Similarity.DefaultPairRowBudget.toString).toLong
-        if (shards > 1)
-          operators.Similarity.semanticDedupHierSharded(emb, threshold = 0.4,
-            shards = shards, pairRowBudget = budget)
-        else
-          operators.Similarity.semanticDedupHier(emb, threshold = 0.4,
-            pairRowBudget = budget)
+        operators.Similarity.semanticDedupHier(emb, threshold = 0.4,
+          shards = shards, pairRowBudget = budget)
     }
     val dups = res.agg(sum(col("is_dup"))).first().getLong(0)
     val sec = (System.nanoTime() - t0) / 1e9

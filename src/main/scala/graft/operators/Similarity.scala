@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -134,6 +135,7 @@ object Similarity {
     */
   def bruteForceKnn(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int = 0,
                     unitOpt: Option[DataFrame] = None): DataFrame = {
+    requirePersisted(unitOpt)
     val unit = unitOpt.getOrElse(unitVectors(corpus))
     val q = unit.join(queries.select("vec_id"), "vec_id")
       .select(col("vec_id").as("query_id"), col("uv").as("qv"))
@@ -152,6 +154,15 @@ object Similarity {
     Caching.materializeAndRelease(res,
       (if (unitOpt.isEmpty) Seq(unit) else Nil): _*)
   }
+
+  /** The `unitOpt` contract of the kNN operators: a caller-shared unit
+    * table must be persisted (the [[unitVectors]] result is). An
+    * unpersisted one would be recomputed by every join that reads it and
+    * never released by anyone.
+    */
+  private def requirePersisted(unitOpt: Option[DataFrame]): Unit =
+    require(unitOpt.forall(_.storageLevel != StorageLevel.NONE),
+      "unitOpt must be a persisted unitVectors table; the caller owns and releases it")
 
   /** Matryoshka-style two-stage ANN (Kusupati et al., "Matryoshka
     * Representation Learning", 2022): candidate generation by cosine
@@ -290,7 +301,7 @@ object Similarity {
     * (the pile-up case the cap exists for) recall is unchanged — every
     * member still pairs with the rep; for diffuse families that happen to
     * share a bucket, recall within the capped bucket drops to the star.
-    * Capped runs are visible: [[logHotGroups]] logs every run in which
+    * Capped runs are visible: [[groupStats]] logs every run in which
     * any group rep-links, with counts.
     *
     * MEASURED (graft.RecallProbe, sf1 = 20k vectors, where 256/256 of the
@@ -305,19 +316,25 @@ object Similarity {
     */
   val DefaultMaxLshBucket = 64
 
-  /** Cap telemetry (VERDICT_r13 #8): count + log the rep-linked groups so
-    * a pinned config running in degraded-recall star mode at scale is
-    * VISIBLE, not silent. One aggregate over the persisted group-size
-    * table (shared with the candidate build, so the marginal cost is a
-    * scan of a ≤(tables·2^bits | k)-row table). Returns the hot count so
-    * probes can surface it as a ride-along metric.
+  /** Cap telemetry and pair planning in ONE action over a persisted
+    * group-size table (`sizeCol` = members per group; ≤ tables·2^bits or
+    * #blocks rows, so the marginal cost is a scan of a tiny table). Logs
+    * the groups over `cap` that rep-link, so a pinned config running in
+    * degraded-recall star mode at scale is VISIBLE, not silent. Returns
+    * (the exact pair rows the capped self-join scores — m(m−1)/2 per
+    * group within the cap, m−1 star links per group over it — and the
+    * member total).
     */
-  private[graft] def logHotGroups(sizes: DataFrame, sizeCol: String,
-                                  cap: Int, op: String, unit: String): Long = {
+  private def groupStats(sizes: DataFrame, sizeCol: String, cap: Long,
+      op: String, unit: String): (Long, Long) = {
+    val m = col(sizeCol)
     val row = sizes.agg(
       count(lit(1)),
-      coalesce(sum(when(col(sizeCol) > cap, 1L).otherwise(0L)), lit(0L)),
-      coalesce(max(col(sizeCol)), lit(0L))).first()
+      coalesce(sum(when(m > cap, 1L).otherwise(0L)), lit(0L)),
+      coalesce(max(m), lit(0L)),
+      coalesce(sum(expr(s"CASE WHEN $sizeCol <= $cap THEN " +
+        s"($sizeCol * ($sizeCol - 1)) DIV 2 ELSE $sizeCol - 1 END")), lit(0L)),
+      coalesce(sum(m), lit(0L))).first()
     val (total, hot, mx) = (row.getLong(0), row.getLong(1), row.getLong(2))
     if (hot > 0) System.err.println(
       s"[similarity] $op: $hot of $total ${unit}s over cap=$cap " +
@@ -325,7 +342,7 @@ object Similarity {
         s"${unit}s is member-vs-rep only. For SemDeDup sizing use " +
         "semanticDedupAuto / autoKmeansKCapAware (detection recall 1.0 " +
         "where the sqrt-rule measured 0.386, SCALE_r16 §1)")
-    hot
+    (row.getLong(3), row.getLong(4))
   }
 
   /** The SCALE_r4.md scale rule as code: bits = ceil(log₂(n / occupancy)),
@@ -622,6 +639,7 @@ object Similarity {
     */
   def lshKnn(vectors: DataFrame, k: Int, dim: Int = 0, bits: Int = 0,
              unitOpt: Option[DataFrame] = None): DataFrame = {
+    requirePersisted(unitOpt)
     val nBits = resolveBits(vectors, bits, tables = 1, "lshKnn",
       targetOccupancy = 16 * k)
     val buckets = lshTablesFast(vectors, tables = 1, bits = nBits)
@@ -746,7 +764,7 @@ object Similarity {
       nLists: Int,
       nprobe: Int,
       unitOpt: Option[DataFrame] = None): DataFrame = {
-    val spark = vectors.sparkSession
+    requirePersisted(unitOpt)
     val cents = collectCentroids(vectors, nLists)
     val probes = probeAssign(
       vectors.join(queries.select("vec_id"), "vec_id"), cents, nprobe)
@@ -789,15 +807,10 @@ object Similarity {
     * (mirrored exactly in the oracle SQL).
     */
   def kmeansAssign(vectors: DataFrame, k: Int, iters: Int): DataFrame = {
-    // ONE corpus-sized cache (round 21): the quantized projection serves
-    // the init collect, every assignment pass, and every centroid update.
-    // The pre-r21 form additionally persisted a typed (vec_id, float
-    // embedding) projection and re-quantized per row inside each
-    // assignment pass — a second full-corpus cache and O(passes × corpus)
-    // redundant floor(v·2^20) work; the distances are computed from the
-    // SAME integers either way (guide §5: cache what is re-read, once).
-    // ownPersist keeps a cache the caller already installed untouched
-    // ([[semanticDedupHier]] shares this cache with its cell join).
+    // ONE corpus-sized cache: the quantized projection serves the init
+    // collect, every assignment pass, and every centroid update (guide
+    // §5: cache what is re-read, once). ownPersist keeps a cache the
+    // caller already installed untouched.
     val (quant, ownsQuant) = Caching.ownPersist(quantized(vectors))
     val out = kmeansAssignQuant(quant, k, iters)
     if (ownsQuant) quant.unpersist(blocking = false)
@@ -1051,31 +1064,6 @@ object Similarity {
     out
   }
 
-  /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
-    * arXiv:2303.09540 — public method): k-means clustering IS the
-    * blocking. Near-duplicate pairs are scored only WITHIN a cluster, so
-    * candidate work is Σ|cluster|² ≈ n²/k instead of n² — k trades recall
-    * at cluster boundaries for cost. At 100 TB the assignment is a
-    * map-side pass against the k×dims centroid index ([[kmeansAssign]])
-    * and the within-cluster self-join is an equi-join on the cluster id
-    * (shuffle-partitioned — no all-pairs node, PlanHygieneSpec-clean).
-    *
-    * Dedup rule (deterministic): a vector is a duplicate iff ANY lower-id
-    * vector in its cluster has cosine ≥ `threshold`, with vec_id order as
-    * the tiebreak. NOTE the chain behavior this implies: for A<B<C with
-    * A~B and B~C but A≁C, C is still flagged even though its only
-    * near-dup (B) was itself dropped — a transitive chain keeps only its
-    * lowest-id member, which prunes MORE aggressively than a strict
-    * keep-one-representative-per-survivor rule (dup only against KEPT
-    * members) would. The aggressive form is the one implemented AND the
-    * one the oracle implements, deliberately: it is a single equi-join +
-    * filter, while survivor-relative marking is inherently sequential
-    * within a cluster. Returns (vec_id, is_dup: 0/1) for EVERY input
-    * vector (0/1 over boolean keeps the cross-engine compare
-    * representation-free). Threshold-margin caveat: see
-    * [[decontaminateExact]] — thresholds must sit far from attainable
-    * fixture cosines.
-    */
   /** Hot-cluster cap for [[semanticDedup]]: a cluster larger than this
     * rep-links (every member scored against the cluster-min vec_id only)
     * instead of enumerating all within-cluster pairs. A PINNED k makes
@@ -1096,7 +1084,7 @@ object Similarity {
     * is exactly when the pinned config is undersized — prefer the auto
     * sizing there (NOT the hierarchical form: [[semanticDedupHier]]'s
     * scaladoc carries its measured 2M-vector negative). Rep-linked runs
-    * log via [[logHotGroups]].
+    * log via [[groupStats]].
     *
     * MEASURED (graft.RecallProbe, sf1 = 20k vectors): under the pinned
     * k=8 (2,500 vectors/cluster — every cluster rep-links) detection
@@ -1126,79 +1114,72 @@ object Similarity {
     */
   val DefaultMaxCluster = 1024
 
-  /** Per-pass transient pair-row budget for [[semanticDedupHier]]'s
-    * within-block scoring (VERDICT_r17 #1). Calibrated from the two
-    * measured single-box endpoints: the 10M run COMPLETED its ~1.5B
-    * block pairs in one pass near this box's disk ceiling (SCALE_r16 §2)
-    * and the 20M run's ~3.8B pairs ENOSPC'd it from 37 GB free
-    * (SCALE_r17 §5) — so 1e9 rows/pass (~2/3 of the survived spill,
-    * ~10–25 GB at dim 32–64 with lz4 shuffle compression) keeps each
-    * pass inside the measured-safe envelope with headroom for the
-    * persisted projections that share the disk. Every declared query's
-    * block-pair volume is far below this (single-pass, original plan);
-    * a cluster deployment can raise it — per-executor spill is what the
-    * budget really bounds, and the estimate/budget quotient just picks
-    * the pass count.
+  /** Per-pass transient pair-row budget for the SemDeDup block scoring
+    * ([[dedupBlocks]]). Calibrated from the two measured single-box
+    * endpoints: the 10M hier run COMPLETED its ~1.5B block pairs in one
+    * pass near this box's disk ceiling (SCALE_r16 §2) and the 20M run's
+    * ~3.8B pairs ENOSPC'd it from 37 GB free (SCALE_r17 §5) — so 1e9
+    * rows/pass (~2/3 of the survived spill, ~10–25 GB at dim 32–64 with
+    * lz4 shuffle compression) keeps each pass inside the measured-safe
+    * envelope with headroom for the persisted projections that share the
+    * disk. Every declared query's block-pair volume is far below this
+    * (single-pass, original plan); a cluster deployment can raise it —
+    * per-executor spill is what the budget really bounds, and the
+    * estimate/budget quotient just picks the pass count.
     *
-    * The bound is BEST-EFFORT, not hard (ADVICE_r18): a pass's shuffle
-    * files are reclaimed by the asynchronous ContextCleaner after the
-    * System.gc() nudge between passes, so a slow cleaner can briefly
-    * overlap one pass's files with the next pass's writes. The measured
-    * profile at 20M (5 passes, crest flat ±2 GiB, SCALE_r18 §5) shows
-    * the nudge keeps the overlap near zero in practice; size the budget
-    * with one-pass slack if the disk has none.
+    * The bound is BEST-EFFORT, not hard: a pass's shuffle files are
+    * reclaimed by the asynchronous ContextCleaner after the System.gc()
+    * nudge between passes, so a slow cleaner can briefly overlap one
+    * pass's files with the next pass's writes. The measured profile at
+    * 20M (5 passes, crest flat ±2 GiB, SCALE_r18 §5) shows the nudge
+    * keeps the overlap near zero in practice; size the budget with
+    * one-pass slack if the disk has none.
     */
   val DefaultPairRowBudget = 1000000000L
 
+  /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
+    * arXiv:2303.09540 — public method): k-means clustering IS the
+    * blocking. Near-duplicate pairs are scored only WITHIN a cluster, so
+    * candidate work is Σ|cluster|² ≈ n²/k instead of n² — k trades recall
+    * at cluster boundaries for cost. At 100 TB the assignment is a
+    * map-side pass against the k×dims centroid index ([[kmeansAssign]])
+    * and the within-cluster self-join is an equi-join on the cluster id
+    * (shuffle-partitioned — no all-pairs node, PlanHygieneSpec-clean).
+    *
+    * Dedup rule (deterministic): a vector is a duplicate iff ANY lower-id
+    * vector in its cluster has cosine ≥ `threshold`, with vec_id order as
+    * the tiebreak. NOTE the chain behavior this implies: for A<B<C with
+    * A~B and B~C but A≁C, C is still flagged even though its only
+    * near-dup (B) was itself dropped — a transitive chain keeps only its
+    * lowest-id member, which prunes MORE aggressively than a strict
+    * keep-one-representative-per-survivor rule (dup only against KEPT
+    * members) would. The aggressive form is the one implemented AND the
+    * one the oracle implements, deliberately: it is a single equi-join +
+    * filter, while survivor-relative marking is inherently sequential
+    * within a cluster. Returns (vec_id, is_dup: 0/1) for EVERY input
+    * vector (0/1 over boolean keeps the cross-engine compare
+    * representation-free). Threshold-margin caveat: see
+    * [[decontaminateExact]] — thresholds must sit far from attainable
+    * fixture cosines.
+    *
+    * Front end vs [[semanticDedupHier]]: this form runs driver-side Lloyd
+    * ([[kmeansAssign]]) with a global `k` and `iters`, seeded by the k
+    * lowest vec_ids of the WHOLE corpus; hier seeds each coarse cell from
+    * its own lowest ids through a window. The blockings differ, so the
+    * two forms' flags are not byte-identical (each has its own oracle
+    * SQL). Everything after the assignment — capped block scoring, pass
+    * planning, staging, the final flag join — is the shared
+    * [[dedupBlocks]] back end with `cluster` as the block key.
+    */
   def semanticDedup(
       vectors: DataFrame, k: Int, iters: Int, threshold: Double,
       maxCluster: Int = DefaultMaxCluster): DataFrame = {
     val assign = kmeansAssign(vectors, k, iters)
     val unit = unitVectors(vectors)
-    val both = assign.join(unit, "vec_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (cand, owned) =
-      if (maxCluster <= 0) {
-        val a = both.select(col("cluster"), col("vec_id").as("id_a"), col("uv").as("va"))
-        val b = both.select(col("cluster").as("cluster_b"),
-          col("vec_id").as("id_b"), col("uv").as("vb"))
-        (a.join(b,
-          col("cluster") === col("cluster_b") && col("id_a") < col("id_b"))
-          .select("id_a", "va", "id_b", "vb"), Seq(both))
-      } else {
-        // hot-cluster guard (default ON, [[DefaultMaxCluster]], mirrored
-        // in the oracle SQL): oversized clusters score members against the
-        // cluster-min representative only — the MinHash rep-link discipline
-        val sizes = both.groupBy("cluster")
-          .agg(count(lit(1)).as("cluster_n"), min(col("vec_id")).as("rep"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        logHotGroups(sizes, "cluster_n", maxCluster, "semanticDedup", "cluster")
-        val small = both.join(
-          sizes.filter(col("cluster_n") <= maxCluster).select("cluster"),
-          Seq("cluster"), "left_semi")
-        val a = small.select(col("cluster"), col("vec_id").as("id_a"), col("uv").as("va"))
-        val b = small.select(col("cluster").as("cluster_b"),
-          col("vec_id").as("id_b"), col("uv").as("vb"))
-        val smallPairs = a.join(b,
-          col("cluster") === col("cluster_b") && col("id_a") < col("id_b"))
-          .select("id_a", "va", "id_b", "vb")
-        // rep = cluster min ⇒ id_a < id_b holds by construction
-        val hot = sizes.filter(col("cluster_n") > maxCluster)
-          .select(col("cluster"), col("rep"))
-          .join(unit.select(col("vec_id").as("rep"), col("uv").as("va")), "rep")
-        val bigPairs = both.join(hot, Seq("cluster"))
-          .filter(col("vec_id") =!= col("rep"))
-          .select(col("rep").as("id_a"), col("va"),
-            col("vec_id").as("id_b"), col("uv").as("vb"))
-        (smallPairs.unionByName(bigPairs), Seq(both, sizes))
-      }
-    val dropped = cosinePairs(cand, "id_a", "va", "id_b", "vb")
-      .filter(col("cos") >= threshold)
-      .select(col("id_b").as("vec_id")).distinct()
-    val res = vectors.select(col("vec_id").cast("long").as("vec_id"))
-      .join(dropped.withColumn("dup", lit(1L)), Seq("vec_id"), "left")
-      .select(col("vec_id"), coalesce(col("dup"), lit(0L)).as("is_dup"))
-    Caching.materializeAndRelease(res, (Seq(unit, assign) ++ owned): _*)
+    dedupBlocks(vectors, Seq("cluster"), threshold, maxCluster,
+      DefaultPairRowBudget, forcePasses = 0, "semanticDedup", Nil, splits = 1) {
+      _ => (assign, unit, Seq(assign, unit))
+    }
   }
 
   /** Hierarchical SemDeDup — the past-10⁹-vectors form of
@@ -1210,271 +1191,145 @@ object Similarity {
     * driver-side centroid collect, so the Σ k₂ centroid table scales with
     * the data, not the driver). Near-dup scoring happens only within a
     * (cell, subcluster) block under the [[DefaultMaxCluster]] rep-link
-    * cap. Total work ~n^(4/3) versus single-level auto-k's n^1.5
+    * cap, in the [[dedupBlocks]] back end shared with [[semanticDedup]].
+    * Total work ~n^(4/3) versus single-level auto-k's n^1.5
     * (SCALE_r11 §12's own bound).
     *
-    * MEASURED GUIDANCE (SemDedupProbe; SCALE_r16 §2 — supersedes the
-    * r13/r15 "never beats auto" reading, which compared against
-    * STAR-MODE auto without knowing its recall): against the √-rule
-    * auto this form does lose on wall everywhere measured (272 vs
-    * 111 s at 2M, 2,489 vs 269 s at 10M) — but past ~500k vectors that
-    * auto is in the capped star mode whose detection recall measured
-    * 0.36–0.39, not a usable dedup. Against the RECALL-PRESERVING
-    * single-level sizing ([[autoKmeansKCapAware]]), hier wins from
-    * 600k vectors up: 91.9 vs 158.4 s at 600k (1.7×), 272.1 vs
-    * 1,163.5 s at 2M (4.3×), and it COMPLETES 10M in 2,488.8 s where
-    * auto2's quadratic assignment term is a computed ~8-hour wall.
-    * Its per-cell blocks (≈ √2·n^(1/3), ~305 vectors at 10M) stay
-    * under the cap through n ≈ (cap/√2)³ ≈ 4·10⁸, so it never
-    * star-links in any measured regime — RECALL-CERTIFIED round 17
-    * (RecallProbe `semdedup_hier`, SCALE_r17 §1): detection recall
-    * exactly 1.0 at 600k AND 2M (capped ≡ uncapped flag sets), and
-    * planted-class recall 1.0 at 600k. The trade is finer-block
-    * semantics — 75–84% of auto2's flag set; 82.6% absolute coverage
-    * of the planted cos≥0.95 class vs auto2's 93.4% (SCALE_r17 §1).
-    * Measured scale exponent 600k→10M: ~n^1.33–1.40, the designed
-    * n^(4/3). Deployment ladder: [[autoKmeansKCapAware]] below ~400k,
-    * THIS form from ~600k up (beyond ~10⁸, bring a cluster, which the
-    * distributed per-cell design is for). Single-box DISK bounds
-    * (SCALE_r17 §5): the round-17 packed-decimal argmin keeps
-    * assignment at O(n) transient disk (the old window sort's
-    * n^(4/3) spill ENOSPC'd this box at 20M); the within-block pair
-    * scoring — the next measured bound, ENOSPC at ~3.8B pairs / 20M —
-    * now runs in bounded block-range passes once the exact pair count
-    * (from the block-size table) exceeds `pairRowBudget`
-    * ([[DefaultPairRowBudget]]): blocks are hash-partitioned into
-    * ⌈pairs/budget⌉ independent passes, each pass's survivors land in
-    * parquet (cutting its shuffle-file lineage before the next pass),
-    * and the per-pass union is provably the single-pass answer because
-    * no pair crosses blocks. The between-pass shuffle-file reclaim is
-    * BEST-EFFORT (a GC nudge to the async ContextCleaner, not a
-    * barrier), so the disk bound is an expected crest, not a hard cap —
-    * the measured 20M profiles (SCALE_r18 §2, SCALE_r19 §3) show it
-    * holding flat within ±2 GiB across passes. Declared-query regimes
-    * stay single-pass on the original plan.
+    * MEASURED GUIDANCE (SemDedupProbe; SCALE_r16 §2): against the √-rule
+    * auto this form loses on wall everywhere measured (272 vs 111 s at
+    * 2M, 2,489 vs 269 s at 10M) — but past ~500k vectors that auto is in
+    * the capped star mode whose detection recall measured 0.36–0.39, not
+    * a usable dedup. Against the RECALL-PRESERVING single-level sizing
+    * ([[autoKmeansKCapAware]]), hier wins from 600k vectors up: 91.9 vs
+    * 158.4 s at 600k (1.7×), 272.1 vs 1,163.5 s at 2M (4.3×), and it
+    * COMPLETES 10M in 2,488.8 s where auto2's quadratic assignment term
+    * is a computed ~8-hour wall. Its per-cell blocks (≈ √2·n^(1/3), ~305
+    * vectors at 10M) stay under the cap through n ≈ (cap/√2)³ ≈ 4·10⁸,
+    * so it never star-links in any measured regime (RecallProbe
+    * `semdedup_hier`, SCALE_r17 §1): detection recall exactly 1.0 at
+    * 600k AND 2M (capped ≡ uncapped flag sets), and planted-class recall
+    * 1.0 at 600k. The trade is finer-block semantics — 75–84% of auto2's
+    * flag set; 82.6% absolute coverage of the planted cos≥0.95 class vs
+    * auto2's 93.4% (SCALE_r17 §1). Measured scale exponent 600k→10M:
+    * ~n^1.33–1.40, the designed n^(4/3). Deployment ladder:
+    * [[autoKmeansKCapAware]] below ~400k, THIS form from ~600k up
+    * (beyond ~10⁸, bring a cluster, which the distributed per-cell
+    * design is for).
+    *
+    * Single-box DISK bounds. `semanticDedupHier(vectors, threshold,
+    * shards = S)` is the one entry point for both bounded phases:
+    *   - PAIR phase: once the exact block-pair count exceeds
+    *     `pairRowBudget` ([[DefaultPairRowBudget]]) — or `forcePasses`
+    *     pins a count — blocks are scored in hash-partitioned passes
+    *     staged as parquet (see [[dedupBlocks]]); the measured 20M
+    *     profiles (SCALE_r18 §2, SCALE_r19 §3) hold the crest flat within
+    *     ±2 GiB across passes.
+    *   - ASSIGNMENT phase: the concurrent working set (quantized
+    *     projection, cell join, unit vectors, argmin shuffles, block-size
+    *     agg) is ~2.81 GiB per million 64-dim vectors (SCALE_r19 §10),
+    *     which capped one box at ~24M vectors. After the coarse argmin
+    *     every downstream step — per-cell k₂, seeds, both Lloyd argmins,
+    *     block dedup — is keyed by the coarse cell and touches no row
+    *     outside it, so hash-partitioning CELLS into S shards and running
+    *     the fine pipeline once per shard is EXACTLY the unsharded
+    *     computation: a vec_id lives in one cell and a cell in one shard,
+    *     so the per-shard flag sets are disjoint and their union is the
+    *     unsharded set (HierShardedSpec; the declared
+    *     `emb_semantic_dedup_hier_sharded` query is checked against the
+    *     UNSHARDED hier oracle SQL). With S > 1 the corpus-wide quantized
+    *     cache is released once the coarse assignment is done and each
+    *     shard's flags stage as parquet before the next shard starts, so
+    *     transient disk is ~(working set)/S; on a cluster the same knob
+    *     bounds per-executor footprint. S = 1 is the ordinary run.
+    * Declared-query regimes stay single-pass, single-shard on one plan.
     *
     * Every step is integer-exact on the [[quantized]] lattice and the
     * whole chain — coarse CTEs, per-cell seeds, floor-average update,
     * argmin tie-to-lowest-id, capped block dedup — is reproduced
     * verbatim in the `emb_semantic_dedup_hier` oracle SQL, with k₁ and
     * each cell's k₂ derived from COUNT(*) inside the query, so the
-    * sizing rules themselves are under the oracle hash.
+    * sizing rules themselves are under the oracle hash. `knownCount`
+    * lets a caller that already counted (the [[semanticDedupAuto]]
+    * dispatcher) skip a second full corpus scan; `k2Divisor` is the
+    * wider-blocks coverage knob (see [[hierSubclusters]]).
     */
   def semanticDedupHier(vectors: DataFrame, threshold: Double,
+      shards: Int = 1,
       maxCluster: Int = DefaultMaxCluster,
       knownCount: Long = -1L,
       pairRowBudget: Long = DefaultPairRowBudget,
       k2Divisor: Int = 1,
       forcePasses: Int = 0): DataFrame = {
-    // `knownCount` lets a caller that already counted (the
-    // [[semanticDedupAuto]] dispatcher) skip a second full corpus scan —
-    // at 100 TB a count() is a full read (VERDICT_r17 #3).
+    require(shards >= 1, s"shards must be >= 1, got $shards")
     val n = if (knownCount >= 0L) knownCount else vectors.count()
-    val k1 = autoCoarseK(n)
-    // ONE quantized-corpus cache for the whole assignment phase (round
-    // 21): the coarse k-means reads it via [[kmeansAssignQuant]] and the
-    // cell join below reads the SAME cache — the pre-r21 form quantized
-    // and cached the corpus twice (once inside kmeansAssign, once here).
+    // ONE quantized-corpus cache: the coarse k-means reads it and, with
+    // one shard, so does the cell join
     val (quant, ownsQuant) = Caching.ownPersist(quantized(vectors))
-    val coarse = kmeansAssignQuant(quant, k1, 1) // checkpointed (vec_id, cluster)
-    val withCell = quant.join(coarse, "vec_id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val unit = unitVectors(vectors)
-    val (dropped, tailOwned, cleanupPassDir) = hierCellPipeline(
-      withCell, unit, threshold, maxCluster, pairRowBudget, k2Divisor,
-      forcePasses)
-    val out =
-      try {
-        val res = vectors.select(col("vec_id").cast("long").as("vec_id"))
-          .join(dropped.withColumn("dup", lit(1L)), Seq("vec_id"), "left")
-          .select(col("vec_id"), coalesce(col("dup"), lit(0L)).as("is_dup"))
-        Caching.materializeAndRelease(res,
-          (Seq(coarse, withCell, unit) ++ tailOwned): _*)
-      } catch {
-        // a failed materialization (the ENOSPC regime this branch
-        // exists for) must not leak up to ~budget rows of pass parquet
-        // (ADVICE_r18): nothing references the files once the job died.
-        // The cleanup itself runs guarded — fs.delete can fail in the
-        // same disk/FS regime that killed the job, and that failure must
-        // not mask the original error (ADVICE_r19).
-        case t: Throwable => quietCleanup(cleanupPassDir); throw t
-      }
-    if (ownsQuant) quant.unpersist(blocking = false)
-    // the per-pass parquet is consumed once `res` is materialized; in
-    // lazy mode (EagerReleaseKey=false) the result still references the
-    // files, so the temp dir is left for the session to read — it stays
-    // in the scratch registry for [[cleanupScratch]] / the shutdown hook
-    if (vectors.sparkSession.conf.get(Caching.EagerReleaseKey, "true") != "false")
-      cleanupPassDir()
+    val coarse = kmeansAssignQuant(quant, autoCoarseK(n), 1) // checkpointed
+    // sharded, each shard quantizes only its own rows: the corpus-wide
+    // cache goes before the first shard starts
+    if (shards > 1 && ownsQuant) quant.unpersist(blocking = false)
+    val out = dedupBlocks(vectors, Seq("cluster", "sub"), threshold,
+        maxCluster, pairRowBudget, forcePasses, "semanticDedupHier",
+        Seq(coarse), shards) { s =>
+      // `pmod(xxhash64(cell))` partitions CELLS, not rows, so a cell's
+      // whole membership lands in one shard and its fine pipeline sees it
+      // intact
+      val (cells, q, vecs) =
+        if (shards == 1) (coarse, quant, vectors)
+        else {
+          val cellsS = coarse
+            .filter(pmod(xxhash64(col("cluster")), lit(shards.toLong)) === s)
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          val vecS = vectors.join(cellsS.select("vec_id"), Seq("vec_id"), "left_semi")
+          (cellsS, quantized(vecS).persist(StorageLevel.MEMORY_AND_DISK), vecS)
+        }
+      val withCell = q.join(cells, "vec_id").persist(StorageLevel.MEMORY_AND_DISK)
+      val unit = unitVectors(vecs)
+      val (sub, c1) = hierSubclusters(withCell, k2Divisor)
+      (sub, unit, Seq(withCell, unit, c1) ++ (if (shards > 1) Seq(cells, q) else Nil))
+    }
+    if (shards == 1 && ownsQuant) quant.unpersist(blocking = false)
     out
   }
 
-  /** [[semanticDedupHier]] with the ASSIGNMENT phase disk-bounded by
-    * coarse-cell sharding — the >24M single-box form (VERDICT_r19 #1).
+  /** The fine (within-cell) k-means of hierarchical SemDeDup: per-cell k₂
+    * sizing, seed selection and both packed-decimal Lloyd argmins. Every
+    * step is keyed by `cluster` (or a column derived within one cluster),
+    * the invariant that makes shard-union ≡ unsharded exact.
     *
-    * Both measured single-box deaths (30M and 24M, SCALE_r19 §5/§10)
-    * were in assignment/block-size materialization: the whole corpus's
-    * quantized projection, cell join, unit vectors, second-level argmin
-    * shuffle, and block-size agg hit disk AT ONCE (~2.81 GiB per million
-    * vectors), while the pair phase was already budget-boxed. After the
-    * coarse argmin every downstream step — per-cell k₂ sizing, seeds,
-    * both Lloyd argmins, block dedup — is keyed by the coarse cell and
-    * touches no row outside it, so partitioning CELLS into `shards` hash
-    * ranges and running the fine pipeline once per range is EXACTLY the
-    * unsharded computation: each cell's flags are computed from the same
-    * rows by the same integer-exact chain in whichever shard owns the
-    * cell, and a vec_id lives in exactly one cell, so the shard flag
-    * sets are disjoint and their union is the unsharded set
-    * (HierShardedSpec proves flag-set equality; the declared
-    * `emb_semantic_dedup_hier_sharded` query hash-checks it against the
-    * UNSHARDED hier oracle SQL every round). Per-shard flags stage as
-    * parquet through the same Hadoop-FS [[scratchPassDir]] machinery as
-    * the bounded pair passes — each shard's write is a lineage cut, so
-    * its quant/cell/unit/argmin working set becomes collectable before
-    * the next shard starts, bounding transient disk at ~(working set)/
-    * shards + the global coarse assignment (whose own footprint is the
-    * [[kmeansAssign]] caches, reclaimed before the first shard runs).
-    * On a cluster the same knob bounds PER-EXECUTOR footprint: shards
-    * trade wall-clock serialization for a working set any fixed disk
-    * can hold.
-    */
-  def semanticDedupHierSharded(vectors: DataFrame, threshold: Double,
-      shards: Int,
-      maxCluster: Int = DefaultMaxCluster,
-      knownCount: Long = -1L,
-      pairRowBudget: Long = DefaultPairRowBudget,
-      k2Divisor: Int = 1): DataFrame = {
-    require(shards >= 1, s"shards must be >= 1, got $shards")
-    if (shards == 1)
-      return semanticDedupHier(vectors, threshold, maxCluster, knownCount,
-        pairRowBudget, k2Divisor)
-    val spark = vectors.sparkSession
-    val n = if (knownCount >= 0L) knownCount else vectors.count()
-    val k1 = autoCoarseK(n)
-    val coarse = kmeansAssign(vectors, k1, 1) // checkpointed (vec_id, cluster)
-    val (fs, root) = scratchPassDir(spark)
-    System.err.println(
-      s"[similarity] semanticDedupHierSharded: n=$n, k1=$k1, " +
-        s"$shards coarse-cell shards staged under $root")
-    try {
-      for (s <- 0 until shards) {
-        // the shard's cells and their member rows — `pmod(xxhash64(cell))`
-        // partitions CELLS (not rows), so a cell's whole membership lands
-        // in one shard and the fine pipeline sees it intact
-        val cellsS = coarse.filter(
-          pmod(xxhash64(col("cluster")), lit(shards.toLong)) === s)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val vecS = vectors.join(cellsS.select("vec_id"), Seq("vec_id"), "left_semi")
-        val quantS = quantized(vecS).persist(StorageLevel.MEMORY_AND_DISK)
-        val withCellS = quantS.join(cellsS, "vec_id")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val unitS = unitVectors(vecS)
-        val (droppedS, ownedS, cleanupS) = hierCellPipeline(
-          withCellS, unitS, threshold, maxCluster, pairRowBudget, k2Divisor,
-          forcePasses = 0)
-        try {
-          droppedS.write.mode("overwrite").parquet(s"$root/shard_$s")
-        } catch {
-          case t: Throwable => quietCleanup(cleanupS); throw t
-        }
-        // the shard's flags are on disk: release every per-shard cache and
-        // its pass staging (if the shard itself went multi-pass), then
-        // nudge the ContextCleaner — reclaiming this shard's shuffle files
-        // BEFORE the next shard starts is the point of sharding
-        (Seq(cellsS, quantS, withCellS, unitS) ++ ownedS)
-          .foreach(_.unpersist(blocking = false))
-        cleanupS()
-        // GC nudge only when the per-shard working set is big enough for
-        // shuffle-file reclaim to matter (round 20): at ~2.81 GiB per
-        // million vectors (SCALE_r19 §10), a shard under ~1M rows holds
-        // well under the disk headroom sharding exists to protect, and a
-        // full stop-the-world GC per shard was measured pure overhead at
-        // declared-query scale (~0.5–1 s per nudge on a 16 GiB heap).
-        // n/shards is the MEAN shard size — a deliberate approximation
-        // (ADVICE_r20): cells hash-partition into shards, so a skewed
-        // shard can exceed the mean, but xxhash64 over ~n^(1/3) cells
-        // keeps the spread small (multinomial, ±O(√(n/shards))), the
-        // threshold carries ~3 GiB of headroom below the crest sharding
-        // protects, and an exact per-shard count would cost one more job
-        // per shard in the declared-query regime the gate exists to keep
-        // cheap. Correctness is unaffected either way — the nudge only
-        // times a GC.
-        if (n / shards >= 1000000L) System.gc()
-        System.err.println(
-          s"[similarity] semanticDedupHierSharded: shard ${s + 1}/$shards flagged")
-      }
-      // disjoint by construction (one cell owns a vec_id, one shard owns a
-      // cell) — the union needs no distinct
-      val dropped = spark.read.parquet(s"$root/shard_*")
-      val res = vectors.select(col("vec_id").cast("long").as("vec_id"))
-        .join(dropped.withColumn("dup", lit(1L)), Seq("vec_id"), "left")
-        .select(col("vec_id"), coalesce(col("dup"), lit(0L)).as("is_dup"))
-      val out = Caching.materializeAndRelease(res, coarse)
-      // eager mode: the shard parquet is consumed once `res` materialized.
-      // Lazy mode: the result still references the files — the dir stays
-      // registered for [[cleanupScratch]] / the shutdown hook.
-      if (spark.conf.get(Caching.EagerReleaseKey, "true") != "false") {
-        fs.delete(root, true); unregisterScratch(fs, root)
-      }
-      out
-    } catch {
-      case t: Throwable =>
-        quietCleanup(() => { fs.delete(root, true); unregisterScratch(fs, root) })
-        throw t
-    }
-  }
-
-  /** The fine (within-cell) half of hierarchical SemDeDup: per-cell k₂
-    * sizing, seed selection, both packed-decimal Lloyd argmins, and the
-    * capped block dedup with bounded pair passes — everything downstream
-    * of the coarse assignment. Factored out so [[semanticDedupHier]]
-    * (one call over all cells — plan-identical to the pre-factor form)
-    * and [[semanticDedupHierSharded]] (one call per coarse-cell hash
-    * range) run the SAME integer-exact chain. Every step is keyed by
-    * `cluster` (or a column derived within one cluster), which is the
-    * invariant that makes shard-union ≡ unsharded exact.
+    * `k2Divisor > 1` widens the blocks: each cell's k₂ is ceil-divided so
+    * blocks grow ~k2Divisor× (block ≈ √2·n^(1/3)·k2Divisor), trading wall
+    * for absolute planted-class coverage (hier's finer blocks cover 82.6%
+    * of the planted cos≥0.95 class vs single-level auto2's 93.4%,
+    * SCALE_r17 §1). Keep √2·n^(1/3)·k2Divisor under `maxCluster` or the
+    * hot-block guard star-links the oversized blocks and recall DROPS
+    * instead. The ceil stays integer-exact ((x+d-1) DIV d), so the divided
+    * chain remains oracle-reproducible.
     *
     * @param withCell (vec_id, q, cluster) — persisted by the caller
-    * @param unit     (vec_id, uv) covering `withCell`'s vec_ids
-    * @return (dropped vec_ids pre-join, caches this pipeline installed —
-    *         the caller releases them after materializing, cleanup for
-    *         the bounded-pass staging dir — a no-op when the single-pass
-    *         plan ran)
+    * @return ((vec_id, cluster, sub), the persisted centroid table the
+    *         caller releases)
     */
-  private[operators] def hierCellPipeline(withCell: DataFrame, unit: DataFrame,
-      threshold: Double, maxCluster: Int, pairRowBudget: Long,
-      k2Divisor: Int, forcePasses: Int)
-      : (DataFrame, Seq[DataFrame], () => Unit) = {
+  private def hierSubclusters(withCell: DataFrame, k2Divisor: Int)
+      : (DataFrame, DataFrame) = {
     def sqDist(a: Column, b: Column): Column = aggregate(
       zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), (acc, z) => acc + z)
     // per-cell k₂ from the cell's own size (integer-exact: DIV then an
-    // exact sqrt+ceil below 2^52 — the autoKmeansK argument).
-    // `k2Divisor > 1` is the wider-blocks coverage knob (VERDICT_r17 #5):
-    // ceil-divide each cell's k₂ so blocks grow ~k2Divisor× (block ≈
-    // √2·n^(1/3)·k2Divisor), trading wall for absolute planted-class
-    // coverage (hier's finer blocks cover 82.6% of the planted cos≥0.95
-    // class vs single-level auto2's 93.4%, SCALE_r17 §1). Keep
-    // √2·n^(1/3)·k2Divisor under `maxCluster` or the hot-block guard
-    // star-links the oversized blocks and recall DROPS instead. The
-    // divisor stays integer-exact (ceil via (x+d-1) DIV d) so the
-    // divided chain remains oracle-reproducible.
+    // exact sqrt+ceil below 2^52 — the autoKmeansK argument)
     val k2BaseEx = "CAST(ceil(sqrt(CAST((m + 1) DIV 2 AS DOUBLE))) AS BIGINT)"
     val k2Ex =
       if (k2Divisor <= 1) k2BaseEx
       else s"GREATEST(CAST(1 AS BIGINT), ($k2BaseEx + ${k2Divisor - 1}) DIV $k2Divisor)"
     // seeds: the k₂ lowest vec_ids in each cell (reproducible "sampling",
-    // the kmeansAssign init convention applied per cell). k₂ comes from
-    // the cell's size m via a COUNT WINDOW over the same cluster
-    // partitioning as the row_number (round 21): both windows share ONE
-    // exchange + sort, replacing the former separate groupBy(cluster)
-    // aggregate and its join back onto withCell (guide §2.4 — two
-    // operations keyed the same way share one exchange). m is identical
-    // to the old agg's count, so k₂ and the seed set are bit-identical.
-    // The packed argmin below requires every seed id in [0, 2^34);
-    // out-of-range ids would otherwise pack into the dist bits (silently
-    // wrong argmin) or overflow decimal(11,0) to null (silently dropped
-    // by min) — so the guard fails LOUDLY here, on the Σk₂-row seed
-    // table, the one place every packed cid flows through (ADVICE_r17).
+    // the kmeansAssign init convention applied per cell). The cell size m
+    // is a COUNT WINDOW over the same partitioning as the row_number, so
+    // both windows share ONE exchange + sort (guide §2.4). The packed
+    // argmin below requires every seed id in [0, 2^34); out-of-range ids
+    // would otherwise pack into the dist bits (silently wrong argmin) or
+    // overflow decimal(11,0) to null (silently dropped by min) — so the
+    // guard fails LOUDLY here, on the Σk₂-row seed table, the one place
+    // every packed cid flows through.
     val wCell = Window.partitionBy(col("cluster"))
     val seeds = withCell
       .withColumn("rn", row_number().over(wCell.orderBy(col("vec_id"))))
@@ -1487,26 +1342,22 @@ object Similarity {
             col("vec_id").cast("string"))))
           .otherwise(col("vec_id")).as("cid"),
         col("q").as("cq"))
-    // Per-vector argmin as a PRIMITIVE streaming aggregate, not a sort
-    // (round 17): `row_number() OVER (PARTITION BY vec_id ORDER BY dist,
-    // cid)` materializes and SORTS all n·k₂ ≈ n^(4/3)/√2 candidate rows —
-    // the measured single-box disk wall (stage-43 ENOSPC at both 20M and
-    // 30M vectors: ~32 B/row puts 20M at ~154 GB of sort spill, over this
-    // box's ~90 GB) — and `min(struct(dist, cid))`, though semantically
-    // the same argmin, lands in ObjectHashAggregate, whose sort-based
-    // fallback (spark.sql.objectHashAggregate.sortBased.fallbackThreshold,
-    // default 128 map entries) re-creates the SAME sort (measured: the
-    // second 20M ENOSPC, same stage). Packing the pair into ONE
-    // fixed-width decimal — dist·2^34 + cid — makes the numeric order
-    // exactly the lexicographic (dist, cid) order (dist is an exact
-    // non-negative long, the sqDist bound the operator already assumes;
-    // cid is a vec_id, and the packing requires vec_id < 2^34 ≈ 1.7·10^10
-    // — beyond any corpus this engine targets per partition table), and
-    // min over a fixed-width decimal partial-aggregates in the primitive
-    // HashAggregate: map-side combine collapses each partition to ≤n rows
-    // before the vec_id shuffle, so transient disk is O(n), not
-    // O(n^(4/3)). The cell id is recovered from the winning seed via the
-    // broadcast (cid → cluster) side table (a seed belongs to one cell).
+    // Per-vector argmin as a PRIMITIVE streaming aggregate, not a sort:
+    // `row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid)`
+    // materializes and SORTS all n·k₂ ≈ n^(4/3)/√2 candidate rows (~154 GB
+    // of sort spill at 20M vectors, the measured single-box disk wall),
+    // and `min(struct(dist, cid))` lands in ObjectHashAggregate, whose
+    // sort-based fallback (spark.sql.objectHashAggregate.sortBased
+    // .fallbackThreshold, default 128 map entries) re-creates the SAME
+    // sort. Packing the pair into ONE fixed-width decimal — dist·2^34 +
+    // cid — makes the numeric order exactly the lexicographic (dist, cid)
+    // order (dist is an exact non-negative long; cid is a vec_id < 2^34),
+    // and min over a fixed-width decimal partial-aggregates in the
+    // primitive HashAggregate: map-side combine collapses each partition
+    // to ≤n rows before the vec_id shuffle, so transient disk is O(n),
+    // not O(n^(4/3)). The cell id is recovered from the winning seed via
+    // the broadcast (cid → cluster) side table (a seed belongs to one
+    // cell).
     val CidShift = 1L << 34
     def argminBy(cands: DataFrame, cidToCell: DataFrame): DataFrame =
       cands
@@ -1522,7 +1373,7 @@ object Similarity {
           sqDist(col("q"), col("cq")).as("dist")),
       seeds.select(col("cid"), col("cluster")))
       .select(col("vec_id"), col("cluster"), col("cid"))
-    // floor-average update per (cell, seed, dim), reassembled to arrays
+    // floor-average update per (cell, seed, dim), reassembled to arrays,
     // persisted: a1 references c1 TWICE (candidate join + the broadcast
     // cid→cluster side table), and without the cache each reference
     // re-evaluates the whole chain — including a0's n·k₂ distance
@@ -1544,103 +1395,61 @@ object Similarity {
           sqDist(col("q"), col("cq")).as("dist")),
       c1.select(col("cid"), col("cluster")))
       .select(col("vec_id"), col("cluster"), col("cid").as("sub"))
-    // capped dedup within (cell, subcluster) blocks — the semanticDedup
-    // tail keyed by the composite block id. `maxCluster <= 0` disables
-    // the guard (exact within-block pairs), the SAME uncapped convention
-    // as [[semanticDedup]] — before round 17 this path star-linked EVERY
-    // block (`cluster_n > 0` matched all of them), silently inverting
-    // the contract for ground-truth probes and for the documented
-    // [[semanticDedupAuto]] `maxCluster ≤ 0` passthrough.
-    val both = a1.join(unit, "vec_id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // id_b side of every scored pair whose cosine clears the threshold,
-    // pre-distinct. In the capped branch the scoring can run in BOUNDED
-    // BLOCK-RANGE PASSES (VERDICT_r17 #1): the round-17 20M run cleared
-    // every assignment stage (the packed-argmin fix) and then ENOSPC'd in
-    // THIS phase — ~3.8B within-block pair rows spilling at once. Blocks
-    // are independent, so partitioning them by hash into ⌈est/budget⌉
-    // passes — each pass materialized to parquet (a lineage cut: the
-    // pass's shuffle files become collectable before the next pass
-    // starts) — bounds transient disk at ~budget pair rows while the
-    // union of per-pass survivors is EXACTLY the single-pass set. The
-    // pair-volume estimate is one agg over the tiny persisted block-size
-    // table the hot-block telemetry already materialized. passes == 1
-    // (every declared query's regime) keeps the original single plan.
-    // Multi-pass staging resolves through the session's HADOOP filesystem
-    // (VERDICT_r18 #1): a driver-local java.nio temp dir only works when
-    // driver, executors, and defaultFS agree on the local disk — true on
-    // local[32], false on any real cluster, where the parquet lands on
-    // the cluster FS while a nio cleanup deletes an empty local dir (or
-    // worse, executors scatter pass files across node-local disks and
-    // the read-back silently loses pairs). Same pattern as the round-4
-    // WAL fix: one FS handle from `Path.getFileSystem(hadoopConfiguration)`
-    // serves mkdir, write, read, and delete.
-    var passTmpDir: Option[org.apache.hadoop.fs.Path] = None
-    var passFs: Option[org.apache.hadoop.fs.FileSystem] = None
-    def cleanupPassDir(): Unit = {
-      for (fs <- passFs; d <- passTmpDir) {
-        fs.delete(d, true); unregisterScratch(fs, d)
-      }
-      passFs = None; passTmpDir = None
-    }
-    val (dropped, tailOwned) =
-      if (maxCluster <= 0) {
-        val a = both.select(col("cluster"), col("sub"),
-          col("vec_id").as("id_a"), col("uv").as("va"))
-        val b = both.select(col("cluster").as("cluster_b"), col("sub").as("sub_b"),
-          col("vec_id").as("id_b"), col("uv").as("vb"))
-        val pairs = a.join(b,
-          col("cluster") === col("cluster_b") && col("sub") === col("sub_b") &&
-            col("id_a") < col("id_b"))
-          .select("id_a", "va", "id_b", "vb")
-        (cosinePairs(pairs, "id_a", "va", "id_b", "vb")
-          .filter(col("cos") >= threshold)
-          .select(col("id_b").as("vec_id")).distinct(), Seq(both))
-      } else {
-        val sizes = both.groupBy("cluster", "sub")
+    (a1, c1)
+  }
+
+  /** The one SemDeDup back end: near-dup scoring within blocks, then one
+    * (vec_id, is_dup) flag per input vector. A block is a distinct value
+    * of `blockCols` — `cluster` for [[semanticDedup]], (`cluster`, `sub`)
+    * for [[semanticDedupHier]]. `split(s)` builds independent input split
+    * s of `splits` (hier's coarse-cell shards; single-level has one): its
+    * block assignment (vec_id + `blockCols`), its unit vectors (vec_id,
+    * uv) and the caches it installed. `owned` are the caller's caches,
+    * released with the result.
+    *
+    * Per split, blocks of at most `maxCluster` members score all their
+    * pairs and larger blocks rep-link every member to the block-min
+    * vec_id (`maxCluster ≤ 0`: no cap). One action over the block-size
+    * table logs the rep-linked blocks and counts the exact pair rows,
+    * which plans the passes: ⌈pairs / `pairRowBudget`⌉, or `forcePasses`
+    * when positive. Blocks never share a pair and a vec_id lives in one
+    * block, so hash-partitioning blocks into passes — each pass staged as
+    * parquet, a lineage cut that frees its shuffle files before the next
+    * pass starts — bounds transient disk at ~budget pair rows while the
+    * union of the staged parts is exactly the single-pass answer. A lone
+    * split scored in one pass (every declared query's regime) keeps the
+    * single plan and stages nothing.
+    */
+  private def dedupBlocks(vectors: DataFrame, blockCols: Seq[String],
+      threshold: Double, maxCluster: Int, pairRowBudget: Long,
+      forcePasses: Int, op: String, owned: Seq[DataFrame], splits: Int)(
+      split: Int => (DataFrame, DataFrame, Seq[DataFrame])): DataFrame = {
+    val cap = if (maxCluster <= 0) Long.MaxValue else maxCluster.toLong
+    val keys = blockCols.map(col)
+    staged(vectors.sparkSession) { st =>
+      // (dropped, caches) of a lone single-pass split: the unstaged plan
+      val direct = (0 until splits).flatMap { s =>
+        val (assign, unit, splitOwned) = split(s)
+        val both = assign.join(unit, "vec_id").persist(StorageLevel.MEMORY_AND_DISK)
+        val sizes = both.groupBy(keys: _*)
           .agg(count(lit(1)).as("cluster_n"), min(col("vec_id")).as("rep"))
           .persist(StorageLevel.MEMORY_AND_DISK)
-        // ONE action over the tiny persisted block-size table computes both
-        // the hot-block telemetry (logHotGroups' aggregate, same stderr
-        // line) and the exact pair-row count the pass planner needs — the
-        // round-19 shape ran these as two sequential jobs over `sizes`
-        // (guide §1.2: fewer passes, even over small tables, when the job
-        // count itself is the overhead)
-        val statsRow = sizes.agg(
-          count(lit(1)),
-          coalesce(sum(when(col("cluster_n") > maxCluster, 1L).otherwise(0L)), lit(0L)),
-          coalesce(max(col("cluster_n")), lit(0L)),
-          coalesce(sum(expr(
-            s"CASE WHEN cluster_n <= $maxCluster THEN " +
-              "(cluster_n * (cluster_n - 1)) DIV 2 " +
-              "ELSE cluster_n - 1 END")), lit(0L))).first()
-        val (totalBlocks, hotBlocks, maxBlock) =
-          (statsRow.getLong(0), statsRow.getLong(1), statsRow.getLong(2))
-        if (hotBlocks > 0) System.err.println(
-          s"[similarity] semanticDedupHier: $hotBlocks of $totalBlocks blocks over " +
-            s"cap=$maxCluster (largest $maxBlock) rep-linked — star mode; recall " +
-            "within those blocks is member-vs-rep only. For SemDeDup sizing use " +
-            "semanticDedupAuto / autoKmeansKCapAware (detection recall 1.0 " +
-            "where the sqrt-rule measured 0.386, SCALE_r16 §1)")
-        // survivors (dropped ids, pre-distinct-across-passes) for the
-        // blocks listed in `blockSizes` — with blockSizes == sizes this
-        // is byte-for-byte the original single-pass tail plan
-        def droppedFor(blockSizes: DataFrame): DataFrame = {
-          val small = both.join(
-            blockSizes.filter(col("cluster_n") <= maxCluster).select("cluster", "sub"),
-            Seq("cluster", "sub"), "left_semi")
-          val a = small.select(col("cluster"), col("sub"),
-            col("vec_id").as("id_a"), col("uv").as("va"))
-          val b = small.select(col("cluster").as("cluster_b"), col("sub").as("sub_b"),
-            col("vec_id").as("id_b"), col("uv").as("vb"))
-          val smallPairs = a.join(b,
-            col("cluster") === col("cluster_b") && col("sub") === col("sub_b") &&
-              col("id_a") < col("id_b"))
+        val (estPairs, rows) = groupStats(sizes, "cluster_n", cap, op, "block")
+        // id_b of every scored pair over the threshold in `blocks`
+        def droppedFor(blocks: DataFrame): DataFrame = {
+          val small = both.join(blocks.filter(col("cluster_n") <= cap)
+            .select(keys: _*), blockCols, "left_semi")
+          val smallPairs = small
+            .select(keys :+ col("vec_id").as("id_a") :+ col("uv").as("va"): _*)
+            .join(small.select(blockCols.map(c => col(c).as(s"${c}_b")) :+
+                col("vec_id").as("id_b") :+ col("uv").as("vb"): _*),
+              blockCols.map(c => col(c) === col(s"${c}_b")).reduce(_ && _) &&
+                col("id_a") < col("id_b"))
             .select("id_a", "va", "id_b", "vb")
-          val hot = blockSizes.filter(col("cluster_n") > maxCluster)
-            .select(col("cluster"), col("sub"), col("rep"))
+          // rep = block min ⇒ id_a < id_b holds by construction
+          val hot = blocks.filter(col("cluster_n") > cap).select(keys :+ col("rep"): _*)
             .join(unit.select(col("vec_id").as("rep"), col("uv").as("va")), "rep")
-          val bigPairs = both.join(hot, Seq("cluster", "sub"))
+          val bigPairs = both.join(hot, blockCols)
             .filter(col("vec_id") =!= col("rep"))
             .select(col("rep").as("id_a"), col("va"),
               col("vec_id").as("id_b"), col("uv").as("vb"))
@@ -1648,140 +1457,144 @@ object Similarity {
             .filter(col("cos") >= threshold)
             .select(col("id_b").as("vec_id")).distinct()
         }
-        // exact pair-row count from block sizes: m(m-1)/2 per small
-        // block, (m-1) rep-link rows per hot block
-        val estPairs = statsRow.getLong(3)
-        // `forcePasses > 0` pins the pass count outright — the declared
-        // bounded-pass anchor query uses it so the multi-pass branch
-        // (and its Hadoop-FS staging) sits inside the oracle-hash gate
-        // at EVERY sf with constant overhead, where a budget-derived
-        // count would balloon to thousands of passes at sf10. The
-        // union-of-passes = single-pass identity holds at any count.
         val passes =
           if (forcePasses > 0) forcePasses
-          else math.max(1L,
-            (estPairs + pairRowBudget - 1L) / pairRowBudget).toInt
-        if (passes <= 1) (droppedFor(sizes), Seq(both, sizes))
+          else math.max(1L, (estPairs + pairRowBudget - 1L) / pairRowBudget).toInt
+        val caches = splitOwned ++ Seq(both, sizes)
+        if (splits == 1 && passes == 1) Seq((droppedFor(sizes), caches))
         else {
-          System.err.println(
-            if (forcePasses > 0)
-              s"[similarity] semanticDedupHier: $estPairs block-pair rows, " +
-                s"forcePasses=$forcePasses -> scoring in $passes bounded passes"
-            else
-              s"[similarity] semanticDedupHier: $estPairs block-pair rows > " +
-                s"budget=$pairRowBudget -> scoring in $passes bounded passes")
-          val spark = withCell.sparkSession
-          val (fs, tmp) = scratchPassDir(spark)
-          passFs = Some(fs); passTmpDir = Some(tmp)
-          try {
-            for (i <- 0 until passes) {
-              val blocksI = sizes.filter(
-                pmod(xxhash64(col("cluster"), col("sub")), lit(passes.toLong)) === i)
-              droppedFor(blocksI).write.mode("overwrite")
-                .parquet(s"$tmp/pass_$i")
-              // nudge the ContextCleaner: the pass's shuffle files are
-              // unreferenced once its parquet lands, and reclaiming them
-              // NOW is the point of running in passes. Only when the
-              // BUDGET forced the passes, though (round 20): a
-              // forcePasses pin below the budget (the declared anchor
-              // query's regime) has nothing worth a full stop-the-world
-              // GC per pass — at sf0.1 the three nudges were ~2 s of the
-              // anchor's 10 s wall for ~MBs of reclaimable shuffle files.
-              if (estPairs > pairRowBudget) System.gc()
-              System.err.println(
-                s"[similarity] semanticDedupHier: pass ${i + 1}/$passes scored")
-            }
-          } catch {
-            // a pass that dies mid-write (the ENOSPC regime this branch
-            // exists for, ADVICE_r18) must not leak earlier passes'
-            // parquet: nothing references the files once the loop died —
-            // and the cleanup runs guarded, because fs.delete can fail in
-            // the same regime and must not mask the original (ADVICE_r19)
-            case t: Throwable => quietCleanup(() => cleanupPassDir()); throw t
+          System.err.println(s"[similarity] $op: split ${s + 1}/$splits, " +
+            s"$estPairs block-pair rows (budget=$pairRowBudget, " +
+            s"forcePasses=$forcePasses) -> $passes pass(es)")
+          for (i <- 0 until passes) {
+            val blocks = if (passes == 1) sizes
+              else sizes.filter(pmod(xxhash64(keys: _*), lit(passes.toLong)) === i)
+            st.write((if (splits > 1) s"shard_${s}_" else "") + s"pass_$i",
+              droppedFor(blocks))
+            // nudge the ContextCleaner: the pass's shuffle files are
+            // unreferenced once its parquet lands, and reclaiming them NOW
+            // is the point of passes — only when the BUDGET forced them; a
+            // forcePasses pin below it has ~MBs to reclaim, not worth a
+            // stop-the-world GC per pass
+            if (estPairs > pairRowBudget) System.gc()
           }
-          (spark.read.parquet(s"$tmp/pass_*").distinct(),
-            Seq(both, sizes))
+          // the split's flags are on disk: its working set goes before the
+          // next split starts — that is the point of sharding. The GC nudge
+          // only pays once the split holds ~1M rows (~2.81 GiB at
+          // SCALE_r19 §10's rate); below that it was measured pure overhead
+          caches.foreach(_.unpersist(blocking = false))
+          if (splits > 1 && rows >= 1000000L) System.gc()
+          Nil
         }
       }
-    (dropped, c1 +: tailOwned, () => cleanupPassDir())
+      // staged parts are disjoint (a vec_id lives in one block of one
+      // split), so the distinct only guards the contract
+      val dropped = direct.headOption.map(_._1).getOrElse(st.read().distinct())
+      val res = vectors.select(col("vec_id").cast("long").as("vec_id"))
+        .join(dropped.withColumn("dup", lit(1L)), Seq("vec_id"), "left")
+        .select(col("vec_id"), coalesce(col("dup"), lit(0L)).as("is_dup"))
+      Caching.materializeAndRelease(res, (owned ++ direct.flatMap(_._2)): _*)
+    }
   }
 
-  /** Run a failure-path cleanup without letting the cleanup's own
-    * failure mask the error being propagated (ADVICE_r19): in the
-    * ENOSPC/FS-outage regime where these cleanups run, `fs.delete` can
-    * itself throw — log it and keep the original exception.
+  /** One run's parquet staging under a fresh [[scratchPassDir]], created on
+    * the first write — a run that stages nothing touches no filesystem.
+    * One Hadoop FS handle serves mkdir, write, read and delete, so the
+    * parts land on the cluster FS, never on a driver-local disk the
+    * executors do not share. Parts are read back from the explicit list
+    * of written directories: a `pass_*` glob makes Spark's metadata probe
+    * log a FileNotFoundException on every read.
     */
-  private def quietCleanup(cleanup: () => Unit): Unit =
-    try cleanup() catch {
-      case c: Throwable => System.err.println(
-        s"[similarity] staging cleanup failed after error (leaked dir " +
-          s"possible — sweep with Similarity.cleanupScratch): $c")
+  private final class Staging(spark: SparkSession) {
+    private var dir: Option[(FileSystem, Path)] = None
+    private val parts = scala.collection.mutable.ArrayBuffer.empty[String]
+    def write(name: String, df: DataFrame): Unit = {
+      if (dir.isEmpty) dir = Some(scratchPassDir(spark))
+      val path = s"${dir.get._2}/$name"
+      df.write.mode("overwrite").parquet(path)
+      parts += path
     }
+    def read(): DataFrame = spark.read.parquet(parts.toSeq: _*)
+    def delete(): Unit = {
+      dir.foreach { case (fs, d) => fs.delete(d, true); liveScratch.remove((fs, d)) }
+      dir = None
+    }
+  }
 
-  /** Config key for the multi-pass staging root. Any Hadoop-resolvable
-    * URI (`hdfs://…`, `s3a://…`, `file:/…`); pass files for one run land
-    * under `<root>/graft_hier_pairs_<uuid>` and are removed through the
-    * SAME filesystem handle that wrote them.
+  /** Run `body` with a [[Staging]] and own its cleanup. On failure the dir
+    * is deleted, guarded: in the ENOSPC/FS-outage regime staging exists
+    * for, `fs.delete` can throw too, and must not mask the original
+    * error. On success in eager mode the result is materialized, so the
+    * dir goes; in lazy mode ([[Caching.EagerReleaseKey]] = false) the
+    * result still reads the parts, so the dir stays registered for
+    * [[cleanupScratch]] / the shutdown hook.
+    */
+  private def staged[T](spark: SparkSession)(body: Staging => T): T = {
+    val st = new Staging(spark)
+    val out =
+      try body(st) catch {
+        case t: Throwable =>
+          try st.delete() catch {
+            case c: Throwable => System.err.println(
+              "[similarity] staging cleanup failed after error (leaked dir " +
+                s"possible — sweep with Similarity.cleanupScratch): $c")
+          }
+          throw t
+      }
+    if (spark.conf.get(Caching.EagerReleaseKey, "true") != "false") st.delete()
+    out
+  }
+
+  /** Config key for the staging root. Any Hadoop-resolvable URI
+    * (`hdfs://…`, `s3a://…`, `file:/…`); one run's parts land under
+    * `<root>/graft_hier_pairs_<uuid>` and are removed through the SAME
+    * filesystem handle that wrote them.
     */
   val ScratchDirKey = "spark.graft.scratchDir"
 
-  /** Resolve a fresh per-run staging directory for bounded-pass scoring
-    * through the session's Hadoop filesystem (VERDICT_r18 #1). Order:
-    * explicit [[ScratchDirKey]]; else the context's checkpoint dir (a
-    * caller on a cluster has already picked a cluster-visible root for
-    * exactly this kind of intermediate state); else, on a local master
-    * only, the JVM temp dir. A non-local master with neither configured
-    * fails loudly — defaulting to the driver's /tmp there is precisely
-    * the silent-pair-loss bug this method exists to prevent.
+  /** Resolve a fresh per-run staging directory through the session's
+    * Hadoop filesystem. Order: explicit [[ScratchDirKey]]; else the
+    * context's checkpoint dir (a caller on a cluster has already picked a
+    * cluster-visible root for exactly this kind of intermediate state);
+    * else, on a local master only, the JVM temp dir. A non-local master
+    * with neither configured fails loudly — defaulting to the driver's
+    * /tmp there silently loses the parts executors wrote elsewhere.
     */
-  private[graft] def scratchPassDir(spark: org.apache.spark.sql.SparkSession)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
+  private[graft] def scratchPassDir(spark: SparkSession): (FileSystem, Path) = {
     val base = spark.conf.getOption(ScratchDirKey)
       .orElse(spark.sparkContext.getCheckpointDir)
       .getOrElse {
         if (spark.sparkContext.isLocal)
           "file:" + System.getProperty("java.io.tmpdir")
         else throw new IllegalStateException(
-          s"semanticDedupHier multi-pass staging needs a cluster-visible " +
-            s"scratch root on a non-local master: set $ScratchDirKey or a " +
-            "checkpoint dir")
+          s"semantic-dedup staging needs a cluster-visible scratch root on " +
+            s"a non-local master: set $ScratchDirKey or a checkpoint dir")
       }
-    val raw = new org.apache.hadoop.fs.Path(base,
+    val raw = new Path(base,
       s"graft_hier_pairs_${java.util.UUID.randomUUID().toString.take(12)}")
     val fs = raw.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = fs.makeQualified(raw)
     fs.mkdirs(dir)
-    registerScratch(fs, dir)
-    (fs, dir)
-  }
-
-  /** Live staging dirs this JVM created via [[scratchPassDir]] and has
-    * not yet deleted. Eager-mode runs drain their own entries; LAZY-mode
-    * runs (EagerReleaseKey=false) deliberately leave the dir for the
-    * session to read — before round 20 those accumulated forever on a
-    * shared scratch root (ADVICE_r19 / VERDICT_r19 #3). The registry
-    * gives them an owner: [[cleanupScratch]] sweeps them on demand, and
-    * a JVM shutdown hook (installed on first registration) sweeps
-    * whatever is still live at exit, so even an operator who never calls
-    * cleanup doesn't leak onto hdfs/s3a past the app's lifetime.
-    */
-  private val liveScratch = java.util.Collections.synchronizedSet(
-    new java.util.HashSet[(org.apache.hadoop.fs.FileSystem,
-      org.apache.hadoop.fs.Path)]())
-  private val scratchHookInstalled = new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  private def registerScratch(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Unit = {
     liveScratch.add((fs, dir))
     if (scratchHookInstalled.compareAndSet(false, true))
       Runtime.getRuntime.addShutdownHook(new Thread("graft-scratch-sweep") {
         override def run(): Unit = sweepScratch()
       })
+    (fs, dir)
   }
 
-  private def unregisterScratch(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Unit =
-    liveScratch.remove((fs, dir))
+  /** Live staging dirs this JVM created via [[scratchPassDir]] and has
+    * not yet deleted. Eager-mode runs drain their own entries; LAZY-mode
+    * runs deliberately leave the dir for the session to read. The
+    * registry gives those an owner: [[cleanupScratch]] sweeps them on
+    * demand, and a JVM shutdown hook (installed on first registration)
+    * sweeps whatever is still live at exit, so even an operator who
+    * never calls cleanup doesn't leak onto hdfs/s3a past the app's
+    * lifetime.
+    */
+  private val liveScratch =
+    java.util.Collections.synchronizedSet(new java.util.HashSet[(FileSystem, Path)]())
+  private val scratchHookInstalled = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   private def sweepScratch(): Unit = {
     val dirs = liveScratch.synchronized {
@@ -1795,15 +1608,15 @@ object Similarity {
     }
   }
 
-  /** Delete every staging dir this JVM's hier runs still hold — the
-    * explicit owner for LAZY-mode pass/shard parquet (VERDICT_r19 #3).
-    * Call once the lazy results have been materialized (or abandoned);
-    * per-dir delete failures are logged, not thrown, so one unreachable
-    * FS doesn't block reclaiming the rest. Eager-mode runs never need
-    * this (they drain their own dirs); the JVM shutdown hook runs the
-    * same sweep as a backstop.
+  /** Delete every staging dir this JVM's dedup runs still hold — the
+    * explicit owner for LAZY-mode pass/shard parquet. Call once the lazy
+    * results have been materialized (or abandoned); per-dir delete
+    * failures are logged, not thrown, so one unreachable FS doesn't block
+    * reclaiming the rest. Eager-mode runs never need this (they drain
+    * their own dirs); the JVM shutdown hook runs the same sweep as a
+    * backstop.
     */
-  def cleanupScratch(spark: org.apache.spark.sql.SparkSession): Unit = {
+  def cleanupScratch(spark: SparkSession): Unit = {
     val _ = spark // session-scoped signature: one JVM hosts one session here
     sweepScratch()
   }
@@ -1823,9 +1636,9 @@ object Similarity {
     */
   val LadderCrossover = 400000L
 
-  /** SemDeDup with the measured deployment ladder as CODE (VERDICT_r16
-    * #1 — three rounds of measurement produced the ladder; this function
-    * encodes it the way [[autoLshBits]] already encodes bucket sizing):
+  /** SemDeDup with the measured deployment ladder as CODE (three rounds
+    * of measurement produced the ladder; this function encodes it the way
+    * [[autoLshBits]] already encodes bucket sizing):
     *
     *   - n < `crossover` (default [[LadderCrossover]]): single-level
     *     [[semanticDedup]] at k = [[autoKmeansKCapAware]](n) — the
@@ -1863,7 +1676,8 @@ object Similarity {
       System.err.println(
         s"[similarity] semanticDedupAuto: n=$n >= crossover=$crossover -> " +
           "hierarchical (coarse ceil(cbrt(n)) cells, per-cell auto-k)")
-      semanticDedupHier(vectors, threshold, maxCluster, knownCount = n)
+      semanticDedupHier(vectors, threshold, maxCluster = maxCluster,
+        knownCount = n)
     }
   }
 
@@ -2013,7 +1827,7 @@ object Similarity {
         val sizes = tb.groupBy("t", "tbucket")
           .agg(count(lit(1)).as("bucket_n"), min(col("vec_id")).as("rep"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        logHotGroups(sizes, "bucket_n", maxBucket, "nearDupPairsLsh", "bucket")
+        groupStats(sizes, "bucket_n", maxBucket, "nearDupPairsLsh", "bucket")
         val small = tb.join(
           sizes.filter(col("bucket_n") <= maxBucket).select("t", "tbucket"),
           Seq("t", "tbucket"), "left_semi")

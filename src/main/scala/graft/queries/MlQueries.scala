@@ -523,7 +523,7 @@ object MlQueries {
     // the hier SQL verbatim — the sharding structure, like the pass
     // structure above, has only the answer to agree on.
     "emb_semantic_dedup_hier_sharded" -> ((s, dir) =>
-      Similarity.semanticDedupHierSharded(tbl(s, dir, "embeddings"),
+      Similarity.semanticDedupHier(tbl(s, dir, "embeddings"),
         threshold = 0.4, shards = 3)),
 
     // Per-label centroid SUMS over integer-quantized embeddings — the

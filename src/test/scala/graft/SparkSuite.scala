@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.concurrent.Signaler
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session). */
@@ -20,6 +21,15 @@ object SparkSuite {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Signaler for `TimeLimitedTests` suites: at the time limit it cancels
+    * every running Spark job, so the action the test is blocked on throws
+    * and the test fails under its own name with a timeout, instead of a
+    * hung job stalling the whole run.
+    */
+  val cancelAllJobs: Signaler = new Signaler {
+    def apply(testThread: Thread): Unit = session.sparkContext.cancelAllJobs()
   }
 }
 

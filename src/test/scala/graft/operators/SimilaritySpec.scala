@@ -2,14 +2,21 @@ package graft.operators
 
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 /** The production LSH sketch kernel must produce bit-identical buckets to
   * the declarative Catalyst form — both mirror the integer arithmetic the
   * DuckDB oracle re-implements, so equality here is what keeps the banded
   * queries hash-checkable.
   */
-class SimilaritySpec extends SparkSuite {
+class SimilaritySpec extends SparkSuite with TimeLimitedTests {
   import spark.implicits._
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 51.2 s (the
+  // bounded-pass staging test); the limit is 5.9x that
+  val timeLimit: Span = Span(300, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
 
   private lazy val vecs = {
     // deterministic pseudo-embeddings incl. negatives and zeros
@@ -515,5 +522,28 @@ class SimilaritySpec extends SparkSuite {
       s"cell-wide blocks must cover the fine blocking: ${fine -- wide} lost")
     assert(wide.intersect(Set(100L, 101L)) == Set(100L, 101L),
       "exact copies stay flagged under the widest blocking")
+  }
+
+  test("kNN operators accept only a persisted shared unit table (unitOpt)") {
+    val queries = vecs.filter(col("vec_id") < 3)
+    val raw = Similarity.unitVectorsDeclarative(vecs)
+    intercept[IllegalArgumentException] {
+      Similarity.bruteForceKnn(vecs, queries, k = 2, unitOpt = Some(raw))
+    }
+    intercept[IllegalArgumentException] {
+      Similarity.lshKnn(vecs, k = 2, unitOpt = Some(raw))
+    }
+    intercept[IllegalArgumentException] {
+      Similarity.ivfKnn(vecs, queries, k = 2, nLists = 4, nprobe = 2,
+        unitOpt = Some(raw))
+    }
+    val unit = Similarity.unitVectors(vecs)
+    try {
+      assert(Similarity.bruteForceKnn(vecs, queries, k = 2,
+        unitOpt = Some(unit)).count() == 6)
+      assert(Similarity.lshKnn(vecs, k = 2, unitOpt = Some(unit)).count() > 0)
+      assert(Similarity.ivfKnn(vecs, queries, k = 2, nLists = 4, nprobe = 2,
+        unitOpt = Some(unit)).count() > 0)
+    } finally unit.unpersist(blocking = false)
   }
 }
