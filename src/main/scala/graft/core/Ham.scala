@@ -76,4 +76,36 @@ object Ham {
     else if (byteCompare(CanonicalJson.encode(a.value), CanonicalJson.encode(b.value)) < 0) b
     else a
   }
+
+  /** Merge a batch into a key-collapsed set of store cells under the
+    * reference's deferral rule (gun/storage.go:91-122) — the in-memory
+    * form of `HamMerge.merge`, which it is property-tested against:
+    *   - a key is *seen* when the store holds it or the batch carries a
+    *     present (state <= sysState) cell for it, since the reference
+    *     applies the batch's present write first;
+    *   - a future cell for a seen key is deferred, a future cell for an
+    *     unseen key applies now;
+    *   - the store's cells and every applied cell resolve by HAM argmax.
+    * With every cell present (matured deferred cells) this is the argmax
+    * re-merge of `HamMerge.applyDeferred`.
+    * Returns (merged store cells, deferred cells).
+    */
+  def mergeBatch(
+      store: Iterator[GunCell],
+      incoming: Seq[GunCell],
+      sysState: Double): (Vector[GunCell], Vector[GunCell]) = {
+    val winners = scala.collection.mutable.LinkedHashMap.empty[(String, String), GunCell]
+    def add(c: GunCell): Unit =
+      winners.updateWith((c.soul, c.field)) {
+        case Some(w) => Some(mergeCells(w, c))
+        case None    => Some(c)
+      }
+    store.foreach(add)
+    val (present, future) = incoming.partition(_.state <= sysState)
+    val seen = winners.keySet.toSet ++ present.map(c => (c.soul, c.field))
+    val (deferred, applicable) = future.partition(c => seen((c.soul, c.field)))
+    present.foreach(add)
+    applicable.foreach(add)
+    (winners.values.toVector, deferred.toVector)
+  }
 }

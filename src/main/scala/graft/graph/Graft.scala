@@ -1,9 +1,10 @@
 package graft.graph
 
 import graft.core._
-import graft.operators.HamMerge
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.streaming.HamStream
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Spark-native gun engine: a session-scoped cell store with the reference's
   * path-scoped API (reference: gun/gun.go:147-156, gun/scoped.go,
@@ -13,36 +14,60 @@ import org.apache.spark.sql.functions._
   * store, so `FetchOne` (local-then-remote) and `FetchOneLocal` coincide;
   * "broadcast to peers" is the store merge itself (SURVEY §3.1/§3.2).
   *
-  * Point reads/writes are driver-coordinated actions (they return scalar
-  * results, like the reference's channel results) over a distributed cell
-  * DataFrame; the data-plane bulk paths are the pure-DataFrame operators in
-  * [[graft.operators.HamMerge]] and [[PathOps]].
+  * Layout: the reference's flat `(parentSoul, field)` map
+  * (gun/storage.go:33-45) is split into [[Graft.Buckets]] (64) hash buckets
+  * by the delta store's own function, `pmod(xxhash64(soul, field), 64)`
+  * (`HamStream.bucketOf`), evaluated on the driver. Each bucket is a
+  * one-partition `RDD[GunCell]` holding one HAM winner per key, stored in
+  * executor block storage by `localCheckpoint`. The bucket vector and the
+  * deferred cells form one immutable snapshot behind a `@volatile`
+  * reference: writers are serialized and publish a new snapshot only after
+  * its job succeeded, so a concurrent reader sees a put entirely or not at
+  * all.
+  *
+  * Jobs per operation:
+  *   - point read ([[fetchCell]]): one job of one task on the key's bucket,
+  *     no SQL planning (a scoped read adds one such read per unresolved
+  *     path link);
+  *   - put, [[applyDeferred]]: one job over the union of the buckets the
+  *     cells touch, each rewritten by [[graft.core.Ham.mergeBatch]] and
+  *     checkpointed; untouched buckets are reused as they are. A put's job
+  *     returns the cells it deferred; `applyDeferred` runs no job when
+  *     nothing matured;
+  *   - [[purge]]: one job over all buckets;
+  *   - construction: one job that collapses the seed cells to HAM winners
+  *     in every bucket that has any.
+  *
+  * Deferred (future, conflicting) cells live on the driver, like the
+  * reference's deferred-write timers (gun/storage.go:107-117), until
+  * [[applyDeferred]] re-merges the matured ones. [[store]] and [[deferred]]
+  * expose both as DataFrames for bulk readers; the data-plane bulk paths
+  * are the pure-DataFrame operators in [[graft.operators.HamMerge]] and
+  * [[PathOps]].
   */
 final class Graft(val spark: SparkSession, initial: Seq[GunCell] = Nil,
     val clock: () => Double = () => System.currentTimeMillis().toDouble,
     soulGen: () => String = () => SoulGen(),
     publisher: Seq[GunCell] => Unit = _ => (),
     peerClient: Option[graft.sources.GunClient] = None) {
+  import Graft._
   import spark.implicits._
 
-  // Current merged snapshot + parked future writes. Both are small-metadata
-  // references to distributed datasets; re-assigned per merge batch exactly
-  // like a streaming microbatch would.
-  // Collapse the seed cells to HAM winners up front: the incremental
-  // HamMerge.merge passes untouched store rows through as-is, so the store
-  // must hold one row per (soul, field) from the start.
-  @volatile private var storeDf: DataFrame =
-    if (initial.isEmpty) emptyCells
-    else HamMerge.mergeSnapshot(initial.toDF())
-  @volatile private var deferredDf: DataFrame = emptyCells
+  private val sc = spark.sparkContext
 
-  private def emptyCells: DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[Row](),
-      org.apache.spark.sql.types.StructType(GunCell.schema.map(f =>
-        f.copy(nullable = true))))
+  @volatile private var snap: Snapshot = {
+    val seeds = initial.groupBy(c => bucketOf(c.soul, c.field))
+    val empty = Snapshot(Vector.tabulate(Buckets)(b =>
+      sc.parallelize(seeds.getOrElse(b, Nil), 1)), Vector.empty)
+    // merging no incoming cells collapses each seeded bucket to its winners
+    rewrite(empty, seeds.keys.map(b => b -> mergeBucket(Nil, 0.0)).toMap)
+  }
 
-  def store: DataFrame = storeDf
-  def deferred: DataFrame = deferredDf
+  /** The store's cells, one HAM winner per key: the union of the buckets,
+    * one partition each.
+    */
+  def store: DataFrame = spark.createDataset(sc.union(snap.buckets)).toDF()
+  def deferred: DataFrame = spark.createDataset(snap.deferred).toDF()
 
   def scoped(field: String, children: String*): Scoped =
     children.foldLeft(new Scoped(this, None, field))((p, f) => new Scoped(this, Some(p), f))
@@ -74,9 +99,7 @@ final class Graft(val spark: SparkSession, initial: Seq[GunCell] = Nil,
   def putCellsWithAck(cells: Seq[GunCell], storeLocalOnly: Boolean = false): PutAck = {
     synchronized {
       val sys = clock()
-      val (merged, newDeferred) = HamMerge.merge(storeDf, cells.toDF(), sys)
-      storeDf = merged.localCheckpoint(true)
-      deferredDf = deferredDf.unionByName(newDeferred).localCheckpoint(true)
+      snap = rewrite(snap, merging(cells, sys))
     }
     if (storeLocalOnly) PutAck.localOnly
     else {
@@ -91,33 +114,40 @@ final class Graft(val spark: SparkSession, initial: Seq[GunCell] = Nil,
   /** Re-apply matured deferred writes (reference: gun/storage.go:107-117). */
   def applyDeferred(): Unit = synchronized {
     val sys = clock()
-    val (merged, still) = HamMerge.applyDeferred(storeDf, deferredDf, sys)
-    storeDf = merged.localCheckpoint(true)
-    deferredDf = still.localCheckpoint(true)
+    val (matured, still) = snap.deferred.partition(_.state <= sys)
+    if (matured.nonEmpty) snap = rewrite(snap.copy(deferred = still), merging(matured, sys))
   }
 
   /** TTL purge pass (reference: gun/storage.go:56-75). */
-  def purge(ttlMs: Double = HamMerge.DefaultTtlMs): Unit = synchronized {
-    storeDf = storeDf.filter(col("state") >= lit(clock() - ttlMs)).localCheckpoint(true)
+  def purge(ttlMs: Double = graft.operators.HamMerge.DefaultTtlMs): Unit = synchronized {
+    val cutoff = clock() - ttlMs
+    snap = rewrite(snap, (0 until Buckets).map(b => b -> keepingFrom(cutoff)).toMap)
   }
 
-  /** Point read of one cell. Absent ⇒ ValueExists=false, not an error
-    * (gun/scoped_fetch.go:56-74).
+  /** Point read of one cell: one single-task job on its bucket. Absent ⇒
+    * ValueExists=false, not an error (gun/scoped_fetch.go:56-74).
     */
-  private[graph] def fetchCell(soul: String, field: String): FetchResult = {
-    val rows = storeDf
-      .filter(col("soul") === soul && col("field") === field)
-      .select("value.kind", "value.str", "value.num", "value.bool", "value.rel",
-        "state", "valueExists")
-      .limit(1).collect()
-    rows.headOption match {
-      case None => FetchResult(field, None, None, valueExists = false)
-      case Some(r) =>
-        val v = GunValue(r.getString(0), Option(r.getString(1)), Option(r.getString(2)),
-          if (r.isNullAt(3)) None else Some(r.getBoolean(3)), Option(r.getString(4)))
-        FetchResult(field, Some(v), Some(r.getDouble(5)), r.getBoolean(6))
+  private[graph] def fetchCell(soul: String, field: String): FetchResult =
+    lookup(sc, snap.buckets(bucketOf(soul, field)), soul, field) match {
+      case None    => FetchResult(field, None, None, valueExists = false)
+      case Some(c) => FetchResult(field, Some(c.value), Some(c.state), c.valueExists)
     }
-  }
+
+  /** One job over the union of the rewritten buckets: each bucket in
+    * `rewrites` is replaced by its rewrite's store cells, checkpointed by
+    * this job; the cells the rewrites defer join the snapshot's deferred.
+    */
+  private def rewrite(s: Snapshot, rewrites: Map[Int, Rewrite]): Snapshot =
+    if (rewrites.isEmpty) s
+    else {
+      val slots = rewrites.map { case (b, f) => b -> s.buckets(b).mapPartitions(f) }
+      slots.values.foreach(_.localCheckpoint())
+      val deferred = sc.runJob(sc.union(slots.values.toSeq), deferredOf)
+      val buckets = slots.foldLeft(s.buckets) { case (bs, (b, r)) =>
+        bs.updated(b, r.mapPartitions(storeOf, preservesPartitioning = true))
+      }
+      Snapshot(buckets, s.deferred ++ deferred.iterator.flatten)
+    }
 
   private[graph] def genSoul(): String = soulGen()
 
@@ -182,6 +212,42 @@ object PutAck {
 }
 
 object Graft {
+  /** Bucket count: the delta store's, so a key lands in the same bucket. */
+  val Buckets: Int = HamStream.DefaultBuckets
+
+  private def bucketOf(soul: String, field: String): Int =
+    HamStream.bucketIdOf(soul, field, Buckets)
+
+  /** A rewritten bucket's stored element: `Right` is a store cell, `Left` a
+    * cell the rewrite deferred (returned by the rewrite's job).
+    */
+  private type Slot = Either[GunCell, GunCell]
+  private type Rewrite = Iterator[GunCell] => Iterator[Slot]
+
+  private final case class Snapshot(buckets: Vector[RDD[GunCell]], deferred: Vector[GunCell])
+
+  // Closures shipped to tasks are built here, away from the (unserializable)
+  // session instance.
+  private def mergeBucket(cells: Seq[GunCell], sys: Double): Rewrite = store => {
+    val (merged, deferred) = Ham.mergeBatch(store, cells, sys)
+    merged.iterator.map(Right(_)) ++ deferred.iterator.map(Left(_))
+  }
+
+  /** One merge per bucket the cells touch, each given that bucket's cells. */
+  private def merging(cells: Seq[GunCell], sys: Double): Map[Int, Rewrite] =
+    cells.groupBy(c => bucketOf(c.soul, c.field)).map { case (b, cs) => b -> mergeBucket(cs, sys) }
+
+  private def keepingFrom(cutoff: Double): Rewrite =
+    _.filter(_.state >= cutoff).map(Right(_))
+
+  private val storeOf: Iterator[Slot] => Iterator[GunCell] = _.collect { case Right(c) => c }
+  private val deferredOf: Iterator[Slot] => Vector[GunCell] = _.collect { case Left(c) => c }.toVector
+
+  private def lookup(sc: SparkContext, bucket: RDD[GunCell], soul: String,
+      field: String): Option[GunCell] =
+    sc.runJob(bucket, (it: Iterator[GunCell]) =>
+      it.find(c => c.soul == soul && c.field == field), Seq(0)).head
+
   sealed abstract class GraftError(msg: String) extends Exception(msg)
   /** Mirrors the reference's ErrNotObject (gun/scoped.go:36-42). */
   final case class ErrNotObject(soul: String, field: String)

@@ -62,6 +62,10 @@ object HamMerge {
     * function's own output, the streaming store).
     *
     * Returns (mergedStore, deferred).
+    *
+    * Reference form: no `main` code calls it. The session store
+    * ([[graft.graph.Graft]]) merges per bucket with [[Ham.mergeBatch]],
+    * which BucketMergePropertySpec checks against this function.
     */
   def merge(store: DataFrame, incoming: DataFrame, sysState: Double): (DataFrame, DataFrame) = {
     val incomingKeys = incoming.select("soul", "field").distinct()
@@ -90,7 +94,8 @@ object HamMerge {
     * `state - now + 100ms`, gun/storage.go:107-117). Batch form: anything
     * with state <= sysState re-merges now; the rest stays deferred.
     * Incremental like [[merge]]: only store keys matured cells touch are
-    * re-aggregated.
+    * re-aggregated. Reference form, like [[merge]]: `Graft.applyDeferred`
+    * is property-tested against it.
     */
   def applyDeferred(store: DataFrame, deferred: DataFrame, sysState: Double): (DataFrame, DataFrame) = {
     val matured = deferred.filter(col("state") <= sysState)

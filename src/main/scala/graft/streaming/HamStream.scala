@@ -290,6 +290,21 @@ object HamStream {
     pmod(xxhash64(soul, field), lit(numBuckets.toLong))
   }
 
+  /** [[bucketOf]] for one key, evaluated on the driver without a Spark
+    * job: the same catalyst `XxHash64` (seed 42, as `xxhash64`) over the
+    * two string literals, reduced with `floorMod` exactly as `pmod`
+    * reduces it. The session store ([[graft.graph.Graft]]) routes every
+    * cell with it, and point reads prune with it.
+    */
+  private[graft] def bucketIdOf(soul: String, field: String, numBuckets: Int): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+    val h = XxHash64(Seq(Literal(soul), Literal(field)), 42L).eval().asInstanceOf[Long]
+    java.lang.Math.floorMod(h, numBuckets.toLong).toInt
+  }
+
+  /** Bucket count of the delta store and of the session store. */
+  val DefaultBuckets = 64
+
   /** Store layout version, stamped as a `_layout` file in the store root.
     * v2 = buckets keyed by xxhash64(soul, field). The round-5 change from
     * soul-only bucketing silently mis-read older stores: point reads pruned
@@ -377,7 +392,7 @@ object HamStream {
   def mergeIntoStore(
       updates: Dataset[Update],
       storePath: String,
-      numBuckets: Int = 64): org.apache.spark.sql.streaming.StreamingQuery =
+      numBuckets: Int = DefaultBuckets): org.apache.spark.sql.streaming.StreamingQuery =
     updates.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Update], batchId: Long) =>
@@ -460,7 +475,7 @@ object HamStream {
   def appendIntoStore(
       updates: Dataset[Update],
       storePath: String,
-      numBuckets: Int = 64,
+      numBuckets: Int = DefaultBuckets,
       compactThreshold: Int = DefaultCompactThreshold,
       bufferBatches: Int = 1,
       bufferDurable: Boolean = true): org.apache.spark.sql.streaming.StreamingQuery = {
@@ -750,7 +765,7 @@ object HamStream {
   def readStore(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
-      numBuckets: Int = 64): org.apache.spark.sql.DataFrame = {
+      numBuckets: Int = DefaultBuckets): org.apache.spark.sql.DataFrame = {
     val storeDir = new org.apache.hadoop.fs.Path(storePath)
     val fs = storeDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     checkLayout(fs, storeDir, stamp = false)
@@ -824,7 +839,7 @@ object HamStream {
       storePath: String,
       soul: String,
       field: String,
-      numBuckets: Int = 64): graft.core.FetchResult = {
+      numBuckets: Int = DefaultBuckets): graft.core.FetchResult = {
     val rows = pointReadDf(spark, storePath, soul, field, numBuckets)
       .limit(1).collect()
     rows.headOption match {
@@ -848,15 +863,13 @@ object HamStream {
       soul: String,
       field: String,
       numBuckets: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     val storeDir = new org.apache.hadoop.fs.Path(storePath)
     val fs = storeDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     checkLayout(fs, storeDir, stamp = false) // a pre-v2 store must error, not miss
     recoverStore(fs, storeDir) // one listStatus; heals a crash-interrupted swap before reading
     recoverBufferJournal(spark, storePath, numBuckets) // one fs.exists when no journal; a reader must see journaled-only cells
-    val bucket = spark.range(1)
-      .select(bucketOf(lit(soul), lit(field), numBuckets))
-      .head().getLong(0)
+    val bucket = bucketIdOf(soul, field, numBuckets)
     val pruned = spark.read.parquet(storePath)
       .filter(col("bucket") === bucket) // partition-pruned to one dir
       .filter(col("soul") === soul && col("field") === field)

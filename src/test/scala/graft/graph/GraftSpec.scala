@@ -1,19 +1,62 @@
 package graft.graph
 
 import graft.SparkSuite
-import graft.core.{GunValue, ValueKind}
+import graft.core.{GunCell, GunValue, ValueKind}
+import graft.streaming.HamStream
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 /** The SURVEY §7 minimum slice: the exact query of the reference's
   * TestGunGetSimple (gun/tests/gun_test.go:31-33) — put at
   * esgopeta-test/TestGunGetSimple/some-field, read it back — plus lazy path
-  * materialization, exists-vs-nil, and ErrNotObject semantics.
+  * materialization, exists-vs-nil, and ErrNotObject semantics; and the
+  * bucketed store's cost bounds: Spark jobs and tasks per operation, a
+  * fixed partition count, and reads racing writes.
   */
-class GraftSpec extends SparkSuite {
+class GraftSpec extends SparkSuite with TimeLimitedTests {
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 1.4 s (30 puts); the limit
+  // is 43x that, room for a shared host that runs 2-3x slower
+  val timeLimit: Span = Span(60, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
 
   private def newGraft(now: Double = 1700000000000.0): Graft = {
     var seq = 0L
     new Graft(spark, Nil, () => now,
       () => { seq += 1; s"S$seq" })
+  }
+
+  /** Spark jobs and tasks that `op` runs on this thread, counted by a
+    * listener on a job group of its own.
+    */
+  private def jobsAndTasks(op: => Unit): (Int, Int) = {
+    val sc = spark.sparkContext
+    val group = s"graftspec-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val tasks = new AtomicInteger
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) tasks.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "counted")
+    try op
+    finally {
+      sc.clearJobGroup()
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    (jobs.get, tasks.get)
   }
 
   test("putWithAck surfaces a remote peer's rejection through the scoped API") {
@@ -181,5 +224,75 @@ class GraftSpec extends SparkSuite {
     g.applyDeferred()
     assert(g.scoped("top", "n", "f").fetchOne().value.contains(GunValue.string("future")))
     assert(g.deferred.count() == 0)
+  }
+
+  test("store keeps one partition per bucket across 30 puts") {
+    val g = newGraft()
+    for (i <- 0 until 30) {
+      g.scoped("top", s"n${i % 3}", s"f$i").put(GunValue.number(i.toLong))
+      assert(g.store.rdd.getNumPartitions == Graft.Buckets)
+    }
+    assert(g.store.count() == 3 + 30)
+  }
+
+  test("fetchOne under a resolved parent runs one job of one task") {
+    val g = newGraft()
+    g.scoped("top", "node", "f").put(GunValue.string("v"))
+    val parent = g.scoped("top", "node")
+    assert(parent.soul().isDefined)
+    val leaf = parent.scoped("f")
+    assert(jobsAndTasks(assert(leaf.fetchOne().valueExists)) == ((1, 1)))
+  }
+
+  test("a put spanning several buckets runs one job, one task per bucket") {
+    val g = newGraft()
+    val cells = (0 until 4).map(i => GunCell("S", s"f$i", GunValue.string(s"v$i"), 1.0))
+    val buckets = cells.map(c => HamStream.bucketIdOf(c.soul, c.field, Graft.Buckets)).distinct
+    assert(buckets.size >= 2)
+    assert(jobsAndTasks(g.putCells(cells)) == ((1, buckets.size)))
+    assert(g.store.count() == 4)
+  }
+
+  test("purge runs one job and drops only cells older than the ttl") {
+    var now = 1700000000000.0
+    val g = new Graft(spark, Nil, () => now)
+    g.putCells(Seq(GunCell("S", "old", GunValue.string("a"), now - 5000),
+      GunCell("S", "new", GunValue.string("b"), now)))
+    val (jobs, _) = jobsAndTasks(g.purge(ttlMs = 1000))
+    assert(jobs == 1)
+    assert(!g.fetchCell("S", "old").valueExists && g.fetchCell("S", "new").valueExists)
+    assert(g.store.rdd.getNumPartitions == Graft.Buckets)
+  }
+
+  test("a reader racing 50 puts sees only committed values, never an error") {
+    @volatile var now = 1700000000000.0
+    var seq = 0L
+    val g = new Graft(spark, Nil, () => now, () => { seq += 1; s"S$seq" })
+    g.scoped("top", "node", "f").put(GunValue.string("v0"))
+    @volatile var committed = 0
+    @volatile var done = false
+    val problems = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val reads = new AtomicInteger
+    val reader = new Thread(() => {
+      try while (!done) {
+        val lo = committed
+        val r = g.scoped("top", "node", "f").fetchOne()
+        val hi = committed
+        // put i may be visible just before putWithAck returns: i <= hi + 1
+        r.value.flatMap(_.str) match {
+          case Some(s"v$i") if i.toInt >= lo && i.toInt <= hi + 1 => reads.incrementAndGet()
+          case other => problems.add(s"read $other with committed $lo..$hi")
+        }
+      } catch { case t: Throwable => problems.add(t.toString) }
+    })
+    reader.start()
+    try for (i <- 1 to 50) {
+      now += 10
+      g.scoped("top", "node", "f").put(GunValue.string(s"v$i"))
+      committed = i
+    } finally { done = true; reader.join() }
+    assert(problems.isEmpty, problems.toString)
+    assert(reads.get > 0)
+    assert(g.scoped("top", "node", "f").fetchOne().value.contains(GunValue.string("v50")))
   }
 }

@@ -174,6 +174,30 @@ class HamStreamSpec extends SparkSuite {
     } finally q.stop()
   }
 
+  test("bucketIdOf on the driver equals the bucketOf column on every key") {
+    import org.apache.spark.sql.functions.col
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val spark2 = spark
+    import spark2.implicits._
+    // any UTF-16 unit, lone surrogates included: both forms encode through
+    // UTF8String.fromString
+    val anyStr = Gen.stringOf(Gen.choose(Char.MinValue, Char.MaxValue))
+    val generated = (0 until 60).flatMap(i =>
+      Gen.zip(anyStr, Gen.asciiStr).apply(Gen.Parameters.default, Seed(500L + i)))
+    val keys = Seq(("", ""), ("s", ""), ("", "f"), ("ü", "漢字"), ("😀", "\u0000"),
+      ("x" * 100000, "y" * 70001)) ++ generated
+    val df = keys.toDF("soul", "field")
+    for (n <- Seq(1, 7, 64)) {
+      val rows = df.select(bucketOf(col("soul"), col("field"), n)).collect()
+      assert(rows.length == keys.length)
+      keys.zip(rows).foreach { case ((soul, field), r) =>
+        assert(bucketIdOf(soul, field, n) == r.getLong(0),
+          s"n=$n key=(${soul.take(20)}, ${field.take(20)})")
+      }
+    }
+  }
+
   test("fetchFromStore: point read prunes to one bucket directory") {
     val spark2 = spark
     import spark2.implicits._

@@ -4,6 +4,8 @@ import graft.SparkSuite
 import graft.core.{GunCell, GunValue}
 import graft.graph.Graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 /** The reference's full user story across the engine's layers: a scoped
   * `put` (gun/scoped_put.go) lands in the session store AND publishes to
@@ -11,7 +13,12 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * a `Fetch`-style subscriber arriving later first receives the current
   * value, then each live transition (gun/scoped_fetch.go:98-110).
   */
-class LiveFlowSpec extends SparkSuite {
+class LiveFlowSpec extends SparkSuite with TimeLimitedTests {
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 2.8 s; the limit
+  // is 21x that, room for a shared host that runs 2-3x slower
+  val timeLimit: Span = Span(60, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
 
   test("put → publish → late subscriber sees snapshot, then live updates") {
     val spark2 = spark
