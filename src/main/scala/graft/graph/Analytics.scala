@@ -132,6 +132,11 @@ object Analytics {
     materializeAndRelease(res, e, owns, g, pr)
   }
 
+  /** The ArithmeticException in `e`'s cause chain, else `e` itself. */
+  private def arithmeticCause(e: Throwable): Throwable =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case a: ArithmeticException => a }.getOrElse(e)
+
   /** Exact lcm with overflow trap (`Long` range enforced by
     * `multiplyExact`); associative+commutative, safe as an RDD fold.
     */
@@ -155,9 +160,11 @@ object Analytics {
     * (SCALE_r6.md §2) — the lattice values are not binary fractions, so
     * double noise grows with magnitude while the round() margin stays
     * fixed. Integer headroom scales as rank_max·(20L)^iters, and the
-    * loud-overflow contract is layered: driver-side constants (L, the
-    * 3·L·S_k base, the (20·L)^k power) go through `Math.*Exact` and throw
-    * `ArithmeticException`; the distributed numerators accumulate in
+    * loud-overflow contract is layered: the constants (L, the 3·L·S_k
+    * base, the (20·L)^k power) go through `Math.*Exact` and throw a bare
+    * `ArithmeticException` — L's fold runs in tasks, and its overflow is
+    * unwrapped from the job's `SparkException` — before any rank job
+    * runs; the distributed numerators accumulate in
     * decimal(38,0), where any per-edge product or message sum that
     * overflows turns NULL (non-ANSI arithmetic) and is trapped by
     * `raise_error` — per-row products via a count(n·w) < count(*) check,
@@ -191,11 +198,29 @@ object Analytics {
     // (lcm(x,x)=x), so the per-partition fold + O(#partitions) driver
     // merge needs neither the former distinct() exchange nor the
     // distinct().collect() that pulled the whole degree support to the
-    // driver. Math.*Exact still traps Long overflow loudly (now raised
-    // from an executor task, same ArithmeticException).
+    // driver. Math.*Exact still traps Long overflow loudly: a task's (or
+    // the driver-side partition merge's) ArithmeticException reaches the
+    // action wrapped in a SparkException, so the fold site unwraps it and
+    // callers see the same ArithmeticException as from the driver-side
+    // constants below. Both overflows fail before the iteration's caches
+    // are marked, and release the edge cache this call added.
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    val lcmAll = deg.select(col("d")).as[Long].rdd
-      .fold(1L)(lcmExact) // 1 = lcm identity, so an empty graph still yields L=1
+    val (lcmAll, bases) =
+      try {
+        val l =
+          try deg.select(col("d")).as[Long].rdd
+            .fold(1L)(lcmExact) // 1 = lcm identity, so an empty graph still yields L=1
+          catch { case ex: org.apache.spark.SparkException => throw arithmeticCause(ex) }
+        // S_k = (20·L)^k for k = 0..iters (S_iters only checks headroom);
+        // step k adds the base 3·L·S_k
+        val powers = Iterator.iterate(1L)(Math.multiplyExact(_, Math.multiplyExact(20L, l)))
+          .take(iters + 1).toVector
+        (l, powers.init.map(Math.multiplyExact(Math.multiplyExact(3L, l), _)))
+      } catch {
+        case ex: ArithmeticException =>
+          if (owns) e.unpersist(blocking = false)
+          throw ex
+      }
     val edgesW = e.select(col("src"), col("dst"))
       .join(deg, "src")
       // integer division on purpose: L/d is integral by construction of L,
@@ -207,10 +232,8 @@ object Analytics {
       .unionByName(e.select(col("dst").as("soul")))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var pow = 1L // S_k = (20·L)^k
     var ranks = verts.select(col("soul"), lit(1L).cast("decimal(38,0)").as("n"))
-    for (_ <- 0 until iters) {
-      val base = Math.multiplyExact(Math.multiplyExact(3L, lcmAll), pow)
+    for (base <- bases) {
       val msgs = edgesW.join(ranks.withColumnRenamed("soul", "src"), "src")
         .groupBy(col("dst").as("soul"))
         .agg(sum(col("n") * col("w")).as("s"), count(lit(1)).as("cm"),
@@ -234,7 +257,6 @@ object Analytics {
                 .otherwise(col("s")),
               lit(0L).cast("decimal(38,0)")))
             .as("n"))
-      pow = Math.multiplyExact(pow, Math.multiplyExact(20L, lcmAll))
     }
     val res = ranks.select(col("soul"),
       when(col("n") > lit(Long.MaxValue) || col("n").isNull,

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.core.{GunCell, GunValue, Ham}
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured-Streaming form of the reference's standing dataflow (SURVEY
@@ -228,9 +228,8 @@ object HamStream {
   }
 
   /** [[subscribeWithSnapshot]] against an on-disk bucketed store: the
-    * snapshot seed is a [[fetchFromStore]] point read — bucket computed up
-    * front and pushed as a partition filter, so the initial-value read
-    * touches exactly ONE `bucket=N/` directory regardless of store size
+    * snapshot seed is a [[fetchFromStore]] point read — one Spark job on
+    * the key's ONE `bucket=N/` directory regardless of store size
     * (SnapshotPruningSpec asserts the single-directory bound).
     */
   def subscribeWithSnapshot(
@@ -365,9 +364,9 @@ object HamStream {
     * (N = xxhash64(soul, field) mod numBuckets — see [[bucketOf]] for why
     * the full cell key), and each micro-batch
     *   1. computes the buckets its updates touch,
-    *   2. reads ONLY those partitions back (partition pruning on the
-    *      bucket column — per-batch I/O is proportional to touched
-    *      buckets, not store size),
+    *   2. reads ONLY those bucket directories back ([[readBuckets]] —
+    *      per-batch I/O is proportional to touched buckets, not store
+    *      size),
     *   3. HAM-merges them with the batch (per-key state already collapsed
     *      each batch to net winners; HAM idempotence makes at-least-once
     *      replays safe),
@@ -422,22 +421,9 @@ object HamStream {
       val fs = storeDir.getFileSystem(hconf)
       checkLayout(fs, storeDir, stamp = true) // fail fast on a pre-v2 store
       recoverStore(fs, storeDir) // heal any interrupted prior swap first
-      // "empty" = no bucket data yet (the dir may already hold the marker)
-      val hasBuckets = fs.exists(storeDir) && fs.listStatus(storeDir)
-        .exists(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-      val existing =
-        if (!hasBuckets) {
-          spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](), newCells.schema)
-        } else {
-          // partition pruning keeps this read to the touched buckets
-          spark.read.parquet(storePath)
-            .filter(col("bucket").isin(touched: _*))
-            .select(newCells.columns.map(col): _*)
-        }
       val merged = graft.operators.HamMerge
-        .mergeSnapshot(
-          existing.drop("bucket").unionByName(newCells.drop("bucket")))
+        .mergeSnapshot(readBuckets(spark, storePath, touched.toSeq).drop("bucket")
+          .unionByName(newCells.drop("bucket")))
         .withColumn("bucket", bucketOf(col("soul"), col("field"), numBuckets))
       val staging = new org.apache.hadoop.fs.Path(storePath, s".staging-$batchId")
       merged.write.mode("overwrite")
@@ -462,7 +448,7 @@ object HamStream {
     *
     * The read contract changes with it: a delta store may hold SEVERAL
     * rows per (soul, field) — every reader collapses to the HAM winner
-    * ([[pointReadDf]] does, and bulk readers go through [[readStore]]),
+    * ([[fetchFromStore]] does, and bulk readers go through [[readStore]]),
     * which is exactly the CRDT's own merge, so reads are correct at any
     * compaction lag. [[compactStore]] folds deltas back to one row per
     * key (merge-then-TTL). Crash safety: files land via write-to-staging
@@ -757,10 +743,12 @@ object HamStream {
 
   /** Bulk read of a store as its MERGED view — one HAM winner per
     * (soul, field) regardless of sink mode (a rewrite store is already
-    * collapsed; a delta store collapses here). The merge is one hash
-    * aggregation over the scan — partition pruning and filter pushdown
-    * still apply to predicates a caller adds BEFORE calling (prefer
-    * [[fetchFromStore]] for point reads: it prunes to one bucket first).
+    * collapsed; a delta store collapses here). Every live bucket is read
+    * through [[readBuckets]] (the store's fixed schema, so no footer job;
+    * more than 32 bucket dirs are listed by one parallel-listing job),
+    * and the merge is one hash aggregation over the scan. A store that
+    * does not exist reads as empty. Prefer [[fetchFromStore]] for point
+    * reads: it reads one bucket and needs no aggregation job.
     */
   def readStore(
       spark: org.apache.spark.sql.SparkSession,
@@ -775,8 +763,55 @@ object HamStream {
     // (no-op when `.buffer-journal` is absent — i.e. always, outside a
     // crashed bufferDurable run; numBuckets routes the replayed cells)
     recoverBufferJournal(spark, storePath, numBuckets)
+    val live = liveBuckets(fs, storeDir).map(_.stripPrefix("bucket=").toLong)
     graft.operators.HamMerge.mergeSnapshot(
-      spark.read.parquet(storePath).drop("bucket"))
+      readBuckets(spark, storePath, live).drop("bucket"))
+  }
+
+  /** Names (`bucket=N`) of the bucket directories under a store root;
+    * empty when the root does not exist.
+    */
+  private def liveBuckets(
+      fs: org.apache.hadoop.fs.FileSystem,
+      storeDir: org.apache.hadoop.fs.Path): Seq[String] =
+    if (!fs.exists(storeDir)) Nil
+    else fs.listStatus(storeDir).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
+      .map(_.getPath.getName)
+
+  /** The delta store's on-disk schema: the cell columns plus the `bucket`
+    * partition column, typed `int` as partition discovery types
+    * `bucket=N`. Every writer writes exactly these columns, so readers
+    * pass it instead of inferring it — inference is one Spark job that
+    * reads a parquet footer, on every read.
+    */
+  private val StoreSchema: org.apache.spark.sql.types.StructType =
+    Encoders.product[GunCell].schema
+      .add("bucket", org.apache.spark.sql.types.IntegerType)
+
+  /** The store's rows in the named buckets, read with [[StoreSchema]] —
+    * the one path by which store operations read bucket data. Only the
+    * `bucket=N` directories that exist are read (none ⇒ an empty frame,
+    * no job);
+    * `basePath` keeps `bucket` a partition column, so the scan's
+    * `numPartitions` metric counts bucket dirs. Spark lists up to 32
+    * paths on the driver (`spark.sql.sources.parallelPartitionDiscovery
+    * .threshold`) and more in a listing job: a point read lists its one
+    * bucket without a job, whereas listing the root lists all of them.
+    */
+  private[streaming] def readBuckets(
+      spark: SparkSession,
+      storePath: String,
+      buckets: Seq[Long]): DataFrame = {
+    val fs = new org.apache.hadoop.fs.Path(storePath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirs = buckets.distinct
+      .map(b => new org.apache.hadoop.fs.Path(storePath, s"bucket=$b"))
+      .filter(fs.exists)
+    if (dirs.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), StoreSchema)
+    else spark.read.schema(StoreSchema).option("basePath", storePath)
+      .parquet(dirs.map(_.toString): _*)
   }
 
   /** Swap a staged bucket directory into the live tree with a RECOVERABLE
@@ -827,35 +862,64 @@ object HamStream {
   }
 
   /** Point read against a bucketed store — the read-side complement of
-    * [[mergeIntoStore]]: the bucket is computed from the soul up front
-    * and pushed as a partition filter, so the scan touches exactly ONE
-    * `bucket=N/` directory regardless of store size (reference
-    * storage-get semantics, gun/storage.go:79-89: absent ⇒ exists=false,
-    * not an error). At 100 TB this is the difference between a point
-    * read costing one file group and costing a full-store scan.
+    * [[mergeIntoStore]] (reference storage-get semantics,
+    * gun/storage.go:79-89: absent ⇒ exists=false, not an error). ONE
+    * Spark job per read, whatever the store's size:
+    *   - [[pointReadDf]] lists the key's one `bucket=N/` directory on the
+    *     driver (no listing job) and scans it with the store's fixed
+    *     schema (no footer job), filtered to (soul, field);
+    *   - the scan's rows — one per un-compacted append of the key on a
+    *     delta store, at most one on a rewrite store — are collected and
+    *     folded on the driver with [[Ham.mergeCells]], the HAM argmax
+    *     over (state, canonical JSON) that `HamMerge.mergeSnapshot`
+    *     computes in a shuffle (no aggregation job);
+    *   - a missing store or bucket dir reads as valueExists=false.
+    * A compaction that swaps the bucket between the listing and the scan
+    * deletes the listed files; the read then lists the bucket again and
+    * scans once more ([[keyRows]]).
     */
   def fetchFromStore(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       soul: String,
       field: String,
-      numBuckets: Int = DefaultBuckets): graft.core.FetchResult = {
-    val rows = pointReadDf(spark, storePath, soul, field, numBuckets)
-      .limit(1).collect()
-    rows.headOption match {
-      case None => graft.core.FetchResult(field, None, None, valueExists = false)
-      case Some(r) =>
-        val v = graft.core.GunValue(r.getString(0), Option(r.getString(1)),
+      numBuckets: Int = DefaultBuckets): graft.core.FetchResult =
+    keyRows(pointReadDf(spark, storePath, soul, field, numBuckets))
+      .map { r =>
+        val v = GunValue(r.getString(0), Option(r.getString(1)),
           Option(r.getString(2)),
           if (r.isNullAt(3)) None else Some(r.getBoolean(3)), Option(r.getString(4)))
-        graft.core.FetchResult(field, Some(v), Some(r.getDouble(5)), r.getBoolean(6))
+        GunCell(soul, field, v, r.getDouble(5), r.getBoolean(6))
+      }
+      .reduceOption(Ham.mergeCells) match {
+      case None    => graft.core.FetchResult(field, None, None, valueExists = false)
+      case Some(c) => graft.core.FetchResult(field, Some(c.value), Some(c.state), c.valueExists)
     }
-  }
 
-  /** The point read's scan, exposed un-collected so specs can execute it
-    * and assert the partition-pruning bound on the PRODUCTION plan (scan
-    * metrics `numPartitions`/`numFiles` after execution — see
-    * SnapshotPruningSpec) rather than on a replica of it.
+  /** Collect a listed point read, listing and scanning once more if the
+    * scan fails on a missing file or path: a compaction swap deleted the
+    * listed files between listing and scan, and the new listing holds
+    * the folded winner. `ignoreMissingFiles` would drop that winner
+    * silently instead. `listed` is by-name: each attempt lists afresh.
+    */
+  private[streaming] def keyRows(listed: => DataFrame): Array[Row] =
+    try listed.collect()
+    catch { case e: Exception if missingFile(e) => listed.collect() }
+
+  private def missingFile(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case _: java.io.FileNotFoundException => true
+      case a: org.apache.spark.sql.AnalysisException => a.getCondition == "PATH_NOT_FOUND"
+      case _ => false
+    }
+
+  /** The point read's scan: the key's rows, not yet collapsed, as
+    * (kind, str, num, bool, rel, state, valueExists). Exposed un-collected
+    * so specs can execute the PRODUCTION plan and assert its one-bucket
+    * bound from the scan metrics (`numPartitions`/`numFiles` — see
+    * SnapshotPruningSpec). The layout check, swap recovery and journal
+    * replay run first, as on every store read; the bucket dir is listed
+    * when the frame is built.
     */
   private[graft] def pointReadDf(
       spark: org.apache.spark.sql.SparkSession,
@@ -869,15 +933,8 @@ object HamStream {
     checkLayout(fs, storeDir, stamp = false) // a pre-v2 store must error, not miss
     recoverStore(fs, storeDir) // one listStatus; heals a crash-interrupted swap before reading
     recoverBufferJournal(spark, storePath, numBuckets) // one fs.exists when no journal; a reader must see journaled-only cells
-    val bucket = bucketIdOf(soul, field, numBuckets)
-    val pruned = spark.read.parquet(storePath)
-      .filter(col("bucket") === bucket) // partition-pruned to one dir
+    readBuckets(spark, storePath, Seq(bucketIdOf(soul, field, numBuckets).toLong))
       .filter(col("soul") === soul && col("field") === field)
-      .drop("bucket")
-    // a DELTA store ([[appendIntoStore]]) holds one row per append for the
-    // key — collapse to the HAM winner; on a rewrite store this aggregates
-    // the single matching row (same plan shape, the scan still prunes)
-    graft.operators.HamMerge.mergeSnapshot(pruned)
       .select("value.kind", "value.str", "value.num", "value.bool", "value.rel",
         "state", "valueExists")
   }
@@ -901,11 +958,9 @@ object HamStream {
     if (!fs.exists(storeDir)) return
     checkLayout(fs, storeDir, stamp = false)
     recoverStore(fs, storeDir)
-    val liveBuckets = fs.listStatus(storeDir)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-      .map(_.getPath.getName)
-    if (liveBuckets.isEmpty) return
-    compactBuckets(spark, storePath, liveBuckets.toSeq, nowMs, ttlMs,
+    val live = liveBuckets(fs, storeDir)
+    if (live.isEmpty) return
+    compactBuckets(spark, storePath, live, nowMs, ttlMs,
       stagingName = ".compact-staging")
   }
 
@@ -921,11 +976,11 @@ object HamStream {
     * gun/storage.go:56-75). On a rewrite store the merge is a no-op
     * pass-through (already one row per key). `bucket` is functionally
     * determined by the key, so it passes through the merge as a group key.
-    * The scan is partition-pruned to the requested buckets, so per-fold
-    * I/O is O(folded-bucket data), not O(store); surviving buckets rewrite
-    * via the recoverable [[swapBucket]] ordering, fully-expired buckets
-    * are removed outright (an intentional delete, not a swap-crash
-    * window).
+    * The scan reads only the requested bucket dirs ([[readBuckets]]), so
+    * per-fold I/O is O(folded-bucket data), not O(store); surviving
+    * buckets rewrite via the recoverable [[swapBucket]] ordering,
+    * fully-expired buckets are removed outright (an intentional delete,
+    * not a swap-crash window).
     */
   private[streaming] def compactBuckets(
       spark: org.apache.spark.sql.SparkSession,
@@ -939,9 +994,7 @@ object HamStream {
     val fs = storeDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ids = bucketNames.map(_.stripPrefix("bucket=").toLong)
     val kept = graft.operators.HamMerge
-      .mergeSnapshot(
-        spark.read.parquet(storePath).filter(col("bucket").isin(ids: _*)),
-        passThrough = Seq("bucket"))
+      .mergeSnapshot(readBuckets(spark, storePath, ids), passThrough = Seq("bucket"))
       .filter(col("state") >= lit(nowMs - ttlMs))
     val staging = new org.apache.hadoop.fs.Path(storePath, stagingName)
     // one task per folded bucket: the fold must not RAISE the bucket's

@@ -102,8 +102,9 @@ final class SubscriptionHub(
   }
 
   /** Register a listener that first receives the store's CURRENT value
-    * (bucket-pruned point read, absent ⇒ nothing) and then every live
-    * transition — the snapshot-then-stream `Fetch` contract. The
+    * (a one-job point read of the key's bucket, absent ⇒ nothing) and
+    * then every live transition — the snapshot-then-stream `Fetch`
+    * contract. The
     * per-listener dedupe absorbs the case where the write that produced
     * the snapshot is still in flight on the update stream.
     */

@@ -31,6 +31,39 @@ object SparkSuite {
   val cancelAllJobs: Signaler = new Signaler {
     def apply(testThread: Thread): Unit = session.sparkContext.cancelAllJobs()
   }
+
+  /** Spark jobs and tasks that `op` runs on this thread, counted by a
+    * listener on a job group of its own.
+    */
+  def jobsAndTasks(op: => Unit): (Int, Int) = {
+    import java.util.concurrent.ConcurrentHashMap
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val sc = session.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val tasks = new AtomicInteger
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) tasks.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "counted")
+    try op
+    finally {
+      sc.clearJobGroup()
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    (jobs.get, tasks.get)
+  }
 }
 
 object PlanScans {

@@ -38,6 +38,24 @@ class AnalyticsSpec extends SparkSuite {
     assert(pr == Set(("a", 60L), ("b", 111L), ("c", 400L)))
   }
 
+  test("lattice pagerank: an lcm of out-degrees past Long range throws ArithmeticException") {
+    import spark.implicits._
+    // vertex v_d has out-degree d, d = 1..43: lcm(1..43) ≈ 9.42e18 > Long.MaxValue,
+    // so the distributed lcm fold overflows
+    val wide = (1 to 43).flatMap(d => (0 until d).map(j => (s"v$d", "r", s"t$d-$j")))
+      .toDF("src", "field", "dst")
+    intercept[ArithmeticException](Analytics.pageRankLattice(spark, wide, iters = 1))
+    // lcm(1..42) ≈ 2.2e17 fits: the same fold without the degree-43 vertex passes it
+    val fits = Analytics.pageRankLattice(spark, wide.filter("src != 'v43'"), iters = 0)
+    assert(fits.count() == 42 + (1 to 42).sum)
+  }
+
+  test("lattice pagerank: iters whose (20·L)^k passes Long range throws ArithmeticException") {
+    // forest, so L = 1 and S_k = 20^k: 20^14 ≈ 1.6e18 fits, 20^15 ≈ 3.3e19 does not
+    intercept[ArithmeticException](
+      Analytics.pageRankLattice(spark, edges.filter("src != 'x'"), iters = 15))
+  }
+
   test("lattice pagerank generalizes to out-degree > 1 (L = lcm of degrees)") {
     import spark.implicits._
     // a→{b,c}, b→c: degrees a=2, b=1 → L=2, scale (20·2)^k. By hand:

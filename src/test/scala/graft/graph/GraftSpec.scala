@@ -1,12 +1,10 @@
 package graft.graph
 
 import graft.SparkSuite
+import graft.SparkSuite.jobsAndTasks
 import graft.core.{GunCell, GunValue, ValueKind}
 import graft.streaming.HamStream
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.scalatest.concurrent.TimeLimitedTests
 import org.scalatest.time.{Seconds, Span}
 
@@ -28,35 +26,6 @@ class GraftSpec extends SparkSuite with TimeLimitedTests {
     var seq = 0L
     new Graft(spark, Nil, () => now,
       () => { seq += 1; s"S$seq" })
-  }
-
-  /** Spark jobs and tasks that `op` runs on this thread, counted by a
-    * listener on a job group of its own.
-    */
-  private def jobsAndTasks(op: => Unit): (Int, Int) = {
-    val sc = spark.sparkContext
-    val group = s"graftspec-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger
-    val tasks = new AtomicInteger
-    val stages = ConcurrentHashMap.newKeySet[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
-          jobs.incrementAndGet()
-          e.stageIds.foreach(stages.add)
-        }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId)) tasks.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "counted")
-    try op
-    finally {
-      sc.clearJobGroup()
-      ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    (jobs.get, tasks.get)
   }
 
   test("putWithAck surfaces a remote peer's rejection through the scoped API") {

@@ -468,30 +468,15 @@ class SimilaritySpec extends SparkSuite with TimeLimitedTests {
   test("semanticDedupAuto's knownCount threading: the upper rung runs ONE " +
       "corpus count, not two (VERDICT_r17 #3)") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val sc = spark.sparkContext
-    def jobsFor(group: String)(body: => Unit): Int = {
-      sc.setJobGroup(group, group, interruptOnCancel = false)
-      try body finally sc.clearJobGroup()
-      // job registration in the status store is async; poll until stable
-      var prev = -1
-      var cur = sc.statusTracker.getJobIdsForGroup(group).length
-      var spins = 0
-      while (cur != prev && spins < 100) {
-        prev = cur; Thread.sleep(100)
-        cur = sc.statusTracker.getJobIdsForGroup(group).length
-        spins += 1
-      }
-      cur
-    }
     val n = emb.count()
     var viaDispatch: Array[(Long, Long)] = null
     var direct: Array[(Long, Long)] = null
-    val jobsDispatch = jobsFor("hier-dispatch") {
+    val (jobsDispatch, _) = SparkSuite.jobsAndTasks {
       // crossover pinned below n so the dispatcher takes the hier rung
       viaDispatch = Similarity.semanticDedupAuto(emb, threshold = 0.4,
         crossover = 1L).collect().map(r => (r.getLong(0), r.getLong(1)))
     }
-    val jobsDirect = jobsFor("hier-direct") {
+    val (jobsDirect, _) = SparkSuite.jobsAndTasks {
       direct = Similarity.semanticDedupHier(emb, threshold = 0.4)
         .collect().map(r => (r.getLong(0), r.getLong(1)))
     }

@@ -3,6 +3,8 @@ package graft.streaming
 import graft.SparkSuite
 import graft.core.GunCell
 import graft.sources.{GunWire, InMemoryPeerConn}
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 /** End-to-end streaming crash recovery, COMPOSED: the crash window between
   * the gun source's WAL journal write (during batch planning) and
@@ -14,7 +16,13 @@ import graft.sources.{GunWire, InMemoryPeerConn}
   * journal, and converges to exactly the store a no-crash run produces
   * (at-least-once replay + HAM idempotence = effectively-once).
   */
-class CrashRecoverySpec extends SparkSuite {
+class CrashRecoverySpec extends SparkSuite with TimeLimitedTests {
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 1.8 s; the limit
+  // is 33x that, room for a first suite that starts the
+  // session and for a shared host that runs 2-3x slower
+  val timeLimit: Span = Span(60, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
 
   test("crash after WAL journal, before store merge: restart converges the store") {
     val spark2 = spark

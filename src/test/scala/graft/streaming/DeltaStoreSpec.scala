@@ -1,8 +1,10 @@
 package graft.streaming
 
 import graft.SparkSuite
-import graft.core.GunValue
+import graft.core.{FetchResult, GunCell, GunValue}
 import graft.streaming.HamStream.Update
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 /** The LSM-style delta store ([[HamStream.appendIntoStore]]): per-batch
   * I/O is O(batch) — each micro-batch lands as immutable delta files in
@@ -11,8 +13,14 @@ import graft.streaming.HamStream.Update
   * bucket-pruned; [[HamStream.compactStore]] folds the deltas back to one
   * row per key; at-least-once replay (duplicate appends) is idempotent.
   */
-class DeltaStoreSpec extends SparkSuite {
+class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
   import spark.implicits._
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 14.2 s (the
+  // collapse property test); the limit is 8x that, room for a shared
+  // host that runs 2-3x slower
+  val timeLimit: Span = Span(120, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
 
   private val NumBuckets = 8
 
@@ -242,5 +250,78 @@ class DeltaStoreSpec extends SparkSuite {
       s.metrics.get("numPartitions").map(_.value).getOrElse(-1L))
     assert(partitionsRead == Seq(1L),
       s"delta point read must prune to ONE bucket dir, read $partitionsRead")
+  }
+
+  test("a compaction swap between a point read's listing and its scan: the read lists again") {
+    val dir = newDir()
+    for (b <- 0 until 3)
+      HamStream.appendBatchIntoStore(
+        Seq(Update("s1", "f", GunValue.string(s"v$b"), 1000.0 + b)).toDS(),
+        b.toLong, dir, NumBuckets, compactThreshold = 0)
+    val bucket = s"bucket=${HamStream.bucketIdOf("s1", "f", NumBuckets)}"
+    var listings = 0
+    // the production retry around the production point read; the first
+    // listing is followed by a fold of the key's bucket, which swaps the
+    // bucket dir and deletes the three listed delta files
+    val rows = HamStream.keyRows {
+      val listed = HamStream.pointReadDf(spark, dir, "s1", "f", NumBuckets)
+      listings += 1
+      if (listings == 1)
+        HamStream.compactBuckets(spark, dir, Seq(bucket), nowMs = 0.0,
+          ttlMs = Double.PositiveInfinity, stagingName = ".compact-staging-race")
+      listed
+    }
+    assert(listings == 2)
+    assert(rows.map(r => (r.getString(1), r.getDouble(5))).toSeq == Seq(("v2", 1002.0)),
+      "the second listing reads the folded winner")
+  }
+
+  test("point read's driver-side collapse equals readStore's merged row (property)") {
+    import org.apache.spark.sql.functions.col
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // every value kind; states from three values, so equal-state ties
+    // (broken by canonical JSON) are common
+    val value = Gen.oneOf(GunValue.nullValue, GunValue.string(""), GunValue.string("a"),
+      GunValue.string("b"), GunValue.string("\u00fc"), GunValue.number("1"),
+      GunValue.number("-2.5"), GunValue.bool(true), GunValue.bool(false),
+      GunValue.relation("r1"), GunValue.relation("r2"))
+    val history = for {
+      n <- Gen.choose(1, 11) // un-compacted appends of the key
+      rows <- Gen.listOfN(n, Gen.zip(value, Gen.choose(1, 3).map(_ * 1000.0)))
+    } yield rows
+    // valueExists is a function of (value, state): a full (state, JSON)
+    // tie then carries one valueExists, so the winner is unambiguous
+    def exists(v: GunValue, st: Double) = ((v, st).hashCode & 3) != 0
+    for (seed <- 0 until 3) {
+      val keys = Gen.listOfN(12, history)(Gen.Parameters.default, Seed(9100L + seed)).get
+        .zipWithIndex.map { case (rows, i) => (s"p$i", rows) }
+      // append k holds each key's k-th row, so a key with n rows spans n
+      // delta files; written directly, since the sink stamps valueExists
+      val dir = newDir()
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_layout"),
+        HamStream.LayoutVersion)
+      for (k <- 0 until 11) {
+        val cells = keys.collect { case (soul, rows) if rows.size > k =>
+          val (v, st) = rows(k)
+          GunCell(soul, "f", v, st, exists(v, st))
+        }
+        if (cells.nonEmpty)
+          cells.toDF()
+            .withColumn("bucket", HamStream.bucketOf(col("soul"), col("field"), NumBuckets))
+            .repartition(col("bucket"))
+            .write.mode("append").partitionBy("bucket").parquet(dir)
+      }
+      val merged = HamStream.readStore(spark, dir, NumBuckets).as[GunCell].collect()
+        .map(c => c.soul -> c).toMap
+      assert(merged.size == keys.size)
+      keys.foreach { case (soul, rows) =>
+        val m = merged(soul)
+        assert(HamStream.fetchFromStore(spark, dir, soul, "f", NumBuckets) ==
+          FetchResult("f", Some(m.value), Some(m.state), m.valueExists),
+          s"seed ${9100 + seed} key $soul rows $rows")
+      }
+    }
   }
 }

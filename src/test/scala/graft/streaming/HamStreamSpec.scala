@@ -3,9 +3,17 @@ package graft.streaming
 import graft.SparkSuite
 import graft.core.{GunCell, GunValue}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
-class HamStreamSpec extends SparkSuite {
+class HamStreamSpec extends SparkSuite with TimeLimitedTests {
   import HamStream._
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 8.3 s (the
+  // watermark-bounded subscription); the limit is 7x that, room for a
+  // shared host that runs 2-3x slower
+  val timeLimit: Span = Span(60, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
 
   private val empty = KeyState(None, None, Nil)
   private val k = ("s1", "f")
@@ -201,27 +209,51 @@ class HamStreamSpec extends SparkSuite {
   test("fetchFromStore: point read prunes to one bucket directory") {
     val spark2 = spark
     import spark2.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("ham_store_read").toString + "/cells"
-    val in = MemoryStream[GunCell]
-    val q = mergeIntoStore(updates(in.toDS(), timers = false), dir, numBuckets = 8)
-    try {
-      in.addData((1 to 16).map(i =>
-        GunCell(s"rsoul$i", "f", GunValue.number(i.toLong), 1000)): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val hit = HamStream.fetchFromStore(spark, dir, "rsoul7", "f", numBuckets = 8)
-    assert(hit.valueExists && hit.value.contains(GunValue.number(7L)))
+    // three un-compacted appends: each bucket holds one delta file per append
+    for (b <- 0 until 3)
+      appendBatchIntoStore((1 to 16).map(i =>
+        Update(s"rsoul$i", "f", GunValue.number(i * 10L + b), 1000.0 + b)).toDS(),
+        b.toLong, dir, numBuckets = 8, compactThreshold = 0)
+    val bucketFiles = new java.io.File(dir, s"bucket=${bucketIdOf("rsoul7", "f", 8)}")
+      .listFiles().count(_.getName.endsWith(".parquet"))
+    assert(bucketFiles == 3)
+
+    // the production read, under a job group of its own; its executed
+    // plan (with scan metrics) comes from a query-execution listener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val qel = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    var hit: graft.core.FetchResult = null
+    spark.listenerManager.register(qel)
+    val (jobs, _) =
+      try graft.SparkSuite.jobsAndTasks {
+        hit = HamStream.fetchFromStore(spark, dir, "rsoul7", "f", numBuckets = 8)
+      } finally spark.listenerManager.unregister(qel)
+    assert(hit.valueExists && hit.value.contains(GunValue.number(72L)) &&
+      hit.state.contains(1002.0))
+    assert(jobs == 1, s"a point read must run ONE Spark job, ran $jobs")
+    import scala.jdk.CollectionConverters._
+    val scans = plans.asScala.toSeq.flatMap(graft.PlanScans.fileScans)
+    assert(scans.map(_.metrics("numFiles").value) == Seq(bucketFiles.toLong),
+      "the scan must read exactly the key's bucket files")
+
     val miss = HamStream.fetchFromStore(spark, dir, "rsoul7", "nope", numBuckets = 8)
     assert(!miss.valueExists)
-    // the partition filter reaches the scan: exactly one bucket selected
-    import org.apache.spark.sql.functions.{col, lit}
-    val b = spark.range(1)
-      .select(HamStream.bucketOf(lit("rsoul7"), lit("f"), 8)).head().getLong(0)
-    val plan = spark.read.parquet(dir).filter(col("bucket") === b)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains(s"bucket = $b") || plan.contains(s"bucket#") ||
-      plan.contains("PartitionFilters"))
+    // a missing bucket dir, and a missing store, read as absent too
+    val oneKey = java.nio.file.Files.createTempDirectory("ham_store_1key").toString + "/cells"
+    appendBatchIntoStore(Seq(Update("rsoul1", "f", GunValue.number(1L), 1000.0)).toDS(),
+      0L, oneKey, numBuckets = 8)
+    val otherBucket = (2 to 16).map(i => s"rsoul$i")
+      .find(bucketIdOf(_, "f", 8) != bucketIdOf("rsoul1", "f", 8)).get
+    assert(!HamStream.fetchFromStore(spark, oneKey, otherBucket, "f", numBuckets = 8).valueExists)
+    assert(!HamStream.fetchFromStore(spark, oneKey + "-absent", "rsoul1", "f",
+      numBuckets = 8).valueExists)
   }
 
   test("compactStore drops expired cells and removes fully-expired buckets") {

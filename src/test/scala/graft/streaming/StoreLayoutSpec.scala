@@ -3,6 +3,8 @@ package graft.streaming
 import graft.SparkSuite
 import graft.core.GunValue
 import org.apache.hadoop.fs.Path
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 /** The store's `_layout` version marker (ADVICE round 5): the round-5
   * bucket-key change from xxhash64(soul) to xxhash64(soul, field) would
@@ -12,7 +14,13 @@ import org.apache.hadoop.fs.Path
   * whose marker is absent-but-populated (pre-v2) or mismatched, and stamp
   * fresh stores on first write.
   */
-class StoreLayoutSpec extends SparkSuite {
+class StoreLayoutSpec extends SparkSuite with TimeLimitedTests {
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 0.9 s; the limit
+  // is 66x that, room for a first suite that starts the
+  // session and for a shared host that runs 2-3x slower
+  val timeLimit: Span = Span(60, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
   import spark.implicits._
   import HamStream.Update
 
