@@ -20,8 +20,9 @@ import java.util.concurrent.atomic.LongAdder
   *   1. INGEST: generated put frames → InMemoryPeerConn → DSv2 `gun`
   *      source (WAL on) → [[GunWire.framesToCells]] →
   *      [[HamStream.updates]] (per-key CRDT state machine) →
-  *      [[HamStream.mergeBatchIntoStore]] (bucketed parquet store with the
-  *      trash-then-swap crash protocol). The feeder is CLOSED-LOOP: it
+  *      [[HamStream.appendBatchIntoStore]] (the bucketed LSM cell store:
+  *      one delta file per touched bucket per batch, folded past the
+  *      compaction threshold). The feeder is CLOSED-LOOP: it
   *      keeps one chunk of frames in flight and waits for the stream to
   *      consume it before sending the next, so the measured rate is the
   *      pipeline's processing capacity, not the feeder's, and the
@@ -96,12 +97,13 @@ object StreamBench {
 
   /** Full ingest pipeline at capacity; returns sustained-throughput stats.
     * `chunkFrames` bounds the frames in flight (closed loop).
-    */
-  /** `sink` selects the store leg: "rewrite" = [[HamStream.mergeBatchIntoStore]]
-    * (read-merge-rewrite of touched buckets), "delta" =
-    * [[HamStream.appendBatchIntoStore]] (LSM append, O(batch) I/O), "none" =
-    * count only — isolating the source + codec + CRDT state machine so the
-    * per-batch cost splits into named parts (SCALE_r6 attribution).
+    *
+    * `sink` selects the store leg: "delta" =
+    * [[HamStream.appendBatchIntoStore]] (LSM append, O(batch) I/O),
+    * "delta_buf4" = [[HamStream.BufferedDeltaSink]] (4 micro-batches per
+    * delta write), "none" = count only — isolating the source + codec +
+    * CRDT state machine so the per-batch cost splits into named parts
+    * (SCALE_r6 attribution).
     * `transport` = "mem" (in-process conn) or "ws" — a REAL RFC 6455
     * loopback socket ([[GunWebSocketServer]] accept + JDK client dial), so
     * one leg prices the full wire path the reference actually runs.
@@ -114,7 +116,7 @@ object StreamBench {
       msgsPerFrame: Int,
       chunkFrames: Int,
       wal: Boolean,
-      sink: String = "rewrite",
+      sink: String = "delta",
       transport: String = "mem"): RunStats = {
     val transportSetup: (PeerConn, PeerConn, () => Unit) =
       transport match {
@@ -143,7 +145,7 @@ object StreamBench {
       implicit val cellEnc = org.apache.spark.sql.Encoders.product[GunCell]
       val cells = GunWire.framesToCells(frames, "frame").as[GunCell]
       val updates = HamStream.updates(cells, timers = false)
-      // "delta-buf4": the buffered LSM sink — 4 micro-batches per delta
+      // "delta_buf4": the buffered LSM sink — 4 micro-batches per delta
       // write, amortizing the fixed write-job cost that dominates the
       // per-batch floor (flushed explicitly before the correctness gate)
       val bufSink = new HamStream.BufferedDeltaSink(store, 64,
@@ -152,9 +154,8 @@ object StreamBench {
         .option("checkpointLocation", ckpt)
         .foreachBatch { (b: Dataset[HamStream.Update], id: Long) =>
           sink match {
-            case "rewrite"    => HamStream.mergeBatchIntoStore(b, id, store, numBuckets = 64)
             case "delta"      => HamStream.appendBatchIntoStore(b, id, store, numBuckets = 64)
-            case "delta-buf4" => bufSink.add(b, id)
+            case "delta_buf4" => bufSink.add(b, id)
             case _            => b.count(); ()
           }
         }
@@ -179,15 +180,11 @@ object StreamBench {
         }
         q.processAllAvailable()
       } finally q.stop()
-      if (sink == "delta-buf4") bufSink.flush() // drain the remainder before the gate
+      if (sink == "delta_buf4") bufSink.flush() // drain the remainder before the gate
       val elapsed = (System.nanoTime() - t0) / 1e9
-      if (sink == "rewrite") {
-        // correctness gate on the bench itself: every key landed in the store
-        val storeRows = spark.read.parquet(store).count()
-        require(storeRows == souls.toLong * fields,
-          s"store has $storeRows rows, expected ${souls.toLong * fields}")
-      } else if (sink == "delta" || sink == "delta-buf4") {
-        // merged view collapses the appended generations to one per key
+      if (sink != "none") {
+        // correctness gate on the bench itself: every key landed in the
+        // store (the merged view collapses appended generations to one)
         val mergedRows = HamStream.readStore(spark, store).count()
         require(mergedRows == souls.toLong * fields,
           s"merged delta store has $mergedRows rows, expected ${souls.toLong * fields}")
@@ -677,7 +674,7 @@ object StreamBench {
     // re-run-one-leg-on-a-quiet-box workflow. Unknown names fail fast (a
     // typo must not silently select zero legs). Empty/unset = all legs.
     val knownLegs = Seq(
-      "ingest", "ingest_nowal", "ingest_delta", "ingest_delta_buf4",
+      "ingest", "ingest_nowal", "ingest_delta_buf4",
       "ingest_ws_delta", "ingest_nostore", "publish", "publish_p4",
       "readamp_trigger_on", "readamp_trigger_off",
       "neardup_pruned", "neardup_full_probe",
@@ -715,15 +712,11 @@ object StreamBench {
         chunkFrames, wal = false)).maxBy(_.rate)
       ingestNoWalStats = Some(r); out += "ingest_nowal" -> js(r)
     }
-    // delta-store leg: LSM append instead of read-merge-rewrite
-    if (want("ingest_delta"))
-      out += "ingest_delta" -> js(pass(runIngest(_, souls, fields, waves,
-        msgsPerFrame, chunkFrames, wal = true, sink = "delta")).maxBy(_.rate))
     // buffered delta leg: 4 micro-batches per delta write — amortizes the
     // fixed write-job floor the un-buffered leg pays every batch
     if (want("ingest_delta_buf4"))
       out += "ingest_delta_buf4" -> js(pass(runIngest(_, souls, fields, waves,
-        msgsPerFrame, chunkFrames, wal = true, sink = "delta-buf4")).maxBy(_.rate))
+        msgsPerFrame, chunkFrames, wal = true, sink = "delta_buf4")).maxBy(_.rate))
     // real-socket leg: same pipeline over an RFC 6455 loopback websocket
     // (server accept + JDK client), delta sink — prices the wire path
     if (want("ingest_ws_delta"))

@@ -53,13 +53,14 @@ object HamMerge {
     * INCREMENTAL: only store rows whose (soul, field) appears in the batch
     * enter the re-merge aggregation; every other store row passes through
     * untouched (a semi/anti split on the incoming key set — the batch-API
-    * analogue of the streaming path's touched-bucket merge,
-    * HamStream.mergeIntoStore). Work per batch is O(|incoming| +
+    * analogue of the streaming cell store's touched-bucket fold,
+    * HamStream.compactBuckets). Work per batch is O(|incoming| +
     * |touched store rows|), not O(|store|): at 100 TB store size the old
     * full-store re-aggregation was a table rewrite per batch.
     * Precondition: `store` is key-collapsed — one row per (soul, field) —
     * which every producer of a store guarantees (mergeSnapshot, this
-    * function's own output, the streaming store).
+    * function's own output, `HamStream.readStore` over the streaming
+    * cell store).
     *
     * Returns (mergedStore, deferred).
     *

@@ -1,16 +1,20 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.StructType
 
-/** Shared disk-bucket-index machinery for the streaming near-dup
-  * operators ([[StreamingNearDup]] minhash signatures,
-  * [[StreamingEmbNearDup]] embedding sketches): an LSM-style
-  * bucket-partitioned parquet store built with the
-  * [[HamStream.appendIntoStore]] delta discipline — per-batch staged
-  * write → idempotent parallel rename promotion → count-and-size-ratio
-  * triggered per-bucket compaction (see [[appendDelta]]) that sorts by
-  * the probe key so point probes row-group-prune.
+/** The LSM (log-structured merge) machinery of every bucket-partitioned
+  * parquet store: append-only delta files per bucket plus compaction.
+  * [[promoteDelta]] is the one delta promotion — staged write, then an
+  * idempotent parallel rename to `delta-b<batchId>-<i>.parquet` — used by
+  * the cell store ([[HamStream.appendBatchIntoStore]], which folds a
+  * bucket by HAM merge on a file-count trigger) and by the disk indexes
+  * of the streaming near-dup operators ([[StreamingNearDup]] minhash
+  * signatures, [[StreamingEmbNearDup]] embedding sketches) and
+  * `IndexStore`, through [[appendDelta]]: a count-and-size-ratio
+  * triggered per-bucket fold that sorts by the probe key so point probes
+  * row-group-prune.
   *
   * Crash contract: a replayed batch re-appends under the same batchId
   * (dest-exists renames skip) — duplicate rows, folded by the next
@@ -28,11 +32,11 @@ private[graft] object BucketIndex {
     * touch stamps the marker; later touches must match it exactly.
     */
   def checkLayout(
-      fs: org.apache.hadoop.fs.FileSystem,
-      storeDir: org.apache.hadoop.fs.Path,
+      fs: FileSystem,
+      storeDir: Path,
       markerName: String,
       layout: String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(storeDir, markerName)
+    val marker = new Path(storeDir, markerName)
     if (fs.exists(marker)) {
       val in = fs.open(marker)
       val recorded =
@@ -84,63 +88,25 @@ private[graft] object BucketIndex {
       schema: StructType,
       dedupCols: Seq[String],
       sortCols: Seq[String],
-      fs: org.apache.hadoop.fs.FileSystem,
-      storeDir: org.apache.hadoop.fs.Path): Unit = {
+      fs: FileSystem,
+      storeDir: Path): Unit = {
     import org.apache.spark.sql.functions.col
     val spark = rows.sparkSession
-    val staging = new org.apache.hadoop.fs.Path(indexPath, s".staging-delta-$batchId")
-    rows.select((dataCols :+ "bucket").map(col): _*)
-      .repartition(numBuckets min
-        spark.sessionState.conf.numShufflePartitions, col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
-    val bucketDirs = fs.listStatus(staging)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-    val overThreshold =
-      if (bucketDirs.isEmpty) Array.empty[String]
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          bucketDirs.length min 16)
-        try {
-          val futures = bucketDirs.map { bdir =>
-            pool.submit(new java.util.concurrent.Callable[(String, Int, Long, Long)] {
-              override def call(): (String, Int, Long, Long) = {
-                val name = bdir.getPath.getName
-                val live = new org.apache.hadoop.fs.Path(storeDir, name)
-                if (!fs.exists(live)) fs.mkdirs(live)
-                fs.listStatus(bdir.getPath)
-                  .filter(_.getPath.getName.endsWith(".parquet")).zipWithIndex
-                  .foreach { case (f, i) =>
-                    val dest = new org.apache.hadoop.fs.Path(
-                      live, s"delta-b$batchId-$i.parquet")
-                    if (!fs.rename(f.getPath, dest) && !fs.exists(dest))
-                      throw new java.io.IOException(
-                        s"index delta promotion failed: ${f.getPath} -> $dest")
-                  }
-                // one post-promotion listing feeds BOTH triggers: the
-                // file count and the delta-vs-base byte split (base =
-                // prior compact-* output, delta = everything since)
-                val files = fs.listStatus(live)
-                  .filter(_.getPath.getName.endsWith(".parquet"))
-                val (base, delta) =
-                  files.partition(_.getPath.getName.startsWith("compact-"))
-                (name, files.length,
-                  delta.map(_.getLen).sum, base.map(_.getLen).sum)
-              }
-            })
-          }
-          futures.map(_.get()).collect {
-            case (name, n, deltaBytes, baseBytes)
-                if compactThreshold > 0 && n >= compactThreshold &&
-                  (baseBytes == 0L || deltaBytes >= baseBytes ||
-                    n >= compactThreshold * 8) => name
-          }
-        } finally pool.shutdown()
+    val promoted = promoteDelta(rows.select((dataCols :+ "bucket").map(col): _*),
+      batchId, storeDir, numBuckets, fs)
+    // one post-promotion listing feeds BOTH triggers — the file count and
+    // the delta-vs-base byte split (base = prior compact-* output, delta
+    // = everything since) — and names the files a fold replaces
+    promoted.filter { case (_, files) =>
+      compactThreshold > 0 && files.length >= compactThreshold && {
+        val (base, delta) = files.partition(_.getPath.getName.startsWith("compact-"))
+        val baseBytes = base.map(_.getLen).sum
+        baseBytes == 0L || delta.map(_.getLen).sum >= baseBytes ||
+          files.length >= compactThreshold * 8
       }
-    fs.delete(staging, true)
-    overThreshold.foreach { name =>
-      val live = new org.apache.hadoop.fs.Path(storeDir, name)
-      val before = fs.listStatus(live)
-        .filter(_.getPath.getName.endsWith(".parquet")).map(_.getPath)
+    }.foreach { case (name, files) =>
+      val live = new Path(storeDir, name)
+      val before = files.map(_.getPath)
       // sorted by sortCols: the compacted file's parquet row-group stats
       // become selective for the probe's key filter, so a point probe
       // inside a big bucket skips row groups instead of scanning them
@@ -149,15 +115,13 @@ private[graft] object BucketIndex {
         .dropDuplicates(dedupCols)
         .coalesce(1)
         .sortWithinPartitions(sortCols.map(col): _*)
-      val cStaging = new org.apache.hadoop.fs.Path(
+      val cStaging = new Path(
         indexPath, s".compact-staging-$name-b$batchId")
       compacted.write.mode("overwrite").parquet(cStaging.toString)
       val cFiles = fs.listStatus(cStaging)
         .filter(_.getPath.getName.endsWith(".parquet"))
       cFiles.zipWithIndex.foreach { case (f, i) =>
-        val dest = new org.apache.hadoop.fs.Path(live, s"compact-b$batchId-$i.parquet")
-        if (!fs.rename(f.getPath, dest) && !fs.exists(dest))
-          throw new java.io.IOException(s"compaction promote failed: $dest")
+        promote(fs, f.getPath, new Path(live, s"compact-b$batchId-$i.parquet"))
       }
       // crash between promote and these deletes leaves old deltas next to
       // the compacted copy — duplicate ROWS the set-semantic probe absorbs
@@ -171,4 +135,70 @@ private[graft] object BucketIndex {
       fs.delete(cStaging, true)
     }
   }
+
+  /** The delta promotion shared by every LSM store: the cell store
+    * ([[HamStream.appendBatchIntoStore]]) and the disk indexes
+    * ([[appendDelta]]). `rows` carry a `bucket` column;
+    *   1. they are hash-repartitioned on it (at most `numBuckets` tasks),
+    *      so each touched bucket gets ONE staged file per batch, and
+    *      written to `<storeDir>/.staging-delta-<batchId>/bucket=N/`;
+    *   2. each staged file renames to
+    *      `bucket=N/delta-b<batchId>-<i>.parquet` ([[promote]]: a
+    *      same-batchId replay finds its dest already there and skips; a
+    *      failed rename throws its `IOException`, unwrapped) —
+    *      buckets in parallel on up to 16 threads, so a batch pays
+    *      max(rename latency), not the sum over its buckets (Hadoop
+    *      `FileSystem` instances are thread-safe);
+    *   3. the staging dir is deleted.
+    * Returns each touched bucket's name (`bucket=N`) with its parquet
+    * files after the promotion — each caller's compaction trigger reads
+    * it instead of listing again.
+    */
+  private[streaming] def promoteDelta(
+      rows: DataFrame,
+      batchId: Long,
+      storeDir: Path,
+      numBuckets: Int,
+      fs: FileSystem): Seq[(String, Array[FileStatus])] = {
+    import org.apache.spark.sql.functions.col
+    def parquet(dir: Path) =
+      fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
+    val staging = new Path(storeDir, s".staging-delta-$batchId")
+    rows.repartition(numBuckets min rows.sparkSession.sessionState.conf.numShufflePartitions,
+      col("bucket")).write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
+    val staged = fs.listStatus(staging)
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
+    // threads start on submit: an empty batch starts none
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(staged.length max 1 min 16)
+    val promoted =
+      try staged.map { bdir =>
+        val task: java.util.concurrent.Callable[(String, Array[FileStatus])] = () => {
+          val name = bdir.getPath.getName
+          val live = new Path(storeDir, name)
+          if (!fs.exists(live)) fs.mkdirs(live)
+          parquet(bdir.getPath).zipWithIndex.foreach { case (f, i) =>
+            promote(fs, f.getPath, new Path(live, s"delta-b$batchId-$i.parquet"))
+          }
+          name -> parquet(live)
+        }
+        pool.submit(task)
+      }.map { f =>
+        try f.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }.toSeq
+      finally pool.shutdown()
+    fs.delete(staging, true)
+    promoted
+  }
+
+  /** Rename a staged file to its promoted name. `rename` signals failure
+    * by returning false, not by throwing: a false with `dest` present is
+    * a same-batchId replay whose earlier attempt already promoted the
+    * file (benign — the stores are HAM- or set-idempotent); any other
+    * false throws, so the batch fails instead of committing rows that
+    * never reached the store.
+    */
+  private def promote(fs: FileSystem, src: Path, dest: Path): Unit =
+    if (!fs.rename(src, dest) && !fs.exists(dest))
+      throw new java.io.IOException(s"promotion rename failed: $src -> $dest")
 }

@@ -274,12 +274,11 @@ object HamStream {
   /** Store bucket id for a cell: xxhash64 over (soul, field) — NOT the
     * soul alone. Soul-only bucketing concentrated every cell of a viral
     * soul (unbounded fields/subscribers on one hot node) into ONE bucket,
-    * making that bucket's rewrite O(soul size) on every batch that
-    * touches it; hashing the full cell key spreads a hot soul uniformly
-    * across buckets (HotSoulSpec measures the bound). The store's only
-    * read shapes — point reads ([[fetchFromStore]]) and the per-key HAM
-    * merge — are per (soul, field), so every one of them still prunes to
-    * exactly one bucket.
+    * making every fold of that bucket O(soul size); hashing the full cell
+    * key spreads a hot soul uniformly across buckets (HotSoulSpec
+    * measures the bound). The store's only read shapes — point reads
+    * ([[fetchFromStore]]) and the per-key HAM merge — are per (soul,
+    * field), so every one of them still prunes to exactly one bucket.
     */
   private[streaming] def bucketOf(
       soul: org.apache.spark.sql.Column,
@@ -336,7 +335,7 @@ object HamStream {
       if (found != LayoutVersion) throw new IllegalStateException(
         s"store at $storeDir has layout '$found' but this build reads " +
           s"'$LayoutVersion' — re-bucket the store (read every bucket, " +
-          "rewrite through mergeBatchIntoStore against a fresh root) " +
+          "append them through appendBatchIntoStore to a fresh root) " +
           "instead of letting point reads prune to the wrong bucket")
     } else {
       val hasBuckets = fs.listStatus(storeDir)
@@ -359,113 +358,37 @@ object HamStream {
       finally out.close()
     }
 
-  /** Merged-store streaming sink (SURVEY §3.3 output (a)), incremental and
-    * bucketed: the store directory is laid out as `bucket=N/` partitions
-    * (N = xxhash64(soul, field) mod numBuckets — see [[bucketOf]] for why
-    * the full cell key), and each micro-batch
-    *   1. computes the buckets its updates touch,
-    *   2. reads ONLY those bucket directories back ([[readBuckets]] —
-    *      per-batch I/O is proportional to touched buckets, not store
-    *      size),
-    *   3. HAM-merges them with the batch (per-key state already collapsed
-    *      each batch to net winners; HAM idempotence makes at-least-once
-    *      replays safe),
-    *   4. writes the merged buckets to a staging dir and swaps each bucket
-    *      directory into place with the recoverable trash-then-swap
-    *      ordering of [[swapBucket]] — no crash point leaves a bucket
-    *      permanently absent from the live tree (old data parks in a
-    *      `.trash-*` dir that [[recoverStore]], run at every
-    *      merge/compact/fetch entry, restores or clears).
+  /** The cell store's streaming sink (SURVEY §3.3 output (a)): an LSM
+    * (log-structured merge) store. The store directory is laid out as
+    * `bucket=N/` partitions (N = xxhash64(soul, field) mod numBuckets —
+    * see [[bucketOf]] for why the full cell key), and each micro-batch
+    * appends its cells as immutable delta files inside the bucket
+    * directories it touches ([[appendBatchIntoStore]]) — per-batch I/O is
+    * O(batch), whatever the store's size.
     *
-    * Missing-store detection is an explicit FileSystem existence check;
-    * any OTHER read error (permissions, corruption) propagates — it must
-    * fail the batch, not silently restart from an empty store.
+    * A store may hold SEVERAL rows per (soul, field): every reader
+    * collapses them to the HAM winner ([[fetchFromStore]] does, and bulk
+    * readers go through [[readStore]]), which is exactly the CRDT's own
+    * merge, so reads are correct at any compaction lag. A bucket whose
+    * delta-file count reaches `compactThreshold` is folded back to one
+    * row per key in the same batch; [[compactStore]] folds and TTL-purges
+    * the whole store on the caller's cadence. Crash safety: files land via
+    * write-to-staging then one rename each; a crash mid-move leaves some
+    * buckets with the delta and some without, and the WAL's at-least-once
+    * replay re-appends the batch — duplicate cells are HAM-idempotent, so
+    * the store stays correct (just uncompacted). At-least-once +
+    * idempotent merge is the same contract the reference's peers rely on.
     *
-    * Write amplification: per-batch I/O is O(touched-bucket DATA) — the
-    * right shape when batches concentrate on few buckets, but a batch
-    * whose keys spread across all buckets rewrites the whole store
-    * (StreamBench measures it). For high-rate ingest prefer
-    * [[appendIntoStore]] (LSM delta append, O(batch) I/O) with
-    * [[compactStore]] on a cadence.
-    */
-  def mergeIntoStore(
-      updates: Dataset[Update],
-      storePath: String,
-      numBuckets: Int = DefaultBuckets): org.apache.spark.sql.streaming.StreamingQuery =
-    updates.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Update], batchId: Long) =>
-        mergeBatchIntoStore(batch, batchId, storePath, numBuckets)
-      }
-      .start()
-
-  /** One micro-batch of [[mergeIntoStore]], exposed so restart/crash specs
-    * (and custom foreachBatch sinks that add their own checkpointing or
-    * fault injection) drive the exact production merge body.
-    */
-  private[graft] def mergeBatchIntoStore(
-      batch: Dataset[Update], batchId: Long,
-      storePath: String, numBuckets: Int): Unit = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val spark = batch.sparkSession
-    val newCells = batch.toDF()
-      .select(col("soul"), col("field"), col("value"), col("state"),
-        lit(true).as("valueExists"),
-        bucketOf(col("soul"), col("field"), numBuckets).as("bucket"))
-      .localCheckpoint(true) // materialize once: reused for buckets + merge
-    val touched = newCells.select("bucket").distinct()
-      .collect().map(_.getLong(0)).sorted
-    if (touched.nonEmpty) {
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val storeDir = new org.apache.hadoop.fs.Path(storePath)
-      val fs = storeDir.getFileSystem(hconf)
-      checkLayout(fs, storeDir, stamp = true) // fail fast on a pre-v2 store
-      recoverStore(fs, storeDir) // heal any interrupted prior swap first
-      val merged = graft.operators.HamMerge
-        .mergeSnapshot(readBuckets(spark, storePath, touched.toSeq).drop("bucket")
-          .unionByName(newCells.drop("bucket")))
-        .withColumn("bucket", bucketOf(col("soul"), col("field"), numBuckets))
-      val staging = new org.apache.hadoop.fs.Path(storePath, s".staging-$batchId")
-      merged.write.mode("overwrite")
-        .partitionBy("bucket").parquet(staging.toString)
-      touched.foreach { b =>
-        swapBucket(fs, storeDir, s"bucket=$b",
-          new org.apache.hadoop.fs.Path(staging, s"bucket=$b"))
-      }
-      fs.delete(staging, true)
-      writeLayoutMarker(fs, storeDir) // idempotent: stamps the first write
-    }
-  }
-
-  /** DELTA-mode streaming sink — the LSM answer to [[mergeIntoStore]]'s
-    * write amplification. The rewrite sink's per-batch cost is
-    * O(touched-bucket DATA): a batch whose keys spread across all buckets
-    * re-reads and re-writes the whole store (StreamBench measured exactly
-    * that — per-batch cost flat in batch size, dominated by the bucket
-    * rewrite). This sink appends each micro-batch as immutable
-    * `delta-b<batchId>-*.parquet` files inside the bucket directories it
-    * touches — per-batch I/O is O(batch), full stop.
-    *
-    * The read contract changes with it: a delta store may hold SEVERAL
-    * rows per (soul, field) — every reader collapses to the HAM winner
-    * ([[fetchFromStore]] does, and bulk readers go through [[readStore]]),
-    * which is exactly the CRDT's own merge, so reads are correct at any
-    * compaction lag. [[compactStore]] folds deltas back to one row per
-    * key (merge-then-TTL). Crash safety: files land via write-to-staging
-    * then one rename each; a crash mid-move leaves some buckets with the
-    * delta and some without, and the WAL's at-least-once replay re-appends
-    * the batch — duplicate cells are HAM-idempotent, so the store stays
-    * correct (just uncompacted). At-least-once + idempotent merge is the
-    * same contract the reference's peers rely on.
+    * `bufferBatches > 1` folds that many micro-batches into one delta
+    * write ([[BufferedDeltaSink]]).
     */
   def appendIntoStore(
       updates: Dataset[Update],
       storePath: String,
       numBuckets: Int = DefaultBuckets,
       compactThreshold: Int = DefaultCompactThreshold,
-      bufferBatches: Int = 1,
-      bufferDurable: Boolean = true): org.apache.spark.sql.streaming.StreamingQuery = {
-    // A crashed durable-buffered run may have left committed-but-unflushed
+      bufferBatches: Int = 1): org.apache.spark.sql.streaming.StreamingQuery = {
+    // A crashed buffered run may have left committed-but-unflushed
     // batches in `.buffer-journal/` — the journal is their ONLY copy (the
     // source WAL was pruned when foreachBatch returned). Replay them
     // regardless of THIS run's buffering config: recovering only on the
@@ -481,26 +404,14 @@ object HamStream {
         }
         .start()
     else {
-      // BUFFERED mode: fold `bufferBatches` micro-batches into one delta
-      // write. The per-batch floor of the delta sink is dominated by fixed
-      // write-job cost (launch + shuffle + commit), not data volume
-      // (SCALE_r6 §1) — amortizing it over N batches raises ingest
-      // throughput without changing the store contract.
-      //
-      // Durability (ADVICE_r7 high): the source's WAL does NOT cover the
-      // buffer window — foreachBatch returning commits the batch, and
-      // GunSource.commit prunes the WAL journals for that range, so a
-      // crash before the flush would lose up to bufferBatches-1 committed
-      // micro-batches with an in-memory buffer. Default `bufferDurable`
-      // therefore journals each batch to `<store>/.buffer-journal/` BEFORE
-      // foreachBatch returns and replays leftovers on the next start
-      // ([[recoverBufferJournal]]) — at-least-once, HAM-idempotent.
-      // `bufferDurable = false` keeps the journal-free fast path and
-      // accepts the documented at-most-once window. A graceful stop
+      // BUFFERED mode: the per-batch floor of the delta sink is dominated
+      // by fixed write-job cost (launch + shuffle + commit), not data
+      // volume (SCALE_r6 §1) — amortizing it over N batches raises ingest
+      // throughput without changing the store contract. A graceful stop
       // flushes the remainder via the termination listener. (Journal
       // recovery ran above, before the branch.)
       val sink = new BufferedDeltaSink(storePath, numBuckets, compactThreshold,
-        bufferBatches, durable = bufferDurable)
+        bufferBatches)
       val spark = updates.sparkSession
       val q = updates.writeStream
         .outputMode("append")
@@ -530,77 +441,56 @@ object HamStream {
     * [[appendBatchIntoStore]] call every `flushEvery` batches (and on
     * query termination).
     *
-    * `durable = true` (default): each batch is written to
-    * `<store>/.buffer-journal/batch-<id>` BEFORE `add` returns. Once
-    * foreachBatch returns, Structured Streaming commits the batch and the
-    * gun source prunes its WAL for that range (GunSource.commit) — from
-    * that moment the journal is the ONLY durable copy until the flush
-    * lands it in the store. A crash between adds replays the journal on
-    * the next [[appendIntoStore]] start ([[recoverBufferJournal]]);
-    * journal dirs are deleted only AFTER the flushed append, so a crash
-    * mid-flush re-appends the same cells — HAM-idempotent.
-    *
-    * `durable = false`: the journal-free fast path — each batch is
-    * `localCheckpoint`ed in memory (the micro-batch's source blocks are
-    * only valid during its own foreachBatch call, so the buffer must own
-    * a materialized copy; blocks release at flush). AT-MOST-ONCE across
-    * crashes: up to `flushEvery - 1` committed-but-unflushed batches are
-    * lost if the driver dies before the flush. Use only where the
-    * upstream can re-send (or the loss window is acceptable).
+    * Each batch is written to `<store>/.buffer-journal/batch-<id>` BEFORE
+    * `add` returns. Once foreachBatch returns, Structured Streaming
+    * commits the batch and the gun source prunes its WAL for that range
+    * (GunSource.commit) — from that moment the journal is the ONLY durable
+    * copy until the flush lands it in the store (ADVICE_r7 high). A crash
+    * between adds replays the journal on the next [[appendIntoStore]]
+    * start ([[recoverBufferJournal]]); journal dirs are deleted only AFTER
+    * the flushed append, so a crash mid-flush re-appends the same cells —
+    * HAM-idempotent.
     */
   final class BufferedDeltaSink(
       storePath: String,
       numBuckets: Int,
       compactThreshold: Int,
-      flushEvery: Int,
-      durable: Boolean = true) {
-    private val buf = scala.collection.mutable.ArrayBuffer.empty[Dataset[Update]]
+      flushEvery: Int) {
     private val journaled = scala.collection.mutable.ArrayBuffer.empty[String]
     private var lastBatchId = 0L
     @volatile private var sess: SparkSession = _
 
     def add(batch: Dataset[Update], batchId: Long): Unit = synchronized {
       sess = batch.sparkSession
-      if (durable) {
-        val dir = journalBatchDir(storePath, batchId)
-        // overwrite: a same-batchId redelivery (crash before the streaming
-        // checkpoint committed) replaces its own partial journal dir
-        batch.toDF().write.mode("overwrite").parquet(dir)
-        journaled += dir
-      } else {
-        buf += batch.localCheckpoint(eager = true)
-      }
+      val dir = journalBatchDir(storePath, batchId)
+      // overwrite: a same-batchId redelivery (crash before the streaming
+      // checkpoint committed) replaces its own partial journal dir
+      batch.toDF().write.mode("overwrite").parquet(dir)
+      journaled += dir
       lastBatchId = batchId
-      if ((if (durable) journaled.length else buf.length) >= flushEvery)
-        flushLocked()
+      if (journaled.length >= flushEvery) flushLocked()
     }
 
     def flush(): Unit = synchronized { flushLocked() }
 
     private def flushLocked(): Unit =
-      if (durable) {
-        if (journaled.nonEmpty) {
-          val spark = sess
-          import spark.implicits._
-          val all = spark.read.parquet(journaled.toSeq: _*).as[Update]
-          appendBatchIntoStore(all, lastBatchId, storePath, numBuckets,
-            compactThreshold)
-          // delete AFTER the append: a crash between the two replays the
-          // journal on restart; duplicate cells are HAM-idempotent
-          val fs = new org.apache.hadoop.fs.Path(storePath)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          journaled.foreach(d =>
-            fs.delete(new org.apache.hadoop.fs.Path(d), true))
-          journaled.clear()
-        }
-      } else if (buf.nonEmpty) {
-        val all = buf.reduce(_ unionByName _)
-        appendBatchIntoStore(all, lastBatchId, storePath, numBuckets, compactThreshold)
-        buf.clear()
+      if (journaled.nonEmpty) {
+        val spark = sess
+        import spark.implicits._
+        val all = spark.read.parquet(journaled.toSeq: _*).as[Update]
+        appendBatchIntoStore(all, lastBatchId, storePath, numBuckets,
+          compactThreshold)
+        // delete AFTER the append: a crash between the two replays the
+        // journal on restart; duplicate cells are HAM-idempotent
+        val fs = new org.apache.hadoop.fs.Path(storePath)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        journaled.foreach(d =>
+          fs.delete(new org.apache.hadoop.fs.Path(d), true))
+        journaled.clear()
       }
 
     /** Batches currently buffered (test/introspection hook). */
-    def pending: Int = synchronized(if (durable) journaled.length else buf.length)
+    def pending: Int = synchronized(journaled.length)
   }
 
   private def journalBatchDir(storePath: String, batchId: Long): String =
@@ -656,7 +546,12 @@ object HamStream {
     */
   val DefaultCompactThreshold = 12
 
-  /** One micro-batch of [[appendIntoStore]] (exposed for specs/sinks).
+  /** One micro-batch of [[appendIntoStore]] (exposed for specs/sinks):
+    * the cells, stamped `valueExists = true` and routed by [[bucketOf]],
+    * go through the shared delta promotion ([[BucketIndex.promoteDelta]]:
+    * one delta file per touched bucket, idempotent under a same-batchId
+    * replay), after the layout check and swap recovery every store entry
+    * runs.
     *
     * `compactThreshold` ≤ 0 disables the auto-trigger (callers owning
     * their own compaction cadence). Auto-triggered folds are FOLD-ONLY
@@ -670,83 +565,31 @@ object HamStream {
       compactThreshold: Int = DefaultCompactThreshold): Unit = {
     import org.apache.spark.sql.functions.{col, lit}
     val spark = batch.sparkSession
-    val newCells = batch.toDF()
-      .select(col("soul"), col("field"), col("value"), col("state"),
-        lit(true).as("valueExists"),
-        bucketOf(col("soul"), col("field"), numBuckets).as("bucket"))
     val storeDir = new org.apache.hadoop.fs.Path(storePath)
     val fs = storeDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     checkLayout(fs, storeDir, stamp = true)
     recoverStore(fs, storeDir)
-    val staging = new org.apache.hadoop.fs.Path(storePath, s".staging-delta-$batchId")
-    // hash-repartition on the bucket column first: each bucket's rows land
-    // in exactly one task, so a batch adds ONE delta file per touched
-    // bucket (not files-per-task×bucket) — 4-8× slower file-count growth
-    // between compactions for one small-batch shuffle. Task count is
-    // capped at numBuckets (more tasks than buckets is pure launch
-    // overhead on the per-batch floor).
-    newCells.repartition(numBuckets min newCells.sparkSession.sessionState.conf.numShufflePartitions, col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
-    // Promote staged delta files into the live bucket dirs IN PARALLEL: a
-    // sequential driver loop serializes one rename RPC per touched bucket
-    // (thousands of NameNode round-trips per batch at a 100k-bucket
-    // production store). Hadoop FileSystem instances are thread-safe; a
-    // bounded pool turns the promotion into max(RPC latency) instead of
-    // sum(RPC latency). Each task returns the bucket's post-promotion
-    // delta-file count so the compaction trigger needs no extra listing.
-    val bucketDirs = fs.listStatus(staging)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-    val overThreshold =
-      if (bucketDirs.isEmpty) Array.empty[String]
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          bucketDirs.length min 16)
-        try {
-          val futures = bucketDirs.map { bdir =>
-            pool.submit(new java.util.concurrent.Callable[(String, Int)] {
-              override def call(): (String, Int) = {
-                val name = bdir.getPath.getName
-                val live = new org.apache.hadoop.fs.Path(storeDir, name)
-                if (!fs.exists(live)) fs.mkdirs(live)
-                fs.listStatus(bdir.getPath)
-                  .filter(_.getPath.getName.endsWith(".parquet")).zipWithIndex
-                  .foreach { case (f, i) =>
-                    val dest =
-                      new org.apache.hadoop.fs.Path(live, s"delta-b$batchId-$i.parquet")
-                    // rename signals failure by returning FALSE, not by
-                    // throwing. dest-already-exists is the same-batchId WAL
-                    // replay (the delta landed on the previous attempt) —
-                    // benign, HAM-idempotent. Any OTHER false must FAIL the
-                    // batch so the checkpoint doesn't commit a batch whose
-                    // cells never reached the store.
-                    if (!fs.rename(f.getPath, dest) && !fs.exists(dest))
-                      throw new java.io.IOException(
-                        s"delta promotion rename failed: ${f.getPath} -> $dest")
-                  }
-                name -> fs.listStatus(live)
-                  .count(_.getPath.getName.endsWith(".parquet"))
-              }
-            })
-          }
-          futures.map(_.get()).collect {
-            case (name, n) if compactThreshold > 0 && n >= compactThreshold => name
-          }
-        } finally pool.shutdown()
-      }
-    fs.delete(staging, true)
+    val promoted = BucketIndex.promoteDelta(
+      batch.toDF().select(col("soul"), col("field"), col("value"), col("state"),
+        lit(true).as("valueExists"),
+        bucketOf(col("soul"), col("field"), numBuckets).as("bucket")),
+      batchId, storeDir, numBuckets, fs)
     writeLayoutMarker(fs, storeDir)
+    val overThreshold = promoted.collect {
+      case (name, files) if compactThreshold > 0 && files.length >= compactThreshold => name
+    }
     if (overThreshold.nonEmpty)
-      compactBuckets(spark, storePath, overThreshold.toSeq,
+      compactBuckets(spark, storePath, overThreshold,
         nowMs = 0.0, ttlMs = Double.PositiveInfinity,
         stagingName = s".compact-staging-b$batchId")
   }
 
   /** Bulk read of a store as its MERGED view — one HAM winner per
-    * (soul, field) regardless of sink mode (a rewrite store is already
-    * collapsed; a delta store collapses here). Every live bucket is read
-    * through [[readBuckets]] (the store's fixed schema, so no footer job;
-    * more than 32 bucket dirs are listed by one parallel-listing job),
-    * and the merge is one hash aggregation over the scan. A store that
+    * (soul, field), however many un-compacted appends a key has. Every
+    * live bucket is read through [[readBuckets]] (the store's fixed
+    * schema, so no footer job; more than 32 bucket dirs are listed by one
+    * parallel-listing job), and the merge is one hash aggregation over
+    * the scan. A store that
     * does not exist reads as empty. Prefer [[fetchFromStore]] for point
     * reads: it reads one bucket and needs no aggregation job.
     */
@@ -761,7 +604,7 @@ object HamStream {
     // heal a crashed buffered run's leftovers too: the journal holds
     // committed batches no other copy has, and a reader must see them
     // (no-op when `.buffer-journal` is absent — i.e. always, outside a
-    // crashed bufferDurable run; numBuckets routes the replayed cells)
+    // crashed buffered run; numBuckets routes the replayed cells)
     recoverBufferJournal(spark, storePath, numBuckets)
     val live = liveBuckets(fs, storeDir).map(_.stripPrefix("bucket=").toLong)
     graft.operators.HamMerge.mergeSnapshot(
@@ -814,14 +657,15 @@ object HamStream {
       .parquet(dirs.map(_.toString): _*)
   }
 
-  /** Swap a staged bucket directory into the live tree with a RECOVERABLE
-    * ordering (the delete-before-rename of the round-2 version had a crash
+  /** Swap a staged bucket directory — a fold's output, written by
+    * [[compactBuckets]] — into the live tree with a RECOVERABLE ordering
+    * (the delete-before-rename of the round-2 version had a crash
     * window that left a bucket absent with no repair path):
     *   1. rename live → `.trash-bucket=N` (old data parked, not deleted),
     *   2. rename staged → live,
     *   3. delete the trash copy.
     * A crash after (1) leaves the old data in the trash dir;
-    * [[recoverStore]] — run at every merge/compact/fetch entry — renames
+    * [[recoverStore]] — run at every append/compact/read entry — renames
     * it back, so every crash point leaves the bucket readable with either
     * the old or the new data, never neither. Dot-prefixed trash/staging
     * dirs are invisible to parquet reads (Hadoop's hidden-file filter), so
@@ -861,18 +705,18 @@ object HamStream {
     }
   }
 
-  /** Point read against a bucketed store — the read-side complement of
-    * [[mergeIntoStore]] (reference storage-get semantics,
+  /** Point read against the bucketed store — the read-side complement of
+    * [[appendIntoStore]] (reference storage-get semantics,
     * gun/storage.go:79-89: absent ⇒ exists=false, not an error). ONE
     * Spark job per read, whatever the store's size:
     *   - [[pointReadDf]] lists the key's one `bucket=N/` directory on the
     *     driver (no listing job) and scans it with the store's fixed
     *     schema (no footer job), filtered to (soul, field);
-    *   - the scan's rows — one per un-compacted append of the key on a
-    *     delta store, at most one on a rewrite store — are collected and
-    *     folded on the driver with [[Ham.mergeCells]], the HAM argmax
-    *     over (state, canonical JSON) that `HamMerge.mergeSnapshot`
-    *     computes in a shuffle (no aggregation job);
+    *   - the scan's rows — one per un-compacted append of the key — are
+    *     collected and folded on the driver with [[Ham.mergeCells]], the
+    *     HAM argmax over (state, canonical JSON) that
+    *     `HamMerge.mergeSnapshot` computes in a shuffle (no aggregation
+    *     job);
     *   - a missing store or bucket dir reads as valueExists=false.
     * A compaction that swaps the bucket between the listing and the scan
     * deletes the listed files; the read then lists the bucket again and
@@ -943,10 +787,10 @@ object HamStream {
     * tick (5 s scan dropping cells older than the retention window,
     * gun/storage.go:56-75; 7 h default gun/gun.go:84-85) as a batch job
     * run on the compaction cadence. Cells with `state < nowMs - ttlMs`
-    * are dropped; surviving buckets rewrite via the same staging +
-    * recoverable [[swapBucket]] ordering as [[mergeIntoStore]]; buckets
-    * left fully expired are removed outright (an intentional delete, not a
-    * swap-crash window).
+    * are dropped after the deltas fold to one row per key
+    * ([[compactBuckets]]); surviving buckets rewrite via staging + the
+    * recoverable [[swapBucket]] ordering; buckets left fully expired are
+    * removed outright (an intentional delete, not a swap-crash window).
     */
   def compactStore(
       spark: org.apache.spark.sql.SparkSession,
@@ -973,8 +817,8 @@ object HamStream {
     * merge-then-TTL: collapse delta rows to their HAM winner FIRST, then
     * drop expired winners — an expired winner must not resurrect a
     * stale-but-in-window loser (reference purge drops the cell outright,
-    * gun/storage.go:56-75). On a rewrite store the merge is a no-op
-    * pass-through (already one row per key). `bucket` is functionally
+    * gun/storage.go:56-75). On an already-folded bucket the merge is a
+    * pass-through (one row per key). `bucket` is functionally
     * determined by the key, so it passes through the merge as a group key.
     * The scan reads only the requested bucket dirs ([[readBuckets]]), so
     * per-fold I/O is O(folded-bucket data), not O(store); surviving

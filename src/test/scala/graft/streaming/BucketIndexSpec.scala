@@ -3,6 +3,9 @@ package graft.streaming
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 /** The count-and-size-ratio compaction trigger (VERDICT_r16 #3): a
   * bucket folds when its file count crosses `compactThreshold` AND its
@@ -14,7 +17,13 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * files folds regardless, bounding probe read-amplification under a
   * long tail of tiny deltas.
   */
-class BucketIndexSpec extends SparkSuite {
+class BucketIndexSpec extends SparkSuite with TimeLimitedTests {
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 3.5 s (the
+  // size-ratio gate); the limit is 17x that, room for a first suite that
+  // starts the session and for a shared host that runs 2-3x slower
+  val timeLimit: Span = Span(60, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
   import spark.implicits._
 
   private val schema = StructType(Seq(
@@ -29,9 +38,13 @@ class BucketIndexSpec extends SparkSuite {
   }.toDF("key_hash", "seq").withColumn("bucket", lit(0L))
 
   private def append(df: org.apache.spark.sql.DataFrame, batchId: Long,
-      idx: String, threshold: Int): Unit = {
-    val storeDir = new org.apache.hadoop.fs.Path(idx)
-    val fs = storeDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      idx: String, threshold: Int): Unit =
+    appendWith(new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration),
+      df, batchId, idx, threshold)
+
+  private def appendWith(fs: FileSystem, df: org.apache.spark.sql.DataFrame,
+      batchId: Long, idx: String, threshold: Int): Unit = {
+    val storeDir = new Path(idx)
     BucketIndex.appendDelta(df, dataCols = Seq("key_hash", "seq"),
       batchId, idx, numBuckets = 1, compactThreshold = threshold,
       schema = schema, dedupCols = Seq("key_hash"),
@@ -77,5 +90,40 @@ class BucketIndexSpec extends SparkSuite {
     val got = spark.read.schema(schema)
       .parquet(s"$idx/bucket=0").count()
     assert(got == 2000 + 15 + 4100, s"rows lost across folds: $got")
+  }
+
+  /** A file system whose `rename` moves nothing and returns false — the
+    * way Hadoop reports a failed rename.
+    */
+  private def refusingRenames(fs: FileSystem): FileSystem = new FilterFileSystem(fs) {
+    override def rename(src: Path, dst: Path): Boolean = false
+  }
+
+  test("delta promotion: a failed rename fails the append, a replayed one is skipped") {
+    val idx = java.nio.file.Files.createTempDirectory("bidx_promote").toString
+    val fs = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val batch = rows(0 until 40).withColumn("bucket", col("seq") % 2)
+    def deltas(): Seq[String] = Seq("bucket=0", "bucket=1").flatMap { b =>
+      Option(new java.io.File(idx, b).list()).toSeq.flatten
+        .filter(_.endsWith(".parquet")).map(f => s"$b/$f")
+    }.sorted
+
+    // no dest: the false rename fails the batch, and no file is committed
+    val err = intercept[java.io.IOException] {
+      appendWith(refusingRenames(fs), batch, 0L, idx, threshold = 0)
+    }
+    assert(err.getMessage.contains("promotion rename failed"), err.getMessage)
+    assert(deltas().isEmpty, s"a failed promotion committed ${deltas()}")
+
+    // the batch's replay on a working file system lands it
+    append(batch, 0L, idx, threshold = 0)
+    val landed = deltas()
+    assert(landed == Seq("bucket=0/delta-b0-0.parquet", "bucket=1/delta-b0-0.parquet"))
+    // a same-batchId replay whose renames return false finds every dest
+    // present: it succeeds and adds no file
+    appendWith(refusingRenames(fs), batch, 0L, idx, threshold = 0)
+    assert(deltas() == landed)
+    assert(spark.read.schema(schema).parquet(s"$idx/bucket=0", s"$idx/bucket=1")
+      .count() == 40)
   }
 }

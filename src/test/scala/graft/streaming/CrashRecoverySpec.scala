@@ -7,14 +7,15 @@ import org.scalatest.concurrent.TimeLimitedTests
 import org.scalatest.time.{Seconds, Span}
 
 /** End-to-end streaming crash recovery, COMPOSED: the crash window between
-  * the gun source's WAL journal write (during batch planning) and
-  * `mergeIntoStore`'s bucket swap (during batch execution). The pieces are
-  * each spec'd elsewhere (GunSourceSpec: WAL replay; HamStreamSpec:
-  * swap-crash windows); this drives the full restart path — a query dies
-  * AFTER the source journaled the planned range and BEFORE any store
-  * write, restarts from the same checkpoint, replays the range from the
-  * journal, and converges to exactly the store a no-crash run produces
-  * (at-least-once replay + HAM idempotence = effectively-once).
+  * the gun source's WAL journal write (during batch planning) and the
+  * cell store's delta append (during batch execution). The pieces are
+  * each spec'd elsewhere (GunSourceSpec: WAL replay; DeltaStoreSpec:
+  * replayed appends; HamStreamSpec: swap-crash windows); this drives the
+  * full restart path — a query dies AFTER the source journaled the planned
+  * range and BEFORE any store write, restarts from the same checkpoint,
+  * replays the range from the journal, and converges to exactly the store
+  * a no-crash run produces (at-least-once replay + HAM idempotence =
+  * effectively-once) — and the heal of a compaction interrupted mid-swap.
   */
 class CrashRecoverySpec extends SparkSuite with TimeLimitedTests {
 
@@ -23,88 +24,6 @@ class CrashRecoverySpec extends SparkSuite with TimeLimitedTests {
   // session and for a shared host that runs 2-3x slower
   val timeLimit: Span = Span(60, Seconds)
   override val defaultTestSignaler = SparkSuite.cancelAllJobs
-
-  test("crash after WAL journal, before store merge: restart converges the store") {
-    val spark2 = spark
-    import spark2.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("gun_crash_ckpt").toString
-    val storeDir = java.nio.file.Files.createTempDirectory("gun_crash_store").toString
-    val storePath = s"$storeDir/store"
-    val (ours, theirs) = InMemoryPeerConn.pair()
-    InMemoryPeerConn.register("crash-src", ours)
-    val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-
-    def startQuery(injectCrash: Boolean) = {
-      val frames = spark.readStream.format("gun")
-        .option("conn", "crash-src").option("pid", "spark-engine").load()
-      val cells = GunWire.framesToCells(frames, "frame").as[GunCell]
-      HamStream.updates(cells, timers = false).writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[HamStream.Update], batchId: Long) =>
-          // The injected death point: batch planning has already run, so
-          // the source's gun-wal journal holds this range — but nothing
-          // has touched the store yet. This is the window where a real
-          // driver kill loses the in-memory frame buffer.
-          if (injectCrash && !batch.isEmpty && crashed.compareAndSet(false, true))
-            throw new RuntimeException("injected crash: after WAL, before merge")
-          HamStream.mergeBatchIntoStore(batch, batchId, storePath, numBuckets = 8)
-        }
-        .start()
-    }
-
-    try {
-      theirs.send("""{"#":"c1","put":{"cs":{"_":{"#":"cs",">":{"f":1000}},"f":"v1"}}}""")
-      val q1 = startQuery(injectCrash = true)
-      // the query must die on the injected crash
-      try {
-        q1.processAllAvailable()
-        // processAllAvailable can return if the failure races it; either
-        // way the query must be terminated with our exception
-        q1.awaitTermination(15000)
-      } catch { case _: Exception => () }
-      assert(crashed.get, "crash was never injected (batch did not run)")
-      assert(q1.exception.isDefined, "query survived the injected crash")
-      q1.stop()
-
-      // the store saw nothing: the crash landed before any bucket write
-      val fs = new org.apache.hadoop.fs.Path(storePath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(storePath)))
-
-      // restart from the same checkpoint: Spark replans the committed
-      // range, the fresh source instance (empty in-memory buffer) serves
-      // it from the gun-wal journal, and the merge applies it
-      val q2 = startQuery(injectCrash = false)
-      try {
-        q2.processAllAvailable()
-        // progress after recovery: a second write lands through the same
-        // restarted query
-        theirs.send("""{"#":"c2","put":{"cs2":{"_":{"#":"cs2",">":{"g":2000}},"g":"v2"}}}""")
-        val deadline = System.currentTimeMillis() + 15000
-        def stored() =
-          if (!fs.exists(new org.apache.hadoop.fs.Path(storePath))) Set.empty
-          else spark.read.parquet(storePath)
-            .select("soul", "field", "value.str", "state")
-            .collect()
-            .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getDouble(3)))
-            .toSet
-        var rows: Set[(String, String, String, Double)] = Set.empty
-        while (rows.size < 2 && System.currentTimeMillis() < deadline) {
-          Thread.sleep(100)
-          q2.processAllAvailable()
-          rows = stored().asInstanceOf[Set[(String, String, String, Double)]]
-        }
-        // exactly the no-crash outcome: both writes present, once each
-        assert(rows == Set(
-          ("cs", "f", "v1", 1000.0),
-          ("cs2", "g", "v2", 2000.0)))
-      } finally q2.stop()
-    } finally {
-      InMemoryPeerConn.unregister("crash-src")
-      theirs.close(); ours.close()
-    }
-  }
 
   test("crash after WAL journal, before DELTA append: restart converges the store") {
     val spark2 = spark

@@ -134,10 +134,10 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
   test("buffered sink folds N micro-batches into one delta write, flush drains") {
     val dir = newDir()
     val sink = new HamStream.BufferedDeltaSink(dir, NumBuckets,
-      compactThreshold = 0, flushEvery = 2, durable = false)
+      compactThreshold = 0, flushEvery = 2)
     sink.add(Seq(Update("s1", "f", GunValue.string("a"), 1000)).toDS(), 0L)
-    assert(sink.pending == 1) // below flushEvery: nothing written yet
-    assert(!new java.io.File(dir).exists())
+    assert(sink.pending == 1) // below flushEvery: only journaled, no delta yet
+    assert(!new java.io.File(dir).listFiles().exists(_.getName.startsWith("bucket=")))
     sink.add(Seq(Update("s1", "f", GunValue.string("b"), 2000)).toDS(), 1L)
     assert(sink.pending == 0) // second add crossed flushEvery: one write
     // both batches landed in ONE delta generation (file name carries the
@@ -160,7 +160,7 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
   test("durable buffered sink: crash between add and flush loses nothing") {
     val dir = newDir()
     val sink = new HamStream.BufferedDeltaSink(dir, NumBuckets,
-      compactThreshold = 0, flushEvery = 4) // durable default
+      compactThreshold = 0, flushEvery = 4)
     sink.add(Seq(Update("s1", "f", GunValue.string("a"), 1000)).toDS(), 0L)
     sink.add(Seq(Update("s2", "g", GunValue.string("b"), 2000)).toDS(), 1L)
     assert(sink.pending == 2)
@@ -209,7 +209,7 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
     // batches locked in `.buffer-journal` forever.
     val dir = newDir()
     val sink = new HamStream.BufferedDeltaSink(dir, NumBuckets,
-      compactThreshold = 0, flushEvery = 4) // durable default
+      compactThreshold = 0, flushEvery = 4)
     sink.add(Seq(Update("s1", "f", GunValue.string("a"), 1000)).toDS(), 0L)
     // "crash" (sink discarded, no flush); next run opens UNBUFFERED
     implicit val sqlCtx = spark.sqlContext

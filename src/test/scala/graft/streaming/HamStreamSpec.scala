@@ -92,7 +92,7 @@ class HamStreamSpec extends SparkSuite with TimeLimitedTests {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("ham_store").toString + "/cells"
     val in = MemoryStream[GunCell]
-    val q = mergeIntoStore(updates(in.toDS(), timers = false), dir)
+    val q = appendIntoStore(updates(in.toDS(), timers = false), dir)
     try {
       in.addData(GunCell("s1", "f", GunValue.string("v1"), 1000))
       q.processAllAvailable()
@@ -100,10 +100,10 @@ class HamStreamSpec extends SparkSuite with TimeLimitedTests {
         GunCell("s1", "f", GunValue.string("v2"), 2000), // newer → wins
         GunCell("s2", "g", GunValue.number(9L), 500))
       q.processAllAvailable()
-      val store = spark.read.parquet(dir).collect()
-        .map(r => (r.getString(0), r.getString(1),
-          r.getStruct(2).getAs[String]("str"), r.getStruct(2).getAs[String]("num"),
-          r.getDouble(3)))
+      val store = readStore(spark, dir)
+        .select("soul", "field", "value.str", "value.num", "state").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3),
+          r.getDouble(4)))
         .toSet
       assert(store == Set(
         ("s1", "f", "v2", null, 2000.0),
@@ -143,7 +143,7 @@ class HamStreamSpec extends SparkSuite with TimeLimitedTests {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("ham_store_inc").toString + "/cells"
     val in = MemoryStream[GunCell]
-    val q = mergeIntoStore(updates(in.toDS(), timers = false), dir, numBuckets = 8)
+    val q = appendIntoStore(updates(in.toDS(), timers = false), dir, numBuckets = 8)
     try {
       // seed several souls across buckets
       in.addData((1 to 20).map(i => GunCell(s"soul$i", "f", GunValue.number(i.toLong), 1000)): _*)
@@ -162,20 +162,16 @@ class HamStreamSpec extends SparkSuite with TimeLimitedTests {
       in.addData(GunCell("soul1", "f", GunValue.number(999L), 2000))
       q.processAllAvailable()
       val after = bucketFiles()
-      val touchedBucket = {
-        val b = spark.range(1).select(
-          HamStream.bucketOf(
-            org.apache.spark.sql.functions.lit("soul1"),
-            org.apache.spark.sql.functions.lit("f"), 8)).head().getLong(0)
-        s"bucket=$b"
-      }
+      val touchedBucket = s"bucket=${bucketIdOf("soul1", "f", 8)}"
       // untouched buckets: identical file listings AND timestamps (no rewrite)
       (before.keySet - touchedBucket).foreach { b =>
         assert(after(b) == before(b), s"bucket $b was rewritten")
       }
-      assert(after(touchedBucket) != before(touchedBucket))
-      // and the merge is correct: soul1 updated, others intact
-      val store = spark.read.parquet(dir)
+      // the touched bucket gained the batch's delta; its old file stays
+      assert(after(touchedBucket).size == before(touchedBucket).size + 1 &&
+        before(touchedBucket).subsetOf(after(touchedBucket)))
+      // and the merged view is correct: soul1 updated, others intact
+      val store = readStore(spark, dir)
         .select($"soul", $"value.num".as("num")).collect()
         .map(r => r.getString(0) -> r.getString(1)).toMap
       assert(store("soul1") == "999" && store("soul2") == "2" && store.size == 20)
@@ -262,7 +258,7 @@ class HamStreamSpec extends SparkSuite with TimeLimitedTests {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("ham_store_ttl").toString + "/cells"
     val in = MemoryStream[GunCell]
-    val q = mergeIntoStore(updates(in.toDS(), timers = false), dir, numBuckets = 4)
+    val q = appendIntoStore(updates(in.toDS(), timers = false), dir, numBuckets = 4)
     try {
       in.addData(
         GunCell("old1", "f", GunValue.string("a"), 1000),
@@ -327,7 +323,7 @@ class HamStreamSpec extends SparkSuite with TimeLimitedTests {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("ham_store_swap").toString + "/cells"
     val in = MemoryStream[GunCell]
-    val q = mergeIntoStore(updates(in.toDS(), timers = false), dir, numBuckets = 4)
+    val q = appendIntoStore(updates(in.toDS(), timers = false), dir, numBuckets = 4)
     try {
       in.addData((1 to 12).map(i =>
         GunCell(s"ssoul$i", "f", GunValue.number(i.toLong), 1000)): _*)

@@ -3,17 +3,25 @@ package graft.streaming
 import graft.SparkSuite
 import graft.core.GunValue
 import org.apache.spark.sql.functions.col
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 /** The viral-soul scenario for the bucketed store (the storage analogue of
   * DedupSkewSpec's viral band key): one soul carries 30% of the corpus as
   * distinct fields — an unbounded-fan-in hot node (a celebrity profile,
   * a global counter object). Under soul-only bucketing ALL of its cells
-  * hash to one `bucket=N/` directory, so every batch touching the soul
+  * hash to one `bucket=N/` directory, so every fold of that bucket
   * rewrites O(soul size); bucketing by the full (soul, field) cell key
-  * spreads the hot soul uniformly, bounding any bucket's rewrite at
+  * spreads the hot soul uniformly, bounding any bucket's fold at
   * ≈ store/numBuckets while point reads still prune to one bucket.
   */
-class HotSoulSpec extends SparkSuite {
+class HotSoulSpec extends SparkSuite with TimeLimitedTests {
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 3.7 s; the limit
+  // is 16x that, room for a first suite that starts the session and for a
+  // shared host that runs 2-3x slower
+  val timeLimit: Span = Span(60, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
   import spark.implicits._
   import HamStream.Update
 
@@ -29,7 +37,7 @@ class HotSoulSpec extends SparkSuite {
 
   test("viral soul spreads across buckets; per-bucket rewrite stays bounded") {
     val dir = java.nio.file.Files.createTempDirectory("hot_soul").toString + "/cells"
-    HamStream.mergeBatchIntoStore(corpus.toDS(), 0L, dir, NumBuckets)
+    HamStream.appendBatchIntoStore(corpus.toDS(), 0L, dir, NumBuckets)
 
     // bucket comes back as int (partition-column type inference)
     val byBucket = spark.read.parquet(dir)
@@ -46,19 +54,24 @@ class HotSoulSpec extends SparkSuite {
       .select("bucket").distinct().count()
     assert(viralBuckets >= NumBuckets / 2, s"viral soul in $viralBuckets buckets")
 
-    // a later batch updating ONE field of the hot soul rewrites one
-    // near-average bucket, not the whole soul's footprint
-    HamStream.mergeBatchIntoStore(
+    // a later batch updating ONE field of the hot soul adds a delta to
+    // one bucket, and folding that bucket rewrites a near-average bucket,
+    // not the whole soul's footprint
+    HamStream.appendBatchIntoStore(
       Seq(Update("viral", "field1", GunValue.number(9999L), 2000)).toDS(),
       1L, dir, NumBuckets)
-    val touched = spark.range(1)
-      .select(HamStream.bucketOf(
-        org.apache.spark.sql.functions.lit("viral"),
-        org.apache.spark.sql.functions.lit("field1"), NumBuckets))
-      .head().getLong(0)
-    val touchedRows = spark.read.parquet(dir)
-      .filter(col("bucket") === touched).count()
-    assert(touchedRows < 150, s"rewrite scope $touchedRows rows (soul size is 300)")
+    val touched = s"bucket=${HamStream.bucketIdOf("viral", "field1", NumBuckets)}"
+    val withBatch1 = new java.io.File(dir).listFiles()
+      .filter(d => d.getName.startsWith("bucket=") &&
+        d.listFiles().exists(_.getName.startsWith("delta-b1-")))
+      .map(_.getName)
+    assert(withBatch1.toSeq == Seq(touched), s"batch 1 landed in ${withBatch1.toSeq}")
+    def touchedRows() = spark.read.parquet(s"$dir/$touched").count()
+    val folded = touchedRows()
+    assert(folded < 150, s"fold scope $folded rows (soul size is 300)")
+    HamStream.compactBuckets(spark, dir, Seq(touched), nowMs = 0.0,
+      ttlMs = Double.PositiveInfinity, stagingName = ".compact-staging-hot")
+    assert(touchedRows() == folded - 1, "the fold collapses field1's two generations")
 
     // correctness: the point read still finds the updated cell in one bucket
     val hit = HamStream.fetchFromStore(spark, dir, "viral", "field1", NumBuckets)

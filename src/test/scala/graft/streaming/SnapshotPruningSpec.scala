@@ -29,7 +29,7 @@ class SnapshotPruningSpec extends SparkSuite with TimeLimitedTests {
   test("point-read scan touches exactly one bucket partition") {
     val dir = java.nio.file.Files.createTempDirectory("snap_prune").toString + "/cells"
     // 400 souls spread across all 16 buckets
-    HamStream.mergeBatchIntoStore(
+    HamStream.appendBatchIntoStore(
       (1 to 400).map(i =>
         Update(s"soul$i", "f", GunValue.number(i.toLong), 1000)).toDS(),
       0L, dir, NumBuckets)
@@ -55,7 +55,7 @@ class SnapshotPruningSpec extends SparkSuite with TimeLimitedTests {
     import spark2.implicits._
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("snap_sub_path").toString + "/cells"
-    HamStream.mergeBatchIntoStore(
+    HamStream.appendBatchIntoStore(
       (1 to 100).map(i =>
         Update(s"soul$i", "f", GunValue.number(i.toLong), 1000)).toDS(),
       0L, dir, NumBuckets)

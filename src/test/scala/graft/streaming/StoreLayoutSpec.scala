@@ -32,7 +32,7 @@ class StoreLayoutSpec extends SparkSuite with TimeLimitedTests {
 
   test("first write stamps the marker; reads round-trip") {
     val dir = freshDir("layout_fresh")
-    HamStream.mergeBatchIntoStore(
+    HamStream.appendBatchIntoStore(
       Seq(Update("s1", "f", GunValue.string("v"), 1000)).toDS(), 0L, dir, 8)
     val marker = new Path(dir, "_layout")
     assert(fs.exists(marker), "first write must stamp _layout")
@@ -48,7 +48,7 @@ class StoreLayoutSpec extends SparkSuite with TimeLimitedTests {
 
   test("pre-v2 store (buckets, no marker) fails fast on every entry point") {
     val dir = freshDir("layout_prev2")
-    HamStream.mergeBatchIntoStore(
+    HamStream.appendBatchIntoStore(
       Seq(Update("s1", "f", GunValue.string("v"), 1000)).toDS(), 0L, dir, 8)
     fs.delete(new Path(dir, "_layout"), false) // simulate a round-4 store
     val readErr = intercept[IllegalStateException] {
@@ -56,7 +56,7 @@ class StoreLayoutSpec extends SparkSuite with TimeLimitedTests {
     }
     assert(readErr.getMessage.contains("no _layout marker"))
     intercept[IllegalStateException] {
-      HamStream.mergeBatchIntoStore(
+      HamStream.appendBatchIntoStore(
         Seq(Update("s2", "f", GunValue.string("w"), 2000)).toDS(), 1L, dir, 8)
     }
     intercept[IllegalStateException] {
@@ -66,7 +66,7 @@ class StoreLayoutSpec extends SparkSuite with TimeLimitedTests {
 
   test("mismatched marker fails fast; empty marked dir is accepted") {
     val dir = freshDir("layout_mismatch")
-    HamStream.mergeBatchIntoStore(
+    HamStream.appendBatchIntoStore(
       Seq(Update("s1", "f", GunValue.string("v"), 1000)).toDS(), 0L, dir, 8)
     val out = fs.create(new Path(dir, "_layout"), true)
     try out.write("v1".getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -80,7 +80,7 @@ class StoreLayoutSpec extends SparkSuite with TimeLimitedTests {
     // rejected (mkdirs-then-write race of a first batch)
     val empty = freshDir("layout_empty")
     fs.mkdirs(new Path(empty))
-    HamStream.mergeBatchIntoStore(
+    HamStream.appendBatchIntoStore(
       Seq(Update("s1", "f", GunValue.string("v"), 1000)).toDS(), 0L, empty, 8)
     assert(fs.exists(new Path(empty, "_layout")))
     assert(HamStream.fetchFromStore(spark, empty, "s1", "f", 8).valueExists)

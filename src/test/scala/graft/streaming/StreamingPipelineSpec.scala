@@ -189,9 +189,17 @@ class StreamingPipelineSpec extends SparkSuite {
     val (sigsReuse, idsReuse) = runWorld(reuse = true)
     val (sigsRecompute, idsRecompute) = runWorld(reuse = false)
     assert(idsReuse == idsRecompute, s"$idsReuse vs $idsRecompute")
-    def indexRows(path: String): Set[String] =
-      spark.read.parquet(s"$path/bucket=*")
+    // the listed bucket dirs, read with the index schema and basePath: a
+    // `bucket=*` glob makes Spark probe for a streaming-sink metadata dir
+    // and log a stack trace when it finds none
+    def indexRows(path: String): Set[String] = {
+      val buckets = new java.io.File(path).listFiles()
+        .filter(_.getName.startsWith("bucket=")).map(_.getPath).toSeq
+      spark.read.schema(StreamingNearDup.indexSchema
+          .add("bucket", org.apache.spark.sql.types.IntegerType))
+        .option("basePath", path).parquet(buckets: _*)
         .collect().map(_.toString).toSet
+    }
     assert(indexRows(sigsReuse) == indexRows(sigsRecompute),
       "sig-reuse changed the committed signature index")
   }
