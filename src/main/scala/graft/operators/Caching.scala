@@ -56,6 +56,19 @@ object Caching {
     }
   }
 
+  /** Persist `df` and fill its cache at once, in an action of its own.
+    * Adaptive execution gives every scan of a cache that is not filled
+    * yet a stage that fills it, so a plan reading one cache in several
+    * places — directly or through other caches' plans — fills it once per
+    * scan that starts before the first fill ends: repeated work, and a
+    * job count that depends on timing.
+    */
+  def persistFilled(df: DataFrame): DataFrame = {
+    val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    cached.write.format("noop").mode("overwrite").save()
+    cached
+  }
+
   /** Persist a CALLER-supplied DataFrame only if the caller has not
     * already done so; returns the DF and whether this operator owns (and
     * must release) the persistence. A caller sharing one cached input

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.streaming.BucketIndex
+import graft.streaming.{BucketIndex, StoreFs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -44,7 +44,7 @@ object IndexStore {
 
   private def fsOf(spark: SparkSession, path: String) = {
     val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    (StoreFs.fileSystem(p, spark.sparkContext.hadoopConfiguration), p)
   }
 
   // ---------------------------------------------------------------- IVF

@@ -1284,7 +1284,7 @@ object Similarity {
           val vecS = vectors.join(cellsS.select("vec_id"), Seq("vec_id"), "left_semi")
           (cellsS, quantized(vecS).persist(StorageLevel.MEMORY_AND_DISK), vecS)
         }
-      val withCell = q.join(cells, "vec_id").persist(StorageLevel.MEMORY_AND_DISK)
+      val withCell = Caching.persistFilled(q.join(cells, "vec_id"))
       val unit = unitVectors(vecs)
       val (sub, c1) = hierSubclusters(withCell, k2Divisor)
       (sub, unit, Seq(withCell, unit, c1) ++ (if (shards > 1) Seq(cells, q) else Nil))
@@ -1374,12 +1374,12 @@ object Similarity {
       seeds.select(col("cid"), col("cluster")))
       .select(col("vec_id"), col("cluster"), col("cid"))
     // floor-average update per (cell, seed, dim), reassembled to arrays,
-    // persisted: a1 references c1 TWICE (candidate join + the broadcast
+    // persisted and filled at once: a1 references c1 TWICE (candidate join + the broadcast
     // cid→cluster side table), and without the cache each reference
     // re-evaluates the whole chain — including a0's n·k₂ distance
     // evaluations, the operator's dominant term. Σk₂ rows ≈ √2·n^(2/3),
     // tiny at any scale.
-    val c1 = withCell.join(a0.select("vec_id", "cid"), "vec_id")
+    val c1 = Caching.persistFilled(withCell.join(a0.select("vec_id", "cid"), "vec_id")
       .select(col("cluster"), col("cid"), posexplode(col("q")))
       .toDF("cluster", "cid", "dim", "qv")
       .groupBy("cluster", "cid", "dim")
@@ -1387,8 +1387,7 @@ object Similarity {
         .as("cd"))
       .groupBy("cluster", "cid")
       .agg(transform(array_sort(collect_list(struct(col("dim"), col("cd")))),
-        s => s.getField("cd")).as("cq"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        s => s.getField("cd")).as("cq")))
     val a1 = argminBy(
       withCell.join(c1, "cluster")
         .select(col("vec_id"), col("cid"),

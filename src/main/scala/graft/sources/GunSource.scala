@@ -151,8 +151,10 @@ final class GunMicroBatchStream(
   private lazy val walDir: Option[org.apache.hadoop.fs.Path] =
     if (Option(options.get("wal")).exists(_.equalsIgnoreCase("false"))) None
     else checkpointLocation.map(c => new org.apache.hadoop.fs.Path(c, "gun-wal"))
+  // journal files are created without a process spawn on `file:`
+  // (graft.streaming.StoreFs)
   private lazy val walFs: Option[org.apache.hadoop.fs.FileSystem] =
-    walDir.map(_.getFileSystem(
+    walDir.map(graft.streaming.StoreFs.fileSystem(_,
       // the session's hadoopConfiguration carries filesystem credentials
       // (s3a keys, custom defaultFS); a bare `new Configuration()` would
       // resolve session-configured checkpoint locations to the wrong FS

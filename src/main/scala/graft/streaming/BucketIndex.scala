@@ -117,7 +117,8 @@ private[graft] object BucketIndex {
         .sortWithinPartitions(sortCols.map(col): _*)
       val cStaging = new Path(
         indexPath, s".compact-staging-$name-b$batchId")
-      compacted.write.mode("overwrite").parquet(cStaging.toString)
+      compacted.write.options(StoreFs.writeOptions(cStaging, spark.sparkContext.hadoopConfiguration))
+        .mode("overwrite").parquet(cStaging.toString)
       val cFiles = fs.listStatus(cStaging)
         .filter(_.getPath.getName.endsWith(".parquet"))
       cFiles.zipWithIndex.foreach { case (f, i) =>
@@ -141,7 +142,8 @@ private[graft] object BucketIndex {
     * ([[appendDelta]]). `rows` carry a `bucket` column;
     *   1. they are hash-repartitioned on it (at most `numBuckets` tasks),
     *      so each touched bucket gets ONE staged file per batch, and
-    *      written to `<storeDir>/.staging-delta-<batchId>/bucket=N/`;
+    *      written to `<storeDir>/.staging-delta-<batchId>/bucket=N/`
+    *      (through [[StoreFs.writeOptions]]: no process per file);
     *   2. each staged file renames to
     *      `bucket=N/delta-b<batchId>-<i>.parquet` ([[promote]]: a
     *      same-batchId replay finds its dest already there and skips; a
@@ -163,9 +165,11 @@ private[graft] object BucketIndex {
     import org.apache.spark.sql.functions.col
     def parquet(dir: Path) =
       fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
+    val spark = rows.sparkSession
     val staging = new Path(storeDir, s".staging-delta-$batchId")
-    rows.repartition(numBuckets min rows.sparkSession.sessionState.conf.numShufflePartitions,
-      col("bucket")).write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
+    rows.repartition(numBuckets min spark.sessionState.conf.numShufflePartitions, col("bucket"))
+      .write.options(StoreFs.writeOptions(staging, spark.sparkContext.hadoopConfiguration))
+      .mode("overwrite").partitionBy("bucket").parquet(staging.toString)
     val staged = fs.listStatus(staging)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
     // threads start on submit: an empty batch starts none

@@ -465,7 +465,8 @@ object HamStream {
       val dir = journalBatchDir(storePath, batchId)
       // overwrite: a same-batchId redelivery (crash before the streaming
       // checkpoint committed) replaces its own partial journal dir
-      batch.toDF().write.mode("overwrite").parquet(dir)
+      batch.toDF().write.options(StoreFs.writeOptions(new org.apache.hadoop.fs.Path(dir),
+        sess.sparkContext.hadoopConfiguration)).mode("overwrite").parquet(dir)
       journaled += dir
       lastBatchId = batchId
       if (journaled.length >= flushEvery) flushLocked()
@@ -482,8 +483,8 @@ object HamStream {
           compactThreshold)
         // delete AFTER the append: a crash between the two replays the
         // journal on restart; duplicate cells are HAM-idempotent
-        val fs = new org.apache.hadoop.fs.Path(storePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val fs = StoreFs.fileSystem(new org.apache.hadoop.fs.Path(storePath),
+          spark.sparkContext.hadoopConfiguration)
         journaled.foreach(d =>
           fs.delete(new org.apache.hadoop.fs.Path(d), true))
         journaled.clear()
@@ -512,7 +513,7 @@ object HamStream {
       numBuckets: Int,
       compactThreshold: Int = DefaultCompactThreshold): Int = {
     val root = new org.apache.hadoop.fs.Path(storePath, ".buffer-journal")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoreFs.fileSystem(root, spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) 0
     else {
       val dirs = fs.listStatus(root).filter(_.isDirectory)
@@ -566,7 +567,7 @@ object HamStream {
     import org.apache.spark.sql.functions.{col, lit}
     val spark = batch.sparkSession
     val storeDir = new org.apache.hadoop.fs.Path(storePath)
-    val fs = storeDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
     checkLayout(fs, storeDir, stamp = true)
     recoverStore(fs, storeDir)
     val promoted = BucketIndex.promoteDelta(
@@ -586,7 +587,7 @@ object HamStream {
 
   /** Bulk read of a store as its MERGED view — one HAM winner per
     * (soul, field), however many un-compacted appends a key has. Every
-    * live bucket is read through [[readBuckets]] (the store's fixed
+    * bucket is read through [[readBuckets]] (the store's fixed
     * schema, so no footer job; more than 32 bucket dirs are listed by one
     * parallel-listing job), and the merge is one hash aggregation over
     * the scan. A store that
@@ -598,29 +599,29 @@ object HamStream {
       storePath: String,
       numBuckets: Int = DefaultBuckets): org.apache.spark.sql.DataFrame = {
     val storeDir = new org.apache.hadoop.fs.Path(storePath)
-    val fs = storeDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
     checkLayout(fs, storeDir, stamp = false)
-    recoverStore(fs, storeDir)
-    // heal a crashed buffered run's leftovers too: the journal holds
+    // heal a crashed buffered run's leftovers: the journal holds
     // committed batches no other copy has, and a reader must see them
     // (no-op when `.buffer-journal` is absent — i.e. always, outside a
     // crashed buffered run; numBuckets routes the replayed cells)
     recoverBufferJournal(spark, storePath, numBuckets)
-    val live = liveBuckets(fs, storeDir).map(_.stripPrefix("bucket=").toLong)
+    val stored = storedBuckets(fs, storeDir).map(_.stripPrefix("bucket=").toLong)
     graft.operators.HamMerge.mergeSnapshot(
-      readBuckets(spark, storePath, live).drop("bucket"))
+      readBuckets(spark, storePath, stored).drop("bucket"))
   }
 
-  /** Names (`bucket=N`) of the bucket directories under a store root;
+  /** Names (`bucket=N`) of the buckets under a store root: its `bucket=N`
+    * dirs and the `.trash-bucket=N` dirs a [[swapBucket]] has parked;
     * empty when the root does not exist.
     */
-  private def liveBuckets(
+  private def storedBuckets(
       fs: org.apache.hadoop.fs.FileSystem,
       storeDir: org.apache.hadoop.fs.Path): Seq[String] =
     if (!fs.exists(storeDir)) Nil
-    else fs.listStatus(storeDir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-      .map(_.getPath.getName)
+    else fs.listStatus(storeDir).toSeq.filter(_.isDirectory)
+      .map(_.getPath.getName.stripPrefix(".trash-"))
+      .filter(_.startsWith("bucket=")).distinct
 
   /** The delta store's on-disk schema: the cell columns plus the `bucket`
     * partition column, typed `int` as partition discovery types
@@ -628,33 +629,52 @@ object HamStream {
     * pass it instead of inferring it — inference is one Spark job that
     * reads a parquet footer, on every read.
     */
+  private val CellSchema = Encoders.product[GunCell].schema
   private val StoreSchema: org.apache.spark.sql.types.StructType =
-    Encoders.product[GunCell].schema
-      .add("bucket", org.apache.spark.sql.types.IntegerType)
+    CellSchema.add("bucket", org.apache.spark.sql.types.IntegerType)
 
   /** The store's rows in the named buckets, read with [[StoreSchema]] —
     * the one path by which store operations read bucket data. Only the
-    * `bucket=N` directories that exist are read (none ⇒ an empty frame,
+    * bucket directories that exist are read (none ⇒ an empty frame,
     * no job);
     * `basePath` keeps `bucket` a partition column, so the scan's
     * `numPartitions` metric counts bucket dirs. Spark lists up to 32
     * paths on the driver (`spark.sql.sources.parallelPartitionDiscovery
     * .threshold`) and more in a listing job: a point read lists its one
     * bucket without a job, whereas listing the root lists all of them.
+    *
+    * A bucket with no `bucket=N` dir but a `.trash-bucket=N` dir is
+    * between a [[swapBucket]]'s two renames, or parked by a crash in
+    * that window: the trash dir holds its data and is read as bucket N.
+    * Readers never rename: only a writer's [[recoverStore]] restores it,
+    * since a reader's rename back to live would race the swap's own
+    * `rename(staged, live)`. `ignoreMissingFiles` lets the scan skip files
+    * that vanish under it ([[keyRows]] checks for them).
     */
   private[streaming] def readBuckets(
       spark: SparkSession,
       storePath: String,
-      buckets: Seq[Long]): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = buckets.distinct
-      .map(b => new org.apache.hadoop.fs.Path(storePath, s"bucket=$b"))
-      .filter(fs.exists)
-    if (dirs.isEmpty)
-      spark.createDataFrame(java.util.Collections.emptyList[Row](), StoreSchema)
-    else spark.read.schema(StoreSchema).option("basePath", storePath)
-      .parquet(dirs.map(_.toString): _*)
+      buckets: Seq[Long],
+      ignoreMissingFiles: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    val root = new org.apache.hadoop.fs.Path(storePath)
+    val fs = StoreFs.fileSystem(root, spark.sparkContext.hadoopConfiguration)
+    def dir(name: String) = Some(new org.apache.hadoop.fs.Path(root, name)).filter(fs.exists)
+    val (live, parked) = buckets.distinct.partitionMap(b => dir(s"bucket=$b").toLeft(b))
+    def reader = spark.read
+      .options(if (ignoreMissingFiles) Map("ignoreMissingFiles" -> "true") else Map.empty[String, String])
+    val frames =
+      Seq(live).filter(_.nonEmpty).map(dirs => reader.schema(StoreSchema)
+        .option("basePath", storePath).parquet(dirs.map(_.toString): _*)) ++
+      parked.flatMap { b =>
+        // its files, not the dir: Spark warns on a root it deems hidden
+        val files = dir(s".trash-bucket=$b").toSeq.flatMap(fs.listStatus(_))
+          .map(_.getPath.toString).filter(_.endsWith(".parquet"))
+        Option.when(files.nonEmpty)(
+          reader.schema(CellSchema).parquet(files: _*).withColumn("bucket", lit(b.toInt)))
+      }
+    frames.reduceOption(_ unionByName _).getOrElse(
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), StoreSchema))
   }
 
   /** Swap a staged bucket directory — a fold's output, written by
@@ -665,11 +685,13 @@ object HamStream {
     *   2. rename staged → live,
     *   3. delete the trash copy.
     * A crash after (1) leaves the old data in the trash dir;
-    * [[recoverStore]] — run at every append/compact/read entry — renames
-    * it back, so every crash point leaves the bucket readable with either
-    * the old or the new data, never neither. Dot-prefixed trash/staging
-    * dirs are invisible to parquet reads (Hadoop's hidden-file filter), so
-    * an in-flight swap never double-counts.
+    * [[recoverStore]] — run at every append and compact entry — renames
+    * it back, and until then readers read the trash dir as the bucket
+    * ([[readBuckets]]), so every crash point leaves the bucket readable
+    * with either the old or the new data, never neither. Dot-prefixed
+    * trash/staging dirs are invisible to a parquet read of the root
+    * (Hadoop's hidden-file filter), so an in-flight swap never
+    * double-counts.
     */
   private[streaming] def swapBucket(
       fs: org.apache.hadoop.fs.FileSystem,
@@ -689,7 +711,8 @@ object HamStream {
     * restore it as the live bucket if the live dir is absent (crash landed
     * between the two renames), or drop it if the swap completed (crash
     * landed before the final delete). Idempotent and cheap (one directory
-    * listing); called at the entry of every store operation.
+    * listing); called at the entry of every store write (append and
+    * compact), never by a reader, which could race a live swap.
     */
   def recoverStore(
       fs: org.apache.hadoop.fs.FileSystem,
@@ -719,8 +742,8 @@ object HamStream {
     *     job);
     *   - a missing store or bucket dir reads as valueExists=false.
     * A compaction that swaps the bucket between the listing and the scan
-    * deletes the listed files; the read then lists the bucket again and
-    * scans once more ([[keyRows]]).
+    * deletes the listed files; the scan skips them and the read lists the
+    * bucket again and scans once more ([[keyRows]]).
     */
   def fetchFromStore(
       spark: org.apache.spark.sql.SparkSession,
@@ -740,30 +763,40 @@ object HamStream {
       case Some(c) => graft.core.FetchResult(field, Some(c.value), Some(c.state), c.valueExists)
     }
 
-  /** Collect a listed point read, listing and scanning once more if the
-    * scan fails on a missing file or path: a compaction swap deleted the
-    * listed files between listing and scan, and the new listing holds
-    * the folded winner. `ignoreMissingFiles` would drop that winner
-    * silently instead. `listed` is by-name: each attempt lists afresh.
+  /** Collect a listed point read. Its scan skips listed files that are
+    * gone (`ignoreMissingFiles`): a compaction swap deleted them between
+    * listing and scan. Skipped files would drop the folded winner, so the
+    * read then checks that every scanned file still exists; if one is
+    * gone — or a listed bucket dir vanished before the scan was planned —
+    * it lists and scans once more, and the new listing holds the fold's
+    * output. A second miss throws. `listed` is by-name: each attempt
+    * lists afresh.
     */
-  private[streaming] def keyRows(listed: => DataFrame): Array[Row] =
-    try listed.collect()
-    catch { case e: Exception if missingFile(e) => listed.collect() }
-
-  private def missingFile(e: Throwable): Boolean =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
-      case _: java.io.FileNotFoundException => true
-      case a: org.apache.spark.sql.AnalysisException => a.getCondition == "PATH_NOT_FOUND"
-      case _ => false
-    }
+  private[streaming] def keyRows(listed: => DataFrame): Array[Row] = {
+    def attempt(): Option[Array[Row]] =
+      try {
+        val df = listed
+        val rows = df.collect()
+        val conf = df.sparkSession.sparkContext.hadoopConfiguration
+        val gone = df.inputFiles.exists { f =>
+          val p = new org.apache.hadoop.fs.Path(f)
+          !StoreFs.fileSystem(p, conf).exists(p)
+        }
+        if (gone) None else Some(rows)
+      } catch {
+        case a: org.apache.spark.sql.AnalysisException if a.getCondition == "PATH_NOT_FOUND" => None
+      }
+    attempt().orElse(attempt()).getOrElse(throw new java.io.FileNotFoundException(
+      "point read: the listed store files vanished twice between listing and scan"))
+  }
 
   /** The point read's scan: the key's rows, not yet collapsed, as
     * (kind, str, num, bool, rel, state, valueExists). Exposed un-collected
     * so specs can execute the PRODUCTION plan and assert its one-bucket
     * bound from the scan metrics (`numPartitions`/`numFiles` — see
-    * SnapshotPruningSpec). The layout check, swap recovery and journal
-    * replay run first, as on every store read; the bucket dir is listed
-    * when the frame is built.
+    * SnapshotPruningSpec). The layout check and journal replay run first,
+    * as on every store read; the bucket dir is listed when the frame is
+    * built.
     */
   private[graft] def pointReadDf(
       spark: org.apache.spark.sql.SparkSession,
@@ -773,11 +806,11 @@ object HamStream {
       numBuckets: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
     val storeDir = new org.apache.hadoop.fs.Path(storePath)
-    val fs = storeDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
     checkLayout(fs, storeDir, stamp = false) // a pre-v2 store must error, not miss
-    recoverStore(fs, storeDir) // one listStatus; heals a crash-interrupted swap before reading
     recoverBufferJournal(spark, storePath, numBuckets) // one fs.exists when no journal; a reader must see journaled-only cells
-    readBuckets(spark, storePath, Seq(bucketIdOf(soul, field, numBuckets).toLong))
+    readBuckets(spark, storePath, Seq(bucketIdOf(soul, field, numBuckets).toLong),
+      ignoreMissingFiles = true)
       .filter(col("soul") === soul && col("field") === field)
       .select("value.kind", "value.str", "value.num", "value.bool", "value.rel",
         "state", "valueExists")
@@ -798,11 +831,11 @@ object HamStream {
       nowMs: Double,
       ttlMs: Double = graft.operators.HamMerge.DefaultTtlMs): Unit = {
     val storeDir = new org.apache.hadoop.fs.Path(storePath)
-    val fs = storeDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(storeDir)) return
     checkLayout(fs, storeDir, stamp = false)
     recoverStore(fs, storeDir)
-    val live = liveBuckets(fs, storeDir)
+    val live = storedBuckets(fs, storeDir)
     if (live.isEmpty) return
     compactBuckets(spark, storePath, live, nowMs, ttlMs,
       stagingName = ".compact-staging")
@@ -835,7 +868,7 @@ object HamStream {
       stagingName: String): Unit = {
     import org.apache.spark.sql.functions.{col, lit}
     val storeDir = new org.apache.hadoop.fs.Path(storePath)
-    val fs = storeDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
     val ids = bucketNames.map(_.stripPrefix("bucket=").toLong)
     val kept = graft.operators.HamMerge
       .mergeSnapshot(readBuckets(spark, storePath, ids), passThrough = Seq("bucket"))
@@ -844,7 +877,8 @@ object HamStream {
     // one task per folded bucket: the fold must not RAISE the bucket's
     // file count (a 32-task write of 3 buckets would)
     kept.repartition(ids.length, col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
+      .write.options(StoreFs.writeOptions(staging, spark.sparkContext.hadoopConfiguration))
+      .mode("overwrite").partitionBy("bucket").parquet(staging.toString)
     bucketNames.foreach { name =>
       val next = new org.apache.hadoop.fs.Path(staging, name)
       if (fs.exists(next)) swapBucket(fs, storeDir, name, next)

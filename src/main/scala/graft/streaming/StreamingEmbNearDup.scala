@@ -105,7 +105,7 @@ object StreamingEmbNearDup {
       val touched = rows.select("bucket").distinct().collect()
         .map(_.getInt(0)).toSet
       val storeDir = new org.apache.hadoop.fs.Path(indexPath)
-      val fs = storeDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
       // tables/bits are part of the layout: a mismatched reopen would
       // compare sketches from different plane geometries
       BucketIndex.checkLayout(fs, storeDir, "_emb_nd_layout",

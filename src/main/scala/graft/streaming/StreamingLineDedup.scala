@@ -68,7 +68,7 @@ object StreamingLineDedup {
       numBuckets: Int = 64, compactThreshold: Int = 8): Unit = {
     val spark = batch.sparkSession
     val storeDir = new Path(segsPath)
-    val fs = storeDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
     BucketIndex.checkLayout(fs, storeDir, "_linededup_layout",
       numBuckets.toString)
     val outDir = new Path(s"$outPath/batch=$batchId")

@@ -146,7 +146,7 @@ object StreamingNearDup {
       maxKeyRows: Int = MaxKeyRows): ProbeResult = {
     val spark = rows.sparkSession
     val storeDir = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = storeDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
     checkIndexLayout(fs, storeDir, numBuckets)
     // touched buckets: driver-side METADATA, ≤ numBuckets ids — the
     // same O(#partitions) collect the prefix-sum packing does, not a
@@ -274,7 +274,7 @@ object StreamingNearDup {
       val nMatches = spark.read.parquet(s"$matchesPath/batch-$batchId").count()
       val idxRows = pr.idx.map(_.count()).getOrElse(0L)
       val storeDir = new org.apache.hadoop.fs.Path(indexPath)
-      val fs = storeDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
       appendIndexDelta(rows, batchId, indexPath, numBuckets, compactThreshold, fs, storeDir)
       ProbeStats(batchId, rows.select("doc_id").distinct().count(),
         pr.bucketsProbed, pr.bucketsOccupied, idxRows, nMatches,

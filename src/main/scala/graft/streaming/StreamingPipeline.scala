@@ -125,7 +125,7 @@ object StreamingPipeline {
       reuseProbeSigs: Boolean = true): Option[StreamingNearDup.ProbeResult] = {
     val spark = batch.sparkSession
     val storeDir = new Path(keysPath)
-    val fs = storeDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
     BucketIndex.checkLayout(fs, storeDir, "_pipe_layout", numBuckets.toString)
     val sigsDir = new Path(sigsPath)
     // checked in BOTH worlds (the replay branch skips the probe, whose

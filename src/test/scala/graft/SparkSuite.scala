@@ -36,23 +36,45 @@ object SparkSuite {
     * listener on a job group of its own.
     */
   def jobsAndTasks(op: => Unit): (Int, Int) = {
-    import java.util.concurrent.ConcurrentHashMap
+    val (jobs, tasks) = jobLog(op)
+    (jobs.size, tasks)
+  }
+
+  /** [[jobsAndTasks]] with each job named, in start order: its
+    * description, the first `graft.` frame of the SQL execution that ran
+    * it (AQE submits most stage jobs from a pool thread, whose own call
+    * site names no operator) and the call site of its result stage.
+    */
+  def jobLog(op: => Unit): (Seq[String], Int) = {
+    import scala.jdk.CollectionConverters._
+    import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.ListenerBusDrain
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     val sc = session.sparkContext
     val group = s"counted-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger
+    val jobs = new ConcurrentLinkedQueue[(String, Option[String], String)]
+    val executions = new ConcurrentHashMap[String, String]()
     val tasks = new AtomicInteger
     val stages = ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
-          jobs.incrementAndGet()
+          jobs.add((e.properties.getProperty("spark.job.description"),
+            Option(e.properties.getProperty("spark.sql.execution.id")),
+            e.stageInfos.maxBy(_.stageId).name))
           e.stageIds.foreach(stages.add)
         }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         if (stages.contains(e.stageId)) tasks.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          executions.put(s.executionId.toString,
+            s.details.linesIterator.map(_.trim).find(_.startsWith("graft.")).getOrElse(""))
+        case _ => ()
+      }
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "counted")
@@ -62,7 +84,9 @@ object SparkSuite {
       ListenerBusDrain(sc)
       sc.removeSparkListener(listener)
     }
-    (jobs.get, tasks.get)
+    (jobs.asScala.toSeq.map { case (desc, exec, stage) =>
+      s"$desc @ ${exec.map(executions.getOrDefault(_, "")).getOrElse("")} / $stage"
+    }, tasks.get)
   }
 }
 

@@ -2,13 +2,20 @@ package graft.operators
 
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 /** Persistent append-only ANN index stores ([[IndexStore]]): a stored
   * IVF/PQ index reproduces the direct batch operators' output exactly,
   * a second call reuses the on-disk index (no rebuild), and appends
   * against the frozen geometry make new vectors visible.
   */
-class IndexStoreSpec extends SparkSuite {
+class IndexStoreSpec extends SparkSuite with TimeLimitedTests {
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 4.7 s (the stored PQ topK);
+  // the limit is 12x that, room for a shared host that runs 2-3x slower
+  val timeLimit: Span = Span(60, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
   import spark.implicits._
 
   private val sfDir = "/root/testdata/sf0.001"

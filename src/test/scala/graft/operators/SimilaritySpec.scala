@@ -471,21 +471,25 @@ class SimilaritySpec extends SparkSuite with TimeLimitedTests {
     val n = emb.count()
     var viaDispatch: Array[(Long, Long)] = null
     var direct: Array[(Long, Long)] = null
-    val (jobsDispatch, _) = SparkSuite.jobsAndTasks {
+    val (jobsDispatch, _) = SparkSuite.jobLog {
       // crossover pinned below n so the dispatcher takes the hier rung
       viaDispatch = Similarity.semanticDedupAuto(emb, threshold = 0.4,
         crossover = 1L).collect().map(r => (r.getLong(0), r.getLong(1)))
     }
-    val (jobsDirect, _) = SparkSuite.jobsAndTasks {
+    val (jobsDirect, _) = SparkSuite.jobLog {
       direct = Similarity.semanticDedupHier(emb, threshold = 0.4)
         .collect().map(r => (r.getLong(0), r.getLong(1)))
     }
     assert(viaDispatch.toSet == direct.toSet)
     // dispatcher = its own count + hier WITHOUT hier's count: same total
-    // job count as calling hier directly (which counts for itself)
-    assert(jobsDispatch == jobsDirect,
-      s"dispatch added ${jobsDispatch - jobsDirect} job(s) over direct — " +
-        "knownCount must eliminate the second corpus count")
+    // job count as calling hier directly (which counts for itself); on a
+    // mismatch the jobs only one side ran name the extra one
+    val (nDispatch, nDirect) = (jobsDispatch.size, jobsDirect.size)
+    assert(nDispatch == nDirect,
+      s"dispatch added ${nDispatch - nDirect} job(s) over direct — " +
+        "knownCount must eliminate the second corpus count; only via dispatch: " +
+        s"${jobsDispatch.diff(jobsDirect).mkString("[", "; ", "]")}, only direct: " +
+        jobsDirect.diff(jobsDispatch).mkString("[", "; ", "]"))
   }
 
   test("k2Divisor widens blocks: a cell-sized divisor makes hier flags a " +

@@ -3,13 +3,20 @@ package graft.sources
 import graft.SparkSuite
 import graft.core.GunCell
 import graft.streaming.HamStream
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 /** End-to-end A22: wire frames (including double-encoded batches and DAM
   * control messages) → DSv2 `gun` source → GunWire codec → HamStream
   * updates → sink. The peer side is an in-memory conn — the transport the
   * reference's PeerConn interface makes pluggable (gun/peer.go:162-174).
   */
-class GunSourceSpec extends SparkSuite {
+class GunSourceSpec extends SparkSuite with TimeLimitedTests {
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 1.7 s (publish paging);
+  // the limit is 34x that, room for a shared host that runs 2-3x slower
+  val timeLimit: Span = Span(60, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
 
   test("full wire e2e: real websocket peer → server accept → gun source → HAM stream") {
     val spark2 = spark

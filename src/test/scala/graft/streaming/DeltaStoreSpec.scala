@@ -260,20 +260,66 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
         b.toLong, dir, NumBuckets, compactThreshold = 0)
     val bucket = s"bucket=${HamStream.bucketIdOf("s1", "f", NumBuckets)}"
     var listings = 0
+    val failedTasks = new java.util.concurrent.atomic.AtomicInteger
+    val failures = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (!e.taskInfo.successful) failedTasks.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(failures)
     // the production retry around the production point read; the first
     // listing is followed by a fold of the key's bucket, which swaps the
     // bucket dir and deletes the three listed delta files
-    val rows = HamStream.keyRows {
-      val listed = HamStream.pointReadDf(spark, dir, "s1", "f", NumBuckets)
-      listings += 1
-      if (listings == 1)
-        HamStream.compactBuckets(spark, dir, Seq(bucket), nowMs = 0.0,
-          ttlMs = Double.PositiveInfinity, stagingName = ".compact-staging-race")
-      listed
-    }
+    val rows =
+      try HamStream.keyRows {
+        val listed = HamStream.pointReadDf(spark, dir, "s1", "f", NumBuckets)
+        listings += 1
+        if (listings == 1)
+          HamStream.compactBuckets(spark, dir, Seq(bucket), nowMs = 0.0,
+            ttlMs = Double.PositiveInfinity, stagingName = ".compact-staging-race")
+        listed
+      } finally {
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(failures)
+      }
     assert(listings == 2)
     assert(rows.map(r => (r.getString(1), r.getDouble(5))).toSeq == Seq(("v2", 1002.0)),
       "the second listing reads the folded winner")
+    assert(failedTasks.get == 0, "the first scan skips the vanished files, no task fails")
+  }
+
+  test("a point read inside a compaction swap reads the parked bucket and renames nothing") {
+    import org.apache.hadoop.fs.{FilterFileSystem, Path}
+    val dir = newDir()
+    for (b <- 0 until 2)
+      HamStream.appendBatchIntoStore(
+        Seq(Update("s1", "f", GunValue.string(s"v$b"), 1000.0 + b)).toDS(),
+        b.toLong, dir, NumBuckets, compactThreshold = 0)
+    val bucket = s"bucket=${HamStream.bucketIdOf("s1", "f", NumBuckets)}"
+    // the bucket's fold, staged in a store of its own
+    val folded = newDir()
+    HamStream.appendBatchIntoStore(Seq(Update("s1", "f", GunValue.string("v1"), 1001.0)).toDS(),
+      0L, folded, NumBuckets)
+    val storeDir = new Path(dir)
+    val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
+    val winner = FetchResult("f", Some(GunValue.string("v1")), Some(1001.0), valueExists = true)
+    var inSwap: Option[FetchResult] = None
+    // the read runs between the swap's rename(live → trash) and its
+    // rename(staged → live): the live dir is absent
+    val racing = new FilterFileSystem(fs) {
+      override def rename(src: Path, dst: Path): Boolean = {
+        val done = super.rename(src, dst)
+        if (dst.getName.startsWith(".trash-"))
+          inSwap = Some(HamStream.fetchFromStore(spark, dir, "s1", "f", NumBuckets))
+        done
+      }
+    }
+    HamStream.swapBucket(racing, storeDir, bucket, new Path(folded, bucket))
+    assert(inSwap.contains(winner), "the read serves the parked bucket")
+    val live = new Path(storeDir, bucket)
+    assert(!fs.exists(new Path(live, bucket)), "the staged dir must not nest into the live one")
+    assert(fs.listStatus(live).map(_.getPath.getName).filter(_.endsWith(".parquet")).toSeq ==
+      Seq("delta-b0-0.parquet"), "the live bucket is the fold's output")
+    assert(HamStream.fetchFromStore(spark, dir, "s1", "f", NumBuckets) == winner)
   }
 
   test("point read's driver-side collapse equals readStore's merged row (property)") {

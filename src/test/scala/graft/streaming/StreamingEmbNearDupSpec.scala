@@ -2,6 +2,8 @@ package graft.streaming
 
 import graft.SparkSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 /** Incremental embedding near-dup ([[StreamingEmbNearDup]]): a
   * late-arriving near-duplicate embedding is caught by probing only the
@@ -9,7 +11,12 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * re-run — with all cross-batch state in the on-disk index and exact
   * cosine as the verdict.
   */
-class StreamingEmbNearDupSpec extends SparkSuite {
+class StreamingEmbNearDupSpec extends SparkSuite with TimeLimitedTests {
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 5.8 s (the late near-duplicate match);
+  // the limit is 10x that, room for a shared host that runs 2-3x slower
+  val timeLimit: Span = Span(60, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
   import spark.implicits._
 
   private val Dims = 16

@@ -3,6 +3,8 @@ package graft.streaming
 import graft.SparkSuite
 import graft.operators.Dedup
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 /** Incremental MinHash-LSH near-dup detection (StreamingNearDup): a
   * late-arriving near-duplicate of a long-ingested document is caught by
@@ -10,7 +12,12 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * corpus rescan — with all cross-batch state on disk (driver state is
   * O(batch)).
   */
-class StreamingNearDupSpec extends SparkSuite {
+class StreamingNearDupSpec extends SparkSuite with TimeLimitedTests {
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 15.3 s (the threshold compaction);
+  // the limit is 8x that, room for a shared host that runs 2-3x slower
+  val timeLimit: Span = Span(120, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
   import spark.implicits._
 
   private val baseText = ("spark stream batch window merge join filter " +
