@@ -2,7 +2,7 @@ package graft
 
 import graft.core.GunCell
 import graft.sources.{GunWebSocketServer, GunWire, InMemoryPeerConn, PeerConn, WebSocketPeerConn, WireCodec}
-import graft.streaming.{HamStream, StreamingLineDedup, StreamingPipeline}
+import graft.streaming.{HamStream, StoreFs, StreamingLineDedup, StreamingPipeline}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import java.nio.file.{Files, Paths}
@@ -150,6 +150,7 @@ object StreamBench {
       // per-batch floor (flushed explicitly before the correctness gate)
       val bufSink = new HamStream.BufferedDeltaSink(store, 64,
         HamStream.DefaultCompactThreshold, flushEvery = 4)
+      StoreFs.forkFreeCheckpoints(spark)
       val q = updates.writeStream.outputMode("append")
         .option("checkpointLocation", ckpt)
         .foreachBatch { (b: Dataset[HamStream.Update], id: Long) =>

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.{GunCell, GunValue}
-import graft.streaming.{HamStream, SubscriptionHub}
+import graft.streaming.{HamStream, StoreFs, SubscriptionHub}
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
@@ -148,6 +148,7 @@ object SubBench {
     val in = MemoryStream[GunCell]
     val updates = HamStream.updates(in.toDS(), timers = false)
     val delivered = new java.util.concurrent.atomic.AtomicLong(0)
+    StoreFs.forkFreeCheckpoints(spark)
     val t0 = System.nanoTime()
     val queries = (0 until n).map { i =>
       HamStream.subscribe(updates, f"s${i % souls}%05d", "f0")

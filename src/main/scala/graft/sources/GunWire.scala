@@ -244,6 +244,7 @@ object GunWire {
     conns.foreach(live.add)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(conns.length)
     val spark = updates.sparkSession
+    graft.streaming.StoreFs.forkFreeCheckpoints(spark)
     val q = updates.writeStream
       .outputMode("append")
       .foreachBatch {

@@ -142,6 +142,12 @@ object HamStream {
         // never-seen key under the Requested policy: drop without creating
         // state (the reference's onlyIfExists storage put)
         Iterator.empty
+      } else if (!timers && !it.hasNext) {
+        // without timers Spark calls with no cells only for an
+        // `initialStore` key in the first batch: its TTL and deferred
+        // transitions wait for its next cell, like every other key's, so
+        // the outcome does not depend on which batch that cell lands in
+        Iterator.empty
       } else {
         val nowMs = gs.getCurrentProcessingTimeMs().toDouble
         val st = gs.getOption.getOrElse(KeyState(None, None, Nil))
@@ -396,6 +402,7 @@ object HamStream {
     // loss to a mere config change (ADVICE_r8 medium).
     recoverBufferJournal(updates.sparkSession, storePath, numBuckets,
       compactThreshold)
+    StoreFs.forkFreeCheckpoints(updates.sparkSession)
     if (bufferBatches <= 1)
       updates.writeStream
         .outputMode("append")

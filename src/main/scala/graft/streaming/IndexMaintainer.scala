@@ -43,7 +43,8 @@ object IndexMaintainer {
       path: String,
       nLists: Int,
       checkpoint: String,
-      afterAppend: Long => Unit = _ => ()): StreamingQuery =
+      afterAppend: Long => Unit = _ => ()): StreamingQuery = {
+    StoreFs.forkFreeCheckpoints(vectors.sparkSession)
     vectors.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -54,6 +55,7 @@ object IndexMaintainer {
         }
       }
       .start()
+  }
 
   private[graft] def processIvfBatch(batch: DataFrame, batchId: Long,
       path: String, nLists: Int): Unit = {
@@ -73,7 +75,8 @@ object IndexMaintainer {
       m: Int,
       k: Int,
       checkpoint: String,
-      afterAppend: Long => Unit = _ => ()): StreamingQuery =
+      afterAppend: Long => Unit = _ => ()): StreamingQuery = {
+    StoreFs.forkFreeCheckpoints(vectors.sparkSession)
     vectors.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -84,6 +87,7 @@ object IndexMaintainer {
         }
       }
       .start()
+  }
 
   private[graft] def processPqBatch(batch: DataFrame, batchId: Long,
       path: String, m: Int, k: Int): Unit = {

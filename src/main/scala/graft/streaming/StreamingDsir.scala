@@ -36,7 +36,8 @@ object StreamingDsir {
       docs: DataFrame,
       weightsPath: String,
       outPath: String,
-      checkpoint: String): StreamingQuery =
+      checkpoint: String): StreamingQuery = {
+    StoreFs.forkFreeCheckpoints(docs.sparkSession)
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -44,6 +45,7 @@ object StreamingDsir {
         if (!batch.isEmpty) processBatch(batch, batchId, weightsPath, outPath)
       }
       .start()
+  }
 
   private[graft] def processBatch(batch: DataFrame, batchId: Long,
       weightsPath: String, outPath: String): Unit = {

@@ -67,7 +67,8 @@ object StreamingEmbNearDup {
       numBuckets: Int = 64,
       minCos: Double = 0.95,
       compactThreshold: Int = 8,
-      onStats: ProbeStats => Unit = _ => ()): org.apache.spark.sql.streaming.StreamingQuery =
+      onStats: ProbeStats => Unit = _ => ()): org.apache.spark.sql.streaming.StreamingQuery = {
+    StoreFs.forkFreeCheckpoints(vectors.sparkSession)
     vectors.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -75,6 +76,7 @@ object StreamingEmbNearDup {
           tables, bits, numBuckets, minCos, compactThreshold))
       }
       .start()
+  }
 
   /** One micro-batch: sketch → probe → verify → append. Exposed for the
     * bench harness and tests.

@@ -52,7 +52,8 @@ object StreamingLineDedup {
       segsPath: String,
       checkpoint: String,
       numBuckets: Int = 64,
-      compactThreshold: Int = 8): StreamingQuery =
+      compactThreshold: Int = 8): StreamingQuery = {
+    StoreFs.forkFreeCheckpoints(docs.sparkSession)
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -62,6 +63,7 @@ object StreamingLineDedup {
             numBuckets, compactThreshold)
       }
       .start()
+  }
 
   private[graft] def processBatch(batch: DataFrame, batchId: Long,
       outPath: String, segsPath: String,

@@ -36,7 +36,8 @@ object StreamingLm {
       modelPath: String,
       outPath: String,
       checkpoint: String,
-      backoff: Boolean = true): StreamingQuery =
+      backoff: Boolean = true): StreamingQuery = {
+    StoreFs.forkFreeCheckpoints(docs.sparkSession)
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -45,6 +46,7 @@ object StreamingLm {
           processBatch(batch, batchId, modelPath, outPath, backoff)
       }
       .start()
+  }
 
   private[graft] def processBatch(batch: DataFrame, batchId: Long,
       modelPath: String, outPath: String, backoff: Boolean): Unit = {
@@ -73,7 +75,8 @@ object StreamingLm {
       generalPath: String,
       targetPath: String,
       outPath: String,
-      checkpoint: String): StreamingQuery =
+      checkpoint: String): StreamingQuery = {
+    StoreFs.forkFreeCheckpoints(docs.sparkSession)
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -82,6 +85,7 @@ object StreamingLm {
           processContrastBatch(batch, batchId, generalPath, targetPath, outPath)
       }
       .start()
+  }
 
   private[graft] def processContrastBatch(batch: DataFrame, batchId: Long,
       generalPath: String, targetPath: String, outPath: String): Unit = {

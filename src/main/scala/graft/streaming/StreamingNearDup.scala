@@ -240,7 +240,8 @@ object StreamingNearDup {
       numBuckets: Int = 64,
       minEq: Int = 8,
       compactThreshold: Int = 8,
-      onStats: ProbeStats => Unit = _ => ()): org.apache.spark.sql.streaming.StreamingQuery =
+      onStats: ProbeStats => Unit = _ => ()): org.apache.spark.sql.streaming.StreamingQuery = {
+    StoreFs.forkFreeCheckpoints(docs.sparkSession)
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -248,6 +249,7 @@ object StreamingNearDup {
           numBuckets, minEq, compactThreshold))
       }
       .start()
+  }
 
   /** One micro-batch: probe → match → append. Exposed for the bench
     * harness (drive batches without a streaming source) and tests.

@@ -90,7 +90,8 @@ object StreamingPipeline {
       checkpoint: String,
       numBuckets: Int = 64,
       compactThreshold: Int = 8,
-      minEq: Int = 8): StreamingQuery =
+      minEq: Int = 8): StreamingQuery = {
+    StoreFs.forkFreeCheckpoints(docs.sparkSession)
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -102,6 +103,7 @@ object StreamingPipeline {
         }
       }
       .start()
+  }
 
   /** The normalized dedup key — one definition with the batch query. */
   private def keyOf(text: org.apache.spark.sql.Column) =

@@ -149,6 +149,7 @@ final class SubscriptionHub(
   /** The hub's single streaming query. Stop it to shut the hub down. */
   val query: org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.spark.sql.functions.col
+    StoreFs.forkFreeCheckpoints(updates.sparkSession)
     updates.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Update], _: Long) =>

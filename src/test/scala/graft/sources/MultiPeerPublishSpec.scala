@@ -4,6 +4,8 @@ import graft.SparkSuite
 import graft.core.{GunCell, GunValue}
 import graft.streaming.HamStream
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 /** Multi-peer publish fan-out ([[GunWire.publishStream]] over a peer SET):
   * the reference sends every message to every live peer concurrently and
@@ -13,7 +15,13 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * converges to the same HAM-merged view), and one dead peer must neither
   * fail the batch nor stall the others.
   */
-class MultiPeerPublishSpec extends SparkSuite {
+class MultiPeerPublishSpec extends SparkSuite with TimeLimitedTests {
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 2.1 s (two real
+  // websocket peers); the limit is 28x that, room for a first suite that
+  // starts the session and a shared host
+  val timeLimit: Span = Span(60, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
 
   private def decodeCells(frames: Seq[String]): Seq[GunCell] =
     frames.flatMap(fr => WireCodec.splitFrame(fr).flatMap { m =>

@@ -402,4 +402,30 @@ class HamStreamSpec extends SparkSuite with TimeLimitedTests {
       assert(!rows.exists(_._3 == "v0"))
     } finally q.stop()
   }
+
+  test("without timers an initialStore key keeps its state until its next cell, in any batch") {
+    // the first batch has no cells, so Spark calls the state function for
+    // the seeded key alone; its long-expired seed must still gate the
+    // Requested policy when the key's cell comes in the next batch
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val known = Seq(GunCell("known", "f", GunValue.string("seed"), 100)).toDS()
+    val in = MemoryStream[GunCell]
+    val q = updates(in.toDS(), timers = false,
+        tracking = graft.operators.HamMerge.TrackingRequested, initialStore = Some(known))
+      .writeStream.format("memory").queryName("seeded_updates").outputMode("append").start()
+    try {
+      in.addData(Seq.empty[GunCell]: _*)
+      q.processAllAvailable()
+      in.addData(GunCell("known", "f", GunValue.string("upd"), 2000),
+        GunCell("stranger", "g", GunValue.string("spam"), 2000))
+      q.processAllAvailable()
+      // batch 0 ran on no cells; both cells came in batch 1
+      assert(q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq == Seq(1L))
+      val rows = spark.sql("SELECT soul, value.str, state FROM seeded_updates")
+        .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
+      assert(rows == Set(("known", "upd", 2000.0)))
+    } finally q.stop()
+  }
 }

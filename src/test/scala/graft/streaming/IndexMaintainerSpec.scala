@@ -3,6 +3,8 @@ package graft.streaming
 import graft.SparkSuite
 import graft.operators.IndexStore
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 /** Continuously-maintained ANN index ([[IndexMaintainer]]): vectors
   * streamed in micro-batches — with a driver kill injected AFTER one
@@ -10,7 +12,13 @@ import org.apache.spark.sql.functions._
   * same-batchId replay on restart — converge the stored index to
   * exactly what the batch build + one-shot append produces.
   */
-class IndexMaintainerSpec extends SparkSuite {
+class IndexMaintainerSpec extends SparkSuite with TimeLimitedTests {
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 7.0 s (the IVF
+  // crash-replay stream); the limit is 8x that, room for a first suite
+  // that starts the session and a shared host
+  val timeLimit: Span = Span(60, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
   import spark.implicits._
 
   private def emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")

@@ -5,6 +5,8 @@ import java.nio.file.Files
 import graft.SparkSuite
 import graft.operators.Dsir
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 /** Streaming DSIR scoring against a frozen snapshot: stream scores must
   * equal the batch operator's scores for the same documents and the
@@ -13,7 +15,13 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   */
 final case class SDoc(doc_id: Long, text: String, source: String)
 
-class StreamingDsirSpec extends SparkSuite {
+class StreamingDsirSpec extends SparkSuite with TimeLimitedTests {
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 3.1 s; the limit
+  // is 19x that, room for a first suite that starts the session and a
+  // shared host
+  val timeLimit: Span = Span(60, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
   import spark.implicits._
 
   private val corpus = Seq(

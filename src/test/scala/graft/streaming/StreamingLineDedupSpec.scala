@@ -5,6 +5,8 @@ import java.nio.file.Files
 import graft.SparkSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 final case class SegDoc(doc_id: Long, text: String)
 
@@ -14,7 +16,13 @@ final case class SegDoc(doc_id: Long, text: String)
   * and the commit-before-append write order makes replay idempotent —
   * including the worst window where the whole segment index is lost.
   */
-class StreamingLineDedupSpec extends SparkSuite {
+class StreamingLineDedupSpec extends SparkSuite with TimeLimitedTests {
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 7.5 s (stream
+  // equals the batch query); the limit is 8x that, room for a first suite
+  // that starts the session and a shared host
+  val timeLimit: Span = Span(60, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
   import spark.implicits._
 
   private def seg(p: String, n: Int = 12) =

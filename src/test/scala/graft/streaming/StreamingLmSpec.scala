@@ -5,6 +5,8 @@ import java.nio.file.Files
 import graft.SparkSuite
 import graft.operators.Lm
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 /** Streaming LM scoring against a frozen snapshot: stream scores must
   * equal the batch kernel's for the same documents and the same model
@@ -15,7 +17,13 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   */
 final case class LDoc(doc_id: Long, text: String)
 
-class StreamingLmSpec extends SparkSuite {
+class StreamingLmSpec extends SparkSuite with TimeLimitedTests {
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 5.3 s (contrast
+  // mode); the limit is 11x that, room for a first suite that starts the
+  // session and a shared host
+  val timeLimit: Span = Span(60, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
   import spark.implicits._
 
   private val corpus = Seq(

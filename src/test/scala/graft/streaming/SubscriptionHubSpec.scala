@@ -4,6 +4,8 @@ import graft.SparkSuite
 import graft.core.{GunCell, GunValue}
 import graft.streaming.HamStream.Update
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 /** The multiplexed listener registry ([[SubscriptionHub]]): N subscribers
   * share ONE streaming query (the reference's cheap-listener model,
@@ -11,7 +13,13 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * contract — own (soul, field) only, in order, deduped, snapshot-first
   * when requested.
   */
-class SubscriptionHubSpec extends SparkSuite {
+class SubscriptionHubSpec extends SparkSuite with TimeLimitedTests {
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 1.0 s (100
+  // subscribers on one query); the limit is 60x that, room for a first
+  // suite that starts the session and a shared host
+  val timeLimit: Span = Span(60, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
 
   test("100 subscribers on one query: each receives its own transitions once") {
     val spark2 = spark
