@@ -100,10 +100,9 @@ object StreamBench {
     *
     * `sink` selects the store leg: "delta" =
     * [[HamStream.appendBatchIntoStore]] (LSM append, O(batch) I/O),
-    * "delta_buf4" = [[HamStream.BufferedDeltaSink]] (4 micro-batches per
-    * delta write), "none" = count only — isolating the source + codec +
-    * CRDT state machine so the per-batch cost splits into named parts
-    * (SCALE_r6 attribution).
+    * "none" = count only — isolating the source + codec + CRDT state
+    * machine so the per-batch cost splits into named parts (SCALE_r6
+    * attribution).
     * `transport` = "mem" (in-process conn) or "ws" — a REAL RFC 6455
     * loopback socket ([[GunWebSocketServer]] accept + JDK client dial), so
     * one leg prices the full wire path the reference actually runs.
@@ -145,19 +144,13 @@ object StreamBench {
       implicit val cellEnc = org.apache.spark.sql.Encoders.product[GunCell]
       val cells = GunWire.framesToCells(frames, "frame").as[GunCell]
       val updates = HamStream.updates(cells, timers = false)
-      // "delta_buf4": the buffered LSM sink — 4 micro-batches per delta
-      // write, amortizing the fixed write-job cost that dominates the
-      // per-batch floor (flushed explicitly before the correctness gate)
-      val bufSink = new HamStream.BufferedDeltaSink(store, 64,
-        HamStream.DefaultCompactThreshold, flushEvery = 4)
       StoreFs.forkFreeCheckpoints(spark)
       val q = updates.writeStream.outputMode("append")
         .option("checkpointLocation", ckpt)
         .foreachBatch { (b: Dataset[HamStream.Update], id: Long) =>
           sink match {
-            case "delta"      => HamStream.appendBatchIntoStore(b, id, store, numBuckets = 64)
-            case "delta_buf4" => bufSink.add(b, id)
-            case _            => b.count(); ()
+            case "delta" => HamStream.appendBatchIntoStore(b, id, store, numBuckets = 64)
+            case _       => b.count(); ()
           }
         }
         .start()
@@ -181,7 +174,6 @@ object StreamBench {
         }
         q.processAllAvailable()
       } finally q.stop()
-      if (sink == "delta_buf4") bufSink.flush() // drain the remainder before the gate
       val elapsed = (System.nanoTime() - t0) / 1e9
       if (sink != "none") {
         // correctness gate on the bench itself: every key landed in the
@@ -675,7 +667,7 @@ object StreamBench {
     // re-run-one-leg-on-a-quiet-box workflow. Unknown names fail fast (a
     // typo must not silently select zero legs). Empty/unset = all legs.
     val knownLegs = Seq(
-      "ingest", "ingest_nowal", "ingest_delta_buf4",
+      "ingest", "ingest_nowal",
       "ingest_ws_delta", "ingest_nostore", "publish", "publish_p4",
       "readamp_trigger_on", "readamp_trigger_off",
       "neardup_pruned", "neardup_full_probe",
@@ -713,11 +705,6 @@ object StreamBench {
         chunkFrames, wal = false)).maxBy(_.rate)
       ingestNoWalStats = Some(r); out += "ingest_nowal" -> js(r)
     }
-    // buffered delta leg: 4 micro-batches per delta write — amortizes the
-    // fixed write-job floor the un-buffered leg pays every batch
-    if (want("ingest_delta_buf4"))
-      out += "ingest_delta_buf4" -> js(pass(runIngest(_, souls, fields, waves,
-        msgsPerFrame, chunkFrames, wal = true, sink = "delta_buf4")).maxBy(_.rate))
     // real-socket leg: same pipeline over an RFC 6455 loopback websocket
     // (server accept + JDK client), delta sink — prices the wire path
     if (want("ingest_ws_delta"))

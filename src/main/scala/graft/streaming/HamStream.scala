@@ -326,12 +326,20 @@ object HamStream {
     * no bucket data yet. Throws [[IllegalStateException]] on a mismatched
     * or missing-but-populated marker. `stamp = false` (read paths) never
     * writes — a read of a pre-v2 store must fail, not quietly re-label it.
+    * Also throws on a `.buffer-journal` dir, left by an older build's
+    * buffered sink: its committed batches are in no bucket.
     */
   private[streaming] def checkLayout(
       fs: org.apache.hadoop.fs.FileSystem,
       storeDir: org.apache.hadoop.fs.Path,
       stamp: Boolean): Unit = {
     if (!fs.exists(storeDir)) return // first write stamps after the swap
+    val journal = new org.apache.hadoop.fs.Path(storeDir, ".buffer-journal")
+    if (fs.exists(journal)) throw new IllegalStateException(
+      s"store at $storeDir has a buffered-sink journal at $journal: its " +
+        "batches were committed upstream but never written to the store; " +
+        "open it once with the build that wrote it, whose appendIntoStore " +
+        "replays the journal, before using it with this build")
     val marker = new org.apache.hadoop.fs.Path(storeDir, "_layout")
     if (fs.exists(marker)) {
       val in = fs.open(marker)
@@ -384,161 +392,21 @@ object HamStream {
     * replay re-appends the batch — duplicate cells are HAM-idempotent, so
     * the store stays correct (just uncompacted). At-least-once +
     * idempotent merge is the same contract the reference's peers rely on.
-    *
-    * `bufferBatches > 1` folds that many micro-batches into one delta
-    * write ([[BufferedDeltaSink]]).
+    * Readers never write the store: only this sink, [[compactStore]] and
+    * its auto-trigger create, rename or delete store files.
     */
   def appendIntoStore(
       updates: Dataset[Update],
       storePath: String,
       numBuckets: Int = DefaultBuckets,
-      compactThreshold: Int = DefaultCompactThreshold,
-      bufferBatches: Int = 1): org.apache.spark.sql.streaming.StreamingQuery = {
-    // A crashed buffered run may have left committed-but-unflushed
-    // batches in `.buffer-journal/` — the journal is their ONLY copy (the
-    // source WAL was pruned when foreachBatch returned). Replay them
-    // regardless of THIS run's buffering config: recovering only on the
-    // bufferBatches > 1 branch (the r8 shape) deferred the at-most-once
-    // loss to a mere config change (ADVICE_r8 medium).
-    recoverBufferJournal(updates.sparkSession, storePath, numBuckets,
-      compactThreshold)
+      compactThreshold: Int = DefaultCompactThreshold): org.apache.spark.sql.streaming.StreamingQuery = {
     StoreFs.forkFreeCheckpoints(updates.sparkSession)
-    if (bufferBatches <= 1)
-      updates.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: Dataset[Update], batchId: Long) =>
-          appendBatchIntoStore(batch, batchId, storePath, numBuckets, compactThreshold)
-        }
-        .start()
-    else {
-      // BUFFERED mode: the per-batch floor of the delta sink is dominated
-      // by fixed write-job cost (launch + shuffle + commit), not data
-      // volume (SCALE_r6 §1) — amortizing it over N batches raises ingest
-      // throughput without changing the store contract. A graceful stop
-      // flushes the remainder via the termination listener. (Journal
-      // recovery ran above, before the branch.)
-      val sink = new BufferedDeltaSink(storePath, numBuckets, compactThreshold,
-        bufferBatches)
-      val spark = updates.sparkSession
-      val q = updates.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: Dataset[Update], batchId: Long) =>
-          sink.add(batch, batchId)
-        }
-        .start()
-      val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-        override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-          if (e.id == q.id) {
-            try sink.flush()
-            finally spark.streams.removeListener(this)
-          }
+    updates.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: Dataset[Update], batchId: Long) =>
+        appendBatchIntoStore(batch, batchId, storePath, numBuckets, compactThreshold)
       }
-      spark.streams.addListener(listener)
-      q
-    }
-  }
-
-  /** The buffered delta sink of [[appendIntoStore]]`(bufferBatches > 1)`:
-    * accumulates micro-batches and flushes them as ONE
-    * [[appendBatchIntoStore]] call every `flushEvery` batches (and on
-    * query termination).
-    *
-    * Each batch is written to `<store>/.buffer-journal/batch-<id>` BEFORE
-    * `add` returns. Once foreachBatch returns, Structured Streaming
-    * commits the batch and the gun source prunes its WAL for that range
-    * (GunSource.commit) — from that moment the journal is the ONLY durable
-    * copy until the flush lands it in the store (ADVICE_r7 high). A crash
-    * between adds replays the journal on the next [[appendIntoStore]]
-    * start ([[recoverBufferJournal]]); journal dirs are deleted only AFTER
-    * the flushed append, so a crash mid-flush re-appends the same cells —
-    * HAM-idempotent.
-    */
-  final class BufferedDeltaSink(
-      storePath: String,
-      numBuckets: Int,
-      compactThreshold: Int,
-      flushEvery: Int) {
-    private val journaled = scala.collection.mutable.ArrayBuffer.empty[String]
-    private var lastBatchId = 0L
-    @volatile private var sess: SparkSession = _
-
-    def add(batch: Dataset[Update], batchId: Long): Unit = synchronized {
-      sess = batch.sparkSession
-      val dir = journalBatchDir(storePath, batchId)
-      // overwrite: a same-batchId redelivery (crash before the streaming
-      // checkpoint committed) replaces its own partial journal dir
-      batch.toDF().write.options(StoreFs.writeOptions(new org.apache.hadoop.fs.Path(dir),
-        sess.sparkContext.hadoopConfiguration)).mode("overwrite").parquet(dir)
-      journaled += dir
-      lastBatchId = batchId
-      if (journaled.length >= flushEvery) flushLocked()
-    }
-
-    def flush(): Unit = synchronized { flushLocked() }
-
-    private def flushLocked(): Unit =
-      if (journaled.nonEmpty) {
-        val spark = sess
-        import spark.implicits._
-        val all = spark.read.parquet(journaled.toSeq: _*).as[Update]
-        appendBatchIntoStore(all, lastBatchId, storePath, numBuckets,
-          compactThreshold)
-        // delete AFTER the append: a crash between the two replays the
-        // journal on restart; duplicate cells are HAM-idempotent
-        val fs = StoreFs.fileSystem(new org.apache.hadoop.fs.Path(storePath),
-          spark.sparkContext.hadoopConfiguration)
-        journaled.foreach(d =>
-          fs.delete(new org.apache.hadoop.fs.Path(d), true))
-        journaled.clear()
-      }
-
-    /** Batches currently buffered (test/introspection hook). */
-    def pending: Int = synchronized(journaled.length)
-  }
-
-  private def journalBatchDir(storePath: String, batchId: Long): String =
-    new org.apache.hadoop.fs.Path(storePath,
-      s".buffer-journal/batch-$batchId").toString
-
-  /** Replay (or discard) `.buffer-journal` leftovers from a crashed
-    * `bufferBatches > 1` run. A journal dir WITH a `_SUCCESS` marker holds
-    * a batch whose foreachBatch returned — the streaming checkpoint
-    * committed it and the source WAL was pruned, so the journal copy is
-    * the only one left: fold it into the store. A dir WITHOUT the marker
-    * is a write the crash interrupted BEFORE its batch committed — the
-    * source replays that batch on restart, so drop the partial files.
-    * Returns the number of batches replayed into the store.
-    */
-  private[graft] def recoverBufferJournal(
-      spark: SparkSession,
-      storePath: String,
-      numBuckets: Int,
-      compactThreshold: Int = DefaultCompactThreshold): Int = {
-    val root = new org.apache.hadoop.fs.Path(storePath, ".buffer-journal")
-    val fs = StoreFs.fileSystem(root, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) 0
-    else {
-      val dirs = fs.listStatus(root).filter(_.isDirectory)
-      val (complete, partial) = dirs.partition(d =>
-        fs.exists(new org.apache.hadoop.fs.Path(d.getPath, "_SUCCESS")))
-      partial.foreach(d => fs.delete(d.getPath, true))
-      if (complete.nonEmpty) {
-        import spark.implicits._
-        val batchId = complete.map(_.getPath.getName.stripPrefix("batch-"))
-          .flatMap(_.toLongOption).foldLeft(0L)(_ max _)
-        val all = spark.read
-          .parquet(complete.map(_.getPath.toString).toIndexedSeq: _*).as[Update]
-        appendBatchIntoStore(all, batchId, storePath, numBuckets,
-          compactThreshold)
-        complete.foreach(d => fs.delete(d.getPath, true))
-      }
-      complete.length
-    }
+      .start()
   }
 
   /** Delta-file count per bucket above which [[appendBatchIntoStore]]
@@ -597,9 +465,11 @@ object HamStream {
     * bucket is read through [[readBuckets]] (the store's fixed
     * schema, so no footer job; more than 32 bucket dirs are listed by one
     * parallel-listing job), and the merge is one hash aggregation over
-    * the scan. A store that
-    * does not exist reads as empty. Prefer [[fetchFromStore]] for point
-    * reads: it reads one bucket and needs no aggregation job.
+    * the scan. A store that does not exist reads as empty; the read
+    * lists and scans, and never creates, renames or deletes a store file.
+    * Prefer [[fetchFromStore]] for point reads: it reads one bucket and
+    * needs no aggregation job. `numBuckets` does not change a bulk read,
+    * which reads every bucket the store holds.
     */
   def readStore(
       spark: org.apache.spark.sql.SparkSession,
@@ -608,11 +478,6 @@ object HamStream {
     val storeDir = new org.apache.hadoop.fs.Path(storePath)
     val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
     checkLayout(fs, storeDir, stamp = false)
-    // heal a crashed buffered run's leftovers: the journal holds
-    // committed batches no other copy has, and a reader must see them
-    // (no-op when `.buffer-journal` is absent — i.e. always, outside a
-    // crashed buffered run; numBuckets routes the replayed cells)
-    recoverBufferJournal(spark, storePath, numBuckets)
     val stored = storedBuckets(fs, storeDir).map(_.stripPrefix("bucket=").toLong)
     graft.operators.HamMerge.mergeSnapshot(
       readBuckets(spark, storePath, stored).drop("bucket"))
@@ -801,9 +666,9 @@ object HamStream {
     * (kind, str, num, bool, rel, state, valueExists). Exposed un-collected
     * so specs can execute the PRODUCTION plan and assert its one-bucket
     * bound from the scan metrics (`numPartitions`/`numFiles` — see
-    * SnapshotPruningSpec). The layout check and journal replay run first,
-    * as on every store read; the bucket dir is listed when the frame is
-    * built.
+    * SnapshotPruningSpec). The layout check runs first, as on every store
+    * read; the bucket dir is listed when the frame is built. Like every
+    * read, it does not mutate the store.
     */
   private[graft] def pointReadDf(
       spark: org.apache.spark.sql.SparkSession,
@@ -815,7 +680,6 @@ object HamStream {
     val storeDir = new org.apache.hadoop.fs.Path(storePath)
     val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
     checkLayout(fs, storeDir, stamp = false) // a pre-v2 store must error, not miss
-    recoverBufferJournal(spark, storePath, numBuckets) // one fs.exists when no journal; a reader must see journaled-only cells
     readBuckets(spark, storePath, Seq(bucketIdOf(soul, field, numBuckets).toLong),
       ignoreMissingFiles = true)
       .filter(col("soul") === soul && col("field") === field)

@@ -117,6 +117,19 @@ class CrashRecoverySpec extends SparkSuite with TimeLimitedTests {
       new org.apache.hadoop.fs.Path(storePath, ".trash-bucket=0"))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(storePath, "bucket=0")))
 
+    // readers serve the parked bucket and never write the store: every
+    // path keeps its size and mtime (a dir's mtime moves when an entry is
+    // made, renamed or removed in it), and the bucket stays parked
+    def tree(f: java.io.File): Seq[(String, Long, Long)] =
+      (f.getPath, f.length, f.lastModified) +: Option(f.listFiles).toSeq.flatten.flatMap(tree)
+    val before = tree(new java.io.File(storePath)).toSet
+    assert(HamStream.fetchFromStore(spark, storePath, "s1", "f", buckets).value
+      .contains(GunValue.string("v1")))
+    assert(HamStream.readStore(spark, storePath, buckets).select("value.str")
+      .as[String].collect().toSeq == Seq("v1"))
+    assert(tree(new java.io.File(storePath)).toSet == before, "a read changed the store tree")
+    assert(fs.exists(new org.apache.hadoop.fs.Path(storePath, ".trash-bucket=0")))
+
     // the next append's recoverStore restores the parked bucket before
     // touching anything, so no write is lost and the new delta lands on top
     HamStream.appendBatchIntoStore(

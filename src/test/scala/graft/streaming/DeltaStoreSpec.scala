@@ -131,110 +131,6 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
     assert(HamStream.readStore(spark, dir).count() == 1)
   }
 
-  test("buffered sink folds N micro-batches into one delta write, flush drains") {
-    val dir = newDir()
-    val sink = new HamStream.BufferedDeltaSink(dir, NumBuckets,
-      compactThreshold = 0, flushEvery = 2)
-    sink.add(Seq(Update("s1", "f", GunValue.string("a"), 1000)).toDS(), 0L)
-    assert(sink.pending == 1) // below flushEvery: only journaled, no delta yet
-    assert(!new java.io.File(dir).listFiles().exists(_.getName.startsWith("bucket=")))
-    sink.add(Seq(Update("s1", "f", GunValue.string("b"), 2000)).toDS(), 1L)
-    assert(sink.pending == 0) // second add crossed flushEvery: one write
-    // both batches landed in ONE delta generation (file name carries the
-    // flush's last batch id)
-    val files = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("bucket="))
-      .flatMap(_.listFiles()).map(_.getName).filter(_.endsWith(".parquet"))
-    assert(files.nonEmpty && files.forall(_.startsWith("delta-b1-")))
-    // remainder flush on demand (the termination-listener path)
-    sink.add(Seq(Update("s2", "g", GunValue.string("c"), 3000)).toDS(), 2L)
-    assert(sink.pending == 1)
-    sink.flush()
-    assert(sink.pending == 0)
-    val merged = HamStream.readStore(spark, dir)
-      .select("soul", "value.str").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    assert(merged == Set(("s1", "b"), ("s2", "c")))
-  }
-
-  test("durable buffered sink: crash between add and flush loses nothing") {
-    val dir = newDir()
-    val sink = new HamStream.BufferedDeltaSink(dir, NumBuckets,
-      compactThreshold = 0, flushEvery = 4)
-    sink.add(Seq(Update("s1", "f", GunValue.string("a"), 1000)).toDS(), 0L)
-    sink.add(Seq(Update("s2", "g", GunValue.string("b"), 2000)).toDS(), 1L)
-    assert(sink.pending == 2)
-    // nothing in the store yet — the batches are committed upstream
-    // (foreachBatch returned, source WAL pruned) but only journaled here
-    assert(!new java.io.File(dir).listFiles()
-      .exists(_.getName.startsWith("bucket=")))
-    // "crash": discard the sink (its in-memory state is gone) WITHOUT a
-    // flush — the exact window ADVICE_r7 flagged for the in-memory buffer.
-    // The next appendIntoStore start replays the journal:
-    assert(HamStream.recoverBufferJournal(spark, dir, NumBuckets, 0) == 2)
-    val merged = HamStream.readStore(spark, dir)
-      .select("soul", "value.str").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    assert(merged == Set(("s1", "a"), ("s2", "b")))
-    // journal drained: a second recovery is a no-op
-    assert(HamStream.recoverBufferJournal(spark, dir, NumBuckets, 0) == 0)
-  }
-
-  test("durable buffered sink: flush drains the journal; partial journal dirs are discarded") {
-    val dir = newDir()
-    val sink = new HamStream.BufferedDeltaSink(dir, NumBuckets,
-      compactThreshold = 0, flushEvery = 2)
-    sink.add(Seq(Update("s1", "f", GunValue.string("a"), 1000)).toDS(), 0L)
-    sink.add(Seq(Update("s1", "f", GunValue.string("b"), 2000)).toDS(), 1L)
-    assert(sink.pending == 0) // crossed flushEvery: journal folded + deleted
-    assert(!new java.io.File(dir, ".buffer-journal").exists() ||
-      new java.io.File(dir, ".buffer-journal").listFiles().isEmpty)
-    val r = HamStream.fetchFromStore(spark, dir, "s1", "f", NumBuckets)
-    assert(r.value.contains(GunValue.string("b")))
-    // a journal dir WITHOUT _SUCCESS is a write interrupted before its
-    // batch committed — the source will replay that batch, so recovery
-    // must drop it rather than double-apply a partial file set
-    val partial = new java.io.File(dir, ".buffer-journal/batch-7")
-    assert(partial.mkdirs())
-    java.nio.file.Files.writeString(
-      partial.toPath.resolve("part-garbage.parquet"), "not parquet")
-    assert(HamStream.recoverBufferJournal(spark, dir, NumBuckets, 0) == 0)
-    assert(!partial.exists())
-  }
-
-  test("journal leftovers are healed on the UNBUFFERED append path and by readers") {
-    // ADVICE_r8 medium: r8 replayed the journal only when the next run
-    // also used bufferBatches > 1 — a crashed durable-buffered run whose
-    // store is next opened unbuffered (or only read) kept its committed
-    // batches locked in `.buffer-journal` forever.
-    val dir = newDir()
-    val sink = new HamStream.BufferedDeltaSink(dir, NumBuckets,
-      compactThreshold = 0, flushEvery = 4)
-    sink.add(Seq(Update("s1", "f", GunValue.string("a"), 1000)).toDS(), 0L)
-    // "crash" (sink discarded, no flush); next run opens UNBUFFERED
-    implicit val sqlCtx = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Update]
-    val q = HamStream.appendIntoStore(in.toDS(), dir, NumBuckets,
-      compactThreshold = 0, bufferBatches = 1)
-    try {
-      // recovery ran synchronously at appendIntoStore entry
-      val journal = new java.io.File(dir, ".buffer-journal")
-      assert(!journal.exists() || journal.listFiles().isEmpty,
-        "unbuffered open left the journal unrecovered")
-    } finally q.stop()
-    val r = HamStream.fetchFromStore(spark, dir, "s1", "f", NumBuckets)
-    assert(r.value.contains(GunValue.string("a")))
-    // a pure READER heals too: journal a batch, crash, then just readStore
-    val sink2 = new HamStream.BufferedDeltaSink(dir, NumBuckets,
-      compactThreshold = 0, flushEvery = 4)
-    sink2.add(Seq(Update("s2", "g", GunValue.string("b"), 2000)).toDS(), 1L)
-    val merged = HamStream.readStore(spark, dir, NumBuckets)
-      .select("soul", "value.str").collect()
-      .map(x => (x.getString(0), x.getString(1))).toSet
-    assert(merged == Set(("s1", "a"), ("s2", "b")),
-      s"reader did not surface journaled-only cells: $merged")
-  }
-
   test("delta point read still prunes to one bucket partition") {
     val dir = newDir()
     HamStream.appendBatchIntoStore(

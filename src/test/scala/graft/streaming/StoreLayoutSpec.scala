@@ -64,6 +64,25 @@ class StoreLayoutSpec extends SparkSuite with TimeLimitedTests {
     }
   }
 
+  test("store left mid-buffer by an older build fails fast on every entry point") {
+    val dir = freshDir("layout_journal")
+    HamStream.appendBatchIntoStore(
+      Seq(Update("s1", "f", GunValue.string("v"), 1000)).toDS(), 0L, dir, 8)
+    // the removed buffered sink parked committed batches here until a flush
+    fs.mkdirs(new Path(dir, ".buffer-journal/batch-1"))
+    Seq[() => Any](
+      () => HamStream.fetchFromStore(spark, dir, "s1", "f", 8),
+      () => HamStream.readStore(spark, dir, 8),
+      () => HamStream.appendBatchIntoStore(
+        Seq(Update("s2", "f", GunValue.string("w"), 2000)).toDS(), 1L, dir, 8),
+      () => HamStream.compactStore(spark, dir, nowMs = 3000)
+    ).foreach { entry =>
+      val e = intercept[IllegalStateException](entry())
+      assert(e.getMessage.contains(".buffer-journal") &&
+        e.getMessage.contains("never written to the store"))
+    }
+  }
+
   test("mismatched marker fails fast; empty marked dir is accepted") {
     val dir = freshDir("layout_mismatch")
     HamStream.appendBatchIntoStore(

@@ -3,6 +3,8 @@ package graft.streaming
 import graft.SparkSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 /** Stream-stream joins — the one Structured Streaming join family not
   * exercised elsewhere in the suite (SURVEY §2 "Streaming"). Two
@@ -18,7 +20,11 @@ import org.apache.spark.sql.functions._
 final case class Imp(ad: String, its: java.sql.Timestamp)
 final case class Clk(cad: String, cts: java.sql.Timestamp)
 
-class StreamStreamJoinSpec extends SparkSuite {
+class StreamStreamJoinSpec extends SparkSuite with TimeLimitedTests {
+  // slowest test on a 4-vCPU host in a full tier-1 run: 2.3 s; the limit
+  // is 26x that, room for a session start (14 s) and a 2-3x slower host
+  val timeLimit: Span = Span(60, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
   import spark.implicits._
 
   private val T0 = 1700000000000L

@@ -2,6 +2,8 @@ package graft.streaming
 
 import graft.SparkSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 /** Streaming exact-deduplication over a document-fingerprint stream —
   * the streaming form of `doc_dedup_exact` (SURVEY §2 pipeline ops): a
@@ -22,7 +24,11 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   */
 final case class FpDoc(fp: String, ts: java.sql.Timestamp, doc_id: Long)
 
-class StreamingDedupSpec extends SparkSuite {
+class StreamingDedupSpec extends SparkSuite with TimeLimitedTests {
+  // slowest test on a 4-vCPU host in a full tier-1 run: 0.6 s; the limit
+  // is 100x that, room for a session start (14 s) and a 2-3x slower host
+  val timeLimit: Span = Span(60, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
   import spark.implicits._
 
   private def doc(fp: String, second: Int, id: Long) =

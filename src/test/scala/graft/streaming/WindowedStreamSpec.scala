@@ -3,6 +3,8 @@ package graft.streaming
 import graft.SparkSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 /** Event-time windowed aggregation with watermark over a cell-update
   * stream — the analytics addition on top of the reference's streaming
@@ -11,7 +13,11 @@ import org.apache.spark.sql.functions._
   */
 final case class Ev(user: String, ts: java.sql.Timestamp, value: Double)
 
-class WindowedStreamSpec extends SparkSuite {
+class WindowedStreamSpec extends SparkSuite with TimeLimitedTests {
+  // slowest test on a 4-vCPU host in a full tier-1 run: 0.7 s; the limit
+  // is 86x that, room for a session start (14 s) and a 2-3x slower host
+  val timeLimit: Span = Span(60, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
   import spark.implicits._
 
   private def ev(user: String, second: Int, v: Double) =
