@@ -194,9 +194,10 @@ object HamStream {
   /** Snapshot-then-stream subscription — the reference's `Fetch` contract
     * (gun/scoped_fetch.go:98-110, initial emit at :104-107): a new
     * subscriber first receives the CURRENT local value of the cell (if
-    * any), then every subsequent transition. The snapshot side is a point
-    * read of the merged store (≤1 row — a legitimate driver-side lookup,
-    * same class as Scoped.fetchOne) seeded into a one-shot in-memory
+    * any), then every subsequent transition. The snapshot side is a
+    * filtered read of the `store` frame (≤1 row collected by a Spark
+    * query; the path-based form below reads the key's bucket on the
+    * driver without one) seeded into a one-shot in-memory
     * stream and unioned with the live subscription, so the result is a
     * single streaming Dataset a sink can consume uniformly. The
     * per-subscription dedupe (gun/scoped_fetch.go:173-178) suppresses a
@@ -234,9 +235,10 @@ object HamStream {
   }
 
   /** [[subscribeWithSnapshot]] against an on-disk bucketed store: the
-    * snapshot seed is a [[fetchFromStore]] point read — one Spark job on
-    * the key's ONE `bucket=N/` directory regardless of store size
-    * (SnapshotPruningSpec asserts the single-directory bound).
+    * snapshot seed is a [[fetchFromStore]] point read — the key's ONE
+    * `bucket=N/` directory read on the driver, no Spark job, regardless
+    * of store size (SnapshotPruningSpec asserts the single-directory
+    * bound).
     */
   def subscribeWithSnapshot(
       storePath: String,
@@ -506,48 +508,50 @@ object HamStream {
     CellSchema.add("bucket", org.apache.spark.sql.types.IntegerType)
 
   /** The store's rows in the named buckets, read with [[StoreSchema]] —
-    * the one path by which store operations read bucket data. Only the
-    * bucket directories that exist are read (none ⇒ an empty frame,
-    * no job);
-    * `basePath` keeps `bucket` a partition column, so the scan's
-    * `numPartitions` metric counts bucket dirs. Spark lists up to 32
-    * paths on the driver (`spark.sql.sources.parallelPartitionDiscovery
-    * .threshold`) and more in a listing job: a point read lists its one
-    * bucket without a job, whereas listing the root lists all of them.
-    *
-    * A bucket with no `bucket=N` dir but a `.trash-bucket=N` dir is
-    * between a [[swapBucket]]'s two renames, or parked by a crash in
-    * that window: the trash dir holds its data and is read as bucket N.
-    * Readers never rename: only a writer's [[recoverStore]] restores it,
-    * since a reader's rename back to live would race the swap's own
-    * `rename(staged, live)`. `ignoreMissingFiles` lets the scan skip files
-    * that vanish under it ([[keyRows]] checks for them).
+    * the one path by which bulk reads and folds read bucket data (a point
+    * read, [[fetchFromStore]], reads its bucket's files on the driver).
+    * Only the bucket directories that exist are read (none ⇒ an empty
+    * frame, no job); `basePath` keeps `bucket` a partition column, so the
+    * scan's `numPartitions` metric counts bucket dirs. Spark lists up to
+    * 32 paths on the driver (`spark.sql.sources.parallelPartitionDiscovery
+    * .threshold`) and more in a listing job.
     */
   private[streaming] def readBuckets(
       spark: SparkSession,
       storePath: String,
-      buckets: Seq[Long],
-      ignoreMissingFiles: Boolean = false): DataFrame = {
+      buckets: Seq[Long]): DataFrame = {
     import org.apache.spark.sql.functions.lit
     val root = new org.apache.hadoop.fs.Path(storePath)
     val fs = StoreFs.fileSystem(root, spark.sparkContext.hadoopConfiguration)
-    def dir(name: String) = Some(new org.apache.hadoop.fs.Path(root, name)).filter(fs.exists)
-    val (live, parked) = buckets.distinct.partitionMap(b => dir(s"bucket=$b").toLeft(b))
-    def reader = spark.read
-      .options(if (ignoreMissingFiles) Map("ignoreMissingFiles" -> "true") else Map.empty[String, String])
+    val (live, parked) = buckets.distinct.flatMap(b => bucketDir(fs, root, b.toInt))
+      .partition(_.getName.startsWith("bucket="))
     val frames =
-      Seq(live).filter(_.nonEmpty).map(dirs => reader.schema(StoreSchema)
+      Seq(live).filter(_.nonEmpty).map(dirs => spark.read.schema(StoreSchema)
         .option("basePath", storePath).parquet(dirs.map(_.toString): _*)) ++
-      parked.flatMap { b =>
+      parked.flatMap { dir =>
         // its files, not the dir: Spark warns on a root it deems hidden
-        val files = dir(s".trash-bucket=$b").toSeq.flatMap(fs.listStatus(_))
-          .map(_.getPath.toString).filter(_.endsWith(".parquet"))
-        Option.when(files.nonEmpty)(
-          reader.schema(CellSchema).parquet(files: _*).withColumn("bucket", lit(b.toInt)))
+        val files = fs.listStatus(dir).toSeq.map(_.getPath.toString).filter(_.endsWith(".parquet"))
+        Option.when(files.nonEmpty)(spark.read.schema(CellSchema).parquet(files: _*)
+          .withColumn("bucket", lit(dir.getName.stripPrefix(".trash-bucket=").toInt)))
       }
     frames.reduceOption(_ unionByName _).getOrElse(
       spark.createDataFrame(java.util.Collections.emptyList[Row](), StoreSchema))
   }
+
+  /** Bucket `b`'s dir: `bucket=b`, or else `.trash-bucket=b`, or none.
+    * A bucket with no `bucket=b` dir but a `.trash-bucket=b` dir is
+    * between a [[swapBucket]]'s two renames, or parked by a crash in
+    * that window: the trash dir holds its data and is read as bucket b.
+    * Readers never rename: only a writer's [[recoverStore]] restores it,
+    * since a reader's rename back to live would race the swap's own
+    * `rename(staged, live)`.
+    */
+  private def bucketDir(
+      fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path,
+      b: Int): Option[org.apache.hadoop.fs.Path] =
+    Seq(s"bucket=$b", s".trash-bucket=$b").map(new org.apache.hadoop.fs.Path(root, _))
+      .find(fs.exists)
 
   /** Swap a staged bucket directory — a fold's output, written by
     * [[compactBuckets]] — into the live tree with a RECOVERABLE ordering
@@ -559,7 +563,7 @@ object HamStream {
     * A crash after (1) leaves the old data in the trash dir;
     * [[recoverStore]] — run at every append and compact entry — renames
     * it back, and until then readers read the trash dir as the bucket
-    * ([[readBuckets]]), so every crash point leaves the bucket readable
+    * ([[bucketDir]]), so every crash point leaves the bucket readable
     * with either the old or the new data, never neither. Dot-prefixed
     * trash/staging dirs are invisible to a parquet read of the root
     * (Hadoop's hidden-file filter), so an in-flight swap never
@@ -602,89 +606,80 @@ object HamStream {
 
   /** Point read against the bucketed store — the read-side complement of
     * [[appendIntoStore]] (reference storage-get semantics,
-    * gun/storage.go:79-89: absent ⇒ exists=false, not an error). ONE
-    * Spark job per read, whatever the store's size:
-    *   - [[pointReadDf]] lists the key's one `bucket=N/` directory on the
-    *     driver (no listing job) and scans it with the store's fixed
-    *     schema (no footer job), filtered to (soul, field);
-    *   - the scan's rows — one per un-compacted append of the key — are
-    *     collected and folded on the driver with [[Ham.mergeCells]], the
-    *     HAM argmax over (state, canonical JSON) that
-    *     `HamMerge.mergeSnapshot` computes in a shuffle (no aggregation
-    *     job);
+    * gun/storage.go:79-89: absent ⇒ exists=false, not an error). It runs
+    * on the driver and starts no Spark job, whatever the store's size:
+    *   - it lists the key's one bucket dir ([[bucketDir]]);
+    *   - it reads each parquet file there with parquet-hadoop's reader,
+    *     which returns only the key's rows, one per un-compacted append
+    *     of the key ([[keyCells]]);
+    *   - it folds those rows with [[Ham.mergeCells]], the HAM argmax over
+    *     (state, canonical JSON) that `HamMerge.mergeSnapshot` computes;
     *   - a missing store or bucket dir reads as valueExists=false.
-    * A compaction that swaps the bucket between the listing and the scan
-    * deletes the listed files; the scan skips them and the read lists the
-    * bucket again and scans once more ([[keyRows]]).
+    * Bulk reads and folds keep the distributed scan ([[readBuckets]]).
+    * A compaction that swaps the bucket between the listing and the read
+    * deletes the listed files: opening one, or the listing itself, throws
+    * `FileNotFoundException`, and the read lists once more, which finds
+    * the fold's output. A second miss throws.
     */
   def fetchFromStore(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       soul: String,
       field: String,
-      numBuckets: Int = DefaultBuckets): graft.core.FetchResult =
-    keyRows(pointReadDf(spark, storePath, soul, field, numBuckets))
-      .map { r =>
-        val v = GunValue(r.getString(0), Option(r.getString(1)),
-          Option(r.getString(2)),
-          if (r.isNullAt(3)) None else Some(r.getBoolean(3)), Option(r.getString(4)))
-        GunCell(soul, field, v, r.getDouble(5), r.getBoolean(6))
-      }
+      numBuckets: Int = DefaultBuckets): graft.core.FetchResult = {
+    val storeDir = new org.apache.hadoop.fs.Path(storePath)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = StoreFs.fileSystem(storeDir, conf)
+    checkLayout(fs, storeDir, stamp = false) // a pre-v2 store must error, not miss
+    val bucket = bucketIdOf(soul, field, numBuckets)
+    def attempt(): Option[Seq[GunCell]] =
+      try Some(bucketDir(fs, storeDir, bucket).toSeq.flatMap(fs.listStatus(_))
+        .filter(_.getPath.getName.endsWith(".parquet"))
+        .flatMap(keyCells(_, soul, field, conf)))
+      catch { case _: java.io.FileNotFoundException => None }
+    attempt().orElse(attempt()).getOrElse(throw new java.io.FileNotFoundException(
+      s"point read of bucket $bucket in $storePath: the listed files vanished twice " +
+        "between listing and read"))
       .reduceOption(Ham.mergeCells) match {
       case None    => graft.core.FetchResult(field, None, None, valueExists = false)
       case Some(c) => graft.core.FetchResult(field, Some(c.value), Some(c.state), c.valueExists)
     }
-
-  /** Collect a listed point read. Its scan skips listed files that are
-    * gone (`ignoreMissingFiles`): a compaction swap deleted them between
-    * listing and scan. Skipped files would drop the folded winner, so the
-    * read then checks that every scanned file still exists; if one is
-    * gone — or a listed bucket dir vanished before the scan was planned —
-    * it lists and scans once more, and the new listing holds the fold's
-    * output. A second miss throws. `listed` is by-name: each attempt
-    * lists afresh.
-    */
-  private[streaming] def keyRows(listed: => DataFrame): Array[Row] = {
-    def attempt(): Option[Array[Row]] =
-      try {
-        val df = listed
-        val rows = df.collect()
-        val conf = df.sparkSession.sparkContext.hadoopConfiguration
-        val gone = df.inputFiles.exists { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          !StoreFs.fileSystem(p, conf).exists(p)
-        }
-        if (gone) None else Some(rows)
-      } catch {
-        case a: org.apache.spark.sql.AnalysisException if a.getCondition == "PATH_NOT_FOUND" => None
-      }
-    attempt().orElse(attempt()).getOrElse(throw new java.io.FileNotFoundException(
-      "point read: the listed store files vanished twice between listing and scan"))
   }
 
-  /** The point read's scan: the key's rows, not yet collapsed, as
-    * (kind, str, num, bool, rel, state, valueExists). Exposed un-collected
-    * so specs can execute the PRODUCTION plan and assert its one-bucket
-    * bound from the scan metrics (`numPartitions`/`numFiles` — see
-    * SnapshotPruningSpec). The layout check runs first, as on every store
-    * read; the bucket dir is listed when the frame is built. Like every
-    * read, it does not mutate the store.
+  /** The key's rows in one store file, as cells. The reader is built from
+    * the listed status and the session's Hadoop conf, so it opens the file
+    * through that conf's `FileSystem` (checksums, any scheme) without a
+    * status call or a conf of its own. The pushed (soul, field) equality
+    * compares UTF-8 bytes, as the Spark column predicate does, and also
+    * skips row groups whose statistics exclude the key.
     */
-  private[graft] def pointReadDf(
-      spark: org.apache.spark.sql.SparkSession,
-      storePath: String,
+  private def keyCells(
+      file: org.apache.hadoop.fs.FileStatus,
       soul: String,
       field: String,
-      numBuckets: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val storeDir = new org.apache.hadoop.fs.Path(storePath)
-    val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
-    checkLayout(fs, storeDir, stamp = false) // a pre-v2 store must error, not miss
-    readBuckets(spark, storePath, Seq(bucketIdOf(soul, field, numBuckets).toLong),
-      ignoreMissingFiles = true)
-      .filter(col("soul") === soul && col("field") === field)
-      .select("value.kind", "value.str", "value.num", "value.bool", "value.rel",
-        "state", "valueExists")
+      conf: org.apache.hadoop.conf.Configuration): Seq[GunCell] = {
+    import org.apache.parquet.example.data.Group
+    import org.apache.parquet.filter2.predicate.FilterApi
+    import org.apache.parquet.io.api.Binary
+    def is(column: String, v: String) =
+      FilterApi.eq(FilterApi.binaryColumn(column), Binary.fromString(v))
+    val reader = new org.apache.parquet.hadoop.ParquetReader.Builder[Group](
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf),
+      new org.apache.parquet.conf.HadoopParquetConfiguration(conf)) {
+      override protected def getReadSupport() =
+        new org.apache.parquet.hadoop.example.GroupReadSupport
+    }.withFilter(org.apache.parquet.filter2.compat.FilterCompat.get(
+      FilterApi.and(is("soul", soul), is("field", field)))).build()
+    def opt(g: Group, name: String) = Option.when(g.getFieldRepetitionCount(name) > 0)(g)
+    try Iterator.continually(reader.read()).takeWhile(_ != null).map { r =>
+      val v = opt(r, "value").map(_.getGroup("value", 0))
+      def str(name: String) = v.flatMap(opt(_, name)).map(_.getString(name, 0))
+      GunCell(soul, field,
+        GunValue(str("kind").orNull, str("str"), str("num"),
+          v.flatMap(opt(_, "bool")).map(_.getBoolean("bool", 0)), str("rel")),
+        r.getDouble("state", 0), r.getBoolean("valueExists", 0))
+    }.toList
+    finally reader.close()
   }
 
   /** TTL compaction of a bucketed store — the reference's periodic purge

@@ -102,7 +102,8 @@ final class SubscriptionHub(
   }
 
   /** Register a listener that first receives the store's CURRENT value
-    * (a one-job point read of the key's bucket, absent ⇒ nothing) and
+    * (a driver-side point read of the key's bucket, no Spark job;
+    * absent ⇒ nothing) and
     * then every live transition — the snapshot-then-stream `Fetch`
     * contract. The
     * per-listener dedupe absorbs the case where the write that produced

@@ -26,10 +26,36 @@ object SparkSuite {
   /** Signaler for `TimeLimitedTests` suites: at the time limit it cancels
     * every running Spark job, so the action the test is blocked on throws
     * and the test fails under its own name with a timeout, instead of a
-    * hung job stalling the whole run.
+    * hung job stalling the whole run. Without a session it starts none.
     */
   val cancelAllJobs: Signaler = new Signaler {
-    def apply(testThread: Thread): Unit = session.sparkContext.cancelAllJobs()
+    def apply(testThread: Thread): Unit =
+      SparkSession.getDefaultSession.foreach(_.sparkContext.cancelAllJobs())
+  }
+
+  /** `op`'s result and the WARN and ERROR events logged, on any thread,
+    * while it runs, from an appender on the root logger.
+    */
+  def warningsDuring[T](op: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("warnings-during", null, null, true, Property.EMPTY_ARRAY) {
+      def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          events.add(s"${e.getLevel} ${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    try (op, events.asScala.toSeq)
+    finally {
+      root.removeAppender(appender)
+      appender.stop()
+    }
   }
 
   /** Spark jobs and tasks that `op` runs on this thread, counted by a
@@ -87,22 +113,5 @@ object SparkSuite {
     (jobs.asScala.toSeq.map { case (desc, exec, stage) =>
       s"$desc @ ${exec.map(executions.getOrDefault(_, "")).getOrElse("")} / $stage"
     }, tasks.get)
-  }
-}
-
-object PlanScans {
-  import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-
-  /** All parquet scans in an EXECUTED plan, descending into AQE wrappers —
-    * both AdaptiveSparkPlanExec and materialized QueryStageExec are leaf
-    * nodes to TreeNode.collect, so a plain `plan.collect` misses any scan
-    * below a shuffle once AQE has staged it.
-    */
-  def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-    case s: FileSourceScanExec    => Seq(s)
-    case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-    case q: QueryStageExec        => fileScans(q.plan)
-    case other                    => other.children.flatMap(fileScans)
   }
 }

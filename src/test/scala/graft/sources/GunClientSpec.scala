@@ -1,14 +1,21 @@
 package graft.sources
 
 import graft.core.{GunCell, GunValue}
+import org.scalatest.concurrent.TimeLimitedTests
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 /** Control-plane protocol behavior over an in-memory peer pair: DAM
   * handshake (gun/gun.go:309-325), ack correlation (gun/gun.go:288-297),
   * soul-interest routing (gun/gun.go:299-307), and the double-encoded
   * batch frame codec (gun/websocket.go:92-159).
   */
-class GunClientSpec extends AnyFunSuite {
+class GunClientSpec extends AnyFunSuite with TimeLimitedTests {
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 1.3 s (the gossip rebroadcast); its
+  // waits are 2-10 s socket timeouts, so the limit leaves room for them
+  val timeLimit: Span = Span(30, Seconds)
+  override val defaultTestSignaler = graft.SparkSuite.cancelAllJobs
 
   test("frame codec: single message stays bare, batch double-encodes") {
     val single = WireCodec.joinFrame(Seq("""{"#":"m1"}"""))

@@ -1,14 +1,21 @@
 package graft.sources
 
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.scalatest.concurrent.TimeLimitedTests
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 /** Real-socket interop: the JDK websocket client (the dial path) against
   * our RFC 6455 accept path — handshake, client-side masking, DAM on
   * connect (gun/server.go:55), double-encoded batch frames, and frame
   * reassembly for payloads past the 16-bit length boundary.
   */
-class GunWebSocketServerSpec extends AnyFunSuite {
+class GunWebSocketServerSpec extends AnyFunSuite with TimeLimitedTests {
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 0.06 s (the dial-accept handshake); its
+  // waits are 2-10 s socket timeouts, so the limit leaves room for them
+  val timeLimit: Span = Span(30, Seconds)
+  override val defaultTestSignaler = graft.SparkSuite.cancelAllJobs
 
   test("dial ↔ accept: handshake, DAM on connect, frames both directions") {
     val peers = new LinkedBlockingQueue[PeerConn]()

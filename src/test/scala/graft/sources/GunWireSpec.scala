@@ -2,13 +2,21 @@ package graft.sources
 
 import graft.SparkSuite
 import graft.core.{GunValue, ValueKind}
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
 /** Wire-format goldens from FIXTURES.md §3 (envelope per gun/message.go:6-24,
   * node codec per gun/node.go:33-71, double-encoded batch per
   * gun/websocket.go:92-159).
   */
-class GunWireSpec extends SparkSuite {
+class GunWireSpec extends SparkSuite with TimeLimitedTests {
   import spark.implicits._
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 7.6 s (the first
+  // test, which starts the session when the suite runs first); the limit
+  // is 8x that, room for a shared host that runs 2-3x slower
+  val timeLimit: Span = Span(60, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
 
   private val putMsg =
     """{"#":"mid2","put":{"S1":{"_":{"#":"S1",">":{"some-field":1.7e12,"n":1.7e12,"b":1.7e12,"nil":1.7e12,"r":1.7e12}},"some-field":"v","n":42.5,"b":true,"nil":null,"r":{"#":"S2"}}}}"""

@@ -215,29 +215,14 @@ class HamStreamSpec extends SparkSuite with TimeLimitedTests {
       .listFiles().count(_.getName.endsWith(".parquet"))
     assert(bucketFiles == 3)
 
-    // the production read, under a job group of its own; its executed
-    // plan (with scan metrics) comes from a query-execution listener
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.execution.SparkPlan]()
-    val qel = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit = plans.add(qe.executedPlan)
-      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    var hit: graft.core.FetchResult = null
-    spark.listenerManager.register(qel)
-    val (jobs, _) =
-      try graft.SparkSuite.jobsAndTasks {
-        hit = HamStream.fetchFromStore(spark, dir, "rsoul7", "f", numBuckets = 8)
-      } finally spark.listenerManager.unregister(qel)
+    val bucket = s"bucket=${bucketIdOf("rsoul7", "f", 8)}"
+    val (hit, jobs, touched) = CountedFs.pointRead(spark, dir, "rsoul7", "f", numBuckets = 8)
     assert(hit.valueExists && hit.value.contains(GunValue.number(72L)) &&
       hit.state.contains(1002.0))
-    assert(jobs == 1, s"a point read must run ONE Spark job, ran $jobs")
-    import scala.jdk.CollectionConverters._
-    val scans = plans.asScala.toSeq.flatMap(graft.PlanScans.fileScans)
-    assert(scans.map(_.metrics("numFiles").value) == Seq(bucketFiles.toLong),
-      "the scan must read exactly the key's bucket files")
+    assert(jobs == 0, s"a point read must run no Spark job, ran $jobs")
+    val opened = touched.openedUnder(dir).filter(_.endsWith(".parquet"))
+    assert(opened.size == bucketFiles && opened.forall(_.startsWith(s"$bucket/")),
+      s"the read must open exactly the key's bucket files, opened $opened")
 
     val miss = HamStream.fetchFromStore(spark, dir, "rsoul7", "nope", numBuckets = 8)
     assert(!miss.valueExists)

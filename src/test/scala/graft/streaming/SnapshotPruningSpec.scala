@@ -11,8 +11,10 @@ import org.scalatest.time.{Seconds, Span}
   * (`store.filter(c => c.soul == ...)`) deserialized every store row and
   * defeated both Parquet pushdown and bucket pruning — a full scan per new
   * subscriber at 100× store size. The path-based form routes through
-  * [[HamStream.fetchFromStore]]'s partition-pruned scan; this spec executes
-  * that PRODUCTION scan and asserts the one-bucket bound from its metrics.
+  * [[HamStream.fetchFromStore]], which reads the key's one bucket dir on
+  * the driver; this spec runs that PRODUCTION read through a file system
+  * that records what it opens, and asserts no Spark job and the one-bucket
+  * bound.
   */
 class SnapshotPruningSpec extends SparkSuite with TimeLimitedTests {
 
@@ -36,18 +38,15 @@ class SnapshotPruningSpec extends SparkSuite with TimeLimitedTests {
     assert(new java.io.File(dir).listFiles()
       .count(_.getName.startsWith("bucket=")) == NumBuckets)
 
-    val df = HamStream.pointReadDf(spark, dir, "soul7", "f", NumBuckets)
-    val rows = df.collect() // execute first: scan metrics fill on run
-    assert(rows.length == 1 && rows.head.getString(0) == "number")
-    // fileScans descends into AQE query stages — the point read now
-    // carries the HAM-collapse aggregation (delta-store support), which
-    // puts the scan below a staged shuffle
-    val scans = graft.PlanScans.fileScans(df.queryExecution.executedPlan)
-    assert(scans.nonEmpty, "expected a parquet scan in the point-read plan")
-    val partitionsRead = scans.map(s =>
-      s.metrics.get("numPartitions").map(_.value).getOrElse(-1L))
-    assert(partitionsRead == Seq(1L),
-      s"point read must prune to ONE bucket dir, read $partitionsRead of $NumBuckets")
+    val bucket = s"bucket=${HamStream.bucketIdOf("soul7", "f", NumBuckets)}"
+    val (hit, jobs, touched) = CountedFs.pointRead(spark, dir, "soul7", "f", NumBuckets)
+    assert(hit.value.contains(GunValue.number(7L)))
+    assert(jobs == 0, s"a point read must run no Spark job, ran $jobs")
+    // the bucket dirs whose files the read opened
+    val bucketsRead = touched.openedUnder(dir).filter(_.endsWith(".parquet"))
+      .map(_.takeWhile(_ != '/')).distinct
+    assert(bucketsRead == Seq(bucket),
+      s"point read must prune to ONE bucket dir, read $bucketsRead of $NumBuckets")
   }
 
   test("path-based subscribeWithSnapshot: pruned seed, then live updates") {

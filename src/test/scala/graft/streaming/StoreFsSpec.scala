@@ -18,11 +18,11 @@ import scala.jdk.CollectionConverters._
 /** The fork-free local file systems ([[StoreFs]]): they create files and
   * dirs with the permissions the stock `LocalFileSystem` and `LocalFs`
   * give them, and the `FileContext` one answers status lookups and
-  * renames as `LocalFs` does; the cell store's append and fold and a
-  * stateful stream's checkpoint start no process for their files; a
-  * checkpoint of the stock `LocalFs` restarts under the fork-free one, and
-  * a user's own choice of `LocalFs` is kept; paths outside `file:` keep
-  * their usual file system.
+  * renames as `LocalFs` does; the cell store's append, fold and point
+  * read and a stateful stream's checkpoint start no process for their
+  * files; a checkpoint of the stock `LocalFs` restarts under the
+  * fork-free one, and a user's own choice of `LocalFs` is kept; paths
+  * outside `file:` keep their usual file system.
   */
 class StoreFsSpec extends SparkSuite with TimeLimitedTests {
   import spark.implicits._
@@ -173,6 +173,22 @@ class StoreFsSpec extends SparkSuite with TimeLimitedTests {
     val files = new java.io.File(store).listFiles().filter(_.getName.startsWith("bucket="))
       .map(_.listFiles().count(_.getName.endsWith(".parquet")))
     assert(files.nonEmpty && files.forall(_ == 1))
+  }
+
+  test("a point read starts no process") {
+    val dir = Files.createTempDirectory("storefs_read_spawns").toString
+    val store = s"$dir/cells"
+    for (b <- 0 until 3)
+      HamStream.appendBatchIntoStore(
+        (0 until 40).map(i => Update(s"s$i", "f", GunValue.number(b.toLong), 1000.0 + b)).toDS(),
+        b.toLong, store, numBuckets = 8, compactThreshold = 0)
+    var hit: graft.core.FetchResult = null
+    val commands = processesDuring(dir) {
+      hit = HamStream.fetchFromStore(spark, store, "s7", "f", numBuckets = 8)
+    }
+    assert(hit.value.contains(GunValue.number(2L)))
+    val onStore = commands.filter(_.contains(store))
+    assert(onStore.isEmpty, s"${onStore.size} processes on the store, e.g. ${onStore.take(3)}")
   }
 
   /** Runs `op` with session conf `key` set to `value` (unset for `None`),
