@@ -20,8 +20,8 @@ import java.util.concurrent.atomic.LongAdder
   *   1. INGEST: generated put frames → InMemoryPeerConn → DSv2 `gun`
   *      source (WAL on) → [[GunWire.framesToCells]] →
   *      [[HamStream.updates]] (per-key CRDT state machine) →
-  *      [[HamStream.appendBatchIntoStore]] (the bucketed LSM cell store:
-  *      one delta file per touched bucket per batch, folded past the
+  *      [[HamStream.appendBatchIntoStore]] (the LSM cell store: one
+  *      level-0 file per batch, folded into the buckets at the
   *      compaction threshold). The feeder is CLOSED-LOOP: it
   *      keeps one chunk of frames in flight and waits for the stream to
   *      consume it before sending the next, so the measured rate is the
@@ -204,9 +204,9 @@ object StreamBench {
     * fixed key pool (every batch re-touches the same buckets — the
     * worst case for uncompacted-delta growth) and probe the point-read
     * latency every `probeEvery` batches (min of 3 reads). With the
-    * compaction trigger OFF every probe collapses an ever-growing delta
-    * stack through the HAM merge; with it ON the per-bucket file count —
-    * and therefore the read — stays flat. The store-only loop (no wire,
+    * compaction trigger OFF every probe opens an ever-growing level 0
+    * and collapses it through the HAM merge; with it ON the level-0 file
+    * count — and therefore the read — stays bounded. The store-only loop (no wire,
     * no state machine) isolates exactly the variable under test.
     */
   def runReadAmp(
@@ -238,10 +238,10 @@ object StreamBench {
         probes += b -> ms
       }
     }
-    val maxFiles = new java.io.File(store).listFiles()
-      .filter(_.getName.startsWith("bucket="))
-      .map(_.listFiles().count(_.getName.endsWith(".parquet")))
-      .foldLeft(0)(math.max)
+    // what the probe's point read opens: level 0 and its key's bucket
+    def parquet(dir: String) = Option(new java.io.File(store, dir).listFiles()).toSeq.flatten
+      .count(_.getName.endsWith(".parquet"))
+    val maxFiles = parquet("_l0") + parquet(s"bucket=${HamStream.bucketIdOf("ra0001", "f1", buckets)}")
     ReadAmpStats(batches, maxFiles, probes.result())
   }
 

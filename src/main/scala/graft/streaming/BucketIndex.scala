@@ -4,17 +4,18 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.StructType
 
-/** The LSM (log-structured merge) machinery of every bucket-partitioned
-  * parquet store: append-only delta files per bucket plus compaction.
-  * [[promoteDelta]] is the one delta promotion — staged write, then an
-  * idempotent parallel rename to `delta-b<batchId>-<i>.parquet` — used by
-  * the cell store ([[HamStream.appendBatchIntoStore]], which folds a
-  * bucket by HAM merge on a file-count trigger) and by the disk indexes
-  * of the streaming near-dup operators ([[StreamingNearDup]] minhash
-  * signatures, [[StreamingEmbNearDup]] embedding sketches) and
-  * `IndexStore`, through [[appendDelta]]: a count-and-size-ratio
-  * triggered per-bucket fold that sorts by the probe key so point probes
-  * row-group-prune.
+/** The LSM (log-structured merge) machinery of the bucket-partitioned
+  * parquet disk indexes: append-only delta files per bucket plus
+  * compaction. [[promoteDelta]] is their delta promotion — staged write,
+  * then an idempotent parallel rename to `delta-b<batchId>-<i>.parquet` —
+  * used by the disk indexes of the streaming near-dup operators
+  * ([[StreamingNearDup]] minhash signatures, [[StreamingEmbNearDup]]
+  * embedding sketches) and `IndexStore`, through [[appendDelta]]: a
+  * count-and-size-ratio triggered per-bucket fold that sorts by the probe
+  * key so point probes row-group-prune. The cell store
+  * ([[HamStream.appendBatchIntoStore]]) appends one level-0 file per batch
+  * instead and shares only [[promote]], the idempotent rename; the indexes
+  * keep per-bucket deltas until their own probe legs measure that layout.
   *
   * Crash contract: a replayed batch re-appends under the same batchId
   * (dest-exists renames skip) — duplicate rows, folded by the next
@@ -137,9 +138,8 @@ private[graft] object BucketIndex {
     }
   }
 
-  /** The delta promotion shared by every LSM store: the cell store
-    * ([[HamStream.appendBatchIntoStore]]) and the disk indexes
-    * ([[appendDelta]]). `rows` carry a `bucket` column;
+  /** The delta promotion of the disk indexes ([[appendDelta]]). `rows`
+    * carry a `bucket` column;
     *   1. they are hash-repartitioned on it (at most `numBuckets` tasks),
     *      so each touched bucket gets ONE staged file per batch, and
     *      written to `<storeDir>/.staging-delta-<batchId>/bucket=N/`
@@ -153,8 +153,8 @@ private[graft] object BucketIndex {
     *      `FileSystem` instances are thread-safe);
     *   3. the staging dir is deleted.
     * Returns each touched bucket's name (`bucket=N`) with its parquet
-    * files after the promotion — each caller's compaction trigger reads
-    * it instead of listing again.
+    * files after the promotion — the compaction trigger reads it instead
+    * of listing again.
     */
   private[streaming] def promoteDelta(
       rows: DataFrame,
@@ -202,7 +202,7 @@ private[graft] object BucketIndex {
     * false throws, so the batch fails instead of committing rows that
     * never reached the store.
     */
-  private def promote(fs: FileSystem, src: Path, dest: Path): Unit =
+  private[streaming] def promote(fs: FileSystem, src: Path, dest: Path): Unit =
     if (!fs.rename(src, dest) && !fs.exists(dest))
       throw new java.io.IOException(s"promotion rename failed: $src -> $dest")
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.core.{GunCell, GunValue, Ham}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -196,7 +197,7 @@ object HamStream {
     * subscriber first receives the CURRENT local value of the cell (if
     * any), then every subsequent transition. The snapshot side is a
     * filtered read of the `store` frame (≤1 row collected by a Spark
-    * query; the path-based form below reads the key's bucket on the
+    * query; the path-based form below reads the key's files on the
     * driver without one) seeded into a one-shot in-memory
     * stream and unioned with the live subscription, so the result is a
     * single streaming Dataset a sink can consume uniformly. The
@@ -235,10 +236,9 @@ object HamStream {
   }
 
   /** [[subscribeWithSnapshot]] against an on-disk bucketed store: the
-    * snapshot seed is a [[fetchFromStore]] point read — the key's ONE
-    * `bucket=N/` directory read on the driver, no Spark job, regardless
-    * of store size (SnapshotPruningSpec asserts the single-directory
-    * bound).
+    * snapshot seed is a [[fetchFromStore]] point read — level 0 and the
+    * key's ONE `bucket=N/` directory read on the driver, no Spark job,
+    * regardless of store size (SnapshotPruningSpec asserts the bound).
     */
   def subscribeWithSnapshot(
       storePath: String,
@@ -321,81 +321,97 @@ object HamStream {
     * layout — corruption by silent mis-read is strictly worse than an
     * explicit "re-bucket this store" error. (Underscore-prefixed files are
     * invisible to parquet scans, like `_SUCCESS`.)
+    *
+    * v3 = v2 plus level 0: the `_l0/` dir of one file per micro-batch
+    * ([[appendBatchIntoStore]]), which a v2 build would not read. A v2
+    * store is a v3 store with an empty level 0, so this build reads it,
+    * and its first write re-stamps the marker before it adds a level-0
+    * file: from then on a v2 build refuses the store.
     */
-  val LayoutVersion = "v2"
+  val LayoutVersion = "v3"
+
+  /** Level 0 of the store: one parquet file per micro-batch. The `_`
+    * prefix hides it from partition discovery, so `spark.read.parquet`
+    * of the store root reads only the buckets.
+    */
+  private val L0Dir = "_l0"
 
   /** Verify the store's `_layout` marker, stamping it on stores that have
-    * no bucket data yet. Throws [[IllegalStateException]] on a mismatched
-    * or missing-but-populated marker. `stamp = false` (read paths) never
-    * writes — a read of a pre-v2 store must fail, not quietly re-label it.
-    * Also throws on a `.buffer-journal` dir, left by an older build's
-    * buffered sink: its committed batches are in no bucket.
+    * no data yet and re-stamping a v2 marker. Throws
+    * [[IllegalStateException]] on a mismatched or missing-but-populated
+    * marker. `stamp = false` (read paths) never writes — a read of a
+    * pre-v2 store must fail, not quietly re-label it. Also throws on a
+    * `.buffer-journal` dir, left by an older build's buffered sink: its
+    * committed batches are in no bucket.
     */
-  private[streaming] def checkLayout(
-      fs: org.apache.hadoop.fs.FileSystem,
-      storeDir: org.apache.hadoop.fs.Path,
-      stamp: Boolean): Unit = {
-    if (!fs.exists(storeDir)) return // first write stamps after the swap
-    val journal = new org.apache.hadoop.fs.Path(storeDir, ".buffer-journal")
+  private[streaming] def checkLayout(fs: FileSystem, storeDir: Path, stamp: Boolean): Unit = {
+    if (!fs.exists(storeDir)) {
+      if (stamp) writeLayoutMarker(fs, storeDir)
+      return
+    }
+    val journal = new Path(storeDir, ".buffer-journal")
     if (fs.exists(journal)) throw new IllegalStateException(
       s"store at $storeDir has a buffered-sink journal at $journal: its " +
         "batches were committed upstream but never written to the store; " +
         "open it once with the build that wrote it, whose appendIntoStore " +
         "replays the journal, before using it with this build")
-    val marker = new org.apache.hadoop.fs.Path(storeDir, "_layout")
+    val marker = new Path(storeDir, "_layout")
     if (fs.exists(marker)) {
       val in = fs.open(marker)
       val found =
         try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim
         finally in.close()
-      if (found != LayoutVersion) throw new IllegalStateException(
+      if (found != LayoutVersion && found != "v2") throw new IllegalStateException(
         s"store at $storeDir has layout '$found' but this build reads " +
-          s"'$LayoutVersion' — re-bucket the store (read every bucket, " +
+          s"'v2' and '$LayoutVersion' — re-bucket the store (read every bucket, " +
           "append them through appendBatchIntoStore to a fresh root) " +
           "instead of letting point reads prune to the wrong bucket")
+      if (stamp && found != LayoutVersion) writeLayoutMarker(fs, storeDir)
     } else {
-      val hasBuckets = fs.listStatus(storeDir)
-        .exists(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-      if (hasBuckets) throw new IllegalStateException(
+      val hasData = fs.listStatus(storeDir).exists { s =>
+        s.isDirectory && (s.getPath.getName.startsWith("bucket=") || s.getPath.getName == L0Dir)
+      }
+      if (hasData) throw new IllegalStateException(
         s"store at $storeDir has bucket data but no _layout marker: it " +
-          s"predates layout $LayoutVersion (xxhash64(soul, field) " +
+          s"predates layout v2 (xxhash64(soul, field) " +
           "bucketing); reading it here would silently miss cells parked " +
           "in soul-only buckets — re-bucket it first")
       else if (stamp) writeLayoutMarker(fs, storeDir)
     }
   }
 
-  private def writeLayoutMarker(
-      fs: org.apache.hadoop.fs.FileSystem,
-      storeDir: org.apache.hadoop.fs.Path): Unit =
-    if (!fs.exists(new org.apache.hadoop.fs.Path(storeDir, "_layout"))) {
-      val out = fs.create(new org.apache.hadoop.fs.Path(storeDir, "_layout"), true)
-      try out.write(LayoutVersion.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
+  private def writeLayoutMarker(fs: FileSystem, storeDir: Path): Unit = {
+    val out = fs.create(new Path(storeDir, "_layout"), true)
+    try out.write(LayoutVersion.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+  }
 
   /** The cell store's streaming sink (SURVEY §3.3 output (a)): an LSM
-    * (log-structured merge) store. The store directory is laid out as
-    * `bucket=N/` partitions (N = xxhash64(soul, field) mod numBuckets —
-    * see [[bucketOf]] for why the full cell key), and each micro-batch
-    * appends its cells as immutable delta files inside the bucket
-    * directories it touches ([[appendBatchIntoStore]]) — per-batch I/O is
-    * O(batch), whatever the store's size.
+    * (log-structured merge) store of two levels.
+    *   - Level 0, `_l0/`: each micro-batch appends its cells as ONE
+    *     immutable file, sorted by (soul, field) ([[appendBatchIntoStore]]),
+    *     so per-batch I/O is one file and one rename, whatever the store's
+    *     size or the batch's key spread.
+    *   - Level 1, `bucket=N/` dirs (N = xxhash64(soul, field) mod
+    *     numBuckets — see [[bucketOf]] for why the full cell key): the
+    *     per-bucket bases. Cells reach them only when level 0 is folded
+    *     ([[compactBuckets]]).
     *
     * A store may hold SEVERAL rows per (soul, field): every reader
     * collapses them to the HAM winner ([[fetchFromStore]] does, and bulk
     * readers go through [[readStore]]), which is exactly the CRDT's own
-    * merge, so reads are correct at any compaction lag. A bucket whose
-    * delta-file count reaches `compactThreshold` is folded back to one
-    * row per key in the same batch; [[compactStore]] folds and TTL-purges
-    * the whole store on the caller's cadence. Crash safety: files land via
-    * write-to-staging then one rename each; a crash mid-move leaves some
-    * buckets with the delta and some without, and the WAL's at-least-once
-    * replay re-appends the batch — duplicate cells are HAM-idempotent, so
-    * the store stays correct (just uncompacted). At-least-once +
-    * idempotent merge is the same contract the reference's peers rely on.
-    * Readers never write the store: only this sink, [[compactStore]] and
-    * its auto-trigger create, rename or delete store files.
+    * merge, so reads are correct at any compaction lag. When level 0 holds
+    * `compactThreshold` files it is folded into the buckets its keys
+    * touch, in the same batch; [[compactStore]] folds and TTL-purges the
+    * whole store on the caller's cadence. Crash safety: files land via
+    * write-to-staging then one rename each, and a fold deletes its level-0
+    * files only after its buckets are swapped in; a crash leaves duplicate
+    * cells (a replayed batch re-appends under the same name, which skips),
+    * and duplicates are HAM-idempotent, so the store stays correct (just
+    * uncompacted). At-least-once + idempotent merge is the same contract
+    * the reference's peers rely on. Readers never write the store: only
+    * this sink, [[compactStore]] and its auto-trigger create, rename or
+    * delete store files.
     */
   def appendIntoStore(
       updates: Dataset[Update],
@@ -411,25 +427,28 @@ object HamStream {
       .start()
   }
 
-  /** Delta-file count per bucket above which [[appendBatchIntoStore]]
-    * folds the bucket ([[compactBuckets]]). An LSM append path without a
-    * compaction trigger degrades unboundedly — every point read collapses
-    * ALL of a bucket's deltas through the HAM merge, so read cost grows
-    * linearly with uncompacted-file count. The reference's storage layer
-    * runs its own maintenance on a cadence (the 5 s purge ticker,
-    * gun/storage.go:56-77); here the trigger is count-based (the standard
-    * LSM level-0 file-count trigger) so maintenance cost stays proportional
-    * to write activity: a bucket is folded only when ITS delta count
-    * crosses the threshold, and only that bucket rewrites.
+  /** Level-0 file count at which [[appendBatchIntoStore]] folds level 0
+    * into the buckets ([[compactBuckets]]) — the standard LSM level-0
+    * file-count trigger. An append path without one degrades unboundedly:
+    * every point read opens EVERY level-0 file, so read cost grows
+    * linearly with the uncompacted-file count. The reference's storage
+    * layer runs its own maintenance on a cadence (the 5 s purge ticker,
+    * gun/storage.go:56-77); here the trigger is count-based, so
+    * maintenance cost stays proportional to write activity, and a fold
+    * rewrites only the buckets the level-0 keys touch.
     */
   val DefaultCompactThreshold = 12
 
-  /** One micro-batch of [[appendIntoStore]] (exposed for specs/sinks):
-    * the cells, stamped `valueExists = true` and routed by [[bucketOf]],
-    * go through the shared delta promotion ([[BucketIndex.promoteDelta]]:
-    * one delta file per touched bucket, idempotent under a same-batchId
-    * replay), after the layout check and swap recovery every store entry
-    * runs.
+  /** One micro-batch of [[appendIntoStore]] (exposed for specs/sinks),
+    * after the layout check and swap recovery every store writer runs:
+    *   1. the cells, stamped `valueExists = true` and sorted by (soul,
+    *      field), are written as one staged parquet file (one write task);
+    *   2. the file renames to `_l0/delta-b<batchId>.parquet` — a
+    *      same-batchId replay finds that name taken and skips
+    *      ([[BucketIndex.promote]]); a batch with no rows adds no file, so
+    *      the idle batches of `timers = true` leave level 0 as it is;
+    *   3. when level 0 then holds `compactThreshold` files, they are folded
+    *      into the buckets ([[compactBuckets]]).
     *
     * `compactThreshold` ≤ 0 disables the auto-trigger (callers owning
     * their own compaction cadence). Auto-triggered folds are FOLD-ONLY
@@ -443,100 +462,105 @@ object HamStream {
       compactThreshold: Int = DefaultCompactThreshold): Unit = {
     import org.apache.spark.sql.functions.{col, lit}
     val spark = batch.sparkSession
-    val storeDir = new org.apache.hadoop.fs.Path(storePath)
-    val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
+    val storeDir = new Path(storePath)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = StoreFs.fileSystem(storeDir, conf)
     checkLayout(fs, storeDir, stamp = true)
     recoverStore(fs, storeDir)
-    val promoted = BucketIndex.promoteDelta(
-      batch.toDF().select(col("soul"), col("field"), col("value"), col("state"),
-        lit(true).as("valueExists"),
-        bucketOf(col("soul"), col("field"), numBuckets).as("bucket")),
-      batchId, storeDir, numBuckets, fs)
-    writeLayoutMarker(fs, storeDir)
-    val overThreshold = promoted.collect {
-      case (name, files) if compactThreshold > 0 && files.length >= compactThreshold => name
+    val staging = new Path(storeDir, s".staging-l0-$batchId")
+    batch.toDF().select(col("soul"), col("field"), col("value"), col("state"),
+        lit(true).as("valueExists"))
+      .repartition(1).sortWithinPartitions("soul", "field")
+      // one file whatever the session's maxRecordsPerFile: a second file
+      // would find the batch's level-0 name taken and be skipped
+      .write.options(StoreFs.writeOptions(staging, conf)).option("maxRecordsPerFile", 0L)
+      .mode("overwrite").parquet(staging.toString)
+    // Spark writes a file with no rows for an empty batch: not promoted
+    parquetFiles(fs, staging).filter(rowCount(_, conf) > 0).foreach { f =>
+      val l0 = new Path(storeDir, L0Dir)
+      fs.mkdirs(l0)
+      BucketIndex.promote(fs, f.getPath, new Path(l0, s"delta-b$batchId.parquet"))
     }
-    if (overThreshold.nonEmpty)
-      compactBuckets(spark, storePath, overThreshold,
-        nowMs = 0.0, ttlMs = Double.PositiveInfinity,
-        stagingName = s".compact-staging-b$batchId")
+    fs.delete(staging, true)
+    if (compactThreshold > 0) {
+      val level0 = level0Files(fs, storeDir)
+      if (level0.length >= compactThreshold)
+        compactBuckets(spark, storePath, numBuckets, level0.map(_.getPath), Nil,
+          nowMs = 0.0, ttlMs = Double.PositiveInfinity,
+          stagingName = s".compact-staging-b$batchId")
+    }
   }
+
+  /** Rows in a parquet file, from its footer. */
+  private def rowCount(file: FileStatus, conf: org.apache.hadoop.conf.Configuration): Long = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf))
+    try reader.getRecordCount finally reader.close()
+  }
+
+  private def parquetFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
+
+  /** The level-0 files; none before the store's first level-0 file (a
+    * v2 store, or no batch with rows yet). Level 0's dir, once made, is
+    * never deleted.
+    */
+  private def level0Files(fs: FileSystem, storeDir: Path): Seq[FileStatus] =
+    try parquetFiles(fs, new Path(storeDir, L0Dir))
+    catch { case _: java.io.FileNotFoundException => Nil }
 
   /** Bulk read of a store as its MERGED view — one HAM winner per
     * (soul, field), however many un-compacted appends a key has. Every
-    * bucket is read through [[readBuckets]] (the store's fixed
-    * schema, so no footer job; more than 32 bucket dirs are listed by one
-    * parallel-listing job), and the merge is one hash aggregation over
-    * the scan. A store that does not exist reads as empty; the read
-    * lists and scans, and never creates, renames or deletes a store file.
-    * Prefer [[fetchFromStore]] for point reads: it reads one bucket and
-    * needs no aggregation job. `numBuckets` does not change a bulk read,
-    * which reads every bucket the store holds.
+    * level-0 file and every bucket's files are read ([[readCells]]: the
+    * store's fixed schema, so no footer job, and no listing job), and the
+    * merge is one hash aggregation over the scan. A store that does not
+    * exist reads as empty; the read lists and scans, and never creates,
+    * renames or deletes a store file. Prefer [[fetchFromStore]] for point
+    * reads: it reads level 0 and one bucket and needs no Spark job.
+    * `numBuckets` does not change a bulk read, which reads every bucket
+    * the store holds.
     */
   def readStore(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       numBuckets: Int = DefaultBuckets): org.apache.spark.sql.DataFrame = {
-    val storeDir = new org.apache.hadoop.fs.Path(storePath)
+    val storeDir = new Path(storePath)
     val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
     checkLayout(fs, storeDir, stamp = false)
-    val stored = storedBuckets(fs, storeDir).map(_.stripPrefix("bucket=").toLong)
-    graft.operators.HamMerge.mergeSnapshot(
-      readBuckets(spark, storePath, stored).drop("bucket"))
+    val files = level0Files(fs, storeDir) ++
+      storedBuckets(fs, storeDir).flatMap(bucketDir(fs, storeDir, _)).flatMap(parquetFiles(fs, _))
+    graft.operators.HamMerge.mergeSnapshot(readCells(spark, files.map(_.getPath)))
   }
 
-  /** Names (`bucket=N`) of the buckets under a store root: its `bucket=N`
-    * dirs and the `.trash-bucket=N` dirs a [[swapBucket]] has parked;
-    * empty when the root does not exist.
+  /** Ids of the buckets under a store root: its `bucket=N` dirs and the
+    * `.trash-bucket=N` dirs a [[swapBucket]] has parked; empty when the
+    * root does not exist.
     */
-  private def storedBuckets(
-      fs: org.apache.hadoop.fs.FileSystem,
-      storeDir: org.apache.hadoop.fs.Path): Seq[String] =
+  private def storedBuckets(fs: FileSystem, storeDir: Path): Seq[Int] =
     if (!fs.exists(storeDir)) Nil
     else fs.listStatus(storeDir).toSeq.filter(_.isDirectory)
       .map(_.getPath.getName.stripPrefix(".trash-"))
-      .filter(_.startsWith("bucket=")).distinct
+      .filter(_.startsWith("bucket=")).map(_.stripPrefix("bucket=").toInt).distinct
 
-  /** The delta store's on-disk schema: the cell columns plus the `bucket`
-    * partition column, typed `int` as partition discovery types
-    * `bucket=N`. Every writer writes exactly these columns, so readers
-    * pass it instead of inferring it — inference is one Spark job that
-    * reads a parquet footer, on every read.
+  /** The store's on-disk schema: the cell columns. Every writer writes
+    * exactly these columns, and a bucket's files hold no `bucket` column
+    * (its dir names it), so readers pass it instead of inferring it —
+    * inference is one Spark job that reads a parquet footer, on every read.
     */
   private val CellSchema = Encoders.product[GunCell].schema
-  private val StoreSchema: org.apache.spark.sql.types.StructType =
-    CellSchema.add("bucket", org.apache.spark.sql.types.IntegerType)
 
-  /** The store's rows in the named buckets, read with [[StoreSchema]] —
-    * the one path by which bulk reads and folds read bucket data (a point
-    * read, [[fetchFromStore]], reads its bucket's files on the driver).
-    * Only the bucket directories that exist are read (none ⇒ an empty
-    * frame, no job); `basePath` keeps `bucket` a partition column, so the
-    * scan's `numPartitions` metric counts bucket dirs. Spark lists up to
-    * 32 paths on the driver (`spark.sql.sources.parallelPartitionDiscovery
-    * .threshold`) and more in a listing job.
+  /** The cells in the named store files, read with [[CellSchema]] — the
+    * one path by which bulk reads and folds read store data (a point
+    * read, [[fetchFromStore]], reads its files on the driver). Each
+    * `spark.read` gets at most `spark.sql.sources.parallelPartitionDiscovery
+    * .threshold` paths, which Spark lists on the driver; more in one read
+    * would start a listing job. No files ⇒ an empty frame, no job.
     */
-  private[streaming] def readBuckets(
-      spark: SparkSession,
-      storePath: String,
-      buckets: Seq[Long]): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = StoreFs.fileSystem(root, spark.sparkContext.hadoopConfiguration)
-    val (live, parked) = buckets.distinct.flatMap(b => bucketDir(fs, root, b.toInt))
-      .partition(_.getName.startsWith("bucket="))
-    val frames =
-      Seq(live).filter(_.nonEmpty).map(dirs => spark.read.schema(StoreSchema)
-        .option("basePath", storePath).parquet(dirs.map(_.toString): _*)) ++
-      parked.flatMap { dir =>
-        // its files, not the dir: Spark warns on a root it deems hidden
-        val files = fs.listStatus(dir).toSeq.map(_.getPath.toString).filter(_.endsWith(".parquet"))
-        Option.when(files.nonEmpty)(spark.read.schema(CellSchema).parquet(files: _*)
-          .withColumn("bucket", lit(dir.getName.stripPrefix(".trash-bucket=").toInt)))
-      }
-    frames.reduceOption(_ unionByName _).getOrElse(
-      spark.createDataFrame(java.util.Collections.emptyList[Row](), StoreSchema))
-  }
+  private def readCells(spark: SparkSession, files: Seq[Path]): DataFrame =
+    files.grouped(spark.sessionState.conf.parallelPartitionDiscoveryThreshold max 1)
+      .map(g => spark.read.schema(CellSchema).parquet(g.map(_.toString): _*))
+      .reduceOption(_ unionByName _)
+      .getOrElse(spark.createDataFrame(java.util.Collections.emptyList[Row](), CellSchema))
 
   /** Bucket `b`'s dir: `bucket=b`, or else `.trash-bucket=b`, or none.
     * A bucket with no `bucket=b` dir but a `.trash-bucket=b` dir is
@@ -546,12 +570,8 @@ object HamStream {
     * since a reader's rename back to live would race the swap's own
     * `rename(staged, live)`.
     */
-  private def bucketDir(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      b: Int): Option[org.apache.hadoop.fs.Path] =
-    Seq(s"bucket=$b", s".trash-bucket=$b").map(new org.apache.hadoop.fs.Path(root, _))
-      .find(fs.exists)
+  private def bucketDir(fs: FileSystem, root: Path, b: Int): Option[Path] =
+    Seq(s"bucket=$b", s".trash-bucket=$b").map(new Path(root, _)).find(fs.exists)
 
   /** Swap a staged bucket directory — a fold's output, written by
     * [[compactBuckets]] — into the live tree with a RECOVERABLE ordering
@@ -570,13 +590,13 @@ object HamStream {
     * double-counts.
     */
   private[streaming] def swapBucket(
-      fs: org.apache.hadoop.fs.FileSystem,
-      storeDir: org.apache.hadoop.fs.Path,
+      fs: FileSystem,
+      storeDir: Path,
       bucketName: String,
-      staged: org.apache.hadoop.fs.Path): Unit = {
+      staged: Path): Unit = {
     if (!fs.exists(staged)) return
-    val live = new org.apache.hadoop.fs.Path(storeDir, bucketName)
-    val trash = new org.apache.hadoop.fs.Path(storeDir, s".trash-$bucketName")
+    val live = new Path(storeDir, bucketName)
+    val trash = new Path(storeDir, s".trash-$bucketName")
     if (fs.exists(trash)) fs.delete(trash, true) // leftover from a healed swap
     if (fs.exists(live)) fs.rename(live, trash)
     fs.rename(staged, live)
@@ -590,36 +610,40 @@ object HamStream {
     * listing); called at the entry of every store write (append and
     * compact), never by a reader, which could race a live swap.
     */
-  def recoverStore(
-      fs: org.apache.hadoop.fs.FileSystem,
-      storeDir: org.apache.hadoop.fs.Path): Unit = {
+  def recoverStore(fs: FileSystem, storeDir: Path): Unit = {
     if (!fs.exists(storeDir)) return
     fs.listStatus(storeDir).foreach { s =>
       val n = s.getPath.getName
       if (n.startsWith(".trash-bucket=")) {
-        val live = new org.apache.hadoop.fs.Path(storeDir, n.stripPrefix(".trash-"))
+        val live = new Path(storeDir, n.stripPrefix(".trash-"))
         if (!fs.exists(live)) fs.rename(s.getPath, live)
         else fs.delete(s.getPath, true)
       }
     }
   }
 
-  /** Point read against the bucketed store — the read-side complement of
+  /** Point read against the store — the read-side complement of
     * [[appendIntoStore]] (reference storage-get semantics,
     * gun/storage.go:79-89: absent ⇒ exists=false, not an error). It runs
     * on the driver and starts no Spark job, whatever the store's size:
-    *   - it lists the key's one bucket dir ([[bucketDir]]);
-    *   - it reads each parquet file there with parquet-hadoop's reader,
+    *   - it lists level 0, then the key's one bucket dir ([[bucketDir]]);
+    *   - it reads every listed parquet file with parquet-hadoop's reader,
     *     which returns only the key's rows, one per un-compacted append
-    *     of the key ([[keyCells]]);
+    *     of the key ([[keyCells]]); the files are read concurrently, on
+    *     the common fork-join pool, so a read waits for its slowest file
+    *     rather than for the sum of them;
     *   - it folds those rows with [[Ham.mergeCells]], the HAM argmax over
     *     (state, canonical JSON) that `HamMerge.mergeSnapshot` computes;
-    *   - a missing store or bucket dir reads as valueExists=false.
-    * Bulk reads and folds keep the distributed scan ([[readBuckets]]).
-    * A compaction that swaps the bucket between the listing and the read
-    * deletes the listed files: opening one, or the listing itself, throws
-    * `FileNotFoundException`, and the read lists once more, which finds
-    * the fold's output. A second miss throws.
+    *   - a missing store, level 0 or bucket dir reads as valueExists=false.
+    * Bulk reads and folds keep the distributed scan ([[readCells]]).
+    * A fold swaps its buckets in and THEN deletes the level-0 files it
+    * folded; listing level 0 first means a fold that lands between the
+    * two listings has deleted level-0 files the read listed. So whenever
+    * a fold lands after the first listing, opening a listed file, or the
+    * bucket listing itself, throws `FileNotFoundException`, and the read
+    * lists once more, which finds the fold's output. (Listed the other
+    * way round, a fold into a bucket that had no files would go unseen.)
+    * A second miss throws.
     */
   def fetchFromStore(
       spark: org.apache.spark.sql.SparkSession,
@@ -627,16 +651,20 @@ object HamStream {
       soul: String,
       field: String,
       numBuckets: Int = DefaultBuckets): graft.core.FetchResult = {
-    val storeDir = new org.apache.hadoop.fs.Path(storePath)
+    import scala.jdk.CollectionConverters._
+    val storeDir = new Path(storePath)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = StoreFs.fileSystem(storeDir, conf)
     checkLayout(fs, storeDir, stamp = false) // a pre-v2 store must error, not miss
     val bucket = bucketIdOf(soul, field, numBuckets)
     def attempt(): Option[Seq[GunCell]] =
-      try Some(bucketDir(fs, storeDir, bucket).toSeq.flatMap(fs.listStatus(_))
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .flatMap(keyCells(_, soul, field, conf)))
-      catch { case _: java.io.FileNotFoundException => None }
+      try {
+        val level0 = level0Files(fs, storeDir)
+        val files = level0 ++ bucketDir(fs, storeDir, bucket).toSeq.flatMap(parquetFiles(fs, _))
+        Some(files.asJava.parallelStream()
+          .map[Seq[GunCell]](keyCells(_, soul, field, conf))
+          .collect(java.util.stream.Collectors.toList[Seq[GunCell]]()).asScala.flatten.toSeq)
+      } catch { case _: java.io.FileNotFoundException => None }
     attempt().orElse(attempt()).getOrElse(throw new java.io.FileNotFoundException(
       s"point read of bucket $bucket in $storePath: the listed files vanished twice " +
         "between listing and read"))
@@ -654,7 +682,7 @@ object HamStream {
     * skips row groups whose statistics exclude the key.
     */
   private def keyCells(
-      file: org.apache.hadoop.fs.FileStatus,
+      file: FileStatus,
       soul: String,
       field: String,
       conf: org.apache.hadoop.conf.Configuration): Seq[GunCell] = {
@@ -682,74 +710,87 @@ object HamStream {
     finally reader.close()
   }
 
-  /** TTL compaction of a bucketed store — the reference's periodic purge
-    * tick (5 s scan dropping cells older than the retention window,
+  /** TTL compaction of a store — the reference's periodic purge tick (5 s
+    * scan dropping cells older than the retention window,
     * gun/storage.go:56-75; 7 h default gun/gun.go:84-85) as a batch job
-    * run on the compaction cadence. Cells with `state < nowMs - ttlMs`
-    * are dropped after the deltas fold to one row per key
-    * ([[compactBuckets]]); surviving buckets rewrite via staging + the
-    * recoverable [[swapBucket]] ordering; buckets left fully expired are
-    * removed outright (an intentional delete, not a swap-crash window).
+    * run on the compaction cadence: the [[compactBuckets]] fold of ALL of
+    * level 0 into EVERY bucket, dropping cells with `state < nowMs - ttlMs`
+    * after the merge. Buckets left fully expired are removed outright (an
+    * intentional delete, not a swap-crash window). `numBuckets` routes the
+    * level-0 cells, so it must be the count the store was written with.
     */
   def compactStore(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       nowMs: Double,
-      ttlMs: Double = graft.operators.HamMerge.DefaultTtlMs): Unit = {
-    val storeDir = new org.apache.hadoop.fs.Path(storePath)
+      ttlMs: Double = graft.operators.HamMerge.DefaultTtlMs,
+      numBuckets: Int = DefaultBuckets): Unit = {
+    val storeDir = new Path(storePath)
     val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(storeDir)) return
     checkLayout(fs, storeDir, stamp = false)
     recoverStore(fs, storeDir)
-    val live = storedBuckets(fs, storeDir)
-    if (live.isEmpty) return
-    compactBuckets(spark, storePath, live, nowMs, ttlMs,
-      stagingName = ".compact-staging")
+    compactBuckets(spark, storePath, numBuckets, level0Files(fs, storeDir).map(_.getPath),
+      storedBuckets(fs, storeDir), nowMs, ttlMs, stagingName = ".compact-staging")
   }
 
-  /** Fold a SUBSET of buckets back to one row per (soul, field) —
-    * merge-then-TTL, the shared body of [[compactStore]] (whole store, the
+  /** The fold of level 0 into the buckets — merge-then-TTL, the shared
+    * body of [[compactStore]] (all of level 0 and every bucket, the
     * caller's retention cadence) and [[appendBatchIntoStore]]'s auto
-    * trigger (only the buckets whose delta count crossed the threshold,
-    * ttl = ∞).
-    *
-    * merge-then-TTL: collapse delta rows to their HAM winner FIRST, then
-    * drop expired winners — an expired winner must not resurrect a
-    * stale-but-in-window loser (reference purge drops the cell outright,
-    * gun/storage.go:56-75). On an already-folded bucket the merge is a
-    * pass-through (one row per key). `bucket` is functionally
-    * determined by the key, so it passes through the merge as a group key.
-    * The scan reads only the requested bucket dirs ([[readBuckets]]), so
-    * per-fold I/O is O(folded-bucket data), not O(store); surviving
-    * buckets rewrite via the recoverable [[swapBucket]] ordering,
-    * fully-expired buckets are removed outright (an intentional delete,
-    * not a swap-crash window).
+    * trigger (the level-0 files it listed, ttl = ∞). In order:
+    *   1. the buckets the `level0` keys touch, by [[bucketOf]] (one small
+    *      job), plus `alsoBuckets`;
+    *   2. `level0` and those buckets' files are read ([[readCells]]: no
+    *      listing job) and HAM-merged, then expired winners are dropped —
+    *      an expired winner must not resurrect a stale-but-in-window loser
+    *      (reference purge drops the cell outright, gun/storage.go:56-75);
+    *   3. the result is written to staged bucket dirs, one file per
+    *      bucket, sorted by (soul, field);
+    *   4. each bucket is swapped in ([[swapBucket]]); a bucket with no
+    *      surviving row is removed outright (an intentional delete, not a
+    *      swap-crash window);
+    *   5. exactly the `level0` files are deleted — a file appended since
+    *      the listing stays for the next fold.
+    * Per-fold I/O is O(level 0 + touched buckets), not O(store). A crash
+    * between 4 and 5 leaves the level-0 cells in both levels: duplicates
+    * the next fold absorbs, as HAM merge is idempotent. Until then a
+    * winner that this fold's TTL filter dropped is still read from its
+    * level-0 file; the next [[compactStore]] drops it.
     */
   private[streaming] def compactBuckets(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
-      bucketNames: Seq[String],
+      numBuckets: Int,
+      level0: Seq[Path],
+      alsoBuckets: Seq[Int],
       nowMs: Double,
       ttlMs: Double,
       stagingName: String): Unit = {
     import org.apache.spark.sql.functions.{col, lit}
-    val storeDir = new org.apache.hadoop.fs.Path(storePath)
+    val storeDir = new Path(storePath)
     val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
-    val ids = bucketNames.map(_.stripPrefix("bucket=").toLong)
-    val kept = graft.operators.HamMerge
-      .mergeSnapshot(readBuckets(spark, storePath, ids), passThrough = Seq("bucket"))
+    val bucket = bucketOf(col("soul"), col("field"), numBuckets).cast("int")
+    val touched = (alsoBuckets ++ (if (level0.isEmpty) Nil
+      else readCells(spark, level0).select(bucket).distinct().collect().map(_.getInt(0)))).distinct
+    if (touched.isEmpty) return
+    val bases = touched.flatMap(bucketDir(fs, storeDir, _)).flatMap(parquetFiles(fs, _))
+    val kept = graft.operators.HamMerge.mergeSnapshot(readCells(spark, level0 ++ bases.map(_.getPath)))
       .filter(col("state") >= lit(nowMs - ttlMs))
-    val staging = new org.apache.hadoop.fs.Path(storePath, stagingName)
-    // one task per folded bucket: the fold must not RAISE the bucket's
-    // file count (a 32-task write of 3 buckets would)
-    kept.repartition(ids.length, col("bucket"))
+      .withColumn("bucket", bucket)
+    val staging = new Path(storePath, stagingName)
+    // hashed on the bucket, so each bucket is in one task and gets one
+    // file; at most one task per shuffle partition, as a task per bucket
+    // would pay a task's fixed cost per file
+    kept.repartition(touched.length min spark.sessionState.conf.numShufflePartitions, col("bucket"))
+      .sortWithinPartitions("bucket", "soul", "field")
       .write.options(StoreFs.writeOptions(staging, spark.sparkContext.hadoopConfiguration))
       .mode("overwrite").partitionBy("bucket").parquet(staging.toString)
-    bucketNames.foreach { name =>
-      val next = new org.apache.hadoop.fs.Path(staging, name)
-      if (fs.exists(next)) swapBucket(fs, storeDir, name, next)
-      else fs.delete(new org.apache.hadoop.fs.Path(storeDir, name), true) // fully expired
+    touched.foreach { b =>
+      val next = new Path(staging, s"bucket=$b")
+      if (fs.exists(next)) swapBucket(fs, storeDir, s"bucket=$b", next)
+      else fs.delete(new Path(storeDir, s"bucket=$b"), true) // fully expired
     }
+    level0.foreach(fs.delete(_, false))
     fs.delete(staging, true)
   }
 }

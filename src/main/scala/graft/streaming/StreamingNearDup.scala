@@ -15,10 +15,9 @@ import org.apache.spark.sql.types._
   * then match each live update against registered interest) is the
   * pattern: here the "interest set" is the LSH band-bucket index of
   * every document seen so far, persisted as a bucket-partitioned
-  * parquet store built with the same machinery as
-  * [[HamStream.appendIntoStore]]'s LSM delta sink (per-batch staged
-  * write → idempotent parallel rename promotion → file-count-triggered
-  * per-bucket compaction).
+  * parquet store built with [[BucketIndex]]'s LSM machinery (per-batch
+  * staged write → idempotent parallel rename promotion →
+  * file-count-triggered per-bucket compaction).
   *
   * Per micro-batch:
   *   1. MinHash signatures + band keys for the batch docs (map-side;

@@ -102,7 +102,7 @@ final class SubscriptionHub(
   }
 
   /** Register a listener that first receives the store's CURRENT value
-    * (a driver-side point read of the key's bucket, no Spark job;
+    * (a driver-side point read of level 0 and the key's bucket, no Spark job;
     * absent ⇒ nothing) and
     * then every live transition — the snapshot-then-stream `Fetch`
     * contract. The

@@ -9,8 +9,9 @@ import scala.jdk.CollectionConverters._
 
 /** The local file system under a `counted:` scheme: `counted:///tmp/x` is
   * the local `/tmp/x`. It records each file it opens and each dir it
-  * lists, and runs a hook after each listing, so a spec can bound what a
-  * store read touches and act between a read's listing and its opens.
+  * lists, and runs a hook after each listing and after each status lookup
+  * (`exists` is one), so a spec can bound what a store read touches and
+  * act between a read's lookups, listings and opens.
   */
 class CountedFs extends RawLocalFileSystem {
   override def getUri: java.net.URI = CountedFs.Uri
@@ -26,6 +27,15 @@ class CountedFs extends RawLocalFileSystem {
     CountedFs.afterListing(f)
     statuses
   }
+
+  override def getFileStatus(f: Path): FileStatus =
+    try super.getFileStatus(f)
+    finally CountedFs.afterStatus(f)
+
+  // the local `exists` asks java.io.File, not getFileStatus
+  override def exists(f: Path): Boolean =
+    try super.exists(f)
+    finally CountedFs.afterStatus(f)
 }
 
 object CountedFs {
@@ -33,6 +43,7 @@ object CountedFs {
   private val opened = new ConcurrentLinkedQueue[Path]
   private val listed = new ConcurrentLinkedQueue[Path]
   @volatile private var afterListing: Path => Unit = _ => ()
+  @volatile private var afterStatus: Path => Unit = _ => ()
 
   /** Local dir `dir` under the `counted:` scheme, which `conf` now maps to
     * this file system.
@@ -49,16 +60,22 @@ object CountedFs {
   }
 
   /** What `op` opens and lists through the `counted:` scheme, running
-    * `hook` on each listed dir after its listing.
+    * `hook` on each listed dir after its listing, and `statusHook` on each
+    * path after its status lookup, found or not.
     */
-  def during[T](hook: Path => Unit = _ => ())(op: => T): (T, Touched) = {
+  def during[T](hook: Path => Unit = _ => (), statusHook: Path => Unit = _ => ())(
+      op: => T): (T, Touched) = {
     opened.clear()
     listed.clear()
     afterListing = hook
+    afterStatus = statusHook
     try {
       val r = op
       (r, Touched(opened.asScala.toSeq, listed.asScala.toSeq))
-    } finally afterListing = _ => ()
+    } finally {
+      afterListing = _ => ()
+      afterStatus = _ => ()
+    }
   }
 
   /** The production point read of key (soul, field) in local store `dir`,

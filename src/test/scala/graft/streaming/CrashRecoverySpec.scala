@@ -15,7 +15,9 @@ import org.scalatest.time.{Seconds, Span}
   * range and BEFORE any store write, restarts from the same checkpoint,
   * replays the range from the journal, and converges to exactly the store
   * a no-crash run produces (at-least-once replay + HAM idempotence =
-  * effectively-once) — and the heal of a compaction interrupted mid-swap.
+  * effectively-once). The same restart after the batch's level-0 file
+  * was promoted, and the heal of a fold interrupted mid-swap or between
+  * its swaps and its level-0 delete.
   */
 class CrashRecoverySpec extends SparkSuite with TimeLimitedTests {
 
@@ -26,26 +28,40 @@ class CrashRecoverySpec extends SparkSuite with TimeLimitedTests {
   override val defaultTestSignaler = SparkSuite.cancelAllJobs
 
   test("crash after WAL journal, before DELTA append: restart converges the store") {
+    crashAndRestart("dcrash", afterAppend = false)
+  }
+
+  test("crash after the level-0 promotion, before the batch commits: the replay skips the rename") {
+    crashAndRestart("l0crash", afterAppend = true)
+  }
+
+  /** A query that dies in its first batch, before or after the store
+    * append, restarted from the same checkpoint.
+    */
+  private def crashAndRestart(tag: String, afterAppend: Boolean): Unit = {
     val spark2 = spark
     import spark2.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("gun_dcrash_ckpt").toString
-    val storeDir = java.nio.file.Files.createTempDirectory("gun_dcrash_store").toString
+    val ckpt = java.nio.file.Files.createTempDirectory(s"gun_${tag}_ckpt").toString
+    val storeDir = java.nio.file.Files.createTempDirectory(s"gun_${tag}_store").toString
     val storePath = s"$storeDir/store"
     val (ours, theirs) = InMemoryPeerConn.pair()
-    InMemoryPeerConn.register("dcrash-src", ours)
+    InMemoryPeerConn.register(s"$tag-src", ours)
     val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
 
     def startQuery(injectCrash: Boolean) = {
       val frames = spark.readStream.format("gun")
-        .option("conn", "dcrash-src").option("pid", "spark-engine").load()
+        .option("conn", s"$tag-src").option("pid", "spark-engine").load()
       val cells = GunWire.framesToCells(frames, "frame").as[GunCell]
       HamStream.updates(cells, timers = false).writeStream
         .outputMode("append")
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[HamStream.Update], batchId: Long) =>
-          if (injectCrash && !batch.isEmpty && crashed.compareAndSet(false, true))
+          if (injectCrash && !afterAppend && !batch.isEmpty && crashed.compareAndSet(false, true))
             throw new RuntimeException("injected crash: after WAL, before append")
           HamStream.appendBatchIntoStore(batch, batchId, storePath, numBuckets = 8)
+          if (injectCrash && afterAppend && StoreFiles.level0(storePath).nonEmpty &&
+              crashed.compareAndSet(false, true))
+            throw new RuntimeException("injected crash: after the level-0 promotion, before commit")
         }
         .start()
     }
@@ -63,7 +79,9 @@ class CrashRecoverySpec extends SparkSuite with TimeLimitedTests {
 
       val fs = new org.apache.hadoop.fs.Path(storePath)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(storePath)))
+      val crashedBatch = StoreFiles.level0(storePath).map(_.getName)
+      if (afterAppend) assert(crashedBatch.size == 1, s"level 0 after the crash: $crashedBatch")
+      else assert(!fs.exists(new org.apache.hadoop.fs.Path(storePath)))
 
       // restart: the journaled range replays through the APPEND path; a
       // second write both proves progress and (replayed or not) only adds
@@ -90,9 +108,15 @@ class CrashRecoverySpec extends SparkSuite with TimeLimitedTests {
         assert(rows == Set(
           ("ds", "f", "v1", 1000.0),
           ("ds2", "g", "v2", 2000.0)))
+        // a replay of the promoted batch finds its name taken: the
+        // crashed batch's cell is in level 0 once
+        if (afterAppend) {
+          assert(StoreFiles.level0(storePath).map(_.getName).count(crashedBatch.contains) == 1)
+          assert(StoreFiles.rawCells(spark, storePath).filter($"soul" === "ds").count() == 1)
+        }
       } finally q2.stop()
     } finally {
-      InMemoryPeerConn.unregister("dcrash-src")
+      InMemoryPeerConn.unregister(s"$tag-src")
       theirs.close(); ours.close()
     }
   }
@@ -108,6 +132,7 @@ class CrashRecoverySpec extends SparkSuite with TimeLimitedTests {
     HamStream.appendBatchIntoStore(
       Seq(Update("s1", "f", GunValue.string("v1"), 1000)).toDS(),
       0L, storePath, buckets)
+    StoreFiles.fold(spark, storePath, buckets)
     // simulate the swapBucket crash window inside the auto-compaction fold:
     // live renamed to trash (step 1 done), staged never promoted (step 2
     // lost with the staging dir) — the bucket is ABSENT from the live tree
@@ -135,8 +160,56 @@ class CrashRecoverySpec extends SparkSuite with TimeLimitedTests {
     HamStream.appendBatchIntoStore(
       Seq(Update("s1", "f", GunValue.string("v2"), 2000)).toDS(),
       1L, storePath, buckets)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(storePath, ".trash-bucket=0")))
     val r = HamStream.fetchFromStore(spark, storePath, "s1", "f", buckets)
     assert(r.value.contains(GunValue.string("v2")) && r.state.contains(2000.0))
-    assert(spark.read.parquet(storePath).count() == 2) // both generations present
+    // both generations present: v1 in the bucket, v2 in level 0
+    assert(spark.read.parquet(storePath).count() == 1)
+    assert(StoreFiles.rawCells(spark, storePath).count() == 2)
+  }
+
+  test("crash between a fold's swaps and its level-0 delete: reads hold, the next fold absorbs") {
+    val spark2 = spark
+    import spark2.implicits._
+    import graft.core.GunValue
+    import graft.streaming.HamStream.Update
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val storePath =
+      java.nio.file.Files.createTempDirectory("gun_fcrash_store").toString + "/store"
+    val buckets = 4
+    HamStream.appendBatchIntoStore(
+      Seq(Update("s1", "f", GunValue.string("old"), 1000),
+        Update("s2", "f", GunValue.string("keep"), 9000),
+        Update("s3", "f", GunValue.string("expired"), 1000)).toDS(),
+      0L, storePath, buckets, compactThreshold = 0)
+    HamStream.appendBatchIntoStore(
+      Seq(Update("s1", "f", GunValue.string("new"), 8000)).toDS(),
+      1L, storePath, buckets, compactThreshold = 0)
+    // the TTL fold runs through its swaps, and the crash takes its level-0
+    // delete: level 0 still holds both files it folded
+    val level0 = StoreFiles.level0(storePath).map(_.toPath)
+    val saved = Files.createTempDirectory("gun_fcrash_l0")
+    level0.foreach(f => Files.copy(f, saved.resolve(f.getFileName)))
+    HamStream.compactStore(spark, storePath, nowMs = 10000, ttlMs = 5000, numBuckets = buckets)
+    assert(StoreFiles.level0(storePath).isEmpty)
+    level0.foreach(f => Files.copy(saved.resolve(f.getFileName), f,
+      StandardCopyOption.REPLACE_EXISTING))
+
+    // every key reads its winner; s1 and s2 are in both levels
+    def point(soul: String) =
+      HamStream.fetchFromStore(spark, storePath, soul, "f", buckets).value.flatMap(_.str)
+    assert(point("s1").contains("new") && point("s2").contains("keep"))
+    assert(StoreFiles.rawCells(spark, storePath).filter($"soul" === "s1").count() == 3)
+    // the one TTL nuance: the fold dropped s3, but its level-0 file was
+    // not deleted, so s3 reads until the next fold
+    assert(point("s3").contains("expired"))
+
+    // the next fold (a TTL compaction) absorbs the duplicates and drops s3
+    HamStream.compactStore(spark, storePath, nowMs = 10000, ttlMs = 5000, numBuckets = buckets)
+    assert(StoreFiles.level0(storePath).isEmpty)
+    val rows = StoreFiles.rawCells(spark, storePath).select("soul", "value.str").as[(String, String)]
+      .collect().toSet
+    assert(rows == Set(("s1", "new"), ("s2", "keep")))
+    assert(point("s3").isEmpty)
   }
 }

@@ -7,11 +7,11 @@ import org.scalatest.concurrent.TimeLimitedTests
 import org.scalatest.time.{Seconds, Span}
 
 /** The LSM-style delta store ([[HamStream.appendIntoStore]]): per-batch
-  * I/O is O(batch) — each micro-batch lands as immutable delta files in
-  * the bucket dirs it touches — and every read collapses to the HAM
-  * winner, so correctness holds at any compaction lag. Point reads stay
-  * bucket-pruned; [[HamStream.compactStore]] folds the deltas back to one
-  * row per key; at-least-once replay (duplicate appends) is idempotent.
+  * I/O is O(batch) — each micro-batch lands as one immutable level-0
+  * file — and every read collapses to the HAM winner, so correctness
+  * holds at any compaction lag. Point reads open level 0 and one bucket;
+  * [[HamStream.compactStore]] folds level 0 into the buckets, one row per
+  * key; at-least-once replay (duplicate appends) is idempotent.
   */
 class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
   import spark.implicits._
@@ -38,18 +38,12 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
       1L, dir, NumBuckets)
 
     // raw store carries both generations of s1/f (append-only)...
-    assert(spark.read.parquet(dir)
+    assert(StoreFiles.rawCells(spark, dir)
       .filter($"soul" === "s1" && $"field" === "f").count() == 2)
-    // ...as ONE delta file per touched bucket per batch (the repartition
-    // bound on file-count growth between compactions)
-    new java.io.File(dir).listFiles().filter(_.getName.startsWith("bucket="))
-      .foreach { b =>
-        val perBatch = b.listFiles().filter(_.getName.endsWith(".parquet"))
-          .groupBy(_.getName.split("-")(1))
-        perBatch.foreach { case (batch, files) =>
-          assert(files.length == 1, s"${b.getName} batch $batch: ${files.length} files")
-        }
-      }
+    // ...as ONE level-0 file per batch, whatever buckets its keys route
+    // to, and no bucket dir before a fold
+    assert(StoreFiles.level0(dir).map(_.getName) == Seq("delta-b0.parquet", "delta-b1.parquet"))
+    assert(StoreFiles.buckets(dir).isEmpty)
     // ...but the point read returns the winner
     val r = HamStream.fetchFromStore(spark, dir, "s1", "f", NumBuckets)
     assert(r.value.contains(GunValue.string("new")) && r.state.contains(2000.0))
@@ -64,6 +58,7 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
     val batch = Seq(Update("s1", "f", GunValue.string("v"), 1000)).toDS()
     HamStream.appendBatchIntoStore(batch, 0L, dir, NumBuckets)
     HamStream.appendBatchIntoStore(batch, 0L, dir, NumBuckets) // WAL replay
+    assert(StoreFiles.level0(dir).map(_.getName) == Seq("delta-b0.parquet"))
     val r = HamStream.fetchFromStore(spark, dir, "s1", "f", NumBuckets)
     assert(r.value.contains(GunValue.string("v")))
     assert(HamStream.readStore(spark, dir).count() == 1)
@@ -80,7 +75,8 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
       // merge-then-TTL must drop the cell, not resurrect the in-window loser
       Seq(Update("s1", "f", GunValue.string("winner-expired"), 2000)).toDS(),
       1L, dir, NumBuckets)
-    HamStream.compactStore(spark, dir, nowMs = 10000, ttlMs = 5000)
+    HamStream.compactStore(spark, dir, nowMs = 10000, ttlMs = 5000, numBuckets = NumBuckets)
+    assert(StoreFiles.level0(dir).isEmpty)
     val rows = spark.read.parquet(dir)
       .select("soul", "value.str").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
@@ -92,22 +88,21 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
   test("auto-compaction bounds the per-bucket delta-file count over a long run") {
     val dir = newDir()
     val threshold = 4
-    val buckets = 2 // few buckets so every batch touches all of them
-    def maxFiles(): Int = {
-      val bs = new java.io.File(dir).listFiles()
-        .filter(_.getName.startsWith("bucket="))
-      if (bs.isEmpty) 0
-      else bs.map(_.listFiles().count(_.getName.endsWith(".parquet"))).max
-    }
+    val buckets = 2 // few buckets so every fold touches all of them
+    // what a point read opens: level 0 and one bucket's files
+    def maxFiles(): Int =
+      StoreFiles.level0(dir).size + (StoreFiles.buckets(dir).values.map(_.size) ++ Seq(0)).max
     for (b <- 0 until 30) {
       HamStream.appendBatchIntoStore(
         Seq(Update("s1", "f", GunValue.string(s"v$b"), 1000.0 + b),
           Update("s2", "g", GunValue.string(s"w$b"), 1000.0 + b)).toDS(),
         b.toLong, dir, buckets, compactThreshold = threshold)
       // invariant at EVERY batch, not just the end: the trigger fires the
-      // moment a bucket crosses the threshold, folding it back to 1 file
-      assert(maxFiles() <= threshold,
-        s"batch $b: a bucket holds ${maxFiles()} delta files (> $threshold)")
+      // moment level 0 reaches the threshold, folding it into buckets of
+      // one file each
+      assert(StoreFiles.level0(dir).size < threshold && maxFiles() <= threshold,
+        s"batch $b: level 0 holds ${StoreFiles.level0(dir).size} files, a read opens " +
+          s"${maxFiles()} (> $threshold)")
     }
     // folded store still reads to the latest HAM winner
     val r = HamStream.fetchFromStore(spark, dir, "s1", "f", buckets)
@@ -125,9 +120,11 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
       HamStream.appendBatchIntoStore(
         Seq(Update("s1", "f", GunValue.string(s"v$b"), 1000.0 + b)).toDS(),
         b.toLong, dir, 1, compactThreshold = 0)
-    val files = new java.io.File(dir + "/bucket=0").listFiles()
-      .count(_.getName.endsWith(".parquet"))
+    // a batch with no rows (an idle timer batch) adds no file
+    HamStream.appendBatchIntoStore(Seq.empty[Update].toDS(), 6L, dir, 1, compactThreshold = 0)
+    val files = StoreFiles.level0(dir).size
     assert(files == 6, s"expected 6 uncompacted deltas, found $files")
+    assert(StoreFiles.buckets(dir).isEmpty)
     assert(HamStream.readStore(spark, dir).count() == 1)
   }
 
@@ -137,34 +134,45 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
       (1 to 200).map(i =>
         Update(s"soul$i", "f", GunValue.number(i.toLong), 1000)).toDS(),
       0L, dir, NumBuckets)
+    StoreFiles.fold(spark, dir, NumBuckets)
+    HamStream.appendBatchIntoStore(
+      (1 to 20).map(i => Update(s"soul$i", "f", GunValue.number(-i.toLong), 2000)).toDS(),
+      1L, dir, NumBuckets)
     val bucket = s"bucket=${HamStream.bucketIdOf("soul7", "f", NumBuckets)}"
     val (hit, jobs, touched) = CountedFs.pointRead(spark, dir, "soul7", "f", NumBuckets)
-    assert(hit == FetchResult("f", Some(GunValue.number(7L)), Some(1000.0), valueExists = true))
+    assert(hit == FetchResult("f", Some(GunValue.number(-7L)), Some(2000.0), valueExists = true))
     assert(jobs == 0, s"a point read must run no Spark job, ran $jobs")
     // of the store's files, the read opens the layout marker and, once
-    // each, the key's bucket files
-    val bucketFiles = new java.io.File(dir, bucket).list().toSeq
-      .filter(_.endsWith(".parquet")).map(f => s"$bucket/$f")
-    assert(touched.openedUnder(dir) == (bucketFiles :+ "_layout").sorted)
+    // each, the key's bucket files and the level-0 files
+    val bucketFiles = StoreFiles.buckets(dir)(bucket).map(f => s"$bucket/${f.getName}")
+    val level0 = StoreFiles.level0(dir).map(f => s"_l0/${f.getName}")
+    assert(bucketFiles.size == 1 && level0.size == 1)
+    assert(touched.openedUnder(dir) == (bucketFiles ++ level0 :+ "_layout").sorted)
+    // a key level 0 does not hold reads from its bucket base
+    assert(HamStream.fetchFromStore(spark, dir, "soul70", "f", NumBuckets) ==
+      FetchResult("f", Some(GunValue.number(70L)), Some(1000.0), valueExists = true))
   }
 
   test("a compaction swap between a point read's listing and its scan: the read lists again") {
     val dir = newDir()
-    for (b <- 0 until 3)
+    HamStream.appendBatchIntoStore(
+      Seq(Update("s1", "f", GunValue.string("base"), 999.0)).toDS(), 0L, dir, NumBuckets)
+    StoreFiles.fold(spark, dir, NumBuckets)
+    for (b <- 1 to 3)
       HamStream.appendBatchIntoStore(
         Seq(Update("s1", "f", GunValue.string(s"v$b"), 1000.0 + b)).toDS(),
         b.toLong, dir, NumBuckets, compactThreshold = 0)
     val bucket = s"bucket=${HamStream.bucketIdOf("s1", "f", NumBuckets)}"
     val counted = CountedFs.path(dir, spark.sparkContext.hadoopConfiguration)
     // the production read; its first listing of the key's bucket is
-    // followed by a fold of the bucket, which swaps the bucket dir and
-    // deletes the three listed delta files before the read opens them
+    // followed by a fold, which swaps the bucket dir and deletes the
+    // listed base and level-0 files before the read opens them
     var folded = false
     def foldOnce(listed: org.apache.hadoop.fs.Path): Unit =
       if (listed.getName == bucket && !folded) {
         folded = true
-        HamStream.compactBuckets(spark, dir, Seq(bucket), nowMs = 0.0,
-          ttlMs = Double.PositiveInfinity, stagingName = ".compact-staging-race")
+        HamStream.compactBuckets(spark, dir, NumBuckets, StoreFiles.level0Paths(dir), Nil,
+          nowMs = 0.0, ttlMs = Double.PositiveInfinity, stagingName = ".compact-staging-race")
       }
     val ((hit, touched), logged) = graft.SparkSuite.warningsDuring {
       CountedFs.during(foldOnce) {
@@ -173,9 +181,55 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
     }
     assert(folded)
     assert(touched.listed.count(_.getName == bucket) == 2, "the read lists the bucket twice")
-    assert(hit == FetchResult("f", Some(GunValue.string("v2")), Some(1002.0), valueExists = true),
+    assert(hit == FetchResult("f", Some(GunValue.string("v3")), Some(1003.0), valueExists = true),
       "the second listing reads the folded winner")
     assert(logged.isEmpty, s"the recovered read logs no WARN or ERROR: ${logged.take(3)}")
+  }
+
+  test("a fold between a point read's level-0 and bucket listings: the read lists again") {
+    // the fold lands right after the read lists level 0, looks the key's
+    // bucket up or lists it, into a bucket that had no files yet and into
+    // one with a base; the read must never return what the store held
+    // before the fold, nor miss the fold's output. (A read that looked
+    // the bucket up before listing level 0 would miss it: the fold would
+    // make the bucket after the lookup and empty level 0 before its
+    // listing.)
+    val cases = Seq((false, "listing", "_l0"), (false, "lookup", "bucket="),
+      (true, "listing", "_l0"), (true, "lookup", "bucket="), (true, "listing", "bucket="))
+    for ((withBase, event, after) <- cases) {
+      val dir = newDir()
+      if (withBase) {
+        HamStream.appendBatchIntoStore(
+          Seq(Update("s1", "f", GunValue.string("base"), 999.0)).toDS(), 0L, dir, NumBuckets)
+        StoreFiles.fold(spark, dir, NumBuckets)
+      }
+      for (b <- 1 to 2)
+        HamStream.appendBatchIntoStore(
+          Seq(Update("s1", "f", GunValue.string(s"v$b"), 1000.0 + b)).toDS(),
+          b.toLong, dir, NumBuckets, compactThreshold = 0)
+      val bucket = s"bucket=${HamStream.bucketIdOf("s1", "f", NumBuckets)}"
+      val counted = CountedFs.path(dir, spark.sparkContext.hadoopConfiguration)
+      var folded = false
+      def foldOnce(path: org.apache.hadoop.fs.Path): Unit =
+        if (path.getName.startsWith(after) && !folded) {
+          folded = true
+          HamStream.compactBuckets(spark, dir, NumBuckets, StoreFiles.level0Paths(dir), Nil,
+            nowMs = 0.0, ttlMs = Double.PositiveInfinity, stagingName = ".compact-staging-race")
+        }
+      val (hit, touched) =
+        if (event == "listing") CountedFs.during(hook = foldOnce) {
+          HamStream.fetchFromStore(spark, counted, "s1", "f", NumBuckets)
+        }
+        else CountedFs.during(statusHook = foldOnce) {
+          HamStream.fetchFromStore(spark, counted, "s1", "f", NumBuckets)
+        }
+      val clue = s"base $withBase, fold after the $after $event"
+      assert(folded, clue)
+      assert(StoreFiles.level0(dir).isEmpty && StoreFiles.buckets(dir).contains(bucket), clue)
+      assert(touched.listed.count(_.getName == "_l0") == 2, s"$clue: the read lists again")
+      assert(hit == FetchResult("f", Some(GunValue.string("v2")), Some(1002.0), valueExists = true),
+        s"$clue: read $hit")
+    }
   }
 
   test("a point read inside a compaction swap reads the parked bucket and renames nothing") {
@@ -185,11 +239,14 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
       HamStream.appendBatchIntoStore(
         Seq(Update("s1", "f", GunValue.string(s"v$b"), 1000.0 + b)).toDS(),
         b.toLong, dir, NumBuckets, compactThreshold = 0)
+    StoreFiles.fold(spark, dir, NumBuckets)
     val bucket = s"bucket=${HamStream.bucketIdOf("s1", "f", NumBuckets)}"
     // the bucket's fold, staged in a store of its own
     val folded = newDir()
     HamStream.appendBatchIntoStore(Seq(Update("s1", "f", GunValue.string("v1"), 1001.0)).toDS(),
       0L, folded, NumBuckets)
+    StoreFiles.fold(spark, folded, NumBuckets)
+    val foldOutput = StoreFiles.buckets(folded)(bucket).map(_.getName)
     val storeDir = new Path(dir)
     val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
     val winner = FetchResult("f", Some(GunValue.string("v1")), Some(1001.0), valueExists = true)
@@ -209,8 +266,57 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
     val live = new Path(storeDir, bucket)
     assert(!fs.exists(new Path(live, bucket)), "the staged dir must not nest into the live one")
     assert(fs.listStatus(live).map(_.getPath.getName).filter(_.endsWith(".parquet")).toSeq ==
-      Seq("delta-b0-0.parquet"), "the live bucket is the fold's output")
+      foldOutput, "the live bucket is the fold's output")
     assert(HamStream.fetchFromStore(spark, dir, "s1", "f", NumBuckets) == winner)
+  }
+
+  test("stream equals batch: any cut of a history through level 0 and its folds (property)") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // few keys over few buckets, so keys share buckets and batches; states
+    // from four values, so equal-state ties (broken by canonical JSON) and
+    // stale writes are common
+    val keys = for (s <- 0 until 4; f <- Seq("f", "g")) yield (s"s$s", f)
+    val cell = for {
+      (soul, field) <- Gen.oneOf(keys)
+      v <- Gen.oneOf(GunValue.string("a"), GunValue.string("b"), GunValue.number(7L),
+        GunValue.bool(true), GunValue(graft.core.ValueKind.Null))
+      st <- Gen.choose(1, 4).map(_ * 1000.0)
+    } yield Update(soul, field, v, st)
+    val buckets = 4
+    for (seed <- 0 until 4) {
+      val params = Gen.Parameters.default.withSize(40)
+      val history = Gen.listOfN(30, cell)(params, Seed(9300L + seed)).get
+      // cut points: 2-7 batches of any size, empty ones included
+      val cuts = Gen.listOfN(6, Gen.choose(0, history.size))(params, Seed(9400L + seed)).get
+      val bounds = (0 +: cuts.take(1 + seed) :+ history.size).sorted
+      val threshold = Seq(1, 2, 3, 5)(seed)
+      // after which batches a fold also runs whose listing predates the
+      // batch: the batch's own level-0 file is not its to fold or delete
+      val lagging = Gen.listOfN(bounds.size, Gen.prob(0.5))(params, Seed(9500L + seed)).get
+      val dir = newDir()
+      bounds.zip(bounds.tail).zipWithIndex.foreach { case ((from, to), b) =>
+        HamStream.appendBatchIntoStore(history.slice(from, to).toDS(), b.toLong, dir, buckets,
+          compactThreshold = threshold)
+        if (lagging(b))
+          HamStream.compactBuckets(spark, dir, buckets,
+            StoreFiles.level0Paths(dir).filterNot(_.getName == s"delta-b$b.parquet"), Nil,
+            nowMs = 0.0, ttlMs = Double.PositiveInfinity, stagingName = s".compact-staging-lag$b")
+      }
+      val want = graft.operators.HamMerge.mergeSnapshot(history.toDS().toDF()
+          .withColumn("valueExists", org.apache.spark.sql.functions.lit(true)))
+        .as[GunCell].collect().map(c => (c.soul, c.field) -> c).toMap
+      val clue = s"seed ${9300 + seed}, cuts $bounds, threshold $threshold, lagging $lagging"
+      val got = HamStream.readStore(spark, dir, buckets).as[GunCell].collect()
+      assert(got.map(c => (c.soul, c.field) -> c).toMap == want, clue)
+      keys.foreach { case (soul, field) =>
+        val read = HamStream.fetchFromStore(spark, dir, soul, field, buckets)
+        val expected = want.get((soul, field)).fold(
+          FetchResult(field, None, None, valueExists = false))(c =>
+          FetchResult(field, Some(c.value), Some(c.state), c.valueExists))
+        assert(read == expected, s"$clue: ($soul, $field)")
+      }
+    }
   }
 
   test("point read's driver-side collapse equals readStore's merged row (property)") {

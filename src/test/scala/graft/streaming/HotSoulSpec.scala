@@ -38,6 +38,7 @@ class HotSoulSpec extends SparkSuite with TimeLimitedTests {
   test("viral soul spreads across buckets; per-bucket rewrite stays bounded") {
     val dir = java.nio.file.Files.createTempDirectory("hot_soul").toString + "/cells"
     HamStream.appendBatchIntoStore(corpus.toDS(), 0L, dir, NumBuckets)
+    StoreFiles.fold(spark, dir, NumBuckets)
 
     // bucket comes back as int (partition-column type inference)
     val byBucket = spark.read.parquet(dir)
@@ -54,23 +55,24 @@ class HotSoulSpec extends SparkSuite with TimeLimitedTests {
       .select("bucket").distinct().count()
     assert(viralBuckets >= NumBuckets / 2, s"viral soul in $viralBuckets buckets")
 
-    // a later batch updating ONE field of the hot soul adds a delta to
-    // one bucket, and folding that bucket rewrites a near-average bucket,
-    // not the whole soul's footprint
+    // a later batch updating ONE field of the hot soul adds one level-0
+    // file, and its fold rewrites only the key's bucket, a near-average
+    // bucket, not the whole soul's footprint
     HamStream.appendBatchIntoStore(
       Seq(Update("viral", "field1", GunValue.number(9999L), 2000)).toDS(),
-      1L, dir, NumBuckets)
+      1L, dir, NumBuckets, compactThreshold = 0)
     val touched = s"bucket=${HamStream.bucketIdOf("viral", "field1", NumBuckets)}"
-    val withBatch1 = new java.io.File(dir).listFiles()
-      .filter(d => d.getName.startsWith("bucket=") &&
-        d.listFiles().exists(_.getName.startsWith("delta-b1-")))
-      .map(_.getName)
-    assert(withBatch1.toSeq == Seq(touched), s"batch 1 landed in ${withBatch1.toSeq}")
+    assert(StoreFiles.level0(dir).map(_.getName) == Seq("delta-b1.parquet"))
     def touchedRows() = spark.read.parquet(s"$dir/$touched").count()
-    val folded = touchedRows()
+    val folded = touchedRows() + 1 // the bucket base and the level-0 row
     assert(folded < 150, s"fold scope $folded rows (soul size is 300)")
-    HamStream.compactBuckets(spark, dir, Seq(touched), nowMs = 0.0,
-      ttlMs = Double.PositiveInfinity, stagingName = ".compact-staging-hot")
+    val before = StoreFiles.buckets(dir)
+    HamStream.compactBuckets(spark, dir, NumBuckets, StoreFiles.level0Paths(dir), Nil,
+      nowMs = 0.0, ttlMs = Double.PositiveInfinity, stagingName = ".compact-staging-hot")
+    val after = StoreFiles.buckets(dir)
+    assert(after.keySet == before.keySet)
+    val rewritten = after.keySet.filter(b => after(b) != before(b))
+    assert(rewritten == Set(touched), s"the fold rewrote $rewritten")
     assert(touchedRows() == folded - 1, "the fold collapses field1's two generations")
 
     // correctness: the point read still finds the updated cell in one bucket

@@ -11,10 +11,10 @@ import org.scalatest.time.{Seconds, Span}
   * (`store.filter(c => c.soul == ...)`) deserialized every store row and
   * defeated both Parquet pushdown and bucket pruning — a full scan per new
   * subscriber at 100× store size. The path-based form routes through
-  * [[HamStream.fetchFromStore]], which reads the key's one bucket dir on
-  * the driver; this spec runs that PRODUCTION read through a file system
-  * that records what it opens, and asserts no Spark job and the one-bucket
-  * bound.
+  * [[HamStream.fetchFromStore]], which reads level 0 and the key's one
+  * bucket dir on the driver; this spec runs that PRODUCTION read through a
+  * file system that records what it opens, and asserts no Spark job and
+  * the one-bucket bound.
   */
 class SnapshotPruningSpec extends SparkSuite with TimeLimitedTests {
 
@@ -35,18 +35,26 @@ class SnapshotPruningSpec extends SparkSuite with TimeLimitedTests {
       (1 to 400).map(i =>
         Update(s"soul$i", "f", GunValue.number(i.toLong), 1000)).toDS(),
       0L, dir, NumBuckets)
-    assert(new java.io.File(dir).listFiles()
-      .count(_.getName.startsWith("bucket=")) == NumBuckets)
+    StoreFiles.fold(spark, dir, NumBuckets)
+    assert(StoreFiles.buckets(dir).size == NumBuckets)
+    // and an un-compacted batch in level 0
+    HamStream.appendBatchIntoStore(
+      (1 to 40).map(i => Update(s"soul$i", "g", GunValue.number(i.toLong), 1000)).toDS(),
+      1L, dir, NumBuckets)
 
     val bucket = s"bucket=${HamStream.bucketIdOf("soul7", "f", NumBuckets)}"
     val (hit, jobs, touched) = CountedFs.pointRead(spark, dir, "soul7", "f", NumBuckets)
     assert(hit.value.contains(GunValue.number(7L)))
     assert(jobs == 0, s"a point read must run no Spark job, ran $jobs")
     // the bucket dirs whose files the read opened
-    val bucketsRead = touched.openedUnder(dir).filter(_.endsWith(".parquet"))
+    val bucketsRead = touched.openedUnder(dir).filter(_.startsWith("bucket="))
       .map(_.takeWhile(_ != '/')).distinct
     assert(bucketsRead == Seq(bucket),
       s"point read must prune to ONE bucket dir, read $bucketsRead of $NumBuckets")
+    // of the store's files: the key's bucket files, level 0 and the marker
+    val want = StoreFiles.buckets(dir)(bucket).map(f => s"$bucket/${f.getName}") ++
+      StoreFiles.level0(dir).map(f => s"_l0/${f.getName}") :+ "_layout"
+    assert(touched.openedUnder(dir) == want.sorted)
   }
 
   test("path-based subscribeWithSnapshot: pruned seed, then live updates") {

@@ -12,7 +12,8 @@ import org.scalatest.time.{Seconds, Span}
   * the NEW bucket and report valueExists=false for cells that exist in an
   * old one. Every store entry point must therefore fail fast on a store
   * whose marker is absent-but-populated (pre-v2) or mismatched, and stamp
-  * fresh stores on first write.
+  * fresh stores on first write. v3 adds level 0 (`_l0/`): a v2 store,
+  * which has none, reads under v3 and is re-stamped by its first write.
   */
 class StoreLayoutSpec extends SparkSuite with TimeLimitedTests {
 
@@ -50,6 +51,7 @@ class StoreLayoutSpec extends SparkSuite with TimeLimitedTests {
     val dir = freshDir("layout_prev2")
     HamStream.appendBatchIntoStore(
       Seq(Update("s1", "f", GunValue.string("v"), 1000)).toDS(), 0L, dir, 8)
+    StoreFiles.fold(spark, dir, 8)
     fs.delete(new Path(dir, "_layout"), false) // simulate a round-4 store
     val readErr = intercept[IllegalStateException] {
       HamStream.fetchFromStore(spark, dir, "s1", "f", 8)
@@ -103,5 +105,33 @@ class StoreLayoutSpec extends SparkSuite with TimeLimitedTests {
       Seq(Update("s1", "f", GunValue.string("v"), 1000)).toDS(), 0L, empty, 8)
     assert(fs.exists(new Path(empty, "_layout")))
     assert(HamStream.fetchFromStore(spark, empty, "s1", "f", 8).valueExists)
+  }
+
+  test("a v2 store reads under v3, and its first write re-stamps the marker") {
+    def marker(dir: String) = {
+      val in = fs.open(new Path(dir, "_layout"))
+      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim
+      finally in.close()
+    }
+    // a v2 store: buckets, no level 0, a v2 marker
+    val dir = freshDir("layout_v2")
+    HamStream.appendBatchIntoStore(
+      Seq(Update("s1", "f", GunValue.string("v"), 1000)).toDS(), 0L, dir, 8)
+    StoreFiles.fold(spark, dir, 8)
+    fs.delete(new Path(dir, "_l0"), true)
+    val out = fs.create(new Path(dir, "_layout"), true)
+    try out.write("v2".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    // reads serve it and leave the marker as it is
+    assert(HamStream.fetchFromStore(spark, dir, "s1", "f", 8).value.contains(GunValue.string("v")))
+    assert(HamStream.readStore(spark, dir, 8).count() == 1)
+    assert(marker(dir) == "v2")
+    // the first write re-stamps it v3 (a v2 build then refuses it) and
+    // adds level 0 beside the v2 buckets
+    HamStream.appendBatchIntoStore(
+      Seq(Update("s1", "f", GunValue.string("w"), 2000)).toDS(), 1L, dir, 8)
+    assert(marker(dir) == HamStream.LayoutVersion && HamStream.LayoutVersion == "v3")
+    assert(StoreFiles.level0(dir).size == 1)
+    assert(HamStream.fetchFromStore(spark, dir, "s1", "f", 8).value.contains(GunValue.string("w")))
   }
 }
