@@ -669,7 +669,7 @@ object StreamBench {
     val knownLegs = Seq(
       "ingest", "ingest_nowal",
       "ingest_ws_delta", "ingest_nostore", "publish", "publish_p4",
-      "readamp_trigger_on", "readamp_trigger_off",
+      "readamp_trigger_on", "readamp_trigger_off", "readamp_sparse",
       "neardup_pruned", "neardup_full_probe",
       "neardup_hot_capped", "neardup_hot_uncapped",
       "emb_neardup_pruned", "emb_neardup_full_probe",
@@ -739,6 +739,14 @@ object StreamBench {
     if (want("readamp_trigger_off"))
       out += "readamp_trigger_off" -> raJs(one(runReadAmp(_, raBatches,
         cellsPerBatch = 500, buckets = 8, compactThreshold = 0, probeEvery = 10)))
+    // sparse batches, as live puts and snapshot seeds make them: 4 keys
+    // per batch over the default 64 buckets, so a batch's level-0 file
+    // holds few of a bucket's keys, and a bucket gets a new file only
+    // every ~16 batches — the shape where level 0 costs a point read most
+    if (want("readamp_sparse"))
+      out += "readamp_sparse" -> raJs(one(runReadAmp(_, 2 * raBatches,
+        cellsPerBatch = 4, buckets = HamStream.DefaultBuckets,
+        compactThreshold = HamStream.DefaultCompactThreshold, probeEvery = 10)))
 
     // streaming near-dup A/B: bucket-pruned probe vs naive full-index
     // probe over the same growing corpus

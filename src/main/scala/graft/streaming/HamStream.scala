@@ -389,13 +389,15 @@ object HamStream {
   /** The cell store's streaming sink (SURVEY §3.3 output (a)): an LSM
     * (log-structured merge) store of two levels.
     *   - Level 0, `_l0/`: each micro-batch appends its cells as ONE
-    *     immutable file, sorted by (soul, field) ([[appendBatchIntoStore]]),
-    *     so per-batch I/O is one file and one rename, whatever the store's
-    *     size or the batch's key spread.
+    *     immutable file, sorted by (soul, field), each row with its
+    *     `bucket` ([[appendBatchIntoStore]]), so per-batch I/O is one file
+    *     and one rename, whatever the store's size or the batch's key
+    *     spread.
     *   - Level 1, `bucket=N/` dirs (N = xxhash64(soul, field) mod
     *     numBuckets — see [[bucketOf]] for why the full cell key): the
     *     per-bucket bases. Cells reach them only when level 0 is folded
-    *     ([[compactBuckets]]).
+    *     ([[compactBuckets]]), into the bucket their level-0 row names, so
+    *     the bucket count is fixed by the appends alone.
     *
     * A store may hold SEVERAL rows per (soul, field): every reader
     * collapses them to the HAM winner ([[fetchFromStore]] does, and bulk
@@ -441,8 +443,10 @@ object HamStream {
 
   /** One micro-batch of [[appendIntoStore]] (exposed for specs/sinks),
     * after the layout check and swap recovery every store writer runs:
-    *   1. the cells, stamped `valueExists = true` and sorted by (soul,
-    *      field), are written as one staged parquet file (one write task);
+    *   1. the cells, stamped `valueExists = true` and with their
+    *      `bucket` ([[bucketOf]] over `numBuckets`) as a column, sorted by
+    *      (soul, field), are written as one staged parquet file (one write
+    *      task);
     *   2. the file renames to `_l0/delta-b<batchId>.parquet` — a
     *      same-batchId replay finds that name taken and skips
     *      ([[BucketIndex.promote]]); a batch with no rows adds no file, so
@@ -469,7 +473,8 @@ object HamStream {
     recoverStore(fs, storeDir)
     val staging = new Path(storeDir, s".staging-l0-$batchId")
     batch.toDF().select(col("soul"), col("field"), col("value"), col("state"),
-        lit(true).as("valueExists"))
+        lit(true).as("valueExists"),
+        bucketOf(col("soul"), col("field"), numBuckets).cast("int").as("bucket"))
       .repartition(1).sortWithinPartitions("soul", "field")
       // one file whatever the session's maxRecordsPerFile: a second file
       // would find the batch's level-0 name taken and be skipped
@@ -485,7 +490,7 @@ object HamStream {
     if (compactThreshold > 0) {
       val level0 = level0Files(fs, storeDir)
       if (level0.length >= compactThreshold)
-        compactBuckets(spark, storePath, numBuckets, level0.map(_.getPath), Nil,
+        compactBuckets(spark, storePath, level0.map(_.getPath), Nil,
           nowMs = 0.0, ttlMs = Double.PositiveInfinity,
           stagingName = s".compact-staging-b$batchId")
     }
@@ -542,25 +547,70 @@ object HamStream {
       .map(_.getPath.getName.stripPrefix(".trash-"))
       .filter(_.startsWith("bucket=")).map(_.stripPrefix("bucket=").toInt).distinct
 
-  /** The store's on-disk schema: the cell columns. Every writer writes
-    * exactly these columns, and a bucket's files hold no `bucket` column
-    * (its dir names it), so readers pass it instead of inferring it —
-    * inference is one Spark job that reads a parquet footer, on every read.
+  /** The store's cell columns. A bucket's files hold exactly these (its
+    * dir names the bucket), so readers pass the schema instead of
+    * inferring it — inference is one Spark job that reads a parquet
+    * footer, on every read.
     */
   private val CellSchema = Encoders.product[GunCell].schema
 
-  /** The cells in the named store files, read with [[CellSchema]] — the
-    * one path by which bulk reads and folds read store data (a point
-    * read, [[fetchFromStore]], reads its files on the driver). Each
-    * `spark.read` gets at most `spark.sql.sources.parallelPartitionDiscovery
-    * .threshold` paths, which Spark lists on the driver; more in one read
-    * would start a listing job. No files ⇒ an empty frame, no job.
+  /** The cell columns plus `bucket`: a level-0 file's columns, and a
+    * bucket's files read with `bucket` as a partition column.
+    */
+  private val StoreSchema = CellSchema.add("bucket", org.apache.spark.sql.types.IntegerType)
+
+  /** Scans of the named store files with `schema` (and `basePath`, if
+    * given). Each `spark.read` gets at most `spark.sql.sources
+    * .parallelPartitionDiscovery.threshold` paths, which Spark lists on the
+    * driver; more in one read would start a listing job.
+    */
+  private def scans(
+      spark: SparkSession,
+      files: Seq[Path],
+      schema: org.apache.spark.sql.types.StructType,
+      basePath: Option[Path] = None): Seq[DataFrame] =
+    files.grouped(spark.sessionState.conf.parallelPartitionDiscoveryThreshold max 1).map { g =>
+      val read = spark.read.schema(schema)
+      basePath.fold(read)(p => read.option("basePath", p.toString)).parquet(g.map(_.toString): _*)
+    }.toSeq
+
+  private def union(spark: SparkSession, frames: Seq[DataFrame],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    frames.reduceOption(_ unionByName _)
+      .getOrElse(spark.createDataFrame(java.util.Collections.emptyList[Row](), schema))
+
+  /** The cells in the named store files, of either level, read with
+    * [[CellSchema]] — the path by which bulk reads read store data (a
+    * point read, [[fetchFromStore]], reads its files on the driver). No
+    * files ⇒ an empty frame, no job.
     */
   private def readCells(spark: SparkSession, files: Seq[Path]): DataFrame =
-    files.grouped(spark.sessionState.conf.parallelPartitionDiscoveryThreshold max 1)
-      .map(g => spark.read.schema(CellSchema).parquet(g.map(_.toString): _*))
-      .reduceOption(_ unionByName _)
-      .getOrElse(spark.createDataFrame(java.util.Collections.emptyList[Row](), CellSchema))
+    union(spark, scans(spark, files, CellSchema), CellSchema)
+
+  /** A fold's input, with [[StoreSchema]]: the `level0` files, whose rows
+    * carry their bucket, and the files of `buckets`, whose dir names it
+    * (`basePath` makes `bucket=N` the partition value; a parked
+    * `.trash-bucket=N` dir gets N as a literal). No listing job.
+    */
+  private def readBucketed(
+      spark: SparkSession,
+      storeDir: Path,
+      level0: Seq[Path],
+      buckets: Seq[Int]): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
+    val (live, parked) = buckets.flatMap(b => bucketDir(fs, storeDir, b).map(b -> _))
+      .partition(_._2.getName.startsWith("bucket="))
+    union(spark,
+      scans(spark, level0, StoreSchema) ++
+        scans(spark, live.flatMap(d => parquetFiles(fs, d._2)).map(_.getPath), StoreSchema,
+          Some(storeDir)) ++
+        parked.flatMap { case (b, dir) =>
+          scans(spark, parquetFiles(fs, dir).map(_.getPath), CellSchema)
+            .map(_.withColumn("bucket", lit(b)))
+        },
+      StoreSchema)
+  }
 
   /** Bucket `b`'s dir: `bucket=b`, or else `.trash-bucket=b`, or none.
     * A bucket with no `bucket=b` dir but a `.trash-bucket=b` dir is
@@ -631,11 +681,22 @@ object HamStream {
     *     which returns only the key's rows, one per un-compacted append
     *     of the key ([[keyCells]]); the files are read concurrently, on
     *     the common fork-join pool, so a read waits for its slowest file
-    *     rather than for the sum of them;
+    *     rather than for the sum of them. That pool has one worker fewer
+    *     than the host has cores and serves the whole JVM: concurrent
+    *     reads queue their opens on it, and other users of the pool wait
+    *     behind them (DeltaStoreSpec runs 16 concurrent reads);
     *   - it folds those rows with [[Ham.mergeCells]], the HAM argmax over
     *     (state, canonical JSON) that `HamMerge.mergeSnapshot` computes;
     *   - a missing store, level 0 or bucket dir reads as valueExists=false.
-    * Bulk reads and folds keep the distributed scan ([[readCells]]).
+    * What a read opens is bounded by the fold trigger, not by the key: all
+    * of level 0 (fewer than `compactThreshold` batch files, whichever
+    * keys they hold; every batch since the last [[compactStore]] when the
+    * trigger is off) plus the key's bucket. So under sparse batches (few
+    * keys per batch against the bucket count) a read opens level-0 files
+    * that hold no row of its key; StreamBench `readamp_sparse` (4 keys
+    * per batch, 64 buckets) measures that shape.
+    * Bulk reads and folds keep the distributed scan ([[readCells]],
+    * [[readBucketed]]).
     * A fold swaps its buckets in and THEN deletes the level-0 files it
     * folded; listing level 0 first means a fold that lands between the
     * two listings has deleted level-0 files the read listed. So whenever
@@ -716,21 +777,20 @@ object HamStream {
     * run on the compaction cadence: the [[compactBuckets]] fold of ALL of
     * level 0 into EVERY bucket, dropping cells with `state < nowMs - ttlMs`
     * after the merge. Buckets left fully expired are removed outright (an
-    * intentional delete, not a swap-crash window). `numBuckets` routes the
-    * level-0 cells, so it must be the count the store was written with.
+    * intentional delete, not a swap-crash window). It needs no bucket
+    * count: level-0 rows carry the bucket their append routed them to.
     */
   def compactStore(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       nowMs: Double,
-      ttlMs: Double = graft.operators.HamMerge.DefaultTtlMs,
-      numBuckets: Int = DefaultBuckets): Unit = {
+      ttlMs: Double = graft.operators.HamMerge.DefaultTtlMs): Unit = {
     val storeDir = new Path(storePath)
     val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(storeDir)) return
     checkLayout(fs, storeDir, stamp = false)
     recoverStore(fs, storeDir)
-    compactBuckets(spark, storePath, numBuckets, level0Files(fs, storeDir).map(_.getPath),
+    compactBuckets(spark, storePath, level0Files(fs, storeDir).map(_.getPath),
       storedBuckets(fs, storeDir), nowMs, ttlMs, stagingName = ".compact-staging")
   }
 
@@ -738,9 +798,9 @@ object HamStream {
     * body of [[compactStore]] (all of level 0 and every bucket, the
     * caller's retention cadence) and [[appendBatchIntoStore]]'s auto
     * trigger (the level-0 files it listed, ttl = ∞). In order:
-    *   1. the buckets the `level0` keys touch, by [[bucketOf]] (one small
-    *      job), plus `alsoBuckets`;
-    *   2. `level0` and those buckets' files are read ([[readCells]]: no
+    *   1. the buckets named by the `level0` rows' `bucket` column, read on
+    *      the driver ([[level0Buckets]]: no Spark job), plus `alsoBuckets`;
+    *   2. `level0` and those buckets' files are read ([[readBucketed]]: no
     *      listing job) and HAM-merged, then expired winners are dropped —
     *      an expired winner must not resurrect a stale-but-in-window loser
     *      (reference purge drops the cell outright, gun/storage.go:56-75);
@@ -751,6 +811,9 @@ object HamStream {
     *      swap-crash window);
     *   5. exactly the `level0` files are deleted — a file appended since
     *      the listing stays for the next fold.
+    * `bucket` is functionally determined by the key, so it passes through
+    * the merge as a group key, and every row the fold writes lands in a
+    * bucket of step 1: the fold swaps in and deletes only what it read.
     * Per-fold I/O is O(level 0 + touched buckets), not O(store). A crash
     * between 4 and 5 leaves the level-0 cells in both levels: duplicates
     * the next fold absorbs, as HAM merge is idempotent. Until then a
@@ -760,7 +823,6 @@ object HamStream {
   private[streaming] def compactBuckets(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
-      numBuckets: Int,
       level0: Seq[Path],
       alsoBuckets: Seq[Int],
       nowMs: Double,
@@ -768,22 +830,20 @@ object HamStream {
       stagingName: String): Unit = {
     import org.apache.spark.sql.functions.{col, lit}
     val storeDir = new Path(storePath)
-    val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
-    val bucket = bucketOf(col("soul"), col("field"), numBuckets).cast("int")
-    val touched = (alsoBuckets ++ (if (level0.isEmpty) Nil
-      else readCells(spark, level0).select(bucket).distinct().collect().map(_.getInt(0)))).distinct
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = StoreFs.fileSystem(storeDir, conf)
+    val touched = (alsoBuckets ++ level0.flatMap(level0Buckets(_, conf))).distinct
     if (touched.isEmpty) return
-    val bases = touched.flatMap(bucketDir(fs, storeDir, _)).flatMap(parquetFiles(fs, _))
-    val kept = graft.operators.HamMerge.mergeSnapshot(readCells(spark, level0 ++ bases.map(_.getPath)))
+    val kept = graft.operators.HamMerge
+      .mergeSnapshot(readBucketed(spark, storeDir, level0, touched), passThrough = Seq("bucket"))
       .filter(col("state") >= lit(nowMs - ttlMs))
-      .withColumn("bucket", bucket)
     val staging = new Path(storePath, stagingName)
     // hashed on the bucket, so each bucket is in one task and gets one
     // file; at most one task per shuffle partition, as a task per bucket
     // would pay a task's fixed cost per file
     kept.repartition(touched.length min spark.sessionState.conf.numShufflePartitions, col("bucket"))
       .sortWithinPartitions("bucket", "soul", "field")
-      .write.options(StoreFs.writeOptions(staging, spark.sparkContext.hadoopConfiguration))
+      .write.options(StoreFs.writeOptions(staging, conf))
       .mode("overwrite").partitionBy("bucket").parquet(staging.toString)
     touched.foreach { b =>
       val next = new Path(staging, s"bucket=$b")
@@ -792,5 +852,26 @@ object HamStream {
     }
     level0.foreach(fs.delete(_, false))
     fs.delete(staging, true)
+  }
+
+  /** The distinct `bucket` ids of a level-0 file: that one column, read
+    * on the driver with parquet-hadoop's reader (a batch's worth of ints),
+    * so a fold learns its buckets without a Spark job.
+    */
+  private def level0Buckets(file: Path, conf: org.apache.hadoop.conf.Configuration): Set[Int] = {
+    import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
+    val reader = new org.apache.parquet.hadoop.ParquetReader.Builder[org.apache.parquet.example.data.Group](
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf),
+      new org.apache.parquet.conf.HadoopParquetConfiguration(conf)) {
+      override protected def getReadSupport() = new org.apache.parquet.hadoop.example.GroupReadSupport {
+        override def init(context: InitContext): ReadSupport.ReadContext = {
+          val schema = context.getFileSchema
+          new ReadSupport.ReadContext(
+            new org.apache.parquet.schema.MessageType(schema.getName, schema.getType(schema.getFieldIndex("bucket"))))
+        }
+      }
+    }.build()
+    try Iterator.continually(reader.read()).takeWhile(_ != null).map(_.getInteger("bucket", 0)).toSet
+    finally reader.close()
   }
 }

@@ -132,7 +132,7 @@ class CrashRecoverySpec extends SparkSuite with TimeLimitedTests {
     HamStream.appendBatchIntoStore(
       Seq(Update("s1", "f", GunValue.string("v1"), 1000)).toDS(),
       0L, storePath, buckets)
-    StoreFiles.fold(spark, storePath, buckets)
+    StoreFiles.fold(spark, storePath)
     // simulate the swapBucket crash window inside the auto-compaction fold:
     // live renamed to trash (step 1 done), staged never promoted (step 2
     // lost with the staging dir) — the bucket is ABSENT from the live tree
@@ -190,7 +190,7 @@ class CrashRecoverySpec extends SparkSuite with TimeLimitedTests {
     val level0 = StoreFiles.level0(storePath).map(_.toPath)
     val saved = Files.createTempDirectory("gun_fcrash_l0")
     level0.foreach(f => Files.copy(f, saved.resolve(f.getFileName)))
-    HamStream.compactStore(spark, storePath, nowMs = 10000, ttlMs = 5000, numBuckets = buckets)
+    HamStream.compactStore(spark, storePath, nowMs = 10000, ttlMs = 5000)
     assert(StoreFiles.level0(storePath).isEmpty)
     level0.foreach(f => Files.copy(saved.resolve(f.getFileName), f,
       StandardCopyOption.REPLACE_EXISTING))
@@ -205,7 +205,7 @@ class CrashRecoverySpec extends SparkSuite with TimeLimitedTests {
     assert(point("s3").contains("expired"))
 
     // the next fold (a TTL compaction) absorbs the duplicates and drops s3
-    HamStream.compactStore(spark, storePath, nowMs = 10000, ttlMs = 5000, numBuckets = buckets)
+    HamStream.compactStore(spark, storePath, nowMs = 10000, ttlMs = 5000)
     assert(StoreFiles.level0(storePath).isEmpty)
     val rows = StoreFiles.rawCells(spark, storePath).select("soul", "value.str").as[(String, String)]
       .collect().toSet

@@ -75,7 +75,7 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
       // merge-then-TTL must drop the cell, not resurrect the in-window loser
       Seq(Update("s1", "f", GunValue.string("winner-expired"), 2000)).toDS(),
       1L, dir, NumBuckets)
-    HamStream.compactStore(spark, dir, nowMs = 10000, ttlMs = 5000, numBuckets = NumBuckets)
+    HamStream.compactStore(spark, dir, nowMs = 10000, ttlMs = 5000)
     assert(StoreFiles.level0(dir).isEmpty)
     val rows = spark.read.parquet(dir)
       .select("soul", "value.str").collect()
@@ -83,6 +83,55 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
     assert(rows == Set(("fresh", "live")))
     // compacted store is one physical row per surviving key
     assert(spark.read.parquet(dir).count() == 1)
+  }
+
+  test("compactStore keeps every cell of a store of any bucket count, and takes no count") {
+    val cells = (0 until 40).map(i =>
+      Update(s"s$i", s"f${i % 3}", GunValue.number(i.toLong), 1000.0 + i))
+    for (buckets <- Seq(4, 8, 16)) {
+      val dir = newDir()
+      // bases from one fold, then level 0 over them, folded together
+      HamStream.appendBatchIntoStore(cells.take(25).toDS(), 0L, dir, buckets, compactThreshold = 0)
+      HamStream.compactStore(spark, dir, nowMs = 0.0, ttlMs = Double.PositiveInfinity)
+      HamStream.appendBatchIntoStore(cells.drop(15).toDS(), 1L, dir, buckets, compactThreshold = 0)
+      HamStream.compactStore(spark, dir, nowMs = 0.0, ttlMs = Double.PositiveInfinity)
+      val clue = s"$buckets buckets"
+      assert(StoreFiles.level0(dir).isEmpty, clue)
+      val want = cells.map(c => s"bucket=${HamStream.bucketIdOf(c.soul, c.field, buckets)}").toSet
+      assert(StoreFiles.buckets(dir).keySet == want, s"$clue: each cell in its own bucket")
+      assert(StoreFiles.rawCells(spark, dir).count() == cells.size, s"$clue: one row per key")
+      cells.foreach { c =>
+        val r = HamStream.fetchFromStore(spark, dir, c.soul, c.field, buckets)
+        assert(r.value.contains(c.value), s"$clue: (${c.soul}, ${c.field})")
+      }
+    }
+  }
+
+  test("concurrent point reads each return their key's winner") {
+    val dir = newDir()
+    val cells = (0 until 30).map(i => Update(s"s$i", "f", GunValue.number(i.toLong), 1000.0 + i))
+    HamStream.appendBatchIntoStore(cells.toDS(), 0L, dir, NumBuckets)
+    StoreFiles.fold(spark, dir)
+    // batch b rewrites every third key: level 0 holds three files
+    def last(i: Int) = i % 3 + 1
+    for (b <- 1 to 3)
+      HamStream.appendBatchIntoStore(cells.indices.filter(last(_) == b)
+        .map(i => cells(i).copy(value = GunValue.string(s"v$b"), state = cells(i).state + b)).toDS(),
+        b.toLong, dir, NumBuckets, compactThreshold = 0)
+    // more readers than the common pool has workers on most hosts, each
+    // read opening its files on that pool at once
+    val readers = 16
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(readers)
+    try {
+      val reads = (0 until readers * 4).map { n =>
+        val i = n % cells.size
+        pool.submit(() => i -> HamStream.fetchFromStore(spark, dir, cells(i).soul, "f", NumBuckets))
+      }
+      reads.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS)).foreach { case (i, r) =>
+        assert(r == FetchResult("f", Some(GunValue.string(s"v${last(i)}")),
+          Some(cells(i).state + last(i)), valueExists = true), s"s$i")
+      }
+    } finally pool.shutdownNow()
   }
 
   test("auto-compaction bounds the per-bucket delta-file count over a long run") {
@@ -134,7 +183,7 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
       (1 to 200).map(i =>
         Update(s"soul$i", "f", GunValue.number(i.toLong), 1000)).toDS(),
       0L, dir, NumBuckets)
-    StoreFiles.fold(spark, dir, NumBuckets)
+    StoreFiles.fold(spark, dir)
     HamStream.appendBatchIntoStore(
       (1 to 20).map(i => Update(s"soul$i", "f", GunValue.number(-i.toLong), 2000)).toDS(),
       1L, dir, NumBuckets)
@@ -157,7 +206,7 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
     val dir = newDir()
     HamStream.appendBatchIntoStore(
       Seq(Update("s1", "f", GunValue.string("base"), 999.0)).toDS(), 0L, dir, NumBuckets)
-    StoreFiles.fold(spark, dir, NumBuckets)
+    StoreFiles.fold(spark, dir)
     for (b <- 1 to 3)
       HamStream.appendBatchIntoStore(
         Seq(Update("s1", "f", GunValue.string(s"v$b"), 1000.0 + b)).toDS(),
@@ -171,7 +220,7 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
     def foldOnce(listed: org.apache.hadoop.fs.Path): Unit =
       if (listed.getName == bucket && !folded) {
         folded = true
-        HamStream.compactBuckets(spark, dir, NumBuckets, StoreFiles.level0Paths(dir), Nil,
+        HamStream.compactBuckets(spark, dir, StoreFiles.level0Paths(dir), Nil,
           nowMs = 0.0, ttlMs = Double.PositiveInfinity, stagingName = ".compact-staging-race")
       }
     val ((hit, touched), logged) = graft.SparkSuite.warningsDuring {
@@ -201,7 +250,7 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
       if (withBase) {
         HamStream.appendBatchIntoStore(
           Seq(Update("s1", "f", GunValue.string("base"), 999.0)).toDS(), 0L, dir, NumBuckets)
-        StoreFiles.fold(spark, dir, NumBuckets)
+        StoreFiles.fold(spark, dir)
       }
       for (b <- 1 to 2)
         HamStream.appendBatchIntoStore(
@@ -213,7 +262,7 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
       def foldOnce(path: org.apache.hadoop.fs.Path): Unit =
         if (path.getName.startsWith(after) && !folded) {
           folded = true
-          HamStream.compactBuckets(spark, dir, NumBuckets, StoreFiles.level0Paths(dir), Nil,
+          HamStream.compactBuckets(spark, dir, StoreFiles.level0Paths(dir), Nil,
             nowMs = 0.0, ttlMs = Double.PositiveInfinity, stagingName = ".compact-staging-race")
         }
       val (hit, touched) =
@@ -239,13 +288,13 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
       HamStream.appendBatchIntoStore(
         Seq(Update("s1", "f", GunValue.string(s"v$b"), 1000.0 + b)).toDS(),
         b.toLong, dir, NumBuckets, compactThreshold = 0)
-    StoreFiles.fold(spark, dir, NumBuckets)
+    StoreFiles.fold(spark, dir)
     val bucket = s"bucket=${HamStream.bucketIdOf("s1", "f", NumBuckets)}"
     // the bucket's fold, staged in a store of its own
     val folded = newDir()
     HamStream.appendBatchIntoStore(Seq(Update("s1", "f", GunValue.string("v1"), 1001.0)).toDS(),
       0L, folded, NumBuckets)
-    StoreFiles.fold(spark, folded, NumBuckets)
+    StoreFiles.fold(spark, folded)
     val foldOutput = StoreFiles.buckets(folded)(bucket).map(_.getName)
     val storeDir = new Path(dir)
     val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
@@ -299,7 +348,7 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
         HamStream.appendBatchIntoStore(history.slice(from, to).toDS(), b.toLong, dir, buckets,
           compactThreshold = threshold)
         if (lagging(b))
-          HamStream.compactBuckets(spark, dir, buckets,
+          HamStream.compactBuckets(spark, dir,
             StoreFiles.level0Paths(dir).filterNot(_.getName == s"delta-b$b.parquet"), Nil,
             nowMs = 0.0, ttlMs = Double.PositiveInfinity, stagingName = s".compact-staging-lag$b")
       }

@@ -151,7 +151,7 @@ class HamStreamSpec extends SparkSuite with TimeLimitedTests {
       in.addData((1 to 20).map(i => GunCell(s"soul$i", "f", GunValue.number(i.toLong), 1000)): _*)
       q.processAllAvailable()
       assert(StoreFiles.level0(dir).size == 1 && StoreFiles.buckets(dir).isEmpty)
-      StoreFiles.fold(spark, dir, numBuckets = 8)
+      StoreFiles.fold(spark, dir)
       def bucketFiles(): Map[String, Set[(String, Long)]] =
         StoreFiles.buckets(dir).map { case (b, fs) =>
           b -> fs.map(f => (f.getName, f.lastModified())).toSet
@@ -224,7 +224,7 @@ class HamStreamSpec extends SparkSuite with TimeLimitedTests {
     // three appends folded into the bucket bases, then two un-compacted
     // appends of older states: level 0 holds one file per append
     for (b <- 0 until 3) append(b, 1000.0 + b)
-    StoreFiles.fold(spark, dir, numBuckets = 8)
+    StoreFiles.fold(spark, dir)
     for (b <- 3 until 5) append(b, 900.0 + b)
     val bucket = s"bucket=${bucketIdOf("rsoul7", "f", 8)}"
     val bucketFiles = StoreFiles.buckets(dir)(bucket).map(f => s"$bucket/${f.getName}")
@@ -267,7 +267,7 @@ class HamStreamSpec extends SparkSuite with TimeLimitedTests {
         GunCell("new1", "f", GunValue.string("c"), 99000))
       q.processAllAvailable()
     } finally q.stop()
-    HamStream.compactStore(spark, dir, nowMs = 100000, ttlMs = 5000, numBuckets = 4)
+    HamStream.compactStore(spark, dir, nowMs = 100000, ttlMs = 5000)
     assert(StoreFiles.level0(dir).isEmpty, "the fold empties level 0")
     val kept = spark.read.parquet(dir).select("soul").as[String].collect().toSet
     assert(kept == Set("new1"))
@@ -331,7 +331,7 @@ class HamStreamSpec extends SparkSuite with TimeLimitedTests {
         GunCell(s"ssoul$i", "f", GunValue.number(i.toLong), 1000)): _*)
       q.processAllAvailable()
     } finally q.stop()
-    StoreFiles.fold(spark, dir, numBuckets = 4)
+    StoreFiles.fold(spark, dir)
     val all = spark.read.parquet(dir).select("soul").as[String].collect().toSet
     assert(all.size == 12)
     val storeDir = new org.apache.hadoop.fs.Path(dir)

@@ -38,7 +38,7 @@ class HotSoulSpec extends SparkSuite with TimeLimitedTests {
   test("viral soul spreads across buckets; per-bucket rewrite stays bounded") {
     val dir = java.nio.file.Files.createTempDirectory("hot_soul").toString + "/cells"
     HamStream.appendBatchIntoStore(corpus.toDS(), 0L, dir, NumBuckets)
-    StoreFiles.fold(spark, dir, NumBuckets)
+    StoreFiles.fold(spark, dir)
 
     // bucket comes back as int (partition-column type inference)
     val byBucket = spark.read.parquet(dir)
@@ -67,7 +67,7 @@ class HotSoulSpec extends SparkSuite with TimeLimitedTests {
     val folded = touchedRows() + 1 // the bucket base and the level-0 row
     assert(folded < 150, s"fold scope $folded rows (soul size is 300)")
     val before = StoreFiles.buckets(dir)
-    HamStream.compactBuckets(spark, dir, NumBuckets, StoreFiles.level0Paths(dir), Nil,
+    HamStream.compactBuckets(spark, dir, StoreFiles.level0Paths(dir), Nil,
       nowMs = 0.0, ttlMs = Double.PositiveInfinity, stagingName = ".compact-staging-hot")
     val after = StoreFiles.buckets(dir)
     assert(after.keySet == before.keySet)

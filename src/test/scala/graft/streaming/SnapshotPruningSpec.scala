@@ -35,7 +35,7 @@ class SnapshotPruningSpec extends SparkSuite with TimeLimitedTests {
       (1 to 400).map(i =>
         Update(s"soul$i", "f", GunValue.number(i.toLong), 1000)).toDS(),
       0L, dir, NumBuckets)
-    StoreFiles.fold(spark, dir, NumBuckets)
+    StoreFiles.fold(spark, dir)
     assert(StoreFiles.buckets(dir).size == NumBuckets)
     // and an un-compacted batch in level 0
     HamStream.appendBatchIntoStore(

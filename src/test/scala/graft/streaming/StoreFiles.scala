@@ -22,12 +22,13 @@ object StoreFiles {
       .filter(d => d.isDirectory && d.getName.startsWith("bucket="))
       .map(d => d.getName -> parquet(d)).toMap
 
-  /** Every row of store `dir`, both levels, not merged. */
+  /** Every row of store `dir`, both levels, not merged: the cell
+    * columns, which level-0 files hold with their `bucket`.
+    */
   def rawCells(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet((level0(dir) ++ buckets(dir).values.flatten).map(_.getPath): _*)
+    spark.read.schema(org.apache.spark.sql.Encoders.product[graft.core.GunCell].schema).parquet((level0(dir) ++ buckets(dir).values.flatten).map(_.getPath): _*)
 
   /** Folds all of level 0 into the buckets, expiring nothing. */
-  def fold(spark: SparkSession, dir: String, numBuckets: Int): Unit =
-    HamStream.compactStore(spark, dir, nowMs = 0.0, ttlMs = Double.PositiveInfinity,
-      numBuckets = numBuckets)
+  def fold(spark: SparkSession, dir: String): Unit =
+    HamStream.compactStore(spark, dir, nowMs = 0.0, ttlMs = Double.PositiveInfinity)
 }

@@ -51,7 +51,7 @@ class StoreLayoutSpec extends SparkSuite with TimeLimitedTests {
     val dir = freshDir("layout_prev2")
     HamStream.appendBatchIntoStore(
       Seq(Update("s1", "f", GunValue.string("v"), 1000)).toDS(), 0L, dir, 8)
-    StoreFiles.fold(spark, dir, 8)
+    StoreFiles.fold(spark, dir)
     fs.delete(new Path(dir, "_layout"), false) // simulate a round-4 store
     val readErr = intercept[IllegalStateException] {
       HamStream.fetchFromStore(spark, dir, "s1", "f", 8)
@@ -117,7 +117,7 @@ class StoreLayoutSpec extends SparkSuite with TimeLimitedTests {
     val dir = freshDir("layout_v2")
     HamStream.appendBatchIntoStore(
       Seq(Update("s1", "f", GunValue.string("v"), 1000)).toDS(), 0L, dir, 8)
-    StoreFiles.fold(spark, dir, 8)
+    StoreFiles.fold(spark, dir)
     fs.delete(new Path(dir, "_l0"), true)
     val out = fs.create(new Path(dir, "_layout"), true)
     try out.write("v2".getBytes(java.nio.charset.StandardCharsets.UTF_8))
