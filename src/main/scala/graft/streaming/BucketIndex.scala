@@ -5,25 +5,36 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.StructType
 
 /** The LSM (log-structured merge) machinery of the bucket-partitioned
-  * parquet disk indexes: append-only delta files per bucket plus
-  * compaction. [[promoteDelta]] is their delta promotion — staged write,
-  * then an idempotent parallel rename to `delta-b<batchId>-<i>.parquet` —
-  * used by the disk indexes of the streaming near-dup operators
-  * ([[StreamingNearDup]] minhash signatures, [[StreamingEmbNearDup]]
-  * embedding sketches) and `IndexStore`, through [[appendDelta]]: a
-  * count-and-size-ratio triggered per-bucket fold that sorts by the probe
-  * key so point probes row-group-prune. The cell store
+  * parquet stores: append-only files per bucket plus compaction.
+  * [[promoteDelta]] is their promotion — staged write, then an
+  * idempotent parallel rename to `<prefix>-<i>.parquet` in each bucket —
+  * and [[fold]] is their one compaction: it promotes the merge of the
+  * files it listed and then deletes exactly those files. The disk indexes
+  * of the streaming near-dup operators ([[StreamingNearDup]] minhash
+  * signatures, [[StreamingEmbNearDup]] embedding sketches) and
+  * `IndexStore` append through [[appendDelta]]: one delta per touched
+  * bucket and a count-and-size-ratio triggered fold that sorts by the
+  * probe key so point probes row-group-prune. The cell store
   * ([[HamStream.appendBatchIntoStore]]) appends one level-0 file per batch
-  * instead and shares only [[promote]], the idempotent rename; the indexes
-  * keep per-bucket deltas until their own probe legs measure that layout.
+  * instead ([[promote]]) and folds level 0 into its buckets through
+  * [[fold]] ([[HamStream.compactBuckets]]).
   *
-  * Crash contract: a replayed batch re-appends under the same batchId
-  * (dest-exists renames skip) — duplicate rows, folded by the next
-  * compaction. A crash between a compaction's promote and its deletes
-  * leaves old deltas next to the compacted copy; on the same-batchId
-  * replay the promoted `compact-b<id>-*` dest may be the bucket's ONLY
-  * copy, so it is excluded from the delete list (ADVICE_r8 high — the
-  * delete would otherwise silently empty the bucket).
+  * Crash contract: a replayed batch re-appends under the same name
+  * (dest-exists renames skip) — duplicate rows, absorbed by the next
+  * fold. A crash between a fold's promote and its deletes, or in the
+  * middle of its deletes, leaves input files next to the fold's output:
+  * duplicate rows again, which the set-semantic probes and the HAM merge
+  * (commutative, associative, idempotent) absorb and the next fold
+  * removes. A fold's output therefore must never take a name that an
+  * earlier fold left in the bucket, or that fold's promote would skip
+  * and its delete would drop what it just folded: the indexes name it
+  * after the batch, `compact-b<batchId>`, and the cell store, whose
+  * `compactStore` has no batch, after a fresh UUID. On a same-batchId
+  * replay of an index fold that crashed after its promote, the listing
+  * holds the earlier attempt's `compact-b<batchId>-*` output, which may
+  * by then be the bucket's ONLY copy: [[fold]] never deletes a file of
+  * its own name (ADVICE_r8 high — the delete would otherwise silently
+  * empty the bucket).
   */
 private[graft] object BucketIndex {
 
@@ -56,10 +67,10 @@ private[graft] object BucketIndex {
   }
 
   /** Append `rows` (must carry a `bucket` partition column plus
-    * `dataCols`) as ONE delta file per touched bucket, then fold a
-    * bucket into a single deduped file sorted by `sortCols` (first of
-    * which should be the probe's pushdown key, so its row-group stats
-    * become selective) when BOTH triggers agree:
+    * `dataCols`) as ONE delta file per touched bucket, then [[fold]] a
+    * bucket into a single file, deduped on `dedupCols` and sorted by
+    * `sortCols`, when BOTH triggers agree (the buckets that do fold in
+    * one batch fold in one Spark job):
     *
     *   - file count ≥ `compactThreshold` (the LSM level-0 trigger —
     *     probe cost is per-file, so the count bounds read
@@ -92,73 +103,76 @@ private[graft] object BucketIndex {
       fs: FileSystem,
       storeDir: Path): Unit = {
     import org.apache.spark.sql.functions.col
-    val spark = rows.sparkSession
     val promoted = promoteDelta(rows.select((dataCols :+ "bucket").map(col): _*),
-      batchId, storeDir, numBuckets, fs)
+      s"delta-b$batchId", Nil, storeDir, numBuckets, fs)
     // one post-promotion listing feeds BOTH triggers — the file count and
     // the delta-vs-base byte split (base = prior compact-* output, delta
     // = everything since) — and names the files a fold replaces
-    promoted.filter { case (_, files) =>
+    val folded = promoted.filter { case (_, files) =>
       compactThreshold > 0 && files.length >= compactThreshold && {
         val (base, delta) = files.partition(_.getPath.getName.startsWith("compact-"))
         val baseBytes = base.map(_.getLen).sum
         baseBytes == 0L || delta.map(_.getLen).sum >= baseBytes ||
           files.length >= compactThreshold * 8
       }
-    }.foreach { case (name, files) =>
-      val live = new Path(storeDir, name)
-      val before = files.map(_.getPath)
-      // sorted by sortCols: the compacted file's parquet row-group stats
-      // become selective for the probe's key filter, so a point probe
-      // inside a big bucket skips row groups instead of scanning them
-      val compacted = spark.read.schema(schema)
-        .parquet(before.map(_.toString): _*)
-        .dropDuplicates(dedupCols)
-        .coalesce(1)
-        .sortWithinPartitions(sortCols.map(col): _*)
-      val cStaging = new Path(
-        indexPath, s".compact-staging-$name-b$batchId")
-      compacted.write.options(StoreFs.writeOptions(cStaging, spark.sparkContext.hadoopConfiguration))
-        .mode("overwrite").parquet(cStaging.toString)
-      val cFiles = fs.listStatus(cStaging)
-        .filter(_.getPath.getName.endsWith(".parquet"))
-      cFiles.zipWithIndex.foreach { case (f, i) =>
-        promote(fs, f.getPath, new Path(live, s"compact-b$batchId-$i.parquet"))
-      }
-      // crash between promote and these deletes leaves old deltas next to
-      // the compacted copy — duplicate ROWS the set-semantic probe absorbs
-      // and the next compaction folds. On a same-batchId REPLAY of that
-      // crash, `before` includes the prior attempt's compact-b<batchId>-*
-      // dest (the rename above then skips as dest-exists): that dest may
-      // by then be the bucket's ONLY copy, so it must never be on the
-      // delete list — deleting it would silently empty the bucket.
-      before.filterNot(_.getName.startsWith(s"compact-b$batchId-"))
-        .foreach(fs.delete(_, false))
-      fs.delete(cStaging, true)
+    }
+    if (folded.nonEmpty) {
+      val listed = folded.flatMap(_._2.map(_.getPath))
+      // `basePath` makes each file's `bucket=N` dir its bucket column
+      val merged = rows.sparkSession.read.schema(schema).option("basePath", storeDir.toString)
+        .parquet(listed.map(_.toString): _*)
+        .dropDuplicates("bucket" +: dedupCols)
+      fold(merged, sortCols, listed, s"compact-b$batchId", storeDir, folded.length, fs)
     }
   }
 
-  /** The delta promotion of the disk indexes ([[appendDelta]]). `rows`
+  /** The fold of a bucketed store: `merged` — the merge of the `listed`
+    * files, with a `bucket` column — is written as ONE file per bucket,
+    * sorted by `sortCols` (the first of them the probe's pushdown key, so
+    * the file's row-group stats are selective for it), and promoted into
+    * each `bucket=N/` dir as `<name>-<i>.parquet` ([[promoteDelta]]); then
+    * exactly the `listed` files are deleted, so a file that lands after
+    * the listing stays for the next fold. A listed file of the fold's own
+    * name is an earlier attempt's output, which a same-name replay's
+    * promote skipped: it is kept. Until the deletes end, readers see the
+    * inputs and the output side by side — duplicates the merge absorbs.
+    * Returns the buckets (`bucket=N`) that got a file.
+    */
+  private[streaming] def fold(
+      merged: DataFrame,
+      sortCols: Seq[String],
+      listed: Seq[Path],
+      name: String,
+      storeDir: Path,
+      numBuckets: Int,
+      fs: FileSystem): Seq[String] = {
+    val promoted = promoteDelta(merged, name, sortCols, storeDir, numBuckets, fs).map(_._1)
+    listed.filterNot(_.getName.startsWith(s"$name-")).foreach(fs.delete(_, false))
+    promoted
+  }
+
+  /** The promotion of bucketed rows: an index delta ([[appendDelta]],
+    * `prefix` `delta-b<batchId>`) or a fold's output ([[fold]]). `rows`
     * carry a `bucket` column;
     *   1. they are hash-repartitioned on it (at most `numBuckets` tasks),
-    *      so each touched bucket gets ONE staged file per batch, and
-    *      written to `<storeDir>/.staging-delta-<batchId>/bucket=N/`
-    *      (through [[StoreFs.writeOptions]]: no process per file);
-    *   2. each staged file renames to
-    *      `bucket=N/delta-b<batchId>-<i>.parquet` ([[promote]]: a
-    *      same-batchId replay finds its dest already there and skips; a
-    *      failed rename throws its `IOException`, unwrapped) —
-    *      buckets in parallel on up to 16 threads, so a batch pays
-    *      max(rename latency), not the sum over its buckets (Hadoop
-    *      `FileSystem` instances are thread-safe);
+    *      so each bucket gets ONE staged file, sorted by `sortCols`, and
+    *      written to `<storeDir>/.staging-<prefix>/bucket=N/` (through
+    *      [[StoreFs.writeOptions]]: no process per file);
+    *   2. each staged file renames to `bucket=N/<prefix>-<i>.parquet`
+    *      ([[promote]]: a same-name replay finds its dest already there
+    *      and skips; a failed rename throws its `IOException`,
+    *      unwrapped) — buckets in parallel on up to 16 threads, so a
+    *      batch pays max(rename latency), not the sum over its buckets
+    *      (Hadoop `FileSystem` instances are thread-safe);
     *   3. the staging dir is deleted.
-    * Returns each touched bucket's name (`bucket=N`) with its parquet
-    * files after the promotion — the compaction trigger reads it instead
-    * of listing again.
+    * Returns each bucket it wrote (`bucket=N`) with its parquet files
+    * after the promotion — the compaction trigger reads it instead of
+    * listing again.
     */
   private[streaming] def promoteDelta(
       rows: DataFrame,
-      batchId: Long,
+      prefix: String,
+      sortCols: Seq[String],
       storeDir: Path,
       numBuckets: Int,
       fs: FileSystem): Seq[(String, Array[FileStatus])] = {
@@ -166,8 +180,9 @@ private[graft] object BucketIndex {
     def parquet(dir: Path) =
       fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
     val spark = rows.sparkSession
-    val staging = new Path(storeDir, s".staging-delta-$batchId")
+    val staging = new Path(storeDir, s".staging-$prefix")
     rows.repartition(numBuckets min spark.sessionState.conf.numShufflePartitions, col("bucket"))
+      .sortWithinPartitions(("bucket" +: sortCols).map(col): _*)
       .write.options(StoreFs.writeOptions(staging, spark.sparkContext.hadoopConfiguration))
       .mode("overwrite").partitionBy("bucket").parquet(staging.toString)
     val staged = fs.listStatus(staging)
@@ -181,7 +196,7 @@ private[graft] object BucketIndex {
           val live = new Path(storeDir, name)
           if (!fs.exists(live)) fs.mkdirs(live)
           parquet(bdir.getPath).zipWithIndex.foreach { case (f, i) =>
-            promote(fs, f.getPath, new Path(live, s"delta-b$batchId-$i.parquet"))
+            promote(fs, f.getPath, new Path(live, s"$prefix-$i.parquet"))
           }
           name -> parquet(live)
         }

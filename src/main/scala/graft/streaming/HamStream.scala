@@ -340,11 +340,17 @@ object HamStream {
     * no data yet and re-stamping a v2 marker. Throws
     * [[IllegalStateException]] on a mismatched or missing-but-populated
     * marker. `stamp = false` (read paths) never writes — a read of a
-    * pre-v2 store must fail, not quietly re-label it. Also throws on a
-    * `.buffer-journal` dir, left by an older build's buffered sink: its
-    * committed batches are in no bucket.
+    * pre-v2 store must fail, not quietly re-label it. Also throws on what
+    * an older build's writer left for its next writer to repair, as this
+    * build neither reads nor repairs it: a `.buffer-journal` dir (a
+    * buffered sink's committed batches, in no bucket) and a
+    * `.trash-bucket=N` dir (a bucket swap's parked bucket, maybe the
+    * bucket's only copy). A point read passes its key's `bucket`: it
+    * reads that bucket alone, so only that bucket's parked dir can change
+    * its answer, and it looks that one dir up instead of listing the root.
     */
-  private[streaming] def checkLayout(fs: FileSystem, storeDir: Path, stamp: Boolean): Unit = {
+  private[streaming] def checkLayout(fs: FileSystem, storeDir: Path, stamp: Boolean,
+      bucket: Option[Int] = None): Unit = {
     if (!fs.exists(storeDir)) {
       if (stamp) writeLayoutMarker(fs, storeDir)
       return
@@ -355,6 +361,15 @@ object HamStream {
         "batches were committed upstream but never written to the store; " +
         "open it once with the build that wrote it, whose appendIntoStore " +
         "replays the journal, before using it with this build")
+    val parked = bucket.fold(fs.listStatus(storeDir).toSeq.map(_.getPath))(b =>
+      Seq(new Path(storeDir, s".trash-bucket=$b")).filter(fs.exists))
+    parked.find(_.getName.startsWith(".trash-bucket=")).foreach { p =>
+      throw new IllegalStateException(
+        s"store at $storeDir has a bucket parked at $p by an older build's " +
+          "interrupted bucket swap, maybe the bucket's only copy, which this build " +
+          "does not read: open the store once with a writer of the previous build, " +
+          "which restores it, before using it with this build")
+    }
     val marker = new Path(storeDir, "_layout")
     if (fs.exists(marker)) {
       val in = fs.open(marker)
@@ -406,12 +421,14 @@ object HamStream {
     * `compactThreshold` files it is folded into the buckets its keys
     * touch, in the same batch; [[compactStore]] folds and TTL-purges the
     * whole store on the caller's cadence. Crash safety: files land via
-    * write-to-staging then one rename each, and a fold deletes its level-0
-    * files only after its buckets are swapped in; a crash leaves duplicate
-    * cells (a replayed batch re-appends under the same name, which skips),
-    * and duplicates are HAM-idempotent, so the store stays correct (just
-    * uncompacted). At-least-once + idempotent merge is the same contract
-    * the reference's peers rely on. Readers never write the store: only
+    * write-to-staging then one rename each, and a fold promotes its output
+    * into the buckets before it deletes the files it folded
+    * ([[BucketIndex.fold]]); a crash leaves duplicate cells (a replayed
+    * batch re-appends under the same name, which skips; an interrupted
+    * fold leaves its inputs beside its output), and duplicates are
+    * HAM-idempotent, so the store stays correct (just uncompacted).
+    * At-least-once + idempotent merge is the same contract the
+    * reference's peers rely on. Readers never write the store: only
     * this sink, [[compactStore]] and its auto-trigger create, rename or
     * delete store files.
     */
@@ -442,7 +459,7 @@ object HamStream {
   val DefaultCompactThreshold = 12
 
   /** One micro-batch of [[appendIntoStore]] (exposed for specs/sinks),
-    * after the layout check and swap recovery every store writer runs:
+    * after the layout check every store entry runs:
     *   1. the cells, stamped `valueExists = true` and with their
     *      `bucket` ([[bucketOf]] over `numBuckets`) as a column, sorted by
     *      (soul, field), are written as one staged parquet file (one write
@@ -470,7 +487,6 @@ object HamStream {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = StoreFs.fileSystem(storeDir, conf)
     checkLayout(fs, storeDir, stamp = true)
-    recoverStore(fs, storeDir)
     val staging = new Path(storeDir, s".staging-l0-$batchId")
     batch.toDF().select(col("soul"), col("field"), col("value"), col("state"),
         lit(true).as("valueExists"),
@@ -491,8 +507,7 @@ object HamStream {
       val level0 = level0Files(fs, storeDir)
       if (level0.length >= compactThreshold)
         compactBuckets(spark, storePath, level0.map(_.getPath), Nil,
-          nowMs = 0.0, ttlMs = Double.PositiveInfinity,
-          stagingName = s".compact-staging-b$batchId")
+          nowMs = 0.0, ttlMs = Double.PositiveInfinity)
     }
   }
 
@@ -524,6 +539,11 @@ object HamStream {
     * reads: it reads level 0 and one bucket and needs no Spark job.
     * `numBuckets` does not change a bulk read, which reads every bucket
     * the store holds.
+    * The frame scans the files listed when `readStore` is called. A fold
+    * that lands before an action on it deletes files it names, so that
+    * action fails with `FileNotFoundException`; re-listing on that miss,
+    * as point reads do, is left to the work that moves folds off the
+    * micro-batch.
     */
   def readStore(
       spark: org.apache.spark.sql.SparkSession,
@@ -537,15 +557,13 @@ object HamStream {
     graft.operators.HamMerge.mergeSnapshot(readCells(spark, files.map(_.getPath)))
   }
 
-  /** Ids of the buckets under a store root: its `bucket=N` dirs and the
-    * `.trash-bucket=N` dirs a [[swapBucket]] has parked; empty when the
-    * root does not exist.
+  /** Ids of the buckets under a store root, from its `bucket=N` dirs;
+    * empty when the root does not exist.
     */
   private def storedBuckets(fs: FileSystem, storeDir: Path): Seq[Int] =
     if (!fs.exists(storeDir)) Nil
-    else fs.listStatus(storeDir).toSeq.filter(_.isDirectory)
-      .map(_.getPath.getName.stripPrefix(".trash-"))
-      .filter(_.startsWith("bucket=")).map(_.stripPrefix("bucket=").toInt).distinct
+    else fs.listStatus(storeDir).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+      .filter(_.startsWith("bucket=")).map(_.stripPrefix("bucket=").toInt)
 
   /** The store's cell columns. A bucket's files hold exactly these (its
     * dir names the bucket), so readers pass the schema instead of
@@ -587,90 +605,9 @@ object HamStream {
   private def readCells(spark: SparkSession, files: Seq[Path]): DataFrame =
     union(spark, scans(spark, files, CellSchema), CellSchema)
 
-  /** A fold's input, with [[StoreSchema]]: the `level0` files, whose rows
-    * carry their bucket, and the files of `buckets`, whose dir names it
-    * (`basePath` makes `bucket=N` the partition value; a parked
-    * `.trash-bucket=N` dir gets N as a literal). No listing job.
-    */
-  private def readBucketed(
-      spark: SparkSession,
-      storeDir: Path,
-      level0: Seq[Path],
-      buckets: Seq[Int]): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
-    val (live, parked) = buckets.flatMap(b => bucketDir(fs, storeDir, b).map(b -> _))
-      .partition(_._2.getName.startsWith("bucket="))
-    union(spark,
-      scans(spark, level0, StoreSchema) ++
-        scans(spark, live.flatMap(d => parquetFiles(fs, d._2)).map(_.getPath), StoreSchema,
-          Some(storeDir)) ++
-        parked.flatMap { case (b, dir) =>
-          scans(spark, parquetFiles(fs, dir).map(_.getPath), CellSchema)
-            .map(_.withColumn("bucket", lit(b)))
-        },
-      StoreSchema)
-  }
-
-  /** Bucket `b`'s dir: `bucket=b`, or else `.trash-bucket=b`, or none.
-    * A bucket with no `bucket=b` dir but a `.trash-bucket=b` dir is
-    * between a [[swapBucket]]'s two renames, or parked by a crash in
-    * that window: the trash dir holds its data and is read as bucket b.
-    * Readers never rename: only a writer's [[recoverStore]] restores it,
-    * since a reader's rename back to live would race the swap's own
-    * `rename(staged, live)`.
-    */
+  /** Bucket `b`'s dir, if it exists. */
   private def bucketDir(fs: FileSystem, root: Path, b: Int): Option[Path] =
-    Seq(s"bucket=$b", s".trash-bucket=$b").map(new Path(root, _)).find(fs.exists)
-
-  /** Swap a staged bucket directory — a fold's output, written by
-    * [[compactBuckets]] — into the live tree with a RECOVERABLE ordering
-    * (the delete-before-rename of the round-2 version had a crash
-    * window that left a bucket absent with no repair path):
-    *   1. rename live → `.trash-bucket=N` (old data parked, not deleted),
-    *   2. rename staged → live,
-    *   3. delete the trash copy.
-    * A crash after (1) leaves the old data in the trash dir;
-    * [[recoverStore]] — run at every append and compact entry — renames
-    * it back, and until then readers read the trash dir as the bucket
-    * ([[bucketDir]]), so every crash point leaves the bucket readable
-    * with either the old or the new data, never neither. Dot-prefixed
-    * trash/staging dirs are invisible to a parquet read of the root
-    * (Hadoop's hidden-file filter), so an in-flight swap never
-    * double-counts.
-    */
-  private[streaming] def swapBucket(
-      fs: FileSystem,
-      storeDir: Path,
-      bucketName: String,
-      staged: Path): Unit = {
-    if (!fs.exists(staged)) return
-    val live = new Path(storeDir, bucketName)
-    val trash = new Path(storeDir, s".trash-$bucketName")
-    if (fs.exists(trash)) fs.delete(trash, true) // leftover from a healed swap
-    if (fs.exists(live)) fs.rename(live, trash)
-    fs.rename(staged, live)
-    if (fs.exists(trash)) fs.delete(trash, true)
-  }
-
-  /** Heal an interrupted [[swapBucket]]: for every `.trash-bucket=N` dir,
-    * restore it as the live bucket if the live dir is absent (crash landed
-    * between the two renames), or drop it if the swap completed (crash
-    * landed before the final delete). Idempotent and cheap (one directory
-    * listing); called at the entry of every store write (append and
-    * compact), never by a reader, which could race a live swap.
-    */
-  def recoverStore(fs: FileSystem, storeDir: Path): Unit = {
-    if (!fs.exists(storeDir)) return
-    fs.listStatus(storeDir).foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith(".trash-bucket=")) {
-        val live = new Path(storeDir, n.stripPrefix(".trash-"))
-        if (!fs.exists(live)) fs.rename(s.getPath, live)
-        else fs.delete(s.getPath, true)
-      }
-    }
-  }
+    Some(new Path(root, s"bucket=$b")).filter(fs.exists)
 
   /** Point read against the store — the read-side complement of
     * [[appendIntoStore]] (reference storage-get semantics,
@@ -696,13 +633,14 @@ object HamStream {
     * that hold no row of its key; StreamBench `readamp_sparse` (4 keys
     * per batch, 64 buckets) measures that shape.
     * Bulk reads and folds keep the distributed scan ([[readCells]],
-    * [[readBucketed]]).
-    * A fold swaps its buckets in and THEN deletes the level-0 files it
-    * folded; listing level 0 first means a fold that lands between the
-    * two listings has deleted level-0 files the read listed. So whenever
-    * a fold lands after the first listing, opening a listed file, or the
-    * bucket listing itself, throws `FileNotFoundException`, and the read
-    * lists once more, which finds the fold's output. (Listed the other
+    * [[compactBuckets]]).
+    * A fold promotes its output into the buckets, then deletes the
+    * level-0 and bucket files it folded ([[BucketIndex.fold]]); listing
+    * level 0 first means a fold that lands between the two listings has
+    * deleted level-0 files the read listed. So whenever a fold lands
+    * after the first listing, opening a listed file, or the bucket
+    * listing itself, throws `FileNotFoundException`, and the read lists
+    * once more, which finds the fold's output. (Listed the other
     * way round, a fold into a bucket that had no files would go unseen.)
     * A second miss throws.
     */
@@ -716,8 +654,8 @@ object HamStream {
     val storeDir = new Path(storePath)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = StoreFs.fileSystem(storeDir, conf)
-    checkLayout(fs, storeDir, stamp = false) // a pre-v2 store must error, not miss
     val bucket = bucketIdOf(soul, field, numBuckets)
+    checkLayout(fs, storeDir, stamp = false, Some(bucket)) // a pre-v2 store must error, not miss
     def attempt(): Option[Seq[GunCell]] =
       try {
         val level0 = level0Files(fs, storeDir)
@@ -776,9 +714,9 @@ object HamStream {
     * gun/storage.go:56-75; 7 h default gun/gun.go:84-85) as a batch job
     * run on the compaction cadence: the [[compactBuckets]] fold of ALL of
     * level 0 into EVERY bucket, dropping cells with `state < nowMs - ttlMs`
-    * after the merge. Buckets left fully expired are removed outright (an
-    * intentional delete, not a swap-crash window). It needs no bucket
-    * count: level-0 rows carry the bucket their append routed them to.
+    * after the merge. Buckets left fully expired are removed outright. It
+    * needs no bucket count: level-0 rows carry the bucket their append
+    * routed them to.
     */
   def compactStore(
       spark: org.apache.spark.sql.SparkSession,
@@ -789,9 +727,8 @@ object HamStream {
     val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(storeDir)) return
     checkLayout(fs, storeDir, stamp = false)
-    recoverStore(fs, storeDir)
     compactBuckets(spark, storePath, level0Files(fs, storeDir).map(_.getPath),
-      storedBuckets(fs, storeDir), nowMs, ttlMs, stagingName = ".compact-staging")
+      storedBuckets(fs, storeDir), nowMs, ttlMs)
   }
 
   /** The fold of level 0 into the buckets — merge-then-TTL, the shared
@@ -799,26 +736,37 @@ object HamStream {
     * caller's retention cadence) and [[appendBatchIntoStore]]'s auto
     * trigger (the level-0 files it listed, ttl = ∞). In order:
     *   1. the buckets named by the `level0` rows' `bucket` column, read on
-    *      the driver ([[level0Buckets]]: no Spark job), plus `alsoBuckets`;
-    *   2. `level0` and those buckets' files are read ([[readBucketed]]: no
-    *      listing job) and HAM-merged, then expired winners are dropped —
-    *      an expired winner must not resurrect a stale-but-in-window loser
-    *      (reference purge drops the cell outright, gun/storage.go:56-75);
-    *   3. the result is written to staged bucket dirs, one file per
-    *      bucket, sorted by (soul, field);
-    *   4. each bucket is swapped in ([[swapBucket]]); a bucket with no
-    *      surviving row is removed outright (an intentional delete, not a
-    *      swap-crash window);
-    *   5. exactly the `level0` files are deleted — a file appended since
-    *      the listing stays for the next fold.
+    *      the driver ([[level0Buckets]]: no Spark job), plus `alsoBuckets`,
+    *      and those buckets' files are listed;
+    *   2. `level0` and the listed bucket files are read with
+    *      [[StoreSchema]] (no listing job; `basePath` makes a bucket
+    *      file's dir its `bucket`) and HAM-merged, then expired winners
+    *      are dropped — an expired winner must not resurrect a
+    *      stale-but-in-window loser (reference purge drops the cell
+    *      outright, gun/storage.go:56-75);
+    *   3. [[BucketIndex.fold]] writes one file per bucket, sorted by
+    *      (soul, field), promotes each into its `bucket=N/` dir as
+    *      `compact-<uuid>-0.parquet`, and then deletes exactly the files
+    *      of 1, the bucket files first — a level-0 file appended since the
+    *      listing stays for the next fold;
+    *   4. a bucket with no surviving row is removed outright.
     * `bucket` is functionally determined by the key, so it passes through
     * the merge as a group key, and every row the fold writes lands in a
-    * bucket of step 1: the fold swaps in and deletes only what it read.
-    * Per-fold I/O is O(level 0 + touched buckets), not O(store). A crash
-    * between 4 and 5 leaves the level-0 cells in both levels: duplicates
-    * the next fold absorbs, as HAM merge is idempotent. Until then a
-    * winner that this fold's TTL filter dropped is still read from its
-    * level-0 file; the next [[compactStore]] drops it.
+    * bucket of step 1. Per-fold I/O is O(level 0 + touched buckets), not
+    * O(store). Each fold's output takes a fresh name: `compactStore` has no
+    * batch id, and an output that took an earlier fold's name would find
+    * it taken, skip, and be deleted with the files it folded. A crash
+    * after the promote, or in the middle of the deletes, leaves input
+    * files beside the output: duplicates the next fold absorbs, as HAM
+    * merge is idempotent. Until then a winner that this fold's TTL filter
+    * dropped is still read from an input file that was not deleted; the
+    * next [[compactStore]] drops it. The bucket files go first because
+    * [[appendIntoStore]]'s level 0 holds newer cells than the bucket
+    * bases (the update stream emits a key only when its winner changes):
+    * a stop mid-delete then leaves a dropped key's newest rows, and never
+    * a loser whose winner is gone. A level-0 row older than its key's
+    * base row, which only a direct append can write, can still show
+    * after such a stop until the next [[compactStore]].
     */
   private[streaming] def compactBuckets(
       spark: org.apache.spark.sql.SparkSession,
@@ -826,32 +774,23 @@ object HamStream {
       level0: Seq[Path],
       alsoBuckets: Seq[Int],
       nowMs: Double,
-      ttlMs: Double,
-      stagingName: String): Unit = {
+      ttlMs: Double): Unit = {
     import org.apache.spark.sql.functions.{col, lit}
     val storeDir = new Path(storePath)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = StoreFs.fileSystem(storeDir, conf)
     val touched = (alsoBuckets ++ level0.flatMap(level0Buckets(_, conf))).distinct
     if (touched.isEmpty) return
-    val kept = graft.operators.HamMerge
-      .mergeSnapshot(readBucketed(spark, storeDir, level0, touched), passThrough = Seq("bucket"))
+    val bases = touched.flatMap(bucketDir(fs, storeDir, _)).flatMap(parquetFiles(fs, _)).map(_.getPath)
+    val kept = graft.operators.HamMerge.mergeSnapshot(
+        union(spark, scans(spark, level0, StoreSchema) ++
+          scans(spark, bases, StoreSchema, Some(storeDir)), StoreSchema),
+        passThrough = Seq("bucket"))
       .filter(col("state") >= lit(nowMs - ttlMs))
-    val staging = new Path(storePath, stagingName)
-    // hashed on the bucket, so each bucket is in one task and gets one
-    // file; at most one task per shuffle partition, as a task per bucket
-    // would pay a task's fixed cost per file
-    kept.repartition(touched.length min spark.sessionState.conf.numShufflePartitions, col("bucket"))
-      .sortWithinPartitions("bucket", "soul", "field")
-      .write.options(StoreFs.writeOptions(staging, conf))
-      .mode("overwrite").partitionBy("bucket").parquet(staging.toString)
-    touched.foreach { b =>
-      val next = new Path(staging, s"bucket=$b")
-      if (fs.exists(next)) swapBucket(fs, storeDir, s"bucket=$b", next)
-      else fs.delete(new Path(storeDir, s"bucket=$b"), true) // fully expired
-    }
-    level0.foreach(fs.delete(_, false))
-    fs.delete(staging, true)
+    val written = BucketIndex.fold(kept, Seq("soul", "field"), bases ++ level0,
+      s"compact-${java.util.UUID.randomUUID}", storeDir, touched.length, fs)
+    touched.map(b => s"bucket=$b").filterNot(written.contains)
+      .foreach(b => fs.delete(new Path(storeDir, b), true)) // fully expired
   }
 
   /** The distinct `bucket` ids of a level-0 file: that one column, read

@@ -3,9 +3,17 @@ package graft.operators
 import graft.SparkSuite
 import graft.core.{GunCell, GunValue}
 import org.apache.spark.sql.DataFrame
+import org.scalatest.concurrent.TimeLimitedTests
+import org.scalatest.time.{Seconds, Span}
 
-class HamMergeSpec extends SparkSuite {
+class HamMergeSpec extends SparkSuite with TimeLimitedTests {
   import spark.implicits._
+
+  // slowest test on a 4-vCPU host in a full tier-1 run: 8.0 s (the CRDT
+  // convergence property); the limit is 15x that, room for a first suite
+  // that starts the session and for a shared host that runs 2-3x slower
+  val timeLimit: Span = Span(120, Seconds)
+  override val defaultTestSignaler = SparkSuite.cancelAllJobs
 
   private def cells(rows: (String, String, GunValue, Double)*): DataFrame =
     rows.map { case (s, f, v, st) => GunCell(s, f, v, st) }.toDF()

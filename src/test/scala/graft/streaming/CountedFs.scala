@@ -10,8 +10,11 @@ import scala.jdk.CollectionConverters._
 /** The local file system under a `counted:` scheme: `counted:///tmp/x` is
   * the local `/tmp/x`. It records each file it opens and each dir it
   * lists, and runs a hook after each listing and after each status lookup
-  * (`exists` is one), so a spec can bound what a store read touches and
-  * act between a read's lookups, listings and opens.
+  * (`exists` is one), and before each delete, so a spec can bound what a
+  * store read touches, act between a read's lookups, listings and opens,
+  * and stop a fold between its deletes. A rename onto an existing file
+  * returns false and moves nothing, as on HDFS (the local `rename`
+  * replaces the file), so a taken name shows as taken.
   */
 class CountedFs extends RawLocalFileSystem {
   override def getUri: java.net.URI = CountedFs.Uri
@@ -36,6 +39,14 @@ class CountedFs extends RawLocalFileSystem {
   override def exists(f: Path): Boolean =
     try super.exists(f)
     finally CountedFs.afterStatus(f)
+
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    CountedFs.beforeDelete(f)
+    super.delete(f, recursive)
+  }
+
+  override def rename(src: Path, dst: Path): Boolean =
+    !pathToFile(dst).isFile && super.rename(src, dst)
 }
 
 object CountedFs {
@@ -44,6 +55,7 @@ object CountedFs {
   private val listed = new ConcurrentLinkedQueue[Path]
   @volatile private var afterListing: Path => Unit = _ => ()
   @volatile private var afterStatus: Path => Unit = _ => ()
+  @volatile private var beforeDelete: Path => Unit = _ => ()
 
   /** Local dir `dir` under the `counted:` scheme, which `conf` now maps to
     * this file system.
@@ -60,21 +72,24 @@ object CountedFs {
   }
 
   /** What `op` opens and lists through the `counted:` scheme, running
-    * `hook` on each listed dir after its listing, and `statusHook` on each
-    * path after its status lookup, found or not.
+    * `hook` on each listed dir after its listing, `statusHook` on each
+    * path after its status lookup, found or not, and `deleteHook` on each
+    * path before it is deleted.
     */
-  def during[T](hook: Path => Unit = _ => (), statusHook: Path => Unit = _ => ())(
-      op: => T): (T, Touched) = {
+  def during[T](hook: Path => Unit = _ => (), statusHook: Path => Unit = _ => (),
+      deleteHook: Path => Unit = _ => ())(op: => T): (T, Touched) = {
     opened.clear()
     listed.clear()
     afterListing = hook
     afterStatus = statusHook
+    beforeDelete = deleteHook
     try {
       val r = op
       (r, Touched(opened.asScala.toSeq, listed.asScala.toSeq))
     } finally {
       afterListing = _ => ()
       afterStatus = _ => ()
+      beforeDelete = _ => ()
     }
   }
 

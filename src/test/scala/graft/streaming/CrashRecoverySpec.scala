@@ -10,14 +10,15 @@ import org.scalatest.time.{Seconds, Span}
   * the gun source's WAL journal write (during batch planning) and the
   * cell store's delta append (during batch execution). The pieces are
   * each spec'd elsewhere (GunSourceSpec: WAL replay; DeltaStoreSpec:
-  * replayed appends; HamStreamSpec: swap-crash windows); this drives the
+  * replayed appends; HamStreamSpec: fold crash windows); this drives the
   * full restart path — a query dies AFTER the source journaled the planned
   * range and BEFORE any store write, restarts from the same checkpoint,
   * replays the range from the journal, and converges to exactly the store
   * a no-crash run produces (at-least-once replay + HAM idempotence =
   * effectively-once). The same restart after the batch's level-0 file
-  * was promoted, and the heal of a fold interrupted mid-swap or between
-  * its swaps and its level-0 delete.
+  * was promoted; a TTL fold stopped between its promote and its delete;
+  * and the refusal of a store that an older build's bucket swap left
+  * with a parked bucket.
   */
 class CrashRecoverySpec extends SparkSuite with TimeLimitedTests {
 
@@ -121,95 +122,90 @@ class CrashRecoverySpec extends SparkSuite with TimeLimitedTests {
     }
   }
 
-  test("crash mid-compaction (bucket parked in trash): next append heals and proceeds") {
+  test("a store with a bucket parked by an older build's swap: every entry refuses it, unchanged") {
     val spark2 = spark
     import spark2.implicits._
     import graft.core.GunValue
     import graft.streaming.HamStream.Update
     val storePath =
-      java.nio.file.Files.createTempDirectory("gun_ccrash_store").toString + "/store"
-    val buckets = 1 // everything in bucket=0: the trash window is the whole store
+      java.nio.file.Files.createTempDirectory("gun_trash_store").toString + "/store"
+    val buckets = 1 // everything in bucket=0: the parked dir is the whole store
     HamStream.appendBatchIntoStore(
       Seq(Update("s1", "f", GunValue.string("v1"), 1000)).toDS(),
       0L, storePath, buckets)
     StoreFiles.fold(spark, storePath)
-    // simulate the swapBucket crash window inside the auto-compaction fold:
-    // live renamed to trash (step 1 done), staged never promoted (step 2
-    // lost with the staging dir) — the bucket is ABSENT from the live tree
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.rename(new org.apache.hadoop.fs.Path(storePath, "bucket=0"),
-      new org.apache.hadoop.fs.Path(storePath, ".trash-bucket=0"))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(storePath, "bucket=0")))
+    // what the previous build's bucket swap leaves after a crash between
+    // its rename(live → trash) and its rename(staged → live): the parked
+    // dir holds the bucket's only copy
+    val parked = new java.io.File(storePath, ".trash-bucket=0")
+    assert(new java.io.File(storePath, "bucket=0").renameTo(parked))
+    assert(StoreFiles.level0(storePath).isEmpty && StoreFiles.buckets(storePath).isEmpty)
 
-    // readers serve the parked bucket and never write the store: every
-    // path keeps its size and mtime (a dir's mtime moves when an entry is
-    // made, renamed or removed in it), and the bucket stays parked
-    def tree(f: java.io.File): Seq[(String, Long, Long)] =
-      (f.getPath, f.length, f.lastModified) +: Option(f.listFiles).toSeq.flatten.flatMap(tree)
-    val before = tree(new java.io.File(storePath)).toSet
-    assert(HamStream.fetchFromStore(spark, storePath, "s1", "f", buckets).value
-      .contains(GunValue.string("v1")))
-    assert(HamStream.readStore(spark, storePath, buckets).select("value.str")
-      .as[String].collect().toSeq == Seq("v1"))
-    assert(tree(new java.io.File(storePath)).toSet == before, "a read changed the store tree")
-    assert(fs.exists(new org.apache.hadoop.fs.Path(storePath, ".trash-bucket=0")))
-
-    // the next append's recoverStore restores the parked bucket before
-    // touching anything, so no write is lost and the new delta lands on top
-    HamStream.appendBatchIntoStore(
-      Seq(Update("s1", "f", GunValue.string("v2"), 2000)).toDS(),
-      1L, storePath, buckets)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(storePath, ".trash-bucket=0")))
-    val r = HamStream.fetchFromStore(spark, storePath, "s1", "f", buckets)
-    assert(r.value.contains(GunValue.string("v2")) && r.state.contains(2000.0))
-    // both generations present: v1 in the bucket, v2 in level 0
-    assert(spark.read.parquet(storePath).count() == 1)
-    assert(StoreFiles.rawCells(spark, storePath).count() == 2)
+    val before = StoreFiles.tree(storePath)
+    val entries = Seq[(String, () => Any)](
+      "fetchFromStore" -> (() => HamStream.fetchFromStore(spark, storePath, "s1", "f", buckets)),
+      "readStore" -> (() => HamStream.readStore(spark, storePath, buckets)),
+      "appendBatchIntoStore" -> (() => HamStream.appendBatchIntoStore(
+        Seq(Update("s1", "f", GunValue.string("v2"), 2000)).toDS(), 1L, storePath, buckets)),
+      "compactStore" -> (() => HamStream.compactStore(spark, storePath, nowMs = 0.0)))
+    for ((name, entry) <- entries) {
+      val e = intercept[IllegalStateException](entry())
+      assert(e.getMessage.contains(parked.getPath), s"$name: ${e.getMessage}")
+      assert(e.getMessage.contains("previous build"), s"$name: ${e.getMessage}")
+      assert(StoreFiles.tree(storePath) == before, s"$name changed the store tree")
+    }
   }
 
-  test("crash between a fold's swaps and its level-0 delete: reads hold, the next fold absorbs") {
+  test("crash after a fold's promote, before its delete: reads hold, the next fold absorbs") {
     val spark2 = spark
     import spark2.implicits._
     import graft.core.GunValue
     import graft.streaming.HamStream.Update
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     val storePath =
       java.nio.file.Files.createTempDirectory("gun_fcrash_store").toString + "/store"
     val buckets = 4
+    // a bucket base holding a winner that the TTL fold will expire
+    HamStream.appendBatchIntoStore(
+      Seq(Update("s4", "f", GunValue.string("expired-base"), 1000)).toDS(),
+      0L, storePath, buckets, compactThreshold = 0)
+    StoreFiles.fold(spark, storePath)
     HamStream.appendBatchIntoStore(
       Seq(Update("s1", "f", GunValue.string("old"), 1000),
         Update("s2", "f", GunValue.string("keep"), 9000),
         Update("s3", "f", GunValue.string("expired"), 1000)).toDS(),
-      0L, storePath, buckets, compactThreshold = 0)
+      1L, storePath, buckets, compactThreshold = 0)
     HamStream.appendBatchIntoStore(
       Seq(Update("s1", "f", GunValue.string("new"), 8000)).toDS(),
-      1L, storePath, buckets, compactThreshold = 0)
-    // the TTL fold runs through its swaps, and the crash takes its level-0
-    // delete: level 0 still holds both files it folded
-    val level0 = StoreFiles.level0(storePath).map(_.toPath)
-    val saved = Files.createTempDirectory("gun_fcrash_l0")
-    level0.foreach(f => Files.copy(f, saved.resolve(f.getFileName)))
-    HamStream.compactStore(spark, storePath, nowMs = 10000, ttlMs = 5000)
-    assert(StoreFiles.level0(storePath).isEmpty)
-    level0.foreach(f => Files.copy(saved.resolve(f.getFileName), f,
-      StandardCopyOption.REPLACE_EXISTING))
+      2L, storePath, buckets, compactThreshold = 0)
+    // the TTL fold promotes its output, and the crash takes its deletes:
+    // level 0 and the base it folded are all still there
+    val inputs = StoreFiles.level0(storePath) ++ StoreFiles.buckets(storePath).values.flatten
+    val deleted = StoreFiles.crashFold(storePath, 0) {
+      HamStream.compactStore(spark, CountedFs.path(storePath, spark.sparkContext.hadoopConfiguration),
+        nowMs = 10000, ttlMs = 5000)
+    }
+    assert(deleted.isEmpty && inputs.forall(_.exists))
+    assert(StoreFiles.level0(storePath).size == 2)
 
     // every key reads its winner; s1 and s2 are in both levels
     def point(soul: String) =
       HamStream.fetchFromStore(spark, storePath, soul, "f", buckets).value.flatMap(_.str)
     assert(point("s1").contains("new") && point("s2").contains("keep"))
     assert(StoreFiles.rawCells(spark, storePath).filter($"soul" === "s1").count() == 3)
-    // the one TTL nuance: the fold dropped s3, but its level-0 file was
-    // not deleted, so s3 reads until the next fold
+    // the one TTL nuance: the fold dropped s3 and s4, but the level-0
+    // file and the base that hold them were not deleted, so both read
+    // until the next fold
     assert(point("s3").contains("expired"))
+    assert(point("s4").contains("expired-base"))
 
-    // the next fold (a TTL compaction) absorbs the duplicates and drops s3
+    // the next fold (a TTL compaction) absorbs the duplicates and drops
+    // s3 and s4
     HamStream.compactStore(spark, storePath, nowMs = 10000, ttlMs = 5000)
     assert(StoreFiles.level0(storePath).isEmpty)
+    assert(StoreFiles.buckets(storePath).values.forall(_.size == 1), StoreFiles.buckets(storePath))
     val rows = StoreFiles.rawCells(spark, storePath).select("soul", "value.str").as[(String, String)]
       .collect().toSet
     assert(rows == Set(("s1", "new"), ("s2", "keep")))
-    assert(point("s3").isEmpty)
+    assert(point("s3").isEmpty && point("s4").isEmpty)
   }
 }

@@ -214,14 +214,14 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
     val bucket = s"bucket=${HamStream.bucketIdOf("s1", "f", NumBuckets)}"
     val counted = CountedFs.path(dir, spark.sparkContext.hadoopConfiguration)
     // the production read; its first listing of the key's bucket is
-    // followed by a fold, which swaps the bucket dir and deletes the
-    // listed base and level-0 files before the read opens them
+    // followed by a fold, which promotes its output into the bucket and
+    // deletes the listed base and level-0 files before the read opens them
     var folded = false
     def foldOnce(listed: org.apache.hadoop.fs.Path): Unit =
       if (listed.getName == bucket && !folded) {
         folded = true
         HamStream.compactBuckets(spark, dir, StoreFiles.level0Paths(dir), Nil,
-          nowMs = 0.0, ttlMs = Double.PositiveInfinity, stagingName = ".compact-staging-race")
+          nowMs = 0.0, ttlMs = Double.PositiveInfinity)
       }
     val ((hit, touched), logged) = graft.SparkSuite.warningsDuring {
       CountedFs.during(foldOnce) {
@@ -263,7 +263,7 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
         if (path.getName.startsWith(after) && !folded) {
           folded = true
           HamStream.compactBuckets(spark, dir, StoreFiles.level0Paths(dir), Nil,
-            nowMs = 0.0, ttlMs = Double.PositiveInfinity, stagingName = ".compact-staging-race")
+            nowMs = 0.0, ttlMs = Double.PositiveInfinity)
         }
       val (hit, touched) =
         if (event == "listing") CountedFs.during(hook = foldOnce) {
@@ -281,42 +281,89 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
     }
   }
 
-  test("a point read inside a compaction swap reads the parked bucket and renames nothing") {
-    import org.apache.hadoop.fs.{FilterFileSystem, Path}
+  test("a point read inside a fold's delete reads the old or new winner and changes nothing") {
     val dir = newDir()
-    for (b <- 0 until 2)
-      HamStream.appendBatchIntoStore(
-        Seq(Update("s1", "f", GunValue.string(s"v$b"), 1000.0 + b)).toDS(),
-        b.toLong, dir, NumBuckets, compactThreshold = 0)
+    // s1 has a stale base and a level-0 winner the fold keeps; s2 and s3
+    // each have one row, which the fold expires: s2's in level 0, s3's in
+    // a base, so each reads its old winner until that row's file is gone
+    HamStream.appendBatchIntoStore(
+      Seq(Update("s1", "f", GunValue.string("base"), 1000.0),
+        Update("s3", "f", GunValue.string("expires"), 1000.0)).toDS(), 0L, dir, NumBuckets)
     StoreFiles.fold(spark, dir)
-    val bucket = s"bucket=${HamStream.bucketIdOf("s1", "f", NumBuckets)}"
-    // the bucket's fold, staged in a store of its own
-    val folded = newDir()
-    HamStream.appendBatchIntoStore(Seq(Update("s1", "f", GunValue.string("v1"), 1001.0)).toDS(),
-      0L, folded, NumBuckets)
-    StoreFiles.fold(spark, folded)
-    val foldOutput = StoreFiles.buckets(folded)(bucket).map(_.getName)
-    val storeDir = new Path(dir)
-    val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
-    val winner = FetchResult("f", Some(GunValue.string("v1")), Some(1001.0), valueExists = true)
-    var inSwap: Option[FetchResult] = None
-    // the read runs between the swap's rename(live → trash) and its
-    // rename(staged → live): the live dir is absent
-    val racing = new FilterFileSystem(fs) {
-      override def rename(src: Path, dst: Path): Boolean = {
-        val done = super.rename(src, dst)
-        if (dst.getName.startsWith(".trash-"))
-          inSwap = Some(HamStream.fetchFromStore(spark, dir, "s1", "f", NumBuckets))
-        done
-      }
+    HamStream.appendBatchIntoStore(
+      Seq(Update("s1", "f", GunValue.string("kept"), 9000.0),
+        Update("s2", "f", GunValue.string("expires"), 1000.0)).toDS(),
+      1L, dir, NumBuckets, compactThreshold = 0)
+    val souls = Seq("s1", "s2", "s3")
+    def read(soul: String) = HamStream.fetchFromStore(spark, dir, soul, "f", NumBuckets)
+    val old = souls.map(s => s -> read(s)).toMap
+    val gone = FetchResult("f", None, None, valueExists = false)
+    val now = Map("s1" -> old("s1"), "s2" -> gone, "s3" -> gone)
+    assert(old("s1").value.contains(GunValue.string("kept")) && old("s2").valueExists &&
+      old("s3").valueExists)
+    val listed = (StoreFiles.level0(dir) ++ StoreFiles.buckets(dir).values.flatten).map(_.getPath)
+    // before each of the fold's deletes (the first one right after its
+    // promote) every key reads its winner from before the fold or from
+    // after it, and the reads change no path, size or mtime
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(org.apache.hadoop.fs.Path, Map[String, FetchResult])]
+    CountedFs.during(deleteHook = p => if (StoreFiles.isDataFile(dir, p)) {
+      val before = StoreFiles.tree(dir)
+      seen += p -> souls.map(s => s -> read(s)).toMap
+      assert(StoreFiles.tree(dir) == before, s"a read before the delete of $p changed the store")
+    }) {
+      HamStream.compactStore(spark, CountedFs.path(dir, spark.sparkContext.hadoopConfiguration),
+        nowMs = 10000.0, ttlMs = 5000.0)
     }
-    HamStream.swapBucket(racing, storeDir, bucket, new Path(folded, bucket))
-    assert(inSwap.contains(winner), "the read serves the parked bucket")
-    val live = new Path(storeDir, bucket)
-    assert(!fs.exists(new Path(live, bucket)), "the staged dir must not nest into the live one")
-    assert(fs.listStatus(live).map(_.getPath.getName).filter(_.endsWith(".parquet")).toSeq ==
-      foldOutput, "the live bucket is the fold's output")
-    assert(HamStream.fetchFromStore(spark, dir, "s1", "f", NumBuckets) == winner)
+    assert(seen.map(_._1.toUri.getPath).sorted == listed.sorted,
+      "the fold deletes exactly the files it listed")
+    for ((p, reads) <- seen; s <- souls)
+      assert(reads(s) == old(s) || reads(s) == now(s), s"$s before the delete of $p: ${reads(s)}")
+    // the bases go first, so s3 is gone before the last delete, level 0's,
+    // which takes s2
+    assert(seen.head._2 == old && seen.last._1.getParent.getName == "_l0")
+    assert(seen.last._2("s3") == gone && seen.forall(_._2("s2") == old("s2")))
+    assert(souls.map(s => s -> read(s)).toMap == now)
+    assert(StoreFiles.level0(dir).isEmpty)
+    assert(StoreFiles.buckets(dir).values.forall(_.size == 1), StoreFiles.buckets(dir))
+  }
+
+  test("a fold's output never takes an earlier fold's name: no cell is lost") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def cells(b: Int) = (1 to 6).map(i => Update(s"s$i", "f", GunValue.number(10L * b + i), 1000.0 + b))
+    def want(batches: Int) = (1 to 6).map(i => s"s$i" -> GunValue.number(10L * (batches - 1) + i)).toMap ++
+      (0 until batches).map(b => s"only$b" -> GunValue.number(b.toLong)).toMap
+    def batch(b: Int) = (cells(b) :+ Update(s"only$b", "f", GunValue.number(b.toLong), 1.0)).toDS()
+    def check(dir: String, batches: Int, clue: String): Unit = {
+      val merged = HamStream.readStore(spark, dir).as[GunCell].collect().map(c => c.soul -> c.value).toMap
+      assert(merged == want(batches), clue)
+      want(batches).foreach { case (soul, v) =>
+        assert(HamStream.fetchFromStore(spark, dir, soul, "f", NumBuckets).value.contains(v), s"$clue: $soul")
+      }
+      assert(StoreFiles.level0(dir).isEmpty, clue)
+      assert(StoreFiles.buckets(dir).values.forall(_.size == 1), s"$clue: ${StoreFiles.buckets(dir)}")
+    }
+    // a rename onto a taken name fails on the `counted:` scheme, as on
+    // HDFS: a fold whose output took an earlier fold's name would skip
+    // its promote and then delete what it folded
+    val twice = newDir()
+    val twiceC = CountedFs.path(twice, conf)
+    for (b <- 0 until 2) {
+      HamStream.appendBatchIntoStore(batch(b), b.toLong, twiceC, NumBuckets, compactThreshold = 0)
+      StoreFiles.fold(spark, twiceC)
+    }
+    check(twice, 2, "two compactStores in a row")
+    // the auto-fold of batch 2 crashes after its promote; the batch's
+    // replay finds its level-0 name taken, and folds again
+    val replay = newDir()
+    val replayC = CountedFs.path(replay, conf)
+    for (b <- 0 until 2)
+      HamStream.appendBatchIntoStore(batch(b), b.toLong, replayC, NumBuckets, compactThreshold = 3)
+    assert(StoreFiles.crashFold(replay, 0) {
+      HamStream.appendBatchIntoStore(batch(2), 2L, replayC, NumBuckets, compactThreshold = 3)
+    }.isEmpty)
+    assert(StoreFiles.level0(replay).size == 3 && StoreFiles.buckets(replay).nonEmpty)
+    HamStream.appendBatchIntoStore(batch(2), 2L, replayC, NumBuckets, compactThreshold = 3)
+    check(replay, 3, "a same-batchId replay of an auto-fold that crashed after its promote")
   }
 
   test("stream equals batch: any cut of a history through level 0 and its folds (property)") {
@@ -350,7 +397,7 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
         if (lagging(b))
           HamStream.compactBuckets(spark, dir,
             StoreFiles.level0Paths(dir).filterNot(_.getName == s"delta-b$b.parquet"), Nil,
-            nowMs = 0.0, ttlMs = Double.PositiveInfinity, stagingName = s".compact-staging-lag$b")
+            nowMs = 0.0, ttlMs = Double.PositiveInfinity)
       }
       val want = graft.operators.HamMerge.mergeSnapshot(history.toDS().toDF()
           .withColumn("valueExists", org.apache.spark.sql.functions.lit(true)))

@@ -319,47 +319,57 @@ class HamStreamSpec extends SparkSuite with TimeLimitedTests {
     } finally q.stop()
   }
 
-  test("swap crash windows: bucket stays readable (old or new, never neither)") {
+  test("fold crash windows: after the promote and mid-delete, every key reads its winner") {
     val spark2 = spark
     import spark2.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("ham_store_swap").toString + "/cells"
-    val in = MemoryStream[GunCell]
-    val q = appendIntoStore(updates(in.toDS(), timers = false), dir, numBuckets = 4)
-    try {
-      in.addData((1 to 12).map(i =>
-        GunCell(s"ssoul$i", "f", GunValue.number(i.toLong), 1000)): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    StoreFiles.fold(spark, dir)
-    val all = spark.read.parquet(dir).select("soul").as[String].collect().toSet
-    assert(all.size == 12)
-    val storeDir = new org.apache.hadoop.fs.Path(dir)
-    val fs = storeDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val someBucket = fs.listStatus(storeDir)
-      .map(_.getPath.getName).filter(_.startsWith("bucket=")).head
-
-    // Crash point A: between rename(live → trash) and rename(staged → live)
-    // — live dir absent, old data parked in trash. Any store entry point
-    // must heal it before serving.
-    fs.rename(new org.apache.hadoop.fs.Path(storeDir, someBucket),
-      new org.apache.hadoop.fs.Path(storeDir, s".trash-$someBucket"))
-    assert(spark.read.parquet(dir).count() < 12) // bucket really absent pre-heal
-    HamStream.recoverStore(fs, storeDir)
-    assert(spark.read.parquet(dir).select("soul").as[String].collect().toSet == all)
-
-    // Crash point B: after rename(staged → live) but before the trash
-    // delete — both live and trash exist. Recovery must drop the trash
-    // (the swap completed), and the dot-dir must be invisible to reads
-    // (no double counting even BEFORE recovery runs).
-    val live = new org.apache.hadoop.fs.Path(storeDir, someBucket)
-    val trash = new org.apache.hadoop.fs.Path(storeDir, s".trash-$someBucket")
-    org.apache.hadoop.fs.FileUtil.copy(fs, live, fs, trash, false,
-      spark.sparkContext.hadoopConfiguration)
-    assert(spark.read.parquet(dir).count() == 12) // hidden-file filter holds
-    HamStream.recoverStore(fs, storeDir)
-    assert(!fs.exists(trash) && fs.exists(live))
-    assert(spark.read.parquet(dir).select("soul").as[String].collect().toSet == all)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = (1 to 12).map(i => s"ssoul$i")
+    // the bases hold every key; level 0 holds newer winners for half of
+    // them and stale losers for two of the others
+    val want = keys.zipWithIndex.map { case (k, i) =>
+      k -> (if (i < 6) GunValue.number(100L + i) else GunValue.number(i.toLong))
+    }.toMap
+    def store(tag: String): String = {
+      val dir = java.nio.file.Files.createTempDirectory(s"ham_store_$tag").toString + "/cells"
+      appendBatchIntoStore(keys.zipWithIndex.map { case (k, i) =>
+        Update(k, "f", GunValue.number(i.toLong), 1000) }.toDS(), 0L, dir, numBuckets = 4)
+      StoreFiles.fold(spark, dir)
+      appendBatchIntoStore((keys.take(6).zipWithIndex.map { case (k, i) =>
+          Update(k, "f", GunValue.number(100L + i), 2000) } ++
+        keys.slice(6, 8).map(k => Update(k, "f", GunValue.string("stale"), 500))).toDS(),
+        1L, dir, numBuckets = 4, compactThreshold = 0)
+      dir
+    }
+    // a crash after the promote (no data file deleted), after one base's
+    // delete, and after all four (the bases go first, level 0 last)
+    for (n <- Seq(0, 1, 4)) {
+      val dir = store(s"crash$n")
+      val listed = StoreFiles.level0(dir).size + StoreFiles.buckets(dir).values.map(_.size).sum
+      assert(listed == 5, s"the fold lists level 0 and the four bases, not $listed files")
+      val deleted = StoreFiles.crashFold(dir, n) {
+        StoreFiles.fold(spark, CountedFs.path(dir, conf))
+      }
+      assert(deleted.size == n)
+      // the fold's output and the files it did not delete sit side by
+      // side: every key reads its winner, on both read paths, and the
+      // reads change no path, size or mtime
+      val before = StoreFiles.tree(dir)
+      keys.foreach { k =>
+        assert(HamStream.fetchFromStore(spark, dir, k, "f", numBuckets = 4).value.contains(want(k)),
+          s"crash after $n deletes: $k")
+      }
+      val bulk = readStore(spark, dir).as[GunCell].collect().map(c => c.soul -> c.value).toMap
+      assert(bulk == want, s"crash after $n deletes")
+      assert(StoreFiles.tree(dir) == before, s"crash after $n deletes: a read changed the store")
+      // the next fold absorbs the duplicates: one file per bucket
+      StoreFiles.fold(spark, dir)
+      assert(StoreFiles.level0(dir).isEmpty)
+      assert(StoreFiles.buckets(dir).values.forall(_.size == 1), StoreFiles.buckets(dir))
+      assert(StoreFiles.rawCells(spark, dir).count() == keys.size)
+      keys.foreach { k =>
+        assert(HamStream.fetchFromStore(spark, dir, k, "f", numBuckets = 4).value.contains(want(k)))
+      }
+    }
   }
 
   test("lsh candidate hot-bucket cap rep-links oversized buckets") {

@@ -68,7 +68,7 @@ class HotSoulSpec extends SparkSuite with TimeLimitedTests {
     assert(folded < 150, s"fold scope $folded rows (soul size is 300)")
     val before = StoreFiles.buckets(dir)
     HamStream.compactBuckets(spark, dir, StoreFiles.level0Paths(dir), Nil,
-      nowMs = 0.0, ttlMs = Double.PositiveInfinity, stagingName = ".compact-staging-hot")
+      nowMs = 0.0, ttlMs = Double.PositiveInfinity)
     val after = StoreFiles.buckets(dir)
     assert(after.keySet == before.keySet)
     val rewritten = after.keySet.filter(b => after(b) != before(b))
