@@ -16,7 +16,7 @@ package graft.core
   *     `42.5`) — unlike `json.Number`, which marshals raw. The tiebreak
   *     therefore compares numbers with quotes; we match that byte-for-byte.
   *     (Wire encoding is a separate concern: protocol-correct JSON keeps
-  *     numbers raw — see GunWire.cellsToPutJson.)
+  *     numbers raw — see WireCodec.valueJson.)
   *   - A relation marshals as `{"#":"<soul>"}` (gun/node.go:156-159).
   */
 object CanonicalJson {

@@ -41,17 +41,17 @@ object Ham {
       if (sysState < newState) TooFutureDeferred
       else if (newState < exState) OlderHistorical
       else if (exState < newState) NewerUpdate
-      else if (exVal == newVal) SameKeep
       else {
-        val exJson = CanonicalJson.encode(exVal)
-        val newJson = CanonicalJson.encode(newVal)
-        // bytes.Compare on UTF-8 bytes; our escapes keep output ASCII for
-        // everything we escape, and UTF-8 byte order == code-point order.
-        if (byteCompare(exJson, newJson) < 0) SameUpdate else SameKeep
+        val incoming = GunCell("", "", newVal, newState)
+        if (mergeCells(GunCell("", "", exVal, exState), incoming) eq incoming) SameUpdate
+        else SameKeep
       }
   }
 
-  /** Compare two strings by their UTF-8 byte sequences (Go bytes.Compare). */
+  /** Compare two strings by their UTF-8 byte sequences (Go bytes.Compare):
+    * CanonicalJson escapes keep its output ASCII for every char it escapes,
+    * and UTF-8 byte order is code-point order.
+    */
   def byteCompare(a: String, b: String): Int = {
     val ab = a.getBytes("UTF-8")
     val bb = b.getBytes("UTF-8")
@@ -78,16 +78,18 @@ object Ham {
   }
 
   /** Merge a batch into a key-collapsed set of store cells under the
-    * reference's deferral rule (gun/storage.go:91-122) — the in-memory
-    * form of `HamMerge.merge`, which it is property-tested against:
+    * reference's deferral rule (gun/storage.go:91-122) — the one HAM rule
+    * of the session store ([[graft.graph.Graft]]) and of the streaming
+    * state machine (`HamStream.step`):
     *   - a key is *seen* when the store holds it or the batch carries a
     *     present (state <= sysState) cell for it, since the reference
     *     applies the batch's present write first;
     *   - a future cell for a seen key is deferred, a future cell for an
     *     unseen key applies now;
-    *   - the store's cells and every applied cell resolve by HAM argmax.
+    *   - the store's cells and every applied cell resolve by HAM argmax
+    *     ([[mergeCells]]); a full tie keeps the store's cell.
     * With every cell present (matured deferred cells) this is the argmax
-    * re-merge of `HamMerge.applyDeferred`.
+    * re-merge of the deferred cells.
     * Returns (merged store cells, deferred cells).
     */
   def mergeBatch(

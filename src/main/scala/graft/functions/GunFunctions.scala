@@ -1,87 +1,14 @@
 package graft.functions
 
-import graft.core.{CanonicalJson, GunValue, ValueKind}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.core.ValueKind
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Column-level functions for the gun data model.
-  *
-  * Two forms of the canonical-JSON tiebreak key (reference: gun/state.go:68-78):
-  *   - `canonicalJsonBuiltin`: pure built-in functions — stays inside
-  *     whole-stage codegen; exact for values without exotic control
-  *     characters (everything the wire codec produces from JSON text).
-  *   - `canonicalJsonUdf`: byte-exact Go `encoding/json` mirror via
-  *     [[CanonicalJson]]; use where absolute fidelity beats codegen.
+/** Column-level functions for the gun data model: value struct builders
+  * and the node and edge views of the cell store. The HAM tiebreak key is
+  * the `gun_canonical_json` expression ([[graft.plans.GunCanonicalJson]]).
   */
 object GunFunctions {
-
-  /** Go-style JSON string quoting using only codegen'd built-ins. Handles
-    * the escapes Go emits: backslash, quote, \n \r \t, and HTML escapes
-    * (< > &). Other sub-0x20 control chars fall back to the UDF form.
-    */
-  def goQuoteBuiltin(c: Column): Column = {
-    val escaped = Seq(
-      "\\" -> "\\\\",
-      "\"" -> "\\\"",
-      "\n" -> "\\n",
-      "\r" -> "\\r",
-      "\t" -> "\\t",
-      "<" -> "\\u003c",
-      ">" -> "\\u003e",
-      "&" -> "\\u0026"
-    ).foldLeft(c) { case (col, (from, to)) => replace(col, lit(from), lit(to)) }
-    concat(lit("\""), escaped, lit("\""))
-  }
-
-  /** Canonical JSON of a gun value struct column (kind/str/num/bool/rel),
-    * built-ins only (codegen-friendly). This is the HAM-tiebreak key:
-    * numbers are QUOTED like Go's json.Marshal of the reference's
-    * named-string ValueNumber type (see [[CanonicalJson]]); use
-    * [[wireJsonBuiltin]] for protocol-correct wire output.
-    */
-  def canonicalJsonBuiltin(value: Column): Column = {
-    val kind = value.getField("kind")
-    when(kind === ValueKind.Null, lit("null"))
-      .when(kind === ValueKind.Num, goQuoteBuiltin(value.getField("num")))
-      .when(kind === ValueKind.Bool,
-        when(value.getField("bool"), lit("true")).otherwise(lit("false")))
-      .when(kind === ValueKind.Str, goQuoteBuiltin(value.getField("str")))
-      .when(kind === ValueKind.Rel,
-        concat(lit("{\"#\":"), goQuoteBuiltin(value.getField("rel")), lit("}")))
-  }
-
-  /** Wire JSON of a gun value struct column: identical to
-    * [[canonicalJsonBuiltin]] except numbers stay RAW (protocol-correct
-    * JSON for gun peers — a number on the wire is a JSON number,
-    * gun/node.go:44-46 UseNumber decode).
-    */
-  def wireJsonBuiltin(value: Column): Column = {
-    val kind = value.getField("kind")
-    when(kind === ValueKind.Null, lit("null"))
-      .when(kind === ValueKind.Num, value.getField("num"))
-      .when(kind === ValueKind.Bool,
-        when(value.getField("bool"), lit("true")).otherwise(lit("false")))
-      .when(kind === ValueKind.Str, goQuoteBuiltin(value.getField("str")))
-      .when(kind === ValueKind.Rel,
-        concat(lit("{\"#\":"), goQuoteBuiltin(value.getField("rel")), lit("}")))
-  }
-
-  /** Byte-exact UDF form of the canonical JSON key. */
-  val canonicalJsonUdf = udf(
-    (kind: String, str: String, num: String, bool: java.lang.Boolean, rel: String) =>
-      CanonicalJson.encode(GunValue(
-        kind,
-        Option(str),
-        Option(num),
-        Option(bool).map(Boolean.unbox),
-        Option(rel)
-      ))
-  )
-
-  def canonicalJsonExact(value: Column): Column =
-    canonicalJsonUdf(
-      value.getField("kind"), value.getField("str"), value.getField("num"),
-      value.getField("bool"), value.getField("rel"))
 
   /** Build a gun value struct column from a string column. */
   def gunString(c: Column): Column =

@@ -89,7 +89,7 @@ object IndexStore {
         .withColumn("bucket", col("list_id").cast("int"))
       BucketIndex.appendDelta(rows,
         dataCols = Seq("vec_id", "uv"),
-        batchId, s"$path/lists", numBuckets = n,
+        batchId, numBuckets = n,
         compactThreshold = 8, schema = ivfListsSchema,
         dedupCols = Seq("vec_id"), sortCols = Seq("vec_id"),
         fs, storeDir)
@@ -183,7 +183,7 @@ object IndexStore {
       .withColumn("bucket", col("list_id").cast("int"))
     BucketIndex.appendDelta(rows,
       dataCols = Seq("vec_id", "emb"),
-      batchId, s"$path/lists", numBuckets = n,
+      batchId, numBuckets = n,
       compactThreshold = 8, schema = mrlListsSchema,
       dedupCols = Seq("vec_id"), sortCols = Seq("vec_id"),
       fs, storeDir)
@@ -270,7 +270,7 @@ object IndexStore {
       .withColumn("bucket", pmod(col("vec_id"), lit(PqCodeBuckets)).cast("int"))
     BucketIndex.appendDelta(rows,
       dataCols = Seq("vec_id", "codes"),
-      batchId, s"$path/codes", numBuckets = PqCodeBuckets,
+      batchId, numBuckets = PqCodeBuckets,
       compactThreshold = 8, schema = pqCodesSchema,
       dedupCols = Seq("vec_id"), sortCols = Seq("vec_id"),
       fs, storeDir)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.core.{GunCell, GunValue, ValueKind}
+import graft.core.{GunCell, GunValue, SoulGen, ValueKind}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -174,8 +174,8 @@ object GunWire {
   }
 
   /** Full ingest pipeline (SURVEY §3.3): wire frames → messages → put
-    * fragments → cells, ready for [[graft.operators.HamMerge.merge]] (batch)
-    * or [[graft.streaming.HamStream.updates]] (streaming).
+    * fragments → cells, ready for [[graft.operators.HamMerge.mergeSnapshot]]
+    * (batch) or [[graft.streaming.HamStream.updates]] (streaming).
     */
   def framesToCells(frames: DataFrame, frameCol: String): DataFrame =
     putToCells(parseEnvelope(explodeBatch(frames, frameCol), "msg_json"), "put_json")
@@ -184,6 +184,21 @@ object GunWire {
     * bounds both the frame size on the socket and the driver-side buffer.
     */
   val MaxFrameMessages = 512
+
+  /** One put message ([[WireCodec.putMessage]], a fresh message id each)
+    * per run of consecutive same-soul cells: the encoder of
+    * [[publishStream]], which feeds it cells sorted by soul, so each soul
+    * becomes exactly one message.
+    */
+  def putMessages(cells: Iterator[GunCell]): Iterator[String] = {
+    val it = cells.buffered
+    Iterator.continually(it).takeWhile(_.hasNext).map { _ =>
+      val soul = it.head.soul
+      val node = Seq.newBuilder[GunCell]
+      while (it.hasNext && it.head.soul == soul) node += it.next()
+      WireCodec.putMessage(SoulGen(), node.result())
+    }
+  }
 
   /** Streaming publish sink — the fan-out half of a wire-compat engine
     * (gun/gun.go:206-234 peer send; gun/scoped_put.go:139-151 put-message
@@ -194,10 +209,11 @@ object GunWire {
     * state crosses the wire once.
     *
     * The conn lives on the driver (control plane), but the batch is PAGED
-    * to it, never collected whole: the encoded node-JSON rows stream
+    * to it, never collected whole: its cells, sorted by soul, stream
     * through `toLocalIterator` (one partition resident at a time — a
     * merged batch larger than driver memory cannot OOM the publish path)
-    * and flush to the socket every `maxFrameMessages` messages. Souls are
+    * into [[putMessages]], and a frame goes to the socket every
+    * `maxFrameMessages` messages. Souls are
     * globally ordered, so frame contents and boundaries are
     * deterministic. Receivers treat each frame independently (the HAM
     * merge is idempotent/commutative — the reference's own multi-frame
@@ -250,47 +266,34 @@ object GunWire {
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[graft.streaming.HamStream.Update],
          _: Long) =>
-          val it = cellsToPutJson(batch.toDF())
-            .orderBy(col("soul"))
-            .toLocalIterator()
-          val buf = new scala.collection.mutable.ArrayBuffer[String](maxFrameMessages)
-          def flush(): Unit =
-            if (buf.nonEmpty) {
-              val frame = WireCodec.joinFrame(buf.toIndexedSeq)
-              import scala.jdk.CollectionConverters._
-              val futures = live.asScala.toSeq.map { peer =>
-                peer -> pool.submit(new java.lang.Runnable {
-                  override def run(): Unit = peer.send(frame)
-                })
-              }
-              futures.foreach { case (peer, f) =>
-                try f.get()
-                catch {
-                  case e: java.util.concurrent.ExecutionException =>
-                    live.remove(peer)
-                    onPeerError(peer, if (e.getCause != null) e.getCause else e)
-                }
-              }
-              // An empty live set means every remaining frame would be
-              // dropped on the floor while the query reports progress —
-              // fail the batch instead; the WAL replays it when peers are
-              // back (callers wanting best-effort keep ≥1 reconnecting
-              // peer, which only errors once its retries are exhausted).
-              if (live.isEmpty)
-                throw new java.io.IOException(
-                  "publishStream: all peers failed and were dropped; " +
-                    "failing the batch rather than publishing to nobody")
-              buf.clear()
+          import scala.jdk.CollectionConverters._
+          val cells = batch.orderBy("soul").toLocalIterator().asScala
+            .map(u => GunCell(u.soul, u.field, u.value, u.state))
+          putMessages(cells).grouped(maxFrameMessages).foreach { messages =>
+            val frame = WireCodec.joinFrame(messages)
+            val futures = live.asScala.toSeq.map { peer =>
+              peer -> pool.submit(new java.lang.Runnable {
+                override def run(): Unit = peer.send(frame)
+              })
             }
-          while (it.hasNext) {
-            val r = it.next()
-            buf += "{\"#\":" + graft.core.CanonicalJson.quote(graft.core.SoulGen()) +
-              ",\"put\":{" + graft.core.CanonicalJson.quote(r.getString(0)) + ":" +
-              r.getString(1) + "}}"
-            if (buf.length >= maxFrameMessages) flush()
+            futures.foreach { case (peer, f) =>
+              try f.get()
+              catch {
+                case e: java.util.concurrent.ExecutionException =>
+                  live.remove(peer)
+                  onPeerError(peer, if (e.getCause != null) e.getCause else e)
+              }
+            }
+            // An empty live set means every remaining frame would be
+            // dropped on the floor while the query reports progress —
+            // fail the batch instead; the WAL replays it when peers are
+            // back (callers wanting best-effort keep ≥1 reconnecting
+            // peer, which only errors once its retries are exhausted).
+            if (live.isEmpty)
+              throw new java.io.IOException(
+                "publishStream: all peers failed and were dropped; " +
+                  "failing the batch rather than publishing to nobody")
           }
-          flush()
-          ()
       }
       .start()
     val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
@@ -307,37 +310,5 @@ object GunWire {
     }
     spark.streams.addListener(listener)
     q
-  }
-
-  /** Encode cells back into put-message JSON (one message per soul), the
-    * sink side of a wire-compat connector. Node JSON: `_` metadata with
-    * soul + state vector, then the value fields (gun/node.go:33-41).
-    */
-  def cellsToPutJson(cells: DataFrame): DataFrame = {
-    import graft.functions.GunFunctions.{goQuoteBuiltin, wireJsonBuiltin}
-    // wireJsonBuiltin keeps numbers raw (protocol JSON); field and soul
-    // names go through the same Go-style escape chain as string values —
-    // a quote or backslash in a field name (legal in gun) must not break
-    // the frame.
-    val valueJson = wireJsonBuiltin(col("value"))
-    val fieldJson = goQuoteBuiltin(col("field"))
-    // State numbers format Go-style (integral → no decimal point), the
-    // same rule as WireCodec.putMessage.stateJson — both publish paths
-    // must emit byte-identical frames for the same cells.
-    val st = col("state")
-    val stateJson = when(st === floor(st) && abs(st) < lit(1e15),
-      st.cast("long").cast("string")).otherwise(st.cast("string"))
-    cells
-      .groupBy("soul")
-      .agg(
-        concat_ws(",", collect_list(
-          concat(fieldJson, lit(":"), valueJson))).as("fields_json"),
-        concat_ws(",", collect_list(
-          concat(fieldJson, lit(":"), stateJson)))
-          .as("states_json"))
-      .select(col("soul"), concat(
-        lit("{\"_\":{\"#\":"), goQuoteBuiltin(col("soul")), lit(",\">\":{"),
-        col("states_json"),
-        lit("}},"), col("fields_json"), lit("}")).as("node_json"))
   }
 }

@@ -94,7 +94,6 @@ private[graft] object BucketIndex {
       rows: DataFrame,
       dataCols: Seq[String],
       batchId: Long,
-      indexPath: String,
       numBuckets: Int,
       compactThreshold: Int,
       schema: StructType,

@@ -42,14 +42,15 @@ object HamStream {
     * a batch of cells at machine-time `nowMs`, returning the new state and
     * the emitted updates.
     *
-    * Batch semantics (deterministic under shuffle reordering, unlike the
-    * reference's arrival-order sequential application): the micro-batch's
-    * cells collapse to their HAM winner first, then that winner resolves
-    * against the current value — subscribers see the batch's net state
-    * transition, which is also the reference's eventual outcome since HAM
-    * merge is commutative/associative. Deferral: cells beyond machine-now
-    * are parked only when they CONFLICT with an existing value; a
-    * never-seen key accepts any state immediately (gun/storage.go:100-117).
+    * The key's current winner, its matured deferred cells and the batch's
+    * cells go through [[Ham.mergeBatch]] at `nowMs`, the one HAM rule of
+    * every store: a future cell defers when the key has a value or a
+    * present cell in this batch, and applies when the key is never seen
+    * (gun/storage.go:100-117). Subscribers see the batch's net transition
+    * (deterministic under shuffle reordering, and the reference's
+    * eventual outcome since HAM merge is commutative/associative): one
+    * update iff the winner's (value, state) changed. Then a winner older
+    * than the retention window is evicted.
     */
   def step(
       key: (String, String),
@@ -57,48 +58,17 @@ object HamStream {
       st: KeyState,
       nowMs: Double,
       ttlMs: Double): (KeyState, Seq[Update]) = {
-    var cur: Option[(GunValue, Double)] = st.value.zip(st.state)
-    var deferred = st.deferred
-    val out = Seq.newBuilder[Update]
-
-    def mergePair(a: (GunValue, Double), b: (GunValue, Double)): (GunValue, Double) =
-      if (b._2 > a._2) b
-      else if (b._2 < a._2) a
-      else if (Ham.byteCompare(
-        graft.core.CanonicalJson.encode(a._1),
-        graft.core.CanonicalJson.encode(b._1)) < 0) b
-      else a
-
-    val (matured, stillDeferred) = deferred.partition(_.state <= nowMs)
-    deferred = stillDeferred
-    var cands: Seq[(GunValue, Double)] =
-      matured.map(d => (d.value, d.state)) ++ cells.map(c => (c.value, c.state))
-
-    // Future cells defer when they CONFLICT with something: an existing
-    // value, or a present-time cell for the same key in this very batch
-    // (batch order is declared present-before-future — the reference
-    // applies sequentially, so the present write would land first and the
-    // future one would then hit the conflict path, gun/storage.go:100-117).
-    // Only a key with no current value and no present-time cell accepts a
-    // future state immediately (never-seen rule).
-    val (future, applicable) = cands.partition(_._2 > nowMs)
-    if (cur.isDefined || applicable.nonEmpty) {
-      deferred = future.map { case (v, s) => DeferredCell(v, s) }.toList ::: deferred
-      cands = applicable
-    }
-    if (cands.nonEmpty) {
-      val winner = cands.reduce(mergePair)
-      val res = Ham.resolve(cur, winner._1, winner._2, Double.MaxValue /* already filtered */)
-      if (res.isImmediateUpdate) {
-        cur = Some(winner)
-        out += Update(key._1, key._2, winner._1, winner._2)
-      }
-    }
-
-    // TTL: an idle value older than the retention window is evicted.
-    if (cur.exists(_._2 < nowMs - ttlMs)) cur = None
-
-    (KeyState(cur.map(_._1), cur.map(_._2), deferred), out.result())
+    val (soul, field) = key
+    val cur = st.value.zip(st.state)
+    val (matured, stillDeferred) = st.deferred.partition(_.state <= nowMs)
+    val (merged, deferred) = Ham.mergeBatch(
+      cur.iterator.map { case (v, s) => GunCell(soul, field, v, s) },
+      matured.map(d => GunCell(soul, field, d.value, d.state)) ++ cells, nowMs)
+    val winner = merged.headOption.map(c => (c.value, c.state))
+    val out = winner.filterNot(cur.contains).map { case (v, s) => Update(soul, field, v, s) }
+    val kept = winner.filterNot(_._2 < nowMs - ttlMs)
+    (KeyState(kept.map(_._1), kept.map(_._2),
+      deferred.map(c => DeferredCell(c.value, c.state)).toList ::: stillDeferred), out.toSeq)
   }
 
   /** Wire the state machine into a streaming Dataset of cells. Produces the

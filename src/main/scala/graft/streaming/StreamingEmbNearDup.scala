@@ -177,7 +177,7 @@ object StreamingEmbNearDup {
       val idxRows = if (probePaths.isEmpty) 0L else idx.count()
       BucketIndex.appendDelta(rows,
         dataCols = Seq("tkey", "vec_id", "uv"),
-        batchId, indexPath, numBuckets, compactThreshold,
+        batchId, numBuckets, compactThreshold,
         schema = indexSchema,
         dedupCols = Seq("tkey", "vec_id"),
         sortCols = Seq("tkey", "vec_id"),

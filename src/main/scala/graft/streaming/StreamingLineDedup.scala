@@ -105,7 +105,7 @@ object StreamingLineDedup {
       .select(col("line_hash")).distinct()
       .withColumn("bucket", pmod(col("line_hash"), lit(numBuckets.toLong)))
     BucketIndex.appendDelta(fresh, dataCols = Seq("line_hash"),
-      batchId, segsPath, numBuckets, compactThreshold,
+      batchId, numBuckets, compactThreshold,
       schema = SegSchema, dedupCols = Seq("line_hash"),
       sortCols = Seq("line_hash"), fs, storeDir)
   }

@@ -276,7 +276,7 @@ object StreamingNearDup {
       val idxRows = pr.idx.map(_.count()).getOrElse(0L)
       val storeDir = new org.apache.hadoop.fs.Path(indexPath)
       val fs = StoreFs.fileSystem(storeDir, spark.sparkContext.hadoopConfiguration)
-      appendIndexDelta(rows, batchId, indexPath, numBuckets, compactThreshold, fs, storeDir)
+      appendIndexDelta(rows, batchId, numBuckets, compactThreshold, fs, storeDir)
       ProbeStats(batchId, rows.select("doc_id").distinct().count(),
         pr.bucketsProbed, pr.bucketsOccupied, idxRows, nMatches,
         (System.nanoTime() - t0) / 1000000L, pr.inListKeys)
@@ -307,14 +307,13 @@ object StreamingNearDup {
   private[graft] def appendIndexDelta(
       rows: DataFrame,
       batchId: Long,
-      indexPath: String,
       numBuckets: Int,
       compactThreshold: Int,
       fs: org.apache.hadoop.fs.FileSystem,
       storeDir: org.apache.hadoop.fs.Path): Unit =
     BucketIndex.appendDelta(rows,
       dataCols = Seq("band", "band_key", "doc_id", "sig"),
-      batchId, indexPath, numBuckets, compactThreshold,
+      batchId, numBuckets, compactThreshold,
       schema = indexSchema,
       dedupCols = Seq("band", "band_key", "doc_id"),
       sortCols = Seq("band_key", "band", "doc_id"),

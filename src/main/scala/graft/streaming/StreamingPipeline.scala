@@ -203,7 +203,7 @@ object StreamingPipeline {
         conv(substring(col("key_hash"), 1, 4), 16, 10).cast("long")
           % numBuckets)
     BucketIndex.appendDelta(keyed, dataCols = Seq("key_hash"),
-      batchId, keysPath, numBuckets, compactThreshold,
+      batchId, numBuckets, compactThreshold,
       schema = KeySchema, dedupCols = Seq("key_hash"),
       sortCols = Seq("key_hash"), fs, storeDir)
     // signature-index append LAST, survivors only (a dropped doc never
@@ -218,7 +218,7 @@ object StreamingPipeline {
       case None => StreamingNearDup.bandRows(survivors, numBuckets)
     }
     StreamingNearDup.appendIndexDelta(
-      sigRows, batchId, sigsPath, numBuckets, compactThreshold, fs, sigsDir)
+      sigRows, batchId, numBuckets, compactThreshold, fs, sigsDir)
     probeRows.foreach(_.unpersist(blocking = false))
     probe
   }

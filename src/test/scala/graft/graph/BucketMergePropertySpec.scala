@@ -2,7 +2,7 @@ package graft.graph
 
 import graft.SparkSuite
 import graft.core.{CanonicalJson, GunCell, GunValue, Ham}
-import graft.operators.HamMerge
+import graft.operators.HamMergeReference
 import org.apache.spark.sql.DataFrame
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -10,8 +10,8 @@ import org.scalatest.concurrent.TimeLimitedTests
 import org.scalatest.time.{Seconds, Span}
 
 /** The session store's bucket merge ([[Graft]] over [[Ham.mergeBatch]])
-  * must reproduce the DataFrame reference, [[HamMerge.merge]] and
-  * [[HamMerge.applyDeferred]], cell for cell: the same store and the same
+  * must reproduce the DataFrame reference, [[HamMergeReference.merge]] and
+  * [[HamMergeReference.applyDeferred]], cell for cell: the same store and the same
   * deferred cells for generated stores and batches that mix present,
   * stale, future and equal-state-tie cells, null values, and several
   * future cells for one unseen key. The pairwise merge both rest on must
@@ -33,8 +33,7 @@ class BucketMergePropertySpec extends SparkSuite with TimeLimitedTests {
   // Canonical JSON is injective over these values (strings carry no
   // digits, numbers are digits), so an equal-state tie always has one
   // winner and the reference's max_by and the bucket merge cannot differ
-  // by which of two equal keys they keep. The string alphabet stays within
-  // the escapes both tiebreak encoders agree on.
+  // by which of two equal keys they keep.
   private val genString: Gen[String] =
     Gen.listOfN(3, Gen.oneOf("", "a", "b", "Z", "<", "&", "\n", "\"", "é", "漢")).map(_.mkString)
   private val genValue: Gen[GunValue] = Gen.frequency(
@@ -73,7 +72,7 @@ class BucketMergePropertySpec extends SparkSuite with TimeLimitedTests {
       var now = Sys
       val g = new Graft(spark, store, () => now)
       g.putCells(batch)
-      val (refStore, refDeferred) = HamMerge.merge(store.toDF(), batch.toDF(), Sys)
+      val (refStore, refDeferred) = HamMergeReference.merge(store.toDF(), batch.toDF(), Sys)
       val (wantStore, wantDeferred) = (cellsOf(refStore), cellsOf(refDeferred))
       assert(cellsOf(g.store) == wantStore, s"case $i: store")
       assert(cellsOf(g.deferred) == wantDeferred, s"case $i: deferred")
@@ -81,7 +80,7 @@ class BucketMergePropertySpec extends SparkSuite with TimeLimitedTests {
       // matures the deferred cells at Sys + 10, keeps those at Sys + 20
       now = Sys + 15
       g.applyDeferred()
-      val (refApplied, refStill) = HamMerge.applyDeferred(
+      val (refApplied, refStill) = HamMergeReference.applyDeferred(
         wantStore.toDF(), wantDeferred.toDF(), now)
       assert(cellsOf(g.store) == cellsOf(refApplied), s"case $i: applied store")
       assert(cellsOf(g.deferred) == cellsOf(refStill), s"case $i: still deferred")

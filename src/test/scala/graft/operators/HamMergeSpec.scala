@@ -42,12 +42,47 @@ class HamMergeSpec extends SparkSuite with TimeLimitedTests {
     assert(m(("s2", "f"))._1 == GunValue.bool(false))
   }
 
+  test("mergeSnapshot equals a fold of Ham.mergeCells, control chars included (property)") {
+    import graft.core.{CanonicalJson, Ham, HamGen}
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import java.nio.charset.StandardCharsets.UTF_8
+    // Spark stores strings as UTF-8, which has no lone surrogate: it writes '?'
+    def stored(s: String) = new String(s.getBytes(UTF_8), UTF_8)
+    def storedValue(v: GunValue) =
+      v.copy(str = v.str.map(stored), num = v.num.map(stored), rel = v.rel.map(stored))
+    val keys = Seq(("s", "f"), ("s", "\u0000"), ("\u0000", "f"), ("\ud800", "f"), ("s", "g\udfff"))
+    val cell = for {
+      (soul, field) <- Gen.oneOf(keys)
+      v <- HamGen.value
+      st <- Gen.choose(1, 3).map(_ * 1000.0)
+    } yield GunCell(soul, field, v, st)
+    // the tie that the escape-free key broke the other way: raw 0x01 < 'A',
+    // Go's `\u0001` > 'A'
+    val tie = Seq(GunCell("s", "f", GunValue.string("\u0001"), 1000.0),
+      GunCell("s", "f", GunValue.string("A"), 1000.0))
+    val histories = tie +: (0 until 6).map(i =>
+      Gen.listOfN(60, cell)(Gen.Parameters.default, Seed(8100L + i)).get)
+    histories.zipWithIndex.foreach { case (history, i) =>
+      // (state, JSON) decides a winner; a full tie (a number and a string
+      // of the same digits) may keep either
+      def key(c: GunCell) = (c.state, CanonicalJson.encode(c.value))
+      val want = history.map(c => c.copy(soul = stored(c.soul), field = stored(c.field),
+          value = storedValue(c.value)))
+        .groupBy(c => (c.soul, c.field)).view.mapValues(cs => key(cs.reduce(Ham.mergeCells))).toMap
+      val got = HamMerge.mergeSnapshot(history.toDF()).as[GunCell].collect()
+        .map(c => (c.soul, c.field) -> key(c)).toMap
+      val same = got == want // a rendered control char would break the XML report
+      assert(same, HamGen.printable(s"history $i: got $got, want $want"))
+    }
+  }
+
   test("merge defers conflicting future writes but applies never-seen ones") {
     val store = cells(("s1", "f", GunValue.string("cur"), 1000))
     val incoming = cells(
       ("s1", "f", GunValue.string("future"), 9000), // conflicts → deferred
       ("s9", "f", GunValue.string("brand-new-future"), 9000)) // never-seen → applies
-    val (merged, deferred) = HamMerge.merge(store, incoming, sysState = 2000)
+    val (merged, deferred) = HamMergeReference.merge(store, incoming, sysState = 2000)
     val m = winners(merged)
     assert(m(("s1", "f"))._1 == GunValue.string("cur"))
     assert(m(("s9", "f"))._1 == GunValue.string("brand-new-future"))
@@ -63,7 +98,7 @@ class HamMergeSpec extends SparkSuite with TimeLimitedTests {
     val incoming = cells(
       ("s1", "f", GunValue.string("present"), 1500),
       ("s1", "f", GunValue.string("future"), 9000))
-    val (merged, deferred) = HamMerge.merge(store, incoming, sysState = 2000)
+    val (merged, deferred) = HamMergeReference.merge(store, incoming, sysState = 2000)
     assert(winners(merged)(("s1", "f"))._1 == GunValue.string("present"))
     val d = deferred.as[GunCell].collect()
     assert(d.length == 1 && d.head.state == 9000.0)
@@ -74,7 +109,7 @@ class HamMergeSpec extends SparkSuite with TimeLimitedTests {
     val deferred = cells(
       ("s1", "f", GunValue.string("soon"), 3000),
       ("s1", "g", GunValue.string("later"), 9000))
-    val (merged, still) = HamMerge.applyDeferred(store, deferred, sysState = 5000)
+    val (merged, still) = HamMergeReference.applyDeferred(store, deferred, sysState = 5000)
     val m = winners(merged)
     assert(m(("s1", "f"))._1 == GunValue.string("soon"))
     assert(!m.contains(("s1", "g")))
@@ -89,7 +124,7 @@ class HamMergeSpec extends SparkSuite with TimeLimitedTests {
     val store = cells((1 to 200).map(i =>
       (s"s$i", "f", GunValue.string(s"v$i"): GunValue, 1000.0)): _*)
     val incoming = cells(("s7", "f", GunValue.string("new"), 2000))
-    val (merged, deferred) = HamMerge.merge(store, incoming, sysState = 3000)
+    val (merged, deferred) = HamMergeReference.merge(store, incoming, sysState = 3000)
     val m = winners(merged) // single action: metrics below reflect one run
     assert(m.size == 200)
     assert(m(("s7", "f"))._1 == GunValue.string("new"))
@@ -150,11 +185,11 @@ class HamMergeSpec extends SparkSuite with TimeLimitedTests {
       var deferred = cells()
       // apply with a mid-range clock: some cells defer, then mature
       batches.foreach { b =>
-        val (m, d) = HamMerge.merge(store, cells(b: _*), sysState = 3500)
+        val (m, d) = HamMergeReference.merge(store, cells(b: _*), sysState = 3500)
         store = m.localCheckpoint(true)
         deferred = deferred.unionByName(d).localCheckpoint(true)
       }
-      val (fin, still) = HamMerge.applyDeferred(store, deferred, sysState = 10000)
+      val (fin, still) = HamMergeReference.applyDeferred(store, deferred, sysState = 10000)
       assert(still.count() == 0)
       assert(winners(fin) == direct, s"trial $trial diverged")
     }

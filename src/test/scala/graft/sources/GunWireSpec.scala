@@ -83,12 +83,11 @@ class GunWireSpec extends SparkSuite with TimeLimitedTests {
   test("cells → put json round-trips through the decoder") {
     val cells = Seq(
       graft.core.GunCell("S1", "f", GunValue.string("hello"), 1.7e12),
-      graft.core.GunCell("S1", "g", GunValue.relation("S2"), 1.7e12)).toDF()
-    val encoded = GunWire.cellsToPutJson(cells)
-    val asPut = encoded.selectExpr(
-      """concat('{"#":"m1","put":{"', soul, '":', node_json, '}}') AS msg_json""")
+      graft.core.GunCell("S1", "g", GunValue.relation("S2"), 1.7e12))
+    val messages = GunWire.putMessages(cells.iterator).toSeq
+    assert(messages.size == 1) // one message per soul
     val decoded = GunWire.putToCells(
-      GunWire.parseEnvelope(asPut, "msg_json"), "put_json")
+      GunWire.parseEnvelope(messages.toDF("msg_json"), "msg_json"), "put_json")
       .collect().map(r => r.getAs[String]("field") -> r.getStruct(r.fieldIndex("value")))
       .toMap
     assert(decoded("f").getAs[String]("str") == "hello")
@@ -101,15 +100,57 @@ class GunWireSpec extends SparkSuite with TimeLimitedTests {
     val hostile = """fi"eld\x"""
     val cells = Seq(
       graft.core.GunCell("S1", hostile, GunValue.string("v"), 1.7e12),
-      graft.core.GunCell("S1", "n", GunValue.number("42.5"), 1.7e12)).toDF()
-    val nodeJson = GunWire.cellsToPutJson(cells)
-      .collect().head.getAs[String]("node_json")
+      graft.core.GunCell("S1", "n", GunValue.number("42.5"), 1.7e12))
+    val putJson = WireCodec.decodeEnvelope(GunWire.putMessages(cells.iterator).next()).putJson.get
     // numbers stay RAW on the wire (protocol JSON), unlike the quoted
     // HAM-tiebreak encoding
-    assert(nodeJson.contains("\"n\":42.5"))
-    val decoded = GunWire.decodePutFragment(s"""{"S1":$nodeJson}""")
-      .map(c => c.field -> c.value).toMap
+    assert(putJson.contains("\"n\":42.5"))
+    val decoded = GunWire.decodePutFragment(putJson).map(c => c.field -> c.value).toMap
     assert(decoded(hostile) == GunValue.string("v"))
     assert(decoded("n") == GunValue.number("42.5"))
+  }
+
+  test("publishStream: control chars in souls, fields and values give valid frames that round-trip") {
+    import graft.core.{GunCell, HamGen}
+    import graft.streaming.HamStream.Update
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    // every control char 0x00-0x1f in a soul, a field, a string value and
+    // a relation, beside a plain cell of the same soul
+    val updates = (0 until 0x20).flatMap { i =>
+      val c = i.toChar.toString
+      Seq(Update(s"s$c", s"f$c", GunValue.string(s"v$c"), 1000.0 + i),
+        Update(s"s$c", "rel", GunValue.relation(s"r$c"), 1000.0),
+        Update(s"s$c", "n", GunValue.number(i.toLong), 1.5))
+    }
+    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Update]
+    val (local, remote) = InMemoryPeerConn.pair()
+    val q = GunWire.publishStream(in.toDS(), local, maxFrameMessages = 5)
+    val frames = Seq.newBuilder[String]
+    try {
+      in.addData(updates: _*)
+      q.processAllAvailable()
+      Iterator.continually(remote.receive(0)).takeWhile(_.isDefined).foreach(frames ++= _)
+    } finally q.stop()
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val messages = frames.result().flatMap { f =>
+      // strict JSON: Jackson rejects an unescaped control char
+      val parsed = scala.util.Try(mapper.readTree(f))
+      assert(parsed.isSuccess, HamGen.printable(s"${parsed.failed.map(_.getMessage)}: $f"))
+      WireCodec.splitFrame(f)
+    }
+    // one message per soul, 5 to a frame, souls in global order
+    assert(frames.result().size == 7 && messages.size == 0x20)
+    // boolean asserts: a rendered control char would break the XML report
+    val souls = messages.map(m => WireCodec.decodeEnvelope(m).putJson.get)
+      .map(GunWire.decodePutFragment).map(_.map(_.soul).distinct)
+    val ordered = souls.forall(_.size == 1) && souls.flatten == updates.map(_.soul).distinct.sorted
+    assert(ordered, HamGen.printable(souls))
+    val want = updates.map(u => GunCell(u.soul, u.field, u.value, u.state)).toSet
+    val viaCodec = messages.flatMap(m => GunWire.decodePutFragment(WireCodec.decodeEnvelope(m).putJson.get))
+    val codecRoundTrips = viaCodec.toSet == want
+    assert(codecRoundTrips, HamGen.printable(viaCodec))
+    val viaSpark = GunWire.framesToCells(frames.result().toDF("frame"), "frame").as[GunCell].collect()
+    val sparkRoundTrips = viaSpark.toSet == want
+    assert(sparkRoundTrips, HamGen.printable(viaSpark.toSeq))
   }
 }

@@ -46,7 +46,7 @@ class BucketIndexSpec extends SparkSuite with TimeLimitedTests {
       batchId: Long, idx: String, threshold: Int): Unit = {
     val storeDir = new Path(idx)
     BucketIndex.appendDelta(df, dataCols = Seq("key_hash", "seq"),
-      batchId, idx, numBuckets = 1, compactThreshold = threshold,
+      batchId, numBuckets = 1, compactThreshold = threshold,
       schema = schema, dedupCols = Seq("key_hash"),
       sortCols = Seq("key_hash"), fs, storeDir)
   }

@@ -16,9 +16,9 @@ import org.scalatest.time.{Seconds, Span}
 class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
   import spark.implicits._
 
-  // slowest test on a 4-vCPU host in a full tier-1 run: 7.0 s (the
-  // collapse property test); the limit is 17x that, room for a shared
-  // host that runs 2-3x slower
+  // slowest test on a 4-vCPU host in a full tier-1 run: 7.4 s (the
+  // stream-equals-batch property through updates); the limit is 16x
+  // that, room for a shared host that runs 2-3x slower
   val timeLimit: Span = Span(120, Seconds)
   override val defaultTestSignaler = SparkSuite.cancelAllJobs
 
@@ -415,6 +415,83 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
     }
   }
 
+  test("a control-char state tie reads the same on every path, before and after compactStore") {
+    // Go's JSON bytes of "\u0001" (`"\u0001"`) are larger than those of
+    // "A" (`"A"`): 0x5c > 0x41 after the quote
+    val dir = newDir()
+    for ((v, b) <- Seq("\u0001", "A").zipWithIndex)
+      HamStream.appendBatchIntoStore(Seq(Update("s", "f", GunValue.string(v), 1000)).toDS(),
+        b.toLong, dir, NumBuckets, compactThreshold = 0)
+    for (when <- Seq("before compactStore", "after compactStore")) {
+      // boolean asserts: a rendered control char would break the XML report
+      val bulk = HamStream.readStore(spark, dir, NumBuckets).as[GunCell].collect().map(_.value).toSeq
+      val point = HamStream.fetchFromStore(spark, dir, "s", "f", NumBuckets).value
+      val (bulkWins, pointWins) = (bulk == Seq(GunValue.string("\u0001")),
+        point.contains(GunValue.string("\u0001")))
+      assert(bulkWins, graft.core.HamGen.printable(s"readStore $when: $bulk"))
+      assert(pointWins, graft.core.HamGen.printable(s"fetchFromStore $when: $point"))
+      HamStream.compactStore(spark, dir, nowMs = 0.0, ttlMs = Double.PositiveInfinity)
+    }
+  }
+
+  test("stream equals batch: a history cut into micro-batches through updates and appendIntoStore (property)") {
+    import graft.core.HamGen
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    // present states from three values, so equal-state ties are common;
+    // no two distinct values share canonical JSON, so every key has one winner
+    val keys = Seq(("s", "f"), ("s", "g"), ("\u0000", "f"), ("t", "\u0000"))
+    val value = Gen.frequency(6 -> HamGen.string.map(GunValue.string),
+      1 -> Gen.oneOf("1", "2").map(GunValue.number), 1 -> Gen.oneOf(true, false).map(GunValue.bool),
+      1 -> Gen.const(GunValue.nullValue))
+    val cell = for {
+      (soul, field) <- Gen.oneOf(keys)
+      v <- value
+      st <- Gen.choose(1, 3).map(_ * 1000.0)
+    } yield GunCell(soul, field, v, st)
+    val buckets = 4
+    // the tie whose batch order the escape-free tiebreak key got wrong
+    val tie = (Seq(GunCell("s", "f", GunValue.string("\u0001"), 1000.0),
+      GunCell("s", "f", GunValue.string("A"), 1000.0)), Seq(0, 1, 2), 12)
+    val generated = (0 until 3).map { seed =>
+      val params = Gen.Parameters.default
+      val history = Gen.listOfN(24, cell)(params, Seed(9600L + seed)).get
+      val cuts = Gen.listOfN(2 + seed, Gen.choose(0, history.size))(params, Seed(9700L + seed)).get
+      (history, (0 +: cuts :+ history.size).sorted, Seq(2, 3, 12)(seed))
+    }
+    (tie +: generated).foreach { case (history, bounds, threshold) =>
+      val dir = newDir()
+      val in = MemoryStream[GunCell]
+      val q = HamStream.appendIntoStore(
+        HamStream.updates(in.toDS(), ttlMs = Double.PositiveInfinity, timers = false),
+        dir, buckets, threshold)
+      try bounds.zip(bounds.tail).foreach { case (from, to) =>
+        in.addData(history.slice(from, to): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      val want = graft.operators.HamMerge.mergeSnapshot(history.toDF())
+        .as[GunCell].collect().map(c => (c.soul, c.field) -> c).toMap
+      for (when <- Seq("before compactStore", "after compactStore")) {
+        val clue = HamGen.printable(s"history $history, cuts $bounds, threshold $threshold, $when")
+        val got = HamStream.readStore(spark, dir, buckets).as[GunCell].collect()
+          .map(c => (c.soul, c.field) -> c).toMap
+        val same = got == want // a rendered control char would break the XML report
+        assert(same, HamGen.printable(s"$clue: readStore $got, want $want"))
+        keys.foreach { case (soul, field) =>
+          val expected = want.get((soul, field)).fold(
+            FetchResult(field, None, None, valueExists = false))(c =>
+            FetchResult(field, Some(c.value), Some(c.state), c.valueExists))
+          val read = HamStream.fetchFromStore(spark, dir, soul, field, buckets)
+          val sameRead = read == expected
+          assert(sameRead, HamGen.printable(s"$clue: ($soul, $field) read $read, want $expected"))
+        }
+        HamStream.compactStore(spark, dir, nowMs = 0.0, ttlMs = Double.PositiveInfinity)
+      }
+    }
+  }
+
   test("point read's driver-side collapse equals readStore's merged row (property)") {
     import org.apache.spark.sql.functions.col
     import org.scalacheck.Gen
@@ -481,16 +558,12 @@ class DeltaStoreSpec extends SparkSuite with TimeLimitedTests {
       val merged = HamStream.readStore(spark, dir, NumBuckets).as[GunCell].collect()
         .map(c => (c.soul, c.field) -> c).toMap
       assert(merged.size == keys.size)
-      // a failure message of printable ASCII: the test report's XML
-      // writer aborts the run on a lone surrogate
-      def printable(x: Any) = x.toString.flatMap(c =>
-        if (c >= ' ' && c <= '~') c.toString else f"\\u${c.toInt}%04x")
       keys.foreach { case ((soul, field), rows) =>
         val m = merged((stored(soul), stored(field)))
         val got = HamStream.fetchFromStore(spark, dir, soul, field, NumBuckets)
         val want = FetchResult(field, Some(m.value), Some(m.state), m.valueExists)
         val same = got == want
-        assert(same, printable(
+        assert(same, graft.core.HamGen.printable(
           s"seed ${9100 + seed} key ($soul, $field) rows $rows: read $got, merged $want"))
       }
     }

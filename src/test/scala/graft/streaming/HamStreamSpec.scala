@@ -56,6 +56,70 @@ class HamStreamSpec extends SparkSuite with TimeLimitedTests {
     assert(st2.value.isEmpty && out.isEmpty)
   }
 
+  test("step: a state tie goes to the larger Go JSON bytes: \"\\u0001\" beats \"A\"") {
+    // Go escapes 0x01 as `\u0001`, and a backslash (0x5c) > 'A' (0x41)
+    for (order <- Seq(Seq("\u0001", "A"), Seq("A", "\u0001"))) {
+      val (st1, _) = step(k, Seq(cell(order(0), 1000)), empty, 2000, 1e9)
+      val (st2, _) = step(k, Seq(cell(order(1), 1000)), st1, 2000, 1e9)
+      val (one, _) = step(k, order.map(cell(_, 1000)), empty, 2000, 1e9)
+      // boolean asserts: a rendered control char would break the XML report
+      val (twoBatches, oneBatch) = (st2.value.contains(GunValue.string("\u0001")),
+        one.value.contains(GunValue.string("\u0001")))
+      assert(twoBatches && oneBatch, order.map(graft.core.HamGen.printable))
+    }
+  }
+
+  test("step equals Ham.mergeBatch over winner, matured and incoming cells, plus emit and TTL (property)") {
+    import graft.core.{HamGen, Ham}
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // one key, NUL or lone-surrogate in some; states 0..5000 against
+    // clocks 1000..4000, so present, future, stale and tied cells all occur
+    val key = Gen.oneOf(("s1", "f"), ("s\u0000", "\u0000"), ("\ud800", "f\udfff"))
+    def cells(soul: String, field: String) = Gen.choose(0, 4).flatMap(Gen.listOfN(_,
+      Gen.zip(HamGen.value, Gen.choose(0, 10).map(_ * 500.0)).map { case (v, s) =>
+        GunCell(soul, field, v, s) }))
+    val run = for {
+      (soul, field) <- key
+      steps <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, Gen.zip(cells(soul, field),
+        Gen.choose(1, 4).map(_ * 1000.0))))
+      ttl <- Gen.oneOf(1500.0, 1e12)
+    } yield ((soul, field), steps, ttl)
+    def bag[T](xs: Seq[T]) = xs.groupBy(identity).view.mapValues(_.size).toMap
+    var emits, keeps, deferrals, evictions, ties = 0
+    for (i <- 0 until 400) {
+      val (key, steps, ttl) = run(Gen.Parameters.default, Seed(7100L + i)).get
+      val (soul, field) = key
+      steps.foldLeft(empty) { case (st, (in, now)) =>
+        val cur = st.value.zip(st.state)
+        val (matured, still) = st.deferred.partition(_.state <= now)
+        val (merged, deferred) = Ham.mergeBatch(
+          cur.map { case (v, s) => GunCell(soul, field, v, s) }.iterator,
+          matured.map(d => GunCell(soul, field, d.value, d.state)) ++ in, now)
+        val winner = merged.map(c => (c.value, c.state)).headOption
+        val (next, out) = step(key, in, st, now, ttl)
+        // boolean asserts with a printable clue: a rendered lone surrogate
+        // would abort the XML report
+        val clue = HamGen.printable(s"seed ${7100 + i}: state $st, cells $in, now $now, ttl $ttl")
+        val emitted = out == winner.filterNot(cur.contains).toSeq.map { case (v, s) =>
+          Update(soul, field, v, s) }
+        val won = next.value.zip(next.state) == winner.filter(_._2 >= now - ttl)
+        val parked = bag(next.deferred) == bag(deferred.map(c => DeferredCell(c.value, c.state)) ++ still)
+        assert(emitted, HamGen.printable(s"$clue: emitted $out"))
+        assert(won, HamGen.printable(s"$clue: winner $next"))
+        assert(parked, HamGen.printable(s"$clue: deferred $next"))
+        if (out.nonEmpty) emits += 1 else if (in.nonEmpty) keeps += 1
+        deferrals += deferred.size
+        if (winner.isDefined && next.value.isEmpty) evictions += 1
+        ties += in.count(c => cur.exists(w => w._2 == c.state && w._1 != c.value))
+        next
+      }
+    }
+    // the generator reached every branch of the rule
+    assert(emits > 0 && keeps > 0 && deferrals > 0 && evictions > 0 && ties > 0,
+      (emits, keeps, deferrals, evictions, ties))
+  }
+
   test("step convergence: any batch split reaches the same final state (property)") {
     // CRDT property at the streaming-operator level: for non-future cells,
     // applying a cell multiset through ANY sequence of step() calls must
