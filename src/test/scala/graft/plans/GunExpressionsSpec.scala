@@ -44,7 +44,7 @@ class GunExpressionsSpec extends SparkSuite with TimeLimitedTests {
     assert(rows("e") == "null")
   }
 
-  test("mergeSnapshot orders a state tie by gun_canonical_json: every control char") {
+  test("mergeSnapshot orders a state tie by gun_canonical_json") {
     // each control char's Go escape (`\u00XX`, or `\n` `\r` `\t`) starts
     // with a backslash (0x5c), above 'A' (0x41) and below 'a' (0x61)
     val ties = (0 until 0x20).flatMap { i =>
